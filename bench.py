@@ -187,8 +187,6 @@ def main() -> None:
     pl_walls = [m["wall_s"] for m in res.metrics]
     eps_packed = n_edges_pl / (sum(pl_walls) / len(pl_walls))
 
-    timed("cc_csr_pl", lambda: connected_components(g_pl, max_supersteps=60, strategy="csr"))
-
     # packed min-semiring CC (static int64 messages) — the at-scale path
     blk_sym = os.path.join(pl_cache, f"blocks-sym-{cpus}")
     connected_components(g_pl, strategy="packed", max_supersteps=1, block_dir=blk_sym)

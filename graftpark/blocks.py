@@ -1,40 +1,34 @@
-"""Per-partition CSR adjacency blocks inside Arrow UDFs.
+"""Per-bucket CSR adjacency blocks: the on-disk layout of the packed path.
 
 The reference materializes the (transposed) adjacency matrix once as a
 sparse GraphBLAS matrix and reuses it every superstep
 (reference: src/traversals/BFS/bfs_BLAS.jl:18, BLAS_coloring.jl:26).
-The Spark-native equivalent implemented here:
+The Spark-native equivalent kept here:
 
-1. **Build once** (`write_edge_blocks`): bucket every edge by
-   ``src_bucket = pmod(hash(src), P)`` (the same hash Spark uses for
-   state partitioning), precompute ``dst_bucket``, and write one
-   parquet directory per bucket. On a cluster this directory lives on
-   shared storage (HDFS/S3/Iceberg); each executor reads only the
-   buckets it processes, exactly once.
+1. **Build once** (`write_edge_blocks` / `ensure_edge_blocks`): bucket
+   every edge by ``src_bucket`` (Spark's hash of src, relabelled with
+   partition-perfect ids), precompute ``dst_bucket``, and write one
+   parquet directory per bucket plus a validated ``meta.json``. On a
+   cluster this directory lives on shared storage (HDFS/S3/Iceberg);
+   each executor reads only the buckets it processes, exactly once.
 
-2. **Cache per worker** (`load_block`): inside the Arrow UDF, the first
-   task that touches bucket *b* reads its parquet file and builds a
-   CSR-of-Aᵀ block: edges sorted by ``dst`` with ``reduceat`` group
-   boundaries. Python worker reuse (`spark.python.worker.reuse`,
-   default on) keeps the block alive across supersteps, so steady-state
-   supersteps move **only vertex state and partial aggregates** — the
-   edge table never travels again.
+2. **Cache per worker** (`load_block`): the first task that touches
+   bucket *b* converts its parquet to flat CSR-of-Aᵀ ``.npy`` arrays
+   (edges sorted by ``(dst_bucket, dst, src)``, ``reduceat`` group
+   boundaries) and every later task mmaps them. Python worker reuse
+   keeps the mapping alive across supersteps, so steady-state supersteps
+   move **only vertex state and partial aggregates** — the edge table
+   never travels again.
 
-3. **Gather-scatter per superstep** (`gather_scatter_fn`): each state
-   group (one bucket) gathers per-edge values from the vertex-state
-   vector (`searchsorted` positions, cached after the first superstep),
-   reduces them per destination with ``np.add.reduceat`` /
-   ``np.minimum.reduceat`` — a vectorized sparse SpMV with *no hash
-   table* — and emits compact ``(dst, value, bucket)`` partials.
+3. **Static sidecars** (`vertex_sidecar_writer`, `_static_positions`,
+   `_gather_offsets`, `_finish_layout`): per-bucket sorted vertex ids and
+   out-degrees, per-edge gather positions, and per-dst-bucket
+   gather/scatter offsets. They describe the block topology, not any
+   semiring, and are built once and mmap-shared.
 
-4. **Shuffle-keyed reduce** (`combine_fn` via ``cogroup``): partials
-   shuffle on ``dst_bucket`` (the only E-proportional shuffle of the
-   superstep) and are combined with the co-grouped old state using
-   ``np.bincount`` / dense-array min — again no hash table.
-
-This is the BASELINE.json `north_star` execution strategy verbatim.
-The pure-DataFrame formulations in kernels/ remain the semantic
-reference; tests assert both strategies agree.
+`segment_gather_reduce` is the chunked per-destination segment reduce
+every packed gather runs over a block. The superstep engine itself
+(Arrow gather/finish, semirings, driver) is graftpark/packed.py.
 """
 
 from __future__ import annotations
@@ -43,7 +37,6 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 #: worker-process block cache: (block_dir, token, bucket) -> dict of np
@@ -51,8 +44,6 @@ from pyspark.sql import DataFrame, functions as F
 #: reuse); the generation ``token`` (from meta.json) invalidates stale
 #: entries when a block_dir is rebuilt in place.
 _BLOCK_CACHE: dict = {}
-#: cached per-(block, state-id-layout) gather positions
-_POS_CACHE: dict = {}
 #: per-path meta.json cache: path -> (mtime_ns, meta dict)
 _META_CACHE: dict = {}
 
@@ -92,17 +83,6 @@ def _read_meta(block_dir: str) -> dict | None:
 def _block_token(block_dir: str) -> str | None:
     meta = _read_meta(block_dir)
     return meta["token"] if meta else None
-
-_TRACE = os.environ.get("GRAFTPARK_UDF_TRACE", "")
-
-
-def _trace(tag: str, t0: float, **kw) -> None:
-    if _TRACE:
-        import time
-
-        with open(_TRACE, "a") as f:
-            f.write(f"{tag} pid={os.getpid()} dt={time.perf_counter()-t0:.3f} {kw}\n")
-
 
 def write_edge_blocks(edges: DataFrame, num_buckets: int, path: str, sym: bool = False) -> str:
     """Bucket the edge table by src and write one parquet dir per bucket.
@@ -378,42 +358,6 @@ def load_block(block_dir: str, bucket: int) -> dict | None:
     return blk
 
 
-def _state_layout(pdf: pd.DataFrame):
-    """Sorted vertex ids of a state group + a cheap stable fingerprint."""
-    ids = pdf["id"].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids_sorted = ids[order]
-    n = len(ids_sorted)
-    fp = (n, int(ids_sorted[0]) if n else 0, int(ids_sorted[-1]) if n else 0,
-          int(ids_sorted[:: max(1, n // 16)].sum()) if n else 0)
-    return ids_sorted, order, fp
-
-
-def _src_positions(block_dir: str, bucket: int, blk: dict, ids_sorted, fp):
-    """Per-edge gather positions into the sorted state vector, cached.
-
-    Validated on first build: every edge src must exist in the state
-    group — a state vector that doesn't cover all edge endpoints would
-    otherwise silently alias a neighboring vertex's value.
-    """
-    key = (block_dir, _block_token(block_dir), bucket)
-    cached = _POS_CACHE.get(key)
-    if cached is not None and cached[0] == fp:
-        return cached[1]
-    pos = np.searchsorted(ids_sorted, blk["src_by_dst"])
-    n = len(ids_sorted)
-    src = np.asarray(blk["src_by_dst"])
-    if n == 0 or np.any(pos >= n) or not np.array_equal(ids_sorted[np.minimum(pos, n - 1)], src):
-        raise ValueError(
-            f"edge block {block_dir!r} bucket {bucket} references source vertices "
-            "absent from the vertex state — the supplied vertices DataFrame must "
-            "cover every edge endpoint"
-        )
-    pos = pos.astype(np.int32)
-    _POS_CACHE[key] = (fp, pos)
-    return pos
-
-
 # 256k edges per chunk: the per-edge gather temp stays ~1 MB
 # (float32/int64 ≤ 2 MB) — L2-resident instead of a full-bucket DRAM
 # round-trip. Measured 2x per-bucket speedup on the 256M-edge scaling
@@ -467,156 +411,25 @@ def segment_gather_reduce(vals: np.ndarray, pos: np.ndarray, starts, op: str) ->
     return out
 
 
-def gather_scatter_fn(block_dir: str, value_expr, reduce_op: str):
-    """applyInPandas fn: state group (one src bucket) → (dst, v, bucket) partials.
-
-    ``value_expr(pdf_sorted)`` → per-vertex float/int vector (in sorted-id
-    order); ``reduce_op`` ∈ {'sum', 'min'}.
-    """
-    out_dtype = np.float64 if reduce_op == "sum" else np.int64
-
-    def fn(key, pdf):
-        import time
-
-        t0 = time.perf_counter()
-        bucket = int(key[0])
-        blk = load_block(block_dir, bucket)
-        if blk is None or blk["n_edges"] == 0 or len(pdf) == 0:
-            return pd.DataFrame({"dst": np.empty(0, np.int64),
-                                 "v": np.empty(0, out_dtype),
-                                 "bucket": np.empty(0, np.int32)})
-        t1 = time.perf_counter()
-        ids_sorted, order, fp = _state_layout(pdf)
-        vals = value_expr(pdf.iloc[order])
-        pos = _src_positions(block_dir, bucket, blk, ids_sorted, fp)
-        partial = segment_gather_reduce(
-            np.asarray(vals, dtype=out_dtype), pos, blk["starts"], reduce_op
-        )
-        out = pd.DataFrame({
-            "dst": blk["dst_unique"],
-            "v": partial.astype(out_dtype, copy=False),
-            "bucket": blk["dstb_unique"].astype(np.int32, copy=False),
-        })
-        _trace("gather", t0, bucket=bucket, load=round(t1 - t0, 3),
-               rows_in=len(pdf), rows_out=len(out))
-        return out
-
-    return fn
-
-
-def _group_idx(block_dir: str, bucket: int, blk: dict) -> np.ndarray:
-    """Per-edge destination-group index (cached per worker)."""
-    key = ("gi", block_dir, _block_token(block_dir), bucket)
-    gi = _BLOCK_CACHE.get(key)
-    if gi is None:
-        counts = np.diff(np.append(blk["starts"], blk["n_edges"]))
-        gi = np.repeat(np.arange(len(blk["starts"]), dtype=np.int64), counts)
-        _BLOCK_CACHE[key] = gi
-    return gi
-
-
-def mode_gather_fn(block_dir: str, label_col: str):
-    """applyInPandas fn: state group → per-(dst, label) neighbor counts.
-
-    The mode semiring needs counts per (destination, label) — labels
-    change every superstep so the per-edge (group, label) pairs are
-    lexsorted each call (the only superstep-time sort in the engine)
-    and counted with reduceat boundaries.
-    """
-
-    def fn(key, pdf):
-        bucket = int(key[0])
-        blk = load_block(block_dir, bucket)
-        if blk is None or blk["n_edges"] == 0 or len(pdf) == 0:
-            return pd.DataFrame({"dst": np.empty(0, np.int64),
-                                 "label": np.empty(0, np.int64),
-                                 "cnt": np.empty(0, np.int64),
-                                 "bucket": np.empty(0, np.int32)})
-        ids_sorted, order, fp = _state_layout(pdf)
-        labels = pdf[label_col].to_numpy()[order]
-        pos = _src_positions(block_dir, bucket, blk, ids_sorted, fp)
-        lab = labels[pos]
-        gi = _group_idx(block_dir, bucket, blk)
-        o = np.lexsort((lab, gi))
-        gi_s, lab_s = gi[o], lab[o]
-        b = np.flatnonzero(np.r_[True, (gi_s[1:] != gi_s[:-1]) | (lab_s[1:] != lab_s[:-1])])
-        cnt = np.diff(np.append(b, len(gi_s)))
-        g_at = gi_s[b]
-        return pd.DataFrame({
-            "dst": np.asarray(blk["dst_unique"])[g_at],
-            "label": lab_s[b],
-            "cnt": cnt.astype(np.int64),
-            "bucket": np.asarray(blk["dstb_unique"])[g_at].astype(np.int32),
-        })
-
-    return fn
-
-
-def combine_mode(partials: pd.DataFrame, carriers: pd.DataFrame):
-    """Winner label per destination: max total count, ties → min label.
-
-    ``carriers`` has one row per vertex of the bucket (its own label,
-    count 0 — it wins only when the vertex has no neighbor labels).
-    Returns (ids, winner_labels, prev_labels) aligned ascending by id.
-    """
-    dst = np.concatenate([partials["dst"].to_numpy(), carriers["dst"].to_numpy()])
-    lab = np.concatenate([partials["label"].to_numpy(), carriers["label"].to_numpy()])
-    cnt = np.concatenate([partials["cnt"].to_numpy(),
-                          np.zeros(len(carriers), dtype=np.int64)])
-    o = np.lexsort((lab, dst))
-    d_s, l_s, c_s = dst[o], lab[o], cnt[o]
-    b = np.flatnonzero(np.r_[True, (d_s[1:] != d_s[:-1]) | (l_s[1:] != l_s[:-1])])
-    cnt_u = np.add.reduceat(c_s, b)
-    d_u, l_u = d_s[b], l_s[b]
-    o2 = np.lexsort((l_u, -cnt_u, d_u))
-    first = np.flatnonzero(np.r_[True, d_u[o2][1:] != d_u[o2][:-1]])
-    win_dst = d_u[o2][first]
-    win_lab = l_u[o2][first]
-    car_dst = carriers["dst"].to_numpy()
-    car_order = np.argsort(car_dst, kind="stable")
-    prev = carriers["label"].to_numpy()[car_order]
-    # carriers cover every vertex of the bucket → win_dst == sorted ids
-    return win_dst, win_lab, prev
-
-
-# ---------------------------------------------------------------------------
-# Packed-message layer: vertex state and partial aggregates travel between
-# buckets as raw float64/int64 vectors in single binary cells, not as
-# per-vertex rows. The destination-id list of every (src_bucket b →
-# dst_bucket c) message is STATIC — derivable from block b's npy arrays —
-# so payloads carry values only; receivers reconstruct alignment from the
-# shared mmap blocks + the per-bucket vertex sidecar. This removes the
-# E-row-per-superstep JVM shuffle (its per-row/GC overhead dominated the
-# scaling profile) while keeping the same bucket-keyed shuffle dataflow.
-# ---------------------------------------------------------------------------
-
 _V_COLS = ("ids", "out_deg")
 
 
 def vertex_sidecar_writer(block_dir: str):
-    """applyInPandas fn: write one bucket's static vertex arrays
-    (sorted ids, out-degrees) as npy, once; emits (bucket, n_vertices)."""
+    """applyInArrow fn (grouped by bucket): write one bucket's static
+    vertex arrays (sorted ids, out-degrees) as npy, once; emits
+    (bucket, n_vertices)."""
 
-    def fn(key, pdf):
-        import tempfile
+    def fn(key, table):
+        import pyarrow as pa
 
-        bucket = int(key[0])
-        ids = pdf["id"].to_numpy()
+        bucket = int(key[0].as_py())
+        ids = table.column("id").to_numpy()
         order = np.argsort(ids, kind="stable")
-        vdir = os.path.join(block_dir, "_vertices", f"bucket={bucket}")
-        if not os.path.isdir(vdir):
-            os.makedirs(os.path.join(block_dir, "_vertices"), exist_ok=True)
-            tmp = tempfile.mkdtemp(dir=os.path.join(block_dir, "_vertices"))
-            np.save(os.path.join(tmp, "ids.npy"), ids[order])
-            np.save(os.path.join(tmp, "out_deg.npy"),
-                    pdf["out_deg"].to_numpy()[order].astype(np.int64))
-            try:
-                os.replace(tmp, vdir)
-            except OSError:
-                import shutil
-
-                shutil.rmtree(tmp, ignore_errors=True)
-        return pd.DataFrame({"bucket": [bucket], "n": [len(ids)]})
+        _atomic_save_dir(os.path.join(block_dir, "_vertices"), f"bucket={bucket}", {
+            "ids": ids[order],
+            "out_deg": table.column("out_deg").to_numpy()[order].astype(np.int64),
+        })
+        return pa.table({"bucket": pa.array([bucket], pa.int32()), "n": pa.array([len(ids)], pa.int64())})
 
     return fn
 
@@ -723,7 +536,7 @@ def _finish_layout(block_dir: str, dst_bucket: int, num_buckets: int) -> dict:
             vtx = load_vertices(block_dir, dst_bucket)
             ids_c = np.asarray(vtx["ids"])
             # chunks concatenated in ascending-bucket-id order; offsets
-            # indexed directly by (sparse) bucket id, like _gather_layout
+            # indexed directly by (sparse) bucket id, like _gather_offsets
             chunks = []
             lengths = np.zeros(_id_span(num_buckets), dtype=np.int64)
             for b in bucket_ids_sorted(num_buckets):
@@ -742,926 +555,3 @@ def _finish_layout(block_dir: str, dst_bucket: int, num_buckets: int) -> dict:
                for name in ("pos", "offsets")}
         _BLOCK_CACHE[key] = lay
     return lay
-
-
-def packed_gather_fn(block_dir: str, num_buckets: int, dtype: str = "float64"):
-    """mapInPandas fn: packed state rows → packed partial-sum messages.
-
-    Input rows: (bucket, src_bucket=-1, payload = raw ranks). For each
-    state row, compute the per-edge contributions from the worker-cached
-    CSR block, reduce per destination, and emit ONE binary message per
-    destination bucket.
-
-    ``dtype='float32'`` halves the dominant per-superstep memory traffic
-    (per-edge gather temp + partial/state payloads) — the single-box
-    DRAM-bandwidth lever for the high-core scaling pair. The dangling
-    broadcast stays float64 (one scalar), and the finish stage
-    accumulates the convergence delta in float64, so tol semantics are
-    unchanged; ranks agree with the float64 path to ~1e-7 relative.
-    """
-    dt = np.dtype(dtype)
-    bids = bucket_ids_sorted(num_buckets)
-
-    def fn(batches):
-        import time
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                t0 = time.perf_counter()
-                b = int(row.bucket)
-                # pass the state itself through to the reduce (src_bucket=-1)
-                # so the superstep needs no separate carrier branch
-                yield pd.DataFrame(
-                    {"bucket": np.asarray([b], np.int32),
-                     "src_bucket": np.asarray([-1], np.int32),
-                     "payload": [row.payload]}
-                )
-                vtx = load_vertices(block_dir, b)
-                if vtx is None:
-                    continue
-                rank = np.frombuffer(row.payload, dtype=dt)
-                od = np.asarray(vtx["out_deg"])
-                # broadcast this bucket's dangling mass to every bucket
-                # (src_bucket=-2): the reduce derives the global dangling
-                # term itself, so supersteps chain inside one query with
-                # no driver-side scalar roundtrip between them
-                dang = float(rank[od == 0].astype(np.float64).sum())
-                yield pd.DataFrame(
-                    {"bucket": bids.astype(np.int32, copy=True),
-                     "src_bucket": np.full(num_buckets, -2, np.int32),
-                     "payload": [np.asarray([dang]).tobytes()] * num_buckets}
-                )
-                blk = load_block(block_dir, b)
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                # ufunc result is float64; `out` downcasts (same_kind) when
-                # dtype is float32 — halves the per-edge gather temp below
-                w = np.divide(rank, od, out=np.zeros(len(rank), dtype=dt), where=od > 0)
-                pos = _static_positions(block_dir, b, blk)
-                # layout v3: partial is already dst-bucket-contiguous —
-                # each message payload is a direct slice (no rearrangement)
-                partial = segment_gather_reduce(w, pos, blk["starts"], "sum")
-                off = _gather_offsets(block_dir, b, blk, num_buckets)
-                out_bucket, out_src, out_payload = [], [], []
-                for c in bids:
-                    lo, hi = int(off[c]), int(off[c + 1])
-                    if hi > lo:
-                        out_bucket.append(int(c))
-                        out_src.append(b)
-                        out_payload.append(partial[lo:hi].tobytes())
-                _trace("pgather", t0, bucket=b, edges=blk["n_edges"])
-                yield pd.DataFrame(
-                    {"bucket": np.asarray(out_bucket, np.int32),
-                     "src_bucket": np.asarray(out_src, np.int32),
-                     "payload": out_payload}
-                )
-
-    return fn
-
-
-def packed_finish_fn(block_dir: str, num_buckets: int, n_vertices: int, alpha: float,
-                     tol_active: float, dtype: str = "float64"):
-    """applyInPandas fn (grouped by bucket): combine packed messages into
-    the bucket's next rank vector + per-bucket convergence aggregates.
-
-    The damping base term is derived from the dangling-mass broadcast
-    rows (src_bucket=-2), so the UDF is superstep-independent and
-    supersteps chain inside one query. Partial accumulation happens in
-    ``dtype``; the convergence delta/dangling aggregates are always
-    accumulated float64."""
-    dt = np.dtype(dtype)
-
-    def fn(key, pdf):
-        import time
-
-        t0 = time.perf_counter()
-        c = int(key[0])
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:
-            return pd.DataFrame({"bucket": [], "payload": [], "delta": [],
-                                 "dangling": [], "active": []})
-        n_c = len(vtx["ids"])
-        prev = None
-        dm = 0.0
-        sums = np.zeros(n_c, dtype=dt)
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        for row in pdf.itertuples(index=False):
-            b = int(row.src_bucket)
-            if b == -1:
-                prev = np.frombuffer(row.payload, dtype=dt)
-            elif b == -2:
-                dm += float(np.frombuffer(row.payload, dtype=np.float64)[0])
-            else:
-                sums[fpos[foff[b]:foff[b + 1]]] += np.frombuffer(row.payload, dtype=dt)
-        if prev is None:
-            prev = np.zeros(n_c, dtype=dt)
-        base = (1.0 - alpha) / n_vertices + alpha * dm / n_vertices
-        new = (base + alpha * sums.astype(np.float64, copy=False)).astype(dt, copy=False)
-        diff = np.abs(new.astype(np.float64, copy=False) - prev.astype(np.float64, copy=False))
-        od = np.asarray(vtx["out_deg"])
-        _trace("pfinish", t0, bucket=c, msgs=len(pdf))
-        return pd.DataFrame(
-            {
-                "bucket": np.asarray([c], np.int32),
-                "payload": [new.tobytes()],
-                "delta": [float(diff.sum())],
-                "dangling": [float(new[od == 0].astype(np.float64).sum())],
-                "active": [int((diff > tol_active).sum())],
-            }
-        )
-
-    return fn
-
-
-def _binary_tiles(values: np.ndarray, byte_offsets: np.ndarray):
-    """Zero-copy ``pa.BinaryArray`` whose row *i* is the slice
-    ``values[byte_offsets[i]:byte_offsets[i+1]]`` (byte addressed) of the
-    SAME underlying buffer — no per-row ``tobytes()`` copies. The
-    returned array holds a reference to ``values``' memory, and the
-    Arrow stream serializer writes each yielded batch before the next is
-    produced, so lifetime is safe inside mapInArrow generators."""
-    import pyarrow as pa
-
-    off = np.ascontiguousarray(byte_offsets, dtype=np.int32)
-    if len(off) == 0 or int(off[-1]) != values.nbytes:
-        raise ValueError("byte_offsets must tile the values buffer exactly")
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), len(off) - 1, [None, pa.py_buffer(off), pa.py_buffer(values)]
-    )
-
-
-def packed_gather_arrow_fn(block_dir: str, num_buckets: int, dtype: str = "float64"):
-    """mapInArrow twin of :func:`packed_gather_fn` — identical rows and
-    semantics, minus two full-payload copies per superstep.
-
-    The pandas path pays ``partial[lo:hi].tobytes()`` (one full copy of
-    every outgoing payload) plus the pandas→Arrow serializer copy of the
-    resulting bytes objects. Layout v3+ stores the per-dst partial
-    vector dst-bucket-contiguous, so here the P outgoing messages are
-    ONE zero-copy BinaryArray whose offsets tile the partial's own
-    buffer (`_binary_tiles`); the only full-payload write left on the
-    gather side is the segment reduce itself. On a DRAM-bandwidth-bound
-    high-core level this deletes ~2 payload-sized DRAM round-trips per
-    src bucket per superstep; results are bit-identical (same values,
-    same reduce, only the serialization changes).
-    """
-    import pyarrow as pa
-
-    dt = np.dtype(dtype)
-    bids = bucket_ids_sorted(num_buckets)
-    bids_i32 = np.ascontiguousarray(bids, dtype=np.int32)
-    schema = pa.schema(
-        [("bucket", pa.int32()), ("src_bucket", pa.int32()), ("payload", pa.binary())]
-    )
-    all_dst = pa.array(bids_i32)
-    dang_src = pa.array(np.full(num_buckets, -2, np.int32))
-    dang_off = np.arange(num_buckets + 1, dtype=np.int64) * 8
-
-    def fn(batches):
-        import time
-
-        for batch in batches:
-            bcol = batch.column(batch.schema.get_field_index("bucket"))
-            pcol = batch.column(batch.schema.get_field_index("payload"))
-            for i in range(batch.num_rows):
-                t0 = time.perf_counter()
-                b = int(bcol[i].as_py())
-                pbuf = pcol[i].as_buffer()
-                # carrier row (src_bucket=-1): re-wrap the input buffer
-                carrier = pa.BinaryArray.from_buffers(
-                    pa.binary(), 1,
-                    [None, pa.py_buffer(np.asarray([0, pbuf.size], np.int32)), pbuf],
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([b], pa.int32()), pa.array([-1], pa.int32()), carrier],
-                    schema=schema,
-                )
-                vtx = load_vertices(block_dir, b)
-                if vtx is None:
-                    continue
-                rank = np.frombuffer(pbuf, dtype=dt)
-                od = np.asarray(vtx["out_deg"])
-                dang = float(rank[od == 0].astype(np.float64).sum())
-                yield pa.RecordBatch.from_arrays(
-                    [all_dst, dang_src,
-                     _binary_tiles(np.full(num_buckets, dang, np.float64), dang_off)],
-                    schema=schema,
-                )
-                blk = load_block(block_dir, b)
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                w = np.divide(rank, od, out=np.zeros(len(rank), dtype=dt), where=od > 0)
-                pos = _static_positions(block_dir, b, blk)
-                partial = segment_gather_reduce(w, pos, blk["starts"], "sum")
-                off = np.asarray(_gather_offsets(block_dir, b, blk, num_buckets))
-                # offsets at the (sparse) actual bucket ids tile the
-                # partial exactly: absent ids contribute zero counts, so
-                # off[bids[j+1]] == end of bucket bids[j]'s segment.
-                # Pairs with no edges become empty-payload rows (the
-                # finish's scatter segment for them is empty too).
-                seg = np.empty(num_buckets + 1, np.int64)
-                seg[:-1] = off[bids]
-                seg[-1] = off[-1]
-                yield pa.RecordBatch.from_arrays(
-                    [all_dst, pa.array(np.full(num_buckets, b, np.int32)),
-                     _binary_tiles(partial, seg * dt.itemsize)],
-                    schema=schema,
-                )
-                _trace("pgather", t0, bucket=b, edges=blk["n_edges"])
-
-    return fn
-
-
-def packed_finish_arrow_fn(block_dir: str, num_buckets: int, n_vertices: int,
-                           alpha: float, tol_active: float, dtype: str = "float64"):
-    """applyInArrow twin of :func:`packed_finish_fn` — identical math,
-    but payloads are read straight out of the Arrow IPC buffers
-    (``scalar.as_buffer()`` → ``np.frombuffer``, zero-copy) instead of
-    being materialized as Python ``bytes`` objects (one full copy per
-    incoming payload in the pandas path)."""
-    import pyarrow as pa
-
-    dt = np.dtype(dtype)
-    out_schema = pa.schema(
-        [("bucket", pa.int32()), ("payload", pa.binary()), ("delta", pa.float64()),
-         ("dangling", pa.float64()), ("active", pa.int64())]
-    )
-
-    def fn(key, table):
-        import time
-
-        t0 = time.perf_counter()
-        c = int(key[0].as_py())
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:
-            return out_schema.empty_table()
-        n_c = len(vtx["ids"])
-        prev = None
-        dm = 0.0
-        sums = np.zeros(n_c, dtype=dt)
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        srcb = table.column("src_bucket").to_numpy()
-        pcol = table.column("payload")
-        for i in range(len(srcb)):
-            b = int(srcb[i])
-            buf = pcol[i].as_buffer()
-            if b == -1:
-                prev = np.frombuffer(buf, dtype=dt)
-            elif b == -2:
-                dm += float(np.frombuffer(buf, dtype=np.float64)[0])
-            else:
-                sums[fpos[foff[b]:foff[b + 1]]] += np.frombuffer(buf, dtype=dt)
-        if prev is None:
-            prev = np.zeros(n_c, dtype=dt)
-        base = (1.0 - alpha) / n_vertices + alpha * dm / n_vertices
-        new = (base + alpha * sums.astype(np.float64, copy=False)).astype(dt, copy=False)
-        diff = np.abs(new.astype(np.float64, copy=False) - prev.astype(np.float64, copy=False))
-        od = np.asarray(vtx["out_deg"])
-        _trace("pfinish", t0, bucket=c, msgs=len(srcb))
-        return pa.Table.from_arrays(
-            [pa.array([c], pa.int32()),
-             _binary_tiles(new, np.asarray([0, new.nbytes], np.int64)),
-             pa.array([float(diff.sum())], pa.float64()),
-             pa.array([float(new[od == 0].astype(np.float64).sum())], pa.float64()),
-             pa.array([int((diff > tol_active).sum())], pa.int64())],
-            schema=out_schema,
-        )
-
-    return fn
-
-
-def packed_expand_fn(block_dir: str, dtype: str = "float64", out_col: str = "rank"):
-    """mapInPandas fn: packed state rows → per-vertex (id, value) rows."""
-    dt = np.dtype(dtype)
-    out = np.float64 if dt.kind == "f" else dt
-
-    def fn(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                vtx = load_vertices(block_dir, int(row.bucket))
-                if vtx is None:
-                    continue
-                yield pd.DataFrame(
-                    {"id": np.asarray(vtx["ids"]),
-                     out_col: np.frombuffer(row.payload, dtype=dt).astype(out, copy=False)}
-                )
-
-    return fn
-
-
-def pack_fn(block_dir: str, value_col: str, dtype: str = "float64"):
-    """applyInPandas fn (grouped by bucket): per-vertex rows → one packed
-    row, value vector aligned to the bucket's sorted sidecar ids."""
-    dt = np.dtype(dtype)
-
-    def fn(key, pdf):
-        bucket = int(key[0])
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        payload = pdf[value_col].to_numpy().astype(dt)[order]
-        return pd.DataFrame(
-            {"bucket": np.asarray([bucket], np.int32),
-             "payload": [payload.tobytes()],
-             "delta": [float("inf")], "dangling": [0.0], "active": [len(ids)]}
-        )
-
-    return fn
-
-
-#: packed state row schema shared by every packed kernel
-PACKED_SCHEMA = "bucket int, payload binary, delta double, dangling double, active long"
-
-
-def make_packed_checkpointer(
-    checkpoint_dir: str,
-    every: int,
-    block_dir: str,
-    n_part: int,
-    value_col: str,
-    dtype: str = "float64",
-):
-    """Durable Checkpointer for packed kernels, plus its pack/expand fns.
-
-    Packed state is opaque binary vectors; durable checkpoints must stay
-    per-vertex parquet (north_rule: resumable with per-partition lineage
-    + metrics readable by anything), so ``save`` expands to (id, value)
-    rows before writing and re-packs the re-read, and ``load`` packs the
-    parquet back into bucket rows. Returns ``(checkpointer, pack_df,
-    expand_df)`` so kernels can reuse the same pack/expand closures for
-    init and for the final result.
-    """
-    from graftpark.loop import Checkpointer
-
-    sql_t = "double" if np.dtype(dtype).kind == "f" else "long"
-
-    def pack_df(expanded: DataFrame) -> DataFrame:
-        return (
-            expanded.withColumn("bucket", bucket_col("id", n_part).cast("int"))
-            .groupBy("bucket")
-            .applyInPandas(pack_fn(block_dir, value_col, dtype), schema=PACKED_SCHEMA)
-        )
-
-    def expand_df(packed: DataFrame) -> DataFrame:
-        return packed.mapInPandas(
-            packed_expand_fn(block_dir, dtype, value_col),
-            schema=f"id long, {value_col} {sql_t}",
-        )
-
-    class PackedCheckpointer(Checkpointer):
-        """Durable checkpoints stay per-vertex parquet (north_rule)."""
-
-        def save(self, state: DataFrame, superstep: int) -> DataFrame:
-            reread = super().save(expand_df(state), superstep)
-            return pack_df(reread)
-
-        def load(self, spark, superstep: int) -> DataFrame:
-            return pack_df(super().load(spark, superstep))
-
-    ckpt = PackedCheckpointer(checkpoint_dir, every=every) if checkpoint_dir else None
-    return ckpt, pack_df, expand_df
-
-
-def combine_sums(partials: pd.DataFrame, state_pdf: pd.DataFrame) -> np.ndarray:
-    """Dense per-vertex sums of partials, aligned to state_pdf row order."""
-    n = len(state_pdf)
-    ids = state_pdf["id"].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids_sorted = ids[order]
-    sums_sorted = np.zeros(n, dtype=np.float64)
-    if len(partials):
-        dst = partials["dst"].to_numpy()
-        pos = np.searchsorted(ids_sorted, dst)
-        if n == 0 or np.any(pos >= n) or not np.array_equal(ids_sorted[np.minimum(pos, n - 1)], dst):
-            raise ValueError("partial aggregate addressed a vertex absent from the state group")
-        sums_sorted = np.bincount(pos, weights=partials["v"].to_numpy(), minlength=n)[:n]
-    sums = np.empty(n, dtype=np.float64)
-    sums[order] = sums_sorted
-    return sums
-
-
-def combine_min(partials: pd.DataFrame, state_pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
-    """Element-wise min of own values and incoming partial minima."""
-    n = len(state_pdf)
-    ids = state_pdf["id"].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids_sorted = ids[order]
-    merged_sorted = np.asarray(own)[order].copy()
-    if len(partials):
-        dst = partials["dst"].to_numpy()
-        pos = np.searchsorted(ids_sorted, dst)
-        if n == 0 or np.any(pos >= n) or not np.array_equal(ids_sorted[np.minimum(pos, n - 1)], dst):
-            raise ValueError("partial minimum addressed a vertex absent from the state group")
-        np.minimum.at(merged_sorted, pos, partials["v"].to_numpy())
-    merged = np.empty(n, dtype=merged_sorted.dtype)
-    merged[order] = merged_sorted
-    return merged
-
-
-# ---------------------------------------------------------------------------
-# Packed min-semiring layer (connected components): same static message
-# layout as the PageRank packed path, but payloads are int64 labels and
-# the reduce is elementwise minimum. Messages reuse _gather_offsets /
-# _finish_layout — they describe the block topology, not the semiring.
-# ---------------------------------------------------------------------------
-
-
-def packed_gather_min_fn(block_dir: str, num_buckets: int):
-    """mapInPandas fn: packed label rows → per-dst-bucket segment minima.
-
-    Emits the state itself (src_bucket=-1) so the reduce needs no
-    separate carrier branch, then one int64 message per destination
-    bucket holding min-over-in-neighbors for that bucket's dst segment.
-    """
-    bids = bucket_ids_sorted(num_buckets)
-
-    def fn(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                b = int(row.bucket)
-                yield pd.DataFrame(
-                    {"bucket": np.asarray([b], np.int32),
-                     "src_bucket": np.asarray([-1], np.int32),
-                     "payload": [row.payload]}
-                )
-                blk = load_block(block_dir, b)
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                labels = np.frombuffer(row.payload, dtype=np.int64)
-                pos = _static_positions(block_dir, b, blk)
-                # layout v3: per-dst minima are dst-bucket-contiguous —
-                # payloads are direct slices (see packed_gather_fn)
-                partial = segment_gather_reduce(labels, pos, blk["starts"], "min")
-                off = _gather_offsets(block_dir, b, blk, num_buckets)
-                out_bucket, out_src, out_payload = [], [], []
-                for c in bids:
-                    lo, hi = int(off[c]), int(off[c + 1])
-                    if hi > lo:
-                        out_bucket.append(int(c))
-                        out_src.append(b)
-                        out_payload.append(partial[lo:hi].tobytes())
-                yield pd.DataFrame(
-                    {"bucket": np.asarray(out_bucket, np.int32),
-                     "src_bucket": np.asarray(out_src, np.int32),
-                     "payload": out_payload}
-                )
-
-    return fn
-
-
-def packed_finish_min_fn(block_dir: str, num_buckets: int):
-    """applyInPandas fn (grouped by bucket): merge segment minima into
-    the bucket's next label vector; 'changed' counts label updates."""
-
-    def fn(key, pdf):
-        c = int(key[0])
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:
-            return pd.DataFrame({"bucket": [], "payload": [], "delta": [],
-                                 "dangling": [], "active": []})
-        prev = None
-        msgs = []
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        for row in pdf.itertuples(index=False):
-            b = int(row.src_bucket)
-            if b == -1:
-                prev = np.frombuffer(row.payload, dtype=np.int64)
-            else:
-                msgs.append((b, row.payload))
-        if prev is None:
-            prev = np.full(len(vtx["ids"]), np.iinfo(np.int64).max, dtype=np.int64)
-        new = prev.copy()
-        for b, payload in msgs:
-            seg = fpos[foff[b]:foff[b + 1]]  # unique positions within one b
-            vals = np.frombuffer(payload, dtype=np.int64)
-            new[seg] = np.minimum(new[seg], vals)
-        changed = int((new != prev).sum())
-        return pd.DataFrame(
-            {
-                "bucket": np.asarray([c], np.int32),
-                "payload": [new.tobytes()],
-                "delta": [float(changed)],
-                "dangling": [0.0],
-                "active": [changed],
-            }
-        )
-
-    return fn
-
-
-# ---------------------------------------------------------------------------
-# Packed mode-semiring layer (label propagation): messages carry, per
-# static dst segment, a variable-length (label, count) list per dst,
-# encoded as three arrays in one payload:
-#   k[len(seg)] int32  — distinct-label count per dst (in segment order)
-#   labels[sum(k)] int64, counts[sum(k)] int32
-# The static segment layout is shared with the other packed semirings.
-# ---------------------------------------------------------------------------
-
-
-def _segment_entry_indices(gids, k_per_dst, ent_off):
-    """Vectorized variable-length gather: entry indices of groups ``gids``
-    given per-group entry counts and exclusive entry offsets."""
-    l = k_per_dst[gids]
-    total = int(l.sum())
-    if total == 0:
-        return np.empty(0, np.int64), l
-    starts = ent_off[gids]
-    within = np.arange(total, dtype=np.int64) - np.repeat(
-        np.concatenate([[0], np.cumsum(l)[:-1]]), l
-    )
-    return np.repeat(starts, l) + within, l
-
-
-def packed_gather_mode_fn(block_dir: str, num_buckets: int):
-    """mapInPandas fn: packed label rows → per-dst-bucket (label, count)
-    lists. Labels change every superstep, so the (group, label) pairs are
-    lexsorted per call (as in mode_gather_fn) before segment packing."""
-    bids = bucket_ids_sorted(num_buckets)
-
-    def fn(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                b = int(row.bucket)
-                yield pd.DataFrame(
-                    {"bucket": np.asarray([b], np.int32),
-                     "src_bucket": np.asarray([-1], np.int32),
-                     "payload": [row.payload]}
-                )
-                blk = load_block(block_dir, b)
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                state = np.frombuffer(row.payload, dtype=np.int64)
-                pos = _static_positions(block_dir, b, blk)
-                lab = state[pos]
-                gi = _group_idx(block_dir, b, blk)
-                o = np.lexsort((lab, gi))
-                gi_s, lab_s = gi[o], lab[o]
-                bnd = np.flatnonzero(
-                    np.r_[True, (gi_s[1:] != gi_s[:-1]) | (lab_s[1:] != lab_s[:-1])]
-                )
-                cnt = np.diff(np.append(bnd, len(gi_s))).astype(np.int32)
-                g_at = gi_s[bnd]
-                lab_at = lab_s[bnd]
-                n_groups = len(blk["starts"])
-                k_per_dst = np.bincount(g_at, minlength=n_groups)
-                ent_off = np.concatenate([[0], np.cumsum(k_per_dst)[:-1]])
-                # layout v3: dst groups are bucket-contiguous, so dst-bucket
-                # c's group ids are the contiguous range off[c]:off[c+1]
-                off = _gather_offsets(block_dir, b, blk, num_buckets)
-                out_bucket, out_src, out_payload = [], [], []
-                for c in bids:
-                    lo, hi = int(off[c]), int(off[c + 1])
-                    if hi <= lo:
-                        continue
-                    gids = np.arange(lo, hi, dtype=np.int64)
-                    idx, l = _segment_entry_indices(gids, k_per_dst, ent_off)
-                    payload = (
-                        l.astype(np.int32).tobytes()
-                        + lab_at[idx].tobytes()
-                        + cnt[idx].tobytes()
-                    )
-                    out_bucket.append(int(c))
-                    out_src.append(b)
-                    out_payload.append(payload)
-                yield pd.DataFrame(
-                    {"bucket": np.asarray(out_bucket, np.int32),
-                     "src_bucket": np.asarray(out_src, np.int32),
-                     "payload": out_payload}
-                )
-
-    return fn
-
-
-def packed_finish_mode_fn(block_dir: str, num_buckets: int):
-    """applyInPandas fn (grouped by bucket): merge per-segment label
-    counts into the bucket's next labels — mode with min-label tie-break,
-    own label wins only with no neighbor labels (count-0 carrier),
-    exactly the dataframe/mode_gather semantics (via combine_mode)."""
-
-    def fn(key, pdf):
-        c = int(key[0])
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:
-            return pd.DataFrame({"bucket": [], "payload": [], "delta": [],
-                                 "dangling": [], "active": []})
-        n_c = len(vtx["ids"])
-        prev = None
-        pos_parts, lab_parts, cnt_parts = [], [], []
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        for row in pdf.itertuples(index=False):
-            b = int(row.src_bucket)
-            if b == -1:
-                prev = np.frombuffer(row.payload, dtype=np.int64)
-                continue
-            seg = fpos[foff[b]:foff[b + 1]]
-            raw = row.payload
-            nk = len(seg)
-            k = np.frombuffer(raw, dtype=np.int32, count=nk)
-            total = int(k.sum())
-            labels = np.frombuffer(raw, dtype=np.int64, count=total, offset=4 * nk)
-            counts = np.frombuffer(raw, dtype=np.int32, count=total, offset=4 * nk + 8 * total)
-            pos_parts.append(np.repeat(seg.astype(np.int64), k))
-            lab_parts.append(labels)
-            cnt_parts.append(counts.astype(np.int64))
-        if prev is None:
-            prev = np.asarray(vtx["ids"], dtype=np.int64).copy()
-        partials = pd.DataFrame({
-            "dst": np.concatenate(pos_parts) if pos_parts else np.empty(0, np.int64),
-            "label": np.concatenate(lab_parts) if lab_parts else np.empty(0, np.int64),
-            "cnt": np.concatenate(cnt_parts) if cnt_parts else np.empty(0, np.int64),
-        })
-        carriers = pd.DataFrame({"dst": np.arange(n_c, dtype=np.int64), "label": prev})
-        _, win_lab, prev_aligned = combine_mode(partials, carriers)
-        changed = int((win_lab != prev_aligned).sum())
-        return pd.DataFrame(
-            {
-                "bucket": np.asarray([c], np.int32),
-                "payload": [win_lab.astype(np.int64).tobytes()],
-                "delta": [float(changed)],
-                "dangling": [0.0],
-                "active": [changed],
-            }
-        )
-
-    return fn
-
-
-# ---------------------------------------------------------------------------
-# Arrow-native twins of the min/mode packed semirings. Identical rows and
-# math to the pandas fns above — only the payload serialization changes
-# (zero-copy BinaryArray tiling on the way out, buffer reads on the way
-# in), mirroring packed_gather_arrow_fn / packed_finish_arrow_fn for
-# PageRank. On the DRAM-bandwidth-bound high-core levels this deletes the
-# tobytes()/bytes->Arrow payload copies from every superstep.
-# ---------------------------------------------------------------------------
-
-
-def packed_gather_min_arrow_fn(block_dir: str, num_buckets: int):
-    """mapInArrow twin of :func:`packed_gather_min_fn`.
-
-    Layout v3+ stores the per-dst minima dst-bucket-contiguous, so the P
-    outgoing int64 messages are ONE zero-copy BinaryArray tiling the
-    partial's own buffer. Unlike the pandas fn (which skips empty
-    segments) this emits all P rows — empty-payload rows are no-ops in
-    the finish, so results are identical.
-    """
-    import pyarrow as pa
-
-    bids = bucket_ids_sorted(num_buckets)
-    bids_i32 = np.ascontiguousarray(bids, dtype=np.int32)
-    schema = pa.schema(
-        [("bucket", pa.int32()), ("src_bucket", pa.int32()), ("payload", pa.binary())]
-    )
-    all_dst = pa.array(bids_i32)
-
-    def fn(batches):
-        import time
-
-        for batch in batches:
-            bcol = batch.column(batch.schema.get_field_index("bucket"))
-            pcol = batch.column(batch.schema.get_field_index("payload"))
-            for i in range(batch.num_rows):
-                t0 = time.perf_counter()
-                b = int(bcol[i].as_py())
-                pbuf = pcol[i].as_buffer()
-                carrier = pa.BinaryArray.from_buffers(
-                    pa.binary(), 1,
-                    [None, pa.py_buffer(np.asarray([0, pbuf.size], np.int32)), pbuf],
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([b], pa.int32()), pa.array([-1], pa.int32()), carrier],
-                    schema=schema,
-                )
-                blk = load_block(block_dir, b)
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                labels = np.frombuffer(pbuf, dtype=np.int64)
-                pos = _static_positions(block_dir, b, blk)
-                partial = segment_gather_reduce(labels, pos, blk["starts"], "min")
-                off = np.asarray(_gather_offsets(block_dir, b, blk, num_buckets))
-                seg = np.empty(num_buckets + 1, np.int64)
-                seg[:-1] = off[bids]
-                seg[-1] = off[-1]
-                yield pa.RecordBatch.from_arrays(
-                    [all_dst, pa.array(np.full(num_buckets, b, np.int32)),
-                     _binary_tiles(partial, seg * 8)],
-                    schema=schema,
-                )
-                _trace("pgather_min", t0, bucket=b, edges=blk["n_edges"])
-
-    return fn
-
-
-def packed_finish_min_arrow_fn(block_dir: str, num_buckets: int):
-    """applyInArrow twin of :func:`packed_finish_min_fn` — payloads are
-    read straight from the Arrow IPC buffers (zero-copy) and the next
-    label vector goes out as a tiled BinaryArray."""
-    import pyarrow as pa
-
-    out_schema = pa.schema(
-        [("bucket", pa.int32()), ("payload", pa.binary()), ("delta", pa.float64()),
-         ("dangling", pa.float64()), ("active", pa.int64())]
-    )
-
-    def fn(key, table):
-        import time
-
-        t0 = time.perf_counter()
-        c = int(key[0].as_py())
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:
-            return out_schema.empty_table()
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        srcb = table.column("src_bucket").to_numpy()
-        pcol = table.column("payload")
-        prev = None
-        msgs = []
-        for i in range(len(srcb)):
-            b = int(srcb[i])
-            buf = pcol[i].as_buffer()
-            if b == -1:
-                prev = np.frombuffer(buf, dtype=np.int64)
-            else:
-                msgs.append((b, buf))
-        if prev is None:
-            prev = np.full(len(vtx["ids"]), np.iinfo(np.int64).max, dtype=np.int64)
-        new = prev.copy()
-        for b, buf in msgs:
-            seg = fpos[foff[b]:foff[b + 1]]  # unique positions within one b
-            vals = np.frombuffer(buf, dtype=np.int64)
-            new[seg] = np.minimum(new[seg], vals)
-        changed = int((new != prev).sum())
-        _trace("pfinish_min", t0, bucket=c, msgs=len(srcb))
-        return pa.Table.from_arrays(
-            [pa.array([c], pa.int32()),
-             _binary_tiles(new, np.asarray([0, new.nbytes], np.int64)),
-             pa.array([float(changed)], pa.float64()),
-             pa.array([0.0], pa.float64()),
-             pa.array([changed], pa.int64())],
-            schema=out_schema,
-        )
-
-    return fn
-
-
-def packed_gather_mode_arrow_fn(block_dir: str, num_buckets: int):
-    """mapInArrow twin of :func:`packed_gather_mode_fn`.
-
-    The mode payload is composite (k[int32] + labels[int64] +
-    counts[int32] per dst segment), so it cannot alias the partial
-    buffer directly; instead all P payloads are written ONCE into a
-    single contiguous uint8 buffer and tiled zero-copy from there —
-    one payload write total, versus tobytes()×3 + concat + the
-    pandas→Arrow serializer copy per payload on the pandas path.
-    Contiguous dst groups mean each segment's entries are a contiguous
-    slice of the lexsorted (label, count) arrays — no fancy gather.
-    """
-    import pyarrow as pa
-
-    bids = bucket_ids_sorted(num_buckets)
-    bids_i32 = np.ascontiguousarray(bids, dtype=np.int32)
-    schema = pa.schema(
-        [("bucket", pa.int32()), ("src_bucket", pa.int32()), ("payload", pa.binary())]
-    )
-    all_dst = pa.array(bids_i32)
-
-    def fn(batches):
-        import time
-
-        for batch in batches:
-            bcol = batch.column(batch.schema.get_field_index("bucket"))
-            pcol = batch.column(batch.schema.get_field_index("payload"))
-            for i in range(batch.num_rows):
-                t0 = time.perf_counter()
-                b = int(bcol[i].as_py())
-                pbuf = pcol[i].as_buffer()
-                carrier = pa.BinaryArray.from_buffers(
-                    pa.binary(), 1,
-                    [None, pa.py_buffer(np.asarray([0, pbuf.size], np.int32)), pbuf],
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([b], pa.int32()), pa.array([-1], pa.int32()), carrier],
-                    schema=schema,
-                )
-                blk = load_block(block_dir, b)
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                state = np.frombuffer(pbuf, dtype=np.int64)
-                pos = _static_positions(block_dir, b, blk)
-                lab = state[pos]
-                gi = _group_idx(block_dir, b, blk)
-                o = np.lexsort((lab, gi))
-                gi_s, lab_s = gi[o], lab[o]
-                bnd = np.flatnonzero(
-                    np.r_[True, (gi_s[1:] != gi_s[:-1]) | (lab_s[1:] != lab_s[:-1])]
-                )
-                cnt = np.diff(np.append(bnd, len(gi_s))).astype(np.int32)
-                g_at = gi_s[bnd]
-                lab_at = lab_s[bnd]
-                n_groups = len(blk["starts"])
-                k_per_dst = np.bincount(g_at, minlength=n_groups).astype(np.int32)
-                ent_all = np.concatenate([[0], np.cumsum(k_per_dst, dtype=np.int64)])
-                off = np.asarray(_gather_offsets(block_dir, b, blk, num_buckets))
-                # per-dst-bucket byte sizes: 4*nk + 12*ne
-                lo_g = off[bids]
-                hi_g = np.empty(num_buckets, np.int64)
-                hi_g[:-1] = off[bids[1:]]
-                hi_g[-1] = off[-1]
-                nk = hi_g - lo_g
-                ne = ent_all[hi_g] - ent_all[lo_g]
-                sizes = 4 * nk + 12 * ne
-                offsets = np.concatenate([[0], np.cumsum(sizes)])
-                buf = np.empty(int(offsets[-1]), np.uint8)
-                for j in range(num_buckets):
-                    lo, hi = int(lo_g[j]), int(hi_g[j])
-                    if hi <= lo:
-                        continue
-                    e_lo, e_hi = int(ent_all[lo]), int(ent_all[hi])
-                    p = int(offsets[j])
-                    kb = 4 * (hi - lo)
-                    lb = 8 * (e_hi - e_lo)
-                    cb = 4 * (e_hi - e_lo)
-                    buf[p:p + kb] = k_per_dst[lo:hi].view(np.uint8)
-                    buf[p + kb:p + kb + lb] = lab_at[e_lo:e_hi].view(np.uint8)
-                    buf[p + kb + lb:p + kb + lb + cb] = cnt[e_lo:e_hi].view(np.uint8)
-                yield pa.RecordBatch.from_arrays(
-                    [all_dst, pa.array(np.full(num_buckets, b, np.int32)),
-                     _binary_tiles(buf, offsets)],
-                    schema=schema,
-                )
-                _trace("pgather_mode", t0, bucket=b, edges=blk["n_edges"])
-
-    return fn
-
-
-def packed_finish_mode_arrow_fn(block_dir: str, num_buckets: int):
-    """applyInArrow twin of :func:`packed_finish_mode_fn` — identical
-    combine_mode math; payloads are parsed from the Arrow buffers
-    without materializing Python bytes."""
-    import pyarrow as pa
-
-    out_schema = pa.schema(
-        [("bucket", pa.int32()), ("payload", pa.binary()), ("delta", pa.float64()),
-         ("dangling", pa.float64()), ("active", pa.int64())]
-    )
-
-    def fn(key, table):
-        import time
-
-        t0 = time.perf_counter()
-        c = int(key[0].as_py())
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:
-            return out_schema.empty_table()
-        n_c = len(vtx["ids"])
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        srcb = table.column("src_bucket").to_numpy()
-        pcol = table.column("payload")
-        prev = None
-        pos_parts, lab_parts, cnt_parts = [], [], []
-        for i in range(len(srcb)):
-            b = int(srcb[i])
-            buf = pcol[i].as_buffer()
-            if b == -1:
-                prev = np.frombuffer(buf, dtype=np.int64)
-                continue
-            seg = fpos[foff[b]:foff[b + 1]]
-            nk = len(seg)
-            if nk == 0 or buf.size == 0:
-                continue
-            k = np.frombuffer(buf, dtype=np.int32, count=nk)
-            total = int(k.sum())
-            labels = np.frombuffer(buf, dtype=np.int64, count=total, offset=4 * nk)
-            counts = np.frombuffer(buf, dtype=np.int32, count=total,
-                                   offset=4 * nk + 8 * total)
-            pos_parts.append(np.repeat(seg.astype(np.int64), k))
-            lab_parts.append(labels)
-            cnt_parts.append(counts.astype(np.int64))
-        if prev is None:
-            prev = np.asarray(vtx["ids"], dtype=np.int64).copy()
-        partials = pd.DataFrame({
-            "dst": np.concatenate(pos_parts) if pos_parts else np.empty(0, np.int64),
-            "label": np.concatenate(lab_parts) if lab_parts else np.empty(0, np.int64),
-            "cnt": np.concatenate(cnt_parts) if cnt_parts else np.empty(0, np.int64),
-        })
-        carriers = pd.DataFrame({"dst": np.arange(n_c, dtype=np.int64), "label": prev})
-        _, win_lab, prev_aligned = combine_mode(partials, carriers)
-        changed = int((win_lab != prev_aligned).sum())
-        new = np.ascontiguousarray(win_lab, dtype=np.int64)
-        _trace("pfinish_mode", t0, bucket=c, msgs=len(srcb))
-        return pa.Table.from_arrays(
-            [pa.array([c], pa.int32()),
-             _binary_tiles(new, np.asarray([0, new.nbytes], np.int64)),
-             pa.array([float(changed)], pa.float64()),
-             pa.array([0.0], pa.float64()),
-             pa.array([changed], pa.int64())],
-            schema=out_schema,
-        )
-
-    return fn

@@ -123,17 +123,6 @@ def q_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q_pagerank_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same computation as pagerank_fixed, forced through the CSR-block
-    strategy (graftpark/blocks.py) so the driver oracle-checks the
-    north_star execution path, not just the DataFrame formulation."""
-    g = Graph(edges_from_testdata(spark, sf_dir))
-    res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="csr")
-    out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    g.unpersist()
-    return out
-
-
 def q_pagerank_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same computation as pagerank_fixed through the PACKED strategy —
     the path strategy='auto' actually selects at scale (binary vector
@@ -164,15 +153,6 @@ def q_pagerank_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed",
                    checkpoint_dir=run_dir, checkpoint_every=half, resume=True)
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    g.unpersist()
-    return out
-
-
-def q_cc_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cc_bipartite via the CSR-block min-propagation strategy."""
-    g = Graph(edges_from_testdata(spark, sf_dir))
-    res = connected_components(g, strategy="csr")
-    out = components_df(res)
     g.unpersist()
     return out
 
@@ -236,15 +216,6 @@ def q_triangles_per_vertex_nation(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_label_prop_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = label_propagation(g, max_supersteps=LP_STEPS)
-    out = labels_df(res)
-    g.unpersist()
-    return out
-
-
-def q_label_prop_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """label_prop_nation via the CSR-block mode-propagation strategy."""
-    g = Graph(nation_edges_from_testdata(spark, sf_dir))
-    res = label_propagation(g, max_supersteps=LP_STEPS, strategy="csr")
     out = labels_df(res)
     g.unpersist()
     return out
@@ -453,7 +424,6 @@ SELECT id, deg FROM d ORDER BY deg DESC, id ASC LIMIT 10
 """,
     "symmetrize": f"WITH {_NATION_CTE.strip()} SELECT src, dst FROM ns",
     "pagerank_fixed": _pagerank_fixed_sql(),
-    "pagerank_csr": _pagerank_fixed_sql(),
     "cc_nation": f"""
 WITH RECURSIVE {_NATION_CTE.strip()},
 reach(id, r) AS (
@@ -563,10 +533,8 @@ ORACLE_SQL["mis_coloring_sparse"] = _mis_coloring_sql(
 )
 ORACLE_SQL["pagerank_packed"] = ORACLE_SQL["pagerank_fixed"]
 ORACLE_SQL["pagerank_resume"] = ORACLE_SQL["pagerank_fixed"]
-ORACLE_SQL["cc_csr"] = ORACLE_SQL["cc_bipartite"]
 ORACLE_SQL["cc_packed"] = ORACLE_SQL["cc_bipartite"]
 ORACLE_SQL["cc_twophase"] = ORACLE_SQL["cc_bipartite"]
-ORACLE_SQL["label_prop_csr"] = ORACLE_SQL["label_prop_nation"]
 ORACLE_SQL["label_prop_packed"] = ORACLE_SQL["label_prop_nation"]
 
 from graftpark.driver_queries_pipeline import PIPELINE_ORACLE_SQL, PIPELINE_QUERIES  # noqa: E402
@@ -579,11 +547,9 @@ QUERIES = {
     "degree_topk": q_degree_topk,
     "symmetrize": q_symmetrize,
     "pagerank_fixed": q_pagerank_fixed,
-    "pagerank_csr": q_pagerank_csr,
     "pagerank_packed": q_pagerank_packed,
     "pagerank_resume": q_pagerank_resume,
     "cc_nation": q_cc_nation,
-    "cc_csr": q_cc_csr,
     "cc_packed": q_cc_packed,
     "cc_twophase": q_cc_twophase,
     "cc_bipartite": q_cc_bipartite,
@@ -593,7 +559,6 @@ QUERIES = {
     "mis_coloring_sparse": q_mis_coloring_sparse,
     "greedy_coloring_sparse": q_greedy_coloring_sparse,
     "label_prop_nation": q_label_prop_nation,
-    "label_prop_csr": q_label_prop_csr,
     "label_prop_packed": q_label_prop_packed,
     "bfs_levels_nation": q_bfs_levels_nation,
     "bfs_parents_nation": q_bfs_parents_nation,

@@ -14,12 +14,13 @@ label = min vertex id in the component.
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from graftpark.blocks import segment_gather_reduce
 from graftpark.graph import Graph, choose_strategy, maybe_broadcast
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
+from graftpark.packed import Semiring, label_stats, no_label_changed, resolve_strategy, run_packed
 
 
 def connected_components(
@@ -32,32 +33,18 @@ def connected_components(
     broadcast_state: bool | None = None,
     strategy: str = "auto",
     block_dir: str | None = None,
-    arrow_native: bool | None = None,
 ) -> LoopResult:
-    """State: ``(id, comp, prev_comp)``; result = select(id, comp)."""
+    """State: ``(id, comp, prev_comp)``; result = select(id, comp).
+
+    ``strategy``: ``'dataframe'``, ``'packed'`` (min semiring over the
+    symmetrized CSR blocks, graftpark/packed.py) or ``'auto'``; anything
+    else raises ValueError."""
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
-    if strategy == "auto":
-        # csr/packed block dirs default to driver-local tmp — only auto-pick
-        # them on a local master or with an explicit (shared-storage)
-        # block_dir. Packed is the at-scale path and (round 4) wires the
-        # durable PackedCheckpointer, so checkpoint_dir no longer downgrades
-        # the strategy.
-        blocks_ok = spark.sparkContext.master.startswith("local") or block_dir is not None
-        if not choose_strategy(n, broadcast_state) and blocks_ok:
-            strategy = "packed"
-        else:
-            strategy = "dataframe"
-    if strategy == "csr":
-        return _cc_csr(
-            graph, max_supersteps, checkpoint_dir, checkpoint_every, resume, n_part, block_dir
-        )
-    if strategy == "packed":
-        return _cc_packed(
-            graph, max_supersteps, n_part, block_dir,
-            checkpoint_dir, checkpoint_every, resume, arrow_native,
-        )
+    if resolve_strategy(graph, strategy, n, broadcast_state, block_dir) == "packed":
+        return run_packed(graph, _min_label_spec(), n_part, max_supersteps, block_dir,
+                          checkpoint_dir, checkpoint_every, resume)
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src")
     sym = graph.edges_sym()
@@ -121,222 +108,25 @@ def connected_components(
     )
 
 
-def _cc_csr(
-    graph: Graph,
-    max_supersteps: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    n_part: int,
-    block_dir: str | None,
-) -> LoopResult:
-    """CSR-block min-label propagation (north_star strategy; SURVEY.md §2.8).
-
-    Same execution shape as PageRank's CSR path but over the symmetrized
-    edge blocks with the (min, min) semiring: gather = neighbor labels,
-    per-destination ``np.minimum.reduceat``, keyed shuffle of compact
-    minima, vectorized merge ``comp' = min(comp, incoming)``.
-    """
-    import tempfile
-
-    from graftpark.blocks import bucket_col, combine_min, ensure_edge_blocks, gather_scatter_fn
-    from graftpark.kernels.pagerank import _superstep_confs
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-")
-    # _SUCCESS + meta validation (bucket count, symmetrized flag, edge
-    # count): a crashed partial write or a directory built from pagerank's
-    # DIRECTED edges is rebuilt instead of silently reused
-    ensure_edge_blocks(graph.edges_sym(), n_part, block_dir, sym=True, stats=graph.edge_stats(sym=True))
-
-    init = (
-        graph.vertices()
-        .select(
-            "id",
-            F.col("id").alias("comp"),
-            F.lit(None).cast("long").alias("prev_comp"),
-            bucket_col("id", n_part).cast("int").alias("bucket"),
-        )
-        .repartition(n_part, "bucket")
-    )
-    checkpointer = Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    start, initial_metrics, state0 = 1, None, init
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-
-    state_schema = "id long, comp long, prev_comp long, bucket int"
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # union (not cogroup): binary nodes MULTIPLY Catalyst size stats,
-        # which squares per superstep under localCheckpoint (see pagerank)
-        def finish(key, pdf):
-            import pandas as pd
-
-            own_mask = pdf["own"].to_numpy()
-            st = pdf[own_mask]
-            partials = pdf[~own_mask]
-            if len(st) == 0:
-                return pd.DataFrame({c: [] for c in ("id", "comp", "prev_comp", "bucket")})
-            own = st["v"].to_numpy()
-            merged = combine_min(partials, st.rename(columns={"dst": "id"}), own)
-            return pd.DataFrame(
-                {
-                    "id": st["dst"].to_numpy(),
-                    "comp": merged,
-                    "prev_comp": own,
-                    "bucket": st["bucket"].to_numpy(),
-                }
-            )
-
-        partials = state.groupBy("bucket").applyInPandas(
-            gather_scatter_fn(block_dir, lambda pdf: pdf["comp"].to_numpy(), "min"),
-            schema="dst long, v long, bucket int",
-        ).select("dst", "v", F.lit(False).alias("own"), "bucket")
-        carriers = state.select(
-            F.col("id").alias("dst"), F.col("comp").alias("v"), F.lit(True).alias("own"), "bucket"
-        )
-        return (
-            partials.unionByName(carriers)
-            .groupBy("bucket")
-            .applyInPandas(finish, schema=state_schema)
-        )
-
-    def observe_cols() -> dict:
-        return {
-            "changed": F.count(F.when(F.col("comp") != F.col("prev_comp"), True)),
-            "num_components_approx": F.approx_count_distinct("comp"),
-        }
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        changed = int(observed["changed"])
-        return {
-            "delta": float(changed),
-            "active": changed,
-            "num_components_approx": int(observed["num_components_approx"]),
-        }
-
-    with _superstep_confs(spark, n_part):
-        return iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["active"] == 0,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
+def _min_gather(state, vtx, blk, pos, seg):
+    partial = segment_gather_reduce(state, pos, blk["starts"], "min")
+    return partial, seg * partial.itemsize
 
 
-def _cc_packed(
-    graph: Graph,
-    max_supersteps: int,
-    n_part: int,
-    block_dir: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 5,
-    resume: bool = False,
-    arrow_native: bool | None = None,
-) -> LoopResult:
-    """Packed-message min-label propagation — the at-scale CC path.
+def _min_combine(prev, msgs, scalar, vtx):
+    new = prev.copy()
+    for seg, buf in msgs:  # positions are unique within one message
+        new[seg] = np.minimum(new[seg], np.frombuffer(buf, dtype=np.int64))
+    changed = int((new != prev).sum())
+    return new, float(changed), 0.0, changed
 
-    Same static-message dataflow as PageRank's packed strategy (one
-    int64 vector per (src_bucket → dst_bucket) pair, ~P² rows per
-    superstep instead of ~E), with the (min, min) semiring over the
-    symmetrized edge blocks. Tests assert equality with the dataframe
-    formulation. Durable checkpoints expand to per-vertex (id, comp)
-    parquet with lineage (north_rule) and re-pack on resume — the
-    at-scale path is both fast AND resumable.
-    """
-    import tempfile
 
-    from graftpark.blocks import (
-        PACKED_SCHEMA,
-        bucket_col,
-        ensure_edge_blocks,
-        make_packed_checkpointer,
-        packed_finish_min_arrow_fn,
-        packed_finish_min_fn,
-        packed_gather_min_arrow_fn,
-        packed_gather_min_fn,
-        vertex_sidecar_writer,
-    )
-    from graftpark.kernels.pagerank import _superstep_confs
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-")
-    ensure_edge_blocks(graph.edges_sym(), n_part, block_dir, sym=True, stats=graph.edge_stats(sym=True))
-
-    vdf = (
-        graph.vertices()
-        .select("id", F.lit(0).alias("out_deg"), bucket_col("id", n_part).cast("int").alias("bucket"))
-        .persist()
-    )
-    vdf.groupBy("bucket").applyInPandas(
-        vertex_sidecar_writer(block_dir), schema="bucket int, n long"
-    ).count()
-
-    checkpointer, pack_df, expand_df = make_packed_checkpointer(
-        checkpoint_dir, checkpoint_every, block_dir, n_part, "comp", "int64"
-    )
-    init = pack_df(vdf.select("id", F.col("id").alias("comp")))
-    start, initial_metrics, state0 = 1, None, init
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-
-    # arrow_native mirrors the packed-PageRank default: zero-copy payload
-    # serialization via mapInArrow/applyInArrow (same rows, same math —
-    # regression-tested exact equality); GRAFTPARK_PACKED_ARROW=0 or
-    # arrow_native=False restores the pandas-UDF path.
-    if arrow_native is None:
-        arrow_native = os.environ.get("GRAFTPARK_PACKED_ARROW", "1") == "1"
-    msg_schema = "bucket int, src_bucket int, payload binary"
-    if arrow_native:
-        gather = packed_gather_min_arrow_fn(block_dir, n_part)
-        finish = packed_finish_min_arrow_fn(block_dir, n_part)
-
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = state.mapInArrow(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
-    else:
-        gather = packed_gather_min_fn(block_dir, n_part)
-        finish = packed_finish_min_fn(block_dir, n_part)
-
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = state.mapInPandas(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInPandas(finish, schema=PACKED_SCHEMA)
-
-    def observe_cols() -> dict:
-        return {"changed": F.sum("active")}
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        changed = int(observed["changed"] or 0)
-        return {"delta": float(changed), "active": changed}
-
-    with _superstep_confs(spark, n_part):
-        res = iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["active"] == 0,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
-    vdf.unpersist()
-    return LoopResult(state=expand_df(res.state), metrics=res.metrics,
-                      supersteps=res.supersteps, converged=res.converged)
+def _min_label_spec() -> Semiring:
+    """Min semiring: int64 label minima per static dst segment over the
+    symmetrized blocks; durable checkpoints are per-vertex (id, comp)."""
+    return Semiring(value_col="comp", dtype="int64", sym=True, init=F.col("id"),
+                    gather=_min_gather, combine=_min_combine,
+                    stats=label_stats, converged=no_label_changed)
 
 
 def _large_star(e: DataFrame) -> DataFrame:

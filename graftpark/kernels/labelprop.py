@@ -13,12 +13,12 @@ single partition.
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from graftpark.graph import Graph, choose_strategy, maybe_broadcast
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
+from graftpark.packed import Semiring, label_stats, no_label_changed, resolve_strategy, run_packed
 
 
 def label_propagation(
@@ -31,32 +31,18 @@ def label_propagation(
     broadcast_state: bool | None = None,
     strategy: str = "auto",
     block_dir: str | None = None,
-    arrow_native: bool | None = None,
 ) -> LoopResult:
-    """State: ``(id, label, prev_label)``; result = select(id, label)."""
+    """State: ``(id, label, prev_label)``; result = select(id, label).
+
+    ``strategy``: ``'dataframe'``, ``'packed'`` (mode semiring over the
+    symmetrized CSR blocks, graftpark/packed.py) or ``'auto'``; anything
+    else raises ValueError."""
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
-    if strategy == "auto":
-        # csr/packed block dirs default to driver-local tmp — only auto-pick
-        # them on a local master or with an explicit (shared-storage)
-        # block_dir. Packed is the at-scale path and (round 4) wires the
-        # durable PackedCheckpointer, so checkpoint_dir no longer downgrades
-        # the strategy.
-        blocks_ok = spark.sparkContext.master.startswith("local") or block_dir is not None
-        if not choose_strategy(n, broadcast_state) and blocks_ok:
-            strategy = "packed"
-        else:
-            strategy = "dataframe"
-    if strategy == "csr":
-        return _lp_csr(
-            graph, max_supersteps, checkpoint_dir, checkpoint_every, resume, n_part, block_dir
-        )
-    if strategy == "packed":
-        return _lp_packed(
-            graph, max_supersteps, n_part, block_dir,
-            checkpoint_dir, checkpoint_every, resume, arrow_native,
-        )
+    if resolve_strategy(graph, strategy, n, broadcast_state, block_dir) == "packed":
+        return run_packed(graph, _mode_spec(), n_part, max_supersteps, block_dir,
+                          checkpoint_dir, checkpoint_every, resume)
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src")
     sym = graph.edges_sym()
@@ -131,229 +117,87 @@ def label_propagation(
     )
 
 
-def _lp_csr(
-    graph: Graph,
-    max_supersteps: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    n_part: int,
-    block_dir: str | None,
-) -> LoopResult:
-    """CSR-block mode propagation (north_star strategy; SURVEY.md §2.9).
-
-    Gather stage emits per-(dst, label) neighbor counts from the
-    worker-cached symmetrized blocks (one lexsort per bucket — labels
-    change every superstep, so the (group, label) pairs cannot be
-    pre-sorted); the keyed reduce merges counts across buckets and picks
-    the mode with min-label tie-break, all vectorized. Shares its block
-    directory layout with connected components (same symmetrized edges).
-    """
-    import tempfile
-
-    from graftpark.blocks import bucket_col, combine_mode, ensure_edge_blocks, mode_gather_fn
-    from graftpark.kernels.pagerank import _superstep_confs
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-")
-    # complete-and-matching check (see components._cc_csr): crashed partial
-    # writes and directed-vs-symmetrized block_dir mixups rebuild loudly
-    ensure_edge_blocks(graph.edges_sym(), n_part, block_dir, sym=True, stats=graph.edge_stats(sym=True))
-
-    init = (
-        graph.vertices()
-        .select(
-            "id",
-            F.col("id").alias("label"),
-            F.lit(None).cast("long").alias("prev_label"),
-            bucket_col("id", n_part).cast("int").alias("bucket"),
-        )
-        .repartition(n_part, "bucket")
-    )
-    checkpointer = Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    start, initial_metrics, state0 = 1, None, init
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-
-    state_schema = "id long, label long, prev_label long, bucket int"
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # union (not cogroup): binary plan nodes multiply Catalyst size
-        # stats — squares per superstep under localCheckpoint (see pagerank)
-        def finish(key, pdf):
-            import pandas as pd
-
-            own_mask = pdf["own"].to_numpy()
-            carriers = pdf[own_mask]
-            partials = pdf[~own_mask]
-            if len(carriers) == 0:
-                return pd.DataFrame({c: [] for c in ("id", "label", "prev_label", "bucket")})
-            ids, winners, prev = combine_mode(partials, carriers)
-            import numpy as np
-
-            return pd.DataFrame(
-                {
-                    "id": ids,
-                    "label": winners,
-                    "prev_label": prev,
-                    "bucket": np.full(len(ids), int(key[0]), dtype=np.int32),
-                }
-            )
-
-        partials = state.groupBy("bucket").applyInPandas(
-            mode_gather_fn(block_dir, "label"),
-            schema="dst long, label long, cnt long, bucket int",
-        ).select("dst", "label", "cnt", F.lit(False).alias("own"), "bucket")
-        carriers = state.select(
-            F.col("id").alias("dst"),
-            F.col("label"),
-            F.lit(0).cast("long").alias("cnt"),
-            F.lit(True).alias("own"),
-            "bucket",
-        )
-        return (
-            partials.unionByName(carriers)
-            .groupBy("bucket")
-            .applyInPandas(finish, schema=state_schema)
-        )
-
-    def observe_cols() -> dict:
-        return {
-            "changed": F.count(F.when(F.col("label") != F.col("prev_label"), True)),
-            "num_labels_approx": F.approx_count_distinct("label"),
-        }
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        changed = int(observed["changed"])
-        return {
-            "delta": float(changed),
-            "active": changed,
-            "num_labels_approx": int(observed["num_labels_approx"]),
-        }
-
-    with _superstep_confs(spark, n_part):
-        return iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["active"] == 0,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
+# Packed mode semiring. A message carries, per static dst segment, a
+# variable-length (label, count) list per dst, encoded as three arrays in
+# one payload:
+#   k[len(seg)] int32  — distinct-label count per dst (in segment order)
+#   labels[sum(k)] int64, counts[sum(k)] int32
 
 
-def _lp_packed(
-    graph: Graph,
-    max_supersteps: int,
-    n_part: int,
-    block_dir: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 5,
-    resume: bool = False,
-    arrow_native: bool | None = None,
-) -> LoopResult:
-    """Packed mode-semiring label propagation — the at-scale LP path.
+def _mode_gather(state, vtx, blk, pos, seg):
+    """Per-dst (label, count) lists, all P payloads written ONCE into one
+    contiguous buffer. Labels change every superstep, so the per-edge
+    (group, label) pairs are lexsorted per call; contiguous dst groups
+    make each segment's entries a contiguous slice of the result."""
+    lab = state[pos]
+    gi = blk.get("group_idx")
+    if gi is None:  # per-edge dst-group index, cached with the block
+        counts = np.diff(np.append(blk["starts"], blk["n_edges"]))
+        gi = blk["group_idx"] = np.repeat(np.arange(len(blk["starts"]), dtype=np.int64), counts)
+    o = np.lexsort((lab, gi))
+    gi_s, lab_s = gi[o], lab[o]
+    bnd = np.flatnonzero(np.r_[True, (gi_s[1:] != gi_s[:-1]) | (lab_s[1:] != lab_s[:-1])])
+    cnt = np.diff(np.append(bnd, len(gi_s))).astype(np.int32)
+    lab_at = lab_s[bnd]
+    k_per_dst = np.bincount(gi_s[bnd], minlength=len(blk["starts"])).astype(np.int32)
+    ent = np.concatenate([[0], np.cumsum(k_per_dst, dtype=np.int64)])
+    lo_g, hi_g = seg[:-1], seg[1:]
+    nk = hi_g - lo_g
+    offsets = np.concatenate([[0], np.cumsum(4 * nk + 12 * (ent[hi_g] - ent[lo_g]))])
+    buf = np.empty(int(offsets[-1]), np.uint8)
+    for j in np.flatnonzero(nk > 0):
+        lo, hi = int(lo_g[j]), int(hi_g[j])
+        e_lo, e_hi = int(ent[lo]), int(ent[hi])
+        p = int(offsets[j])
+        kb, lb, cb = 4 * (hi - lo), 8 * (e_hi - e_lo), 4 * (e_hi - e_lo)
+        buf[p:p + kb] = k_per_dst[lo:hi].view(np.uint8)
+        buf[p + kb:p + kb + lb] = lab_at[e_lo:e_hi].view(np.uint8)
+        buf[p + kb + lb:p + kb + lb + cb] = cnt[e_lo:e_hi].view(np.uint8)
+    return buf, offsets
 
-    Static-message dataflow like the PageRank/CC packed strategies, but
-    mode messages are variable-length: per static dst segment, a
-    (distinct-label count, labels, counts) triple per dst, merged in the
-    reduce with the same min-tie-break argmax as the dataframe path
-    (combine_mode). Tests assert exact equality with the dataframe
-    formulation. Durable checkpoints expand to per-vertex (id, label)
-    parquet with lineage (north_rule) and re-pack on resume.
-    """
-    import tempfile
 
-    from graftpark.blocks import (
-        PACKED_SCHEMA,
-        bucket_col,
-        ensure_edge_blocks,
-        make_packed_checkpointer,
-        packed_finish_mode_arrow_fn,
-        packed_finish_mode_fn,
-        packed_gather_mode_arrow_fn,
-        packed_gather_mode_fn,
-        vertex_sidecar_writer,
-    )
-    from graftpark.kernels.pagerank import _superstep_confs
-    from graftpark.loop import iterate
+def _mode_combine(prev, msgs, scalar, vtx):
+    n = len(prev)
+    # each vertex's own label is a count-0 carrier: it wins only when the
+    # vertex has no neighbor labels
+    dst, lab, cnt = [], [], []
+    for seg, buf in msgs:
+        nk = len(seg)
+        if nk == 0 or buf.size == 0:
+            continue
+        k = np.frombuffer(buf, dtype=np.int32, count=nk)
+        total = int(k.sum())
+        dst.append(np.repeat(seg.astype(np.int64), k))
+        lab.append(np.frombuffer(buf, dtype=np.int64, count=total, offset=4 * nk))
+        cnt.append(np.frombuffer(buf, dtype=np.int32, count=total, offset=4 * nk + 8 * total)
+                   .astype(np.int64))
+    new = combine_mode(np.concatenate(dst + [np.arange(n, dtype=np.int64)]),
+                       np.concatenate(lab + [prev]),
+                       np.concatenate(cnt + [np.zeros(n, dtype=np.int64)]))
+    new = np.ascontiguousarray(new, dtype=np.int64)
+    changed = int((new != prev).sum())
+    return new, float(changed), 0.0, changed
 
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-")
-    ensure_edge_blocks(graph.edges_sym(), n_part, block_dir, sym=True, stats=graph.edge_stats(sym=True))
 
-    vdf = (
-        graph.vertices()
-        .select("id", F.lit(0).alias("out_deg"), bucket_col("id", n_part).cast("int").alias("bucket"))
-        .persist()
-    )
-    vdf.groupBy("bucket").applyInPandas(
-        vertex_sidecar_writer(block_dir), schema="bucket int, n long"
-    ).count()
+def combine_mode(dst: np.ndarray, label: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """Winner label per distinct ``dst`` (ascending): max total count,
+    ties → min label — the dataframe path's mode rule."""
+    o = np.lexsort((label, dst))
+    d_s, l_s, c_s = dst[o], label[o], cnt[o]
+    b = np.flatnonzero(np.r_[True, (d_s[1:] != d_s[:-1]) | (l_s[1:] != l_s[:-1])])
+    cnt_u = np.add.reduceat(c_s, b)
+    d_u, l_u = d_s[b], l_s[b]
+    o2 = np.lexsort((l_u, -cnt_u, d_u))
+    first = np.flatnonzero(np.r_[True, d_u[o2][1:] != d_u[o2][:-1]])
+    return l_u[o2][first]
 
-    checkpointer, pack_df, expand_df = make_packed_checkpointer(
-        checkpoint_dir, checkpoint_every, block_dir, n_part, "label", "int64"
-    )
-    init = pack_df(vdf.select("id", F.col("id").alias("label")))
-    start, initial_metrics, state0 = 1, None, init
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
 
-    # arrow_native mirrors the packed-PageRank default: zero-copy payload
-    # serialization via mapInArrow/applyInArrow (same rows, same math —
-    # regression-tested exact equality); GRAFTPARK_PACKED_ARROW=0 or
-    # arrow_native=False restores the pandas-UDF path.
-    if arrow_native is None:
-        arrow_native = os.environ.get("GRAFTPARK_PACKED_ARROW", "1") == "1"
-    msg_schema = "bucket int, src_bucket int, payload binary"
-    if arrow_native:
-        gather = packed_gather_mode_arrow_fn(block_dir, n_part)
-        finish = packed_finish_mode_arrow_fn(block_dir, n_part)
-
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = state.mapInArrow(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
-    else:
-        gather = packed_gather_mode_fn(block_dir, n_part)
-        finish = packed_finish_mode_fn(block_dir, n_part)
-
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = state.mapInPandas(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInPandas(finish, schema=PACKED_SCHEMA)
-
-    def observe_cols() -> dict:
-        return {"changed": F.sum("active")}
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        changed = int(observed["changed"] or 0)
-        return {"delta": float(changed), "active": changed}
-
-    with _superstep_confs(spark, n_part):
-        res = iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["active"] == 0,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
-    vdf.unpersist()
-    return LoopResult(state=expand_df(res.state), metrics=res.metrics,
-                      supersteps=res.supersteps, converged=res.converged)
+def _mode_spec() -> Semiring:
+    """Mode semiring over the symmetrized blocks; durable checkpoints are
+    per-vertex (id, label)."""
+    return Semiring(value_col="label", dtype="int64", sym=True, init=F.col("id"),
+                    gather=_mode_gather, combine=_mode_combine,
+                    stats=label_stats, converged=no_label_changed)
 
 
 def labels_df(result: LoopResult) -> DataFrame:

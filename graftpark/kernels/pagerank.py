@@ -19,10 +19,13 @@ superstep runs exactly one E-row job plus one V-row agg (SURVEY.md §4.3.4).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from graftpark.blocks import segment_gather_reduce
 from graftpark.graph import Graph, choose_strategy, maybe_broadcast
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
+from graftpark.packed import Semiring, resolve_strategy, run_packed
 
 
 def pagerank(
@@ -39,7 +42,6 @@ def pagerank(
     block_dir: str | None = None,
     steps_per_job: int = 1,
     payload_dtype: str = "float64",
-    arrow_native: bool | None = None,
 ) -> LoopResult:
     """Ranks sum to 1 over the full vertex set (isolated vertices included).
 
@@ -51,29 +53,22 @@ def pagerank(
     partitions and the slim rank projection is broadcast to them, so a
     power-law hub's out-edges are spread across all tasks; otherwise
     co-partitioned joins + AQE skew splitting (graph.py docstring).
+
+    ``strategy`` is ``'dataframe'`` (the semantic reference), ``'packed'``
+    (graftpark/packed.py, the at-scale path; ``steps_per_job`` supersteps
+    per Spark job, ``payload_dtype`` float64 or float32) or ``'auto'``
+    (by vertex count); anything else raises ValueError.
     """
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
+    strategy = resolve_strategy(graph, strategy, n, broadcast_state, block_dir)
     if n == 0:
         return LoopResult(state=spark.createDataFrame([], "id LONG, rank DOUBLE"), converged=True)
-    if strategy == "auto":
-        # csr/packed block dirs default to driver-local tmp; on a
-        # multi-node master that path is not shared storage, so auto only
-        # picks them when running locally or when the caller supplies an
-        # explicit (shared) block_dir
-        blocks_ok = spark.sparkContext.master.startswith("local") or block_dir is not None
-        big = not choose_strategy(n, broadcast_state)
-        strategy = "packed" if (big and blocks_ok) else "dataframe"
-    if strategy == "csr":
-        return _pagerank_csr(
-            graph, n, alpha, tol, max_supersteps, checkpoint_dir, checkpoint_every,
-            resume, n_part, block_dir,
-        )
     if strategy == "packed":
-        return _pagerank_packed(
-            graph, n, alpha, tol, max_supersteps, checkpoint_dir, checkpoint_every,
-            resume, n_part, block_dir, steps_per_job, payload_dtype, arrow_native,
+        return run_packed(
+            graph, _packed_spec(n, alpha, tol, payload_dtype), n_part, max_supersteps,
+            block_dir, checkpoint_dir, checkpoint_every, resume, steps_per_job,
         )
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src", sym=False)
@@ -181,374 +176,54 @@ def pagerank(
     )
 
 
-from contextlib import contextmanager
+def _packed_spec(n: int, alpha: float, tol: float, payload_dtype: str) -> Semiring:
+    """Sum semiring: rank / out_deg summed per destination, damping base
+    derived in the finish from the broadcast dangling mass.
 
+    ``payload_dtype='float32'`` halves the dominant per-superstep memory
+    traffic (per-edge gather temp + partial/state payloads). The dangling
+    broadcast stays float64 (one scalar) and the convergence delta is
+    accumulated in float64, so tol semantics are unchanged; ranks agree
+    with the float64 path to ~1e-7 relative."""
+    tol_active = tol / n
 
-@contextmanager
-def _superstep_confs(spark, n_part: int | None = None):
-    """Session confs for fixed-shape superstep queries, restored on exit.
+    def combine(prev, msgs, dm, vtx):
+        sums = np.zeros(len(prev), dtype=prev.dtype)
+        for seg, buf in msgs:
+            sums[seg] += np.frombuffer(buf, dtype=prev.dtype)
+        base = (1.0 - alpha) / n + alpha * dm / n
+        new = (base + alpha * sums.astype(np.float64, copy=False)).astype(prev.dtype, copy=False)
+        diff = np.abs(new.astype(np.float64, copy=False) - prev.astype(np.float64, copy=False))
+        od = np.asarray(vtx["out_deg"])
+        return (new, float(diff.sum()), float(new[od == 0].astype(np.float64).sum()),
+                int((diff > tol_active).sum()))
 
-    AQE re-planning buys nothing for a loop whose partitioning we control
-    (it coalesced the bucket-keyed shuffle below the core count, and adds
-    a driver sync per stage); small Arrow batches add per-batch overhead
-    on the state/partial streams.
-
-    ``n_part`` pins ``spark.sql.shuffle.partitions`` to the bucket count
-    for the loop: the partition-perfect bucket ids (see
-    ``blocks.partition_perfect_ids``) place exactly one bucket per
-    shuffle partition ONLY when the shuffle width equals the bucket
-    count — any other width re-introduces balls-in-bins task skew.
-    """
-    saved = {}
-    wanted = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "262144",
-    }
-    if n_part is not None:
-        wanted["spark.sql.shuffle.partitions"] = str(int(n_part))
-    for k, v in wanted.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def _pagerank_csr(
-    graph: Graph,
-    n: int,
-    alpha: float,
-    tol: float,
-    max_supersteps: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    n_part: int,
-    block_dir: str | None,
-) -> LoopResult:
-    """CSR-block strategy (BASELINE.json north_star, SURVEY.md §4.3.3).
-
-    Edges are bucketed by ``pmod(hash(src), P)`` and written ONCE as
-    per-bucket parquet (cluster: shared storage); every superstep is
-
-        state ─groupBy(bucket)→ gather-scatter Arrow UDF over the
-        worker-cached CSR block (np.add.reduceat — no hash table)
-        → compact (dst, partial, dst_bucket) rows
-        ─the ONE keyed shuffle→ cogroup with state by bucket
-        → vectorized combine (np.bincount) → next state
-
-    The edge table never re-shuffles and never re-enters the JVM; the
-    per-superstep JVM work is one compact-partial shuffle plus the
-    V-row observe aggregates.
-    """
-    import tempfile
-
-    from graftpark import blocks as B
-    from graftpark.blocks import bucket_col, combine_sums, ensure_edge_blocks, gather_scatter_fn
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-")
-    ensure_edge_blocks(graph.edges, n_part, block_dir, sym=False, stats=graph.edge_stats(sym=False))
-
-    out_deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
-    init = (
-        graph.vertices()
-        .join(out_deg, "id", "left")
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("rank"),
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.lit(0.0).alias("prev_rank"),
-            bucket_col("id", n_part).cast("int").alias("bucket"),
-        )
-        .repartition(n_part, "bucket")
+    return Semiring(
+        value_col="rank",
+        dtype=payload_dtype,
+        sym=False,
+        init=F.lit(1.0 / n),
+        gather=_sum_gather,
+        combine=combine,
+        stats=lambda o: {"delta": float(o["delta"]), "active": int(o["active"]),
+                         "dangling_mass": float(o["dangling"] or 0.0)},
+        converged=lambda rec: rec["delta"] < tol,
+        scalar=_dangling_mass,
+        out_deg=True,
     )
 
-    checkpointer = Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    start, initial_metrics, state0 = 1, None, init
-    dangling = {"mass": 0.0}
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-    if start == 1 or not initial_metrics:
-        # fresh start, or resume whose metrics.jsonl is missing/truncated:
-        # derive dangling mass from the actual state, never default to 0
-        dangling["mass"] = (
-            state0.where(F.col("out_deg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
-    else:
-        dangling["mass"] = initial_metrics[-1]["dangling_mass"]
 
-    def contrib_values(pdf_sorted):
-        import numpy as np
-
-        r = pdf_sorted["rank"].to_numpy()
-        d = pdf_sorted["out_deg"].to_numpy()
-        return np.where(d > 0, r / np.maximum(d, 1), 0.0)
-
-    state_schema = "id long, rank double, out_deg long, prev_rank double, bucket int"
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # NOTE: partials and carriers are UNIONed (not cogrouped) before the
-        # keyed reduce. A binary node over two state-derived inputs would
-        # MULTIPLY their Catalyst size statistics; with localCheckpoint
-        # carrying stats forward that squares sizeInBytes every superstep
-        # (BigInteger digits double per step — the driver eventually spends
-        # minutes in BigInteger.multiply). Union ADDS stats: linear growth.
-        base = (1.0 - alpha) / n + alpha * dangling["mass"] / n
-
-        def finish(key, pdf):
-            import time
-
-            import pandas as pd
-
-            from graftpark.blocks import _trace
-
-            t0 = time.perf_counter()
-            is_carrier = pdf["out_deg"].notna().to_numpy()
-            st = pdf[is_carrier]
-            partials = pdf[~is_carrier]
-            if len(st) == 0:
-                return pd.DataFrame(
-                    {c: [] for c in ("id", "rank", "out_deg", "prev_rank", "bucket")}
-                )
-            sums = combine_sums(partials, st.rename(columns={"dst": "id"}))
-            out = pd.DataFrame(
-                {
-                    "id": st["dst"].to_numpy(),
-                    "rank": base + alpha * sums,
-                    "out_deg": st["out_deg"].to_numpy(),
-                    "prev_rank": st["v"].to_numpy(),
-                    "bucket": st["bucket"].to_numpy(),
-                }
-            )
-            _trace("finish", t0, rows_in=len(pdf), rows_out=len(out))
-            return out
-
-        partials = state.groupBy("bucket").applyInPandas(
-            gather_scatter_fn(block_dir, contrib_values, "sum"),
-            schema="dst long, v double, bucket int",
-        ).select("dst", "v", F.lit(None).cast("long").alias("out_deg"), "bucket")
-        carriers = state.select(
-            F.col("id").alias("dst"),
-            F.col("rank").alias("v"),
-            "out_deg",
-            "bucket",
-        )
-        return (
-            partials.unionByName(carriers)
-            .groupBy("bucket")
-            .applyInPandas(finish, schema=state_schema)
-        )
-
-    def observe_cols() -> dict:
-        return {
-            "delta": F.sum(F.abs(F.col("rank") - F.col("prev_rank"))),
-            "dm": F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(F.lit(0.0))),
-            "active": F.count(F.when(F.abs(F.col("rank") - F.col("prev_rank")) > tol / n, True)),
-        }
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        dangling["mass"] = observed["dm"] or 0.0
-        return {
-            "delta": float(observed["delta"]),
-            "active": int(observed["active"]),
-            "dangling_mass": dangling["mass"],
-        }
-
-    _ = B  # module kept imported for worker-side cache symbols
-    with _superstep_confs(spark, n_part):
-        return iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["delta"] < tol,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
+def _sum_gather(state, vtx, blk, pos, seg):
+    od = np.asarray(vtx["out_deg"])
+    # ufunc result is float64; ``out`` downcasts (same_kind) when the
+    # payload is float32 — halves the per-edge gather temp below
+    w = np.divide(state, od, out=np.zeros(len(state), dtype=state.dtype), where=od > 0)
+    partial = segment_gather_reduce(w, pos, blk["starts"], "sum")
+    return partial, seg * partial.itemsize
 
 
-_PACKED_SCHEMA = "bucket int, payload binary, delta double, dangling double, active long"
-
-
-def _pagerank_packed(
-    graph: Graph,
-    n: int,
-    alpha: float,
-    tol: float,
-    max_supersteps: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    n_part: int,
-    block_dir: str | None,
-    steps_per_job: int = 1,
-    payload_dtype: str = "float64",
-    arrow_native: bool | None = None,
-) -> LoopResult:
-    """Packed-message CSR strategy — the at-scale execution path.
-
-    Same bucket dataflow as the 'csr' strategy, but vertex state and
-    partial sums travel as ONE binary vector per (bucket) / per
-    (src_bucket → dst_bucket) pair instead of per-vertex rows: the
-    destination-id list of each message is static (derived from the
-    shared mmap CSR blocks), so payloads are raw float64 values. A
-    superstep therefore shuffles ~P² small binary rows (P = bucket
-    count) rather than ~E rows — the per-row JVM/Arrow/GC overhead that
-    dominated the 8→32-core scaling profile disappears, while the
-    dataflow stays a plain bucket-keyed Spark shuffle (multi-executor
-    semantics unchanged; static block/sidecar npy live on shared
-    storage in a cluster deployment).
-
-    Checkpoints expand to per-vertex (id, rank) parquet (north_rule:
-    durable, per-partition lineage, resumable); the returned
-    LoopResult.state is likewise the expanded per-vertex DataFrame.
-    """
-    import os
-    import tempfile
-
-    from graftpark.blocks import (
-        bucket_col,
-        ensure_edge_blocks,
-        make_packed_checkpointer,
-        packed_finish_arrow_fn,
-        packed_finish_fn,
-        packed_gather_arrow_fn,
-        packed_gather_fn,
-        vertex_sidecar_writer,
-    )
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-")
-    ensure_edge_blocks(graph.edges, n_part, block_dir, sym=False, stats=graph.edge_stats(sym=False))
-
-    out_deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
-    vdf = (
-        graph.vertices()
-        .join(out_deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            bucket_col("id", n_part).cast("int").alias("bucket"),
-        )
-    )
-    vdf = vdf.persist()
-    # one-time: per-bucket static vertex sidecar (sorted ids, out-degrees)
-    vdf.groupBy("bucket").applyInPandas(
-        vertex_sidecar_writer(block_dir), schema="bucket int, n long"
-    ).count()
-    n_dangling = vdf.where(F.col("out_deg") == 0).count()
-
-    k = max(1, steps_per_job)
-    checkpointer, pack_df, expand_df = make_packed_checkpointer(
-        checkpoint_dir, max(1, checkpoint_every // k), block_dir, n_part,
-        "rank", payload_dtype,
-    )
-    init = pack_df(vdf.select("id", F.lit(1.0 / n).alias("rank")))
-    start, initial_metrics, state0 = 1, None, init
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-
-    # superstep-independent UDFs: the damping base is derived inside the
-    # reduce from the dangling-mass broadcast rows, so ``k`` supersteps
-    # chain into ONE query (one driver roundtrip, one lineage truncation).
-    # arrow_native=True routes through mapInArrow/applyInArrow (same rows,
-    # zero-copy payload serialization — blocks.py packed_gather_arrow_fn);
-    # GRAFTPARK_PACKED_ARROW=0 falls back to the pandas UDF path.
-    if arrow_native is None:
-        arrow_native = os.environ.get("GRAFTPARK_PACKED_ARROW", "1") == "1"
-    msg_schema = "bucket int, src_bucket int, payload binary"
-    if arrow_native:
-        gather = packed_gather_arrow_fn(block_dir, n_part, payload_dtype)
-        finish = packed_finish_arrow_fn(block_dir, n_part, n, alpha, tol / n, payload_dtype)
-
-        def one_superstep(state: DataFrame) -> DataFrame:
-            msgs = state.mapInArrow(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInArrow(finish, schema=_PACKED_SCHEMA)
-    else:
-        gather = packed_gather_fn(block_dir, n_part, payload_dtype)
-        finish = packed_finish_fn(block_dir, n_part, n, alpha, tol / n, payload_dtype)
-
-        def one_superstep(state: DataFrame) -> DataFrame:
-            msgs = state.mapInPandas(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInPandas(finish, schema=_PACKED_SCHEMA)
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        out = state
-        for _ in range(k):
-            out = one_superstep(out)
-        return out
-
-    def observe_cols() -> dict:
-        return {
-            "delta": F.sum("delta"),
-            "dm": F.sum("dangling"),
-            "active": F.sum("active"),
-        }
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        return {
-            "delta": float(observed["delta"]),
-            "active": int(observed["active"]),
-            "dangling_mass": float(observed["dm"] or 0.0),
-            "supersteps_in_job": k,
-        }
-
-    n_jobs = -(-max_supersteps // k)
-    with _superstep_confs(spark, n_part):
-        res = iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["delta"] < tol,
-            max_supersteps=n_jobs,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
-    vdf.unpersist()
-    if k > 1:
-        # normalize job-level metrics to per-superstep records (delta /
-        # dangling reflect the job's LAST superstep; walls are amortized)
-        metrics = []
-        for rec in res.metrics:
-            kk = rec.get("supersteps_in_job", k)
-            for j in range(kk):
-                metrics.append(
-                    {
-                        "superstep": (rec["superstep"] - 1) * kk + j + 1,
-                        "wall_s": rec["wall_s"] / kk,
-                        **({"delta": rec["delta"], "active": rec["active"],
-                            "dangling_mass": rec["dangling_mass"]} if j == kk - 1 else {}),
-                    }
-                )
-    else:
-        metrics = res.metrics
-    return LoopResult(
-        state=expand_df(res.state),
-        metrics=metrics,
-        supersteps=res.supersteps * k,
-        converged=res.converged,
-    )
+def _dangling_mass(state, vtx):
+    return float(state[np.asarray(vtx["out_deg"]) == 0].astype(np.float64).sum())
 
 
 def ranks_df(result: LoopResult) -> DataFrame:

@@ -1,0 +1,453 @@
+"""Packed superstep engine: one Arrow gather, one Arrow finish, one driver.
+
+PageRank (sum), connected components (min) and label propagation (mode)
+are one dataflow over the same CSR blocks (graftpark/blocks.py) with
+different semirings — the reference writes all three as semiring SpMV
+over one GraphBLAS matrix (reference: src/traversals/BFS/bfs_BLAS.jl:18,
+BLAS_coloring.jl:26). Here a :class:`Semiring` supplies the numpy work at
+both ends of a superstep and everything else is shared.
+
+Vertex state travels as ONE binary payload per bucket and partial
+aggregates as ONE payload per (src_bucket → dst_bucket) pair. The
+destination-id list of every message is static — derivable from the
+shared mmap blocks and the per-bucket vertex sidecar — so payloads carry
+values only. A superstep is
+
+    state ─mapInArrow(gather)→ the state itself (src_bucket=-1),
+          optional broadcast scalars (src_bucket=-2), and the P outgoing
+          messages as ONE zero-copy BinaryArray tiling the
+          dst-bucket-contiguous partial buffer (block layout v3+)
+    ─the ONE bucket-keyed shuffle→ applyInArrow(finish): payloads read
+          straight from the Arrow IPC buffers → next state row plus
+          per-bucket (delta, dangling, active) convergence aggregates
+
+so a superstep shuffles ~P² small binary rows (P = bucket count) rather
+than ~E rows. Finishes are superstep-independent (broadcast scalars are
+derived inside the reduce), so ``steps_per_job`` supersteps chain into
+one query. Durable checkpoints expand to plain per-vertex parquet and
+re-pack on resume.
+"""
+
+from __future__ import annotations
+
+import tempfile
+from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Callable
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, functions as F
+
+from graftpark.blocks import (
+    _finish_layout,
+    _gather_offsets,
+    _static_positions,
+    bucket_col,
+    bucket_ids_sorted,
+    ensure_edge_blocks,
+    load_block,
+    load_vertices,
+    vertex_sidecar_writer,
+)
+from graftpark.graph import Graph, choose_strategy
+from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
+
+#: packed state row schema: one row per bucket
+PACKED_SCHEMA = "bucket int, payload binary, delta double, dangling double, active long"
+_STATE_ARROW = pa.schema(
+    [("bucket", pa.int32()), ("payload", pa.binary()), ("delta", pa.float64()),
+     ("dangling", pa.float64()), ("active", pa.int64())]
+)
+#: gather output: one row per (dst bucket, src bucket) message
+_MSG_SCHEMA = "bucket int, src_bucket int, payload binary"
+_MSG_ARROW = pa.schema(
+    [("bucket", pa.int32()), ("src_bucket", pa.int32()), ("payload", pa.binary())]
+)
+
+STRATEGIES = ("auto", "dataframe", "packed")
+
+
+@dataclass(frozen=True)
+class Semiring:
+    """What one packed kernel adds to the shared engine.
+
+    Worker-side functions (shipped inside the UDFs, so they must not
+    reference driver objects):
+
+    - ``gather(state, vtx, blk, pos, seg) -> (values, byte_offsets)``:
+      one src bucket's messages. ``state`` is the bucket's payload
+      vector, ``vtx`` its vertex sidecar, ``blk`` its CSR block, ``pos``
+      the per-edge positions of edge sources in ``state``, and
+      ``seg[j]:seg[j+1]`` the dst-group range of the j-th destination
+      bucket (ascending bucket id). Byte slice ``j`` of ``values`` is the
+      message to that bucket.
+    - ``scalar(state, vtx) -> float`` (optional): summed over all buckets
+      and handed to every finish — PageRank's dangling mass.
+    - ``combine(prev, msgs, scalar, vtx) -> (new, delta, dangling,
+      active)``: one dst bucket's next state from its previous state and
+      its ``(positions into prev, payload buffer)`` messages.
+
+    ``value_col`` names the per-vertex result and checkpoint column and
+    ``dtype`` is the payload dtype of the state vectors.
+
+    Driver-side: ``init`` (a Column over ``id``/``out_deg``) seeds the
+    state, ``stats(observed)`` turns the summed (delta, dangling, active)
+    into the metrics record, and ``converged(record)`` stops the loop.
+    ``out_deg`` stores real out-degrees in the sidecar (zeros otherwise);
+    ``sym`` selects symmetrized blocks.
+    """
+
+    value_col: str
+    dtype: str
+    sym: bool
+    init: Column
+    gather: Callable
+    combine: Callable
+    stats: Callable[[dict], dict]
+    converged: Callable[[dict], bool]
+    scalar: Callable | None = None
+    out_deg: bool = False
+
+
+def resolve_strategy(graph: Graph, strategy: str, n: int, broadcast_state: bool | None,
+                     block_dir: str | None) -> str:
+    """Validate ``strategy`` and resolve ``'auto'`` by graph size.
+
+    Packed block dirs default to driver-local tmp; on a multi-node master
+    that path is not shared storage, so auto only picks packed when
+    running locally or when the caller supplies an explicit (shared)
+    block_dir."""
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown strategy {strategy!r}; expected one of {STRATEGIES}")
+    if strategy != "auto":
+        return strategy
+    blocks_ok = graph.spark.sparkContext.master.startswith("local") or block_dir is not None
+    return "packed" if blocks_ok and not choose_strategy(n, broadcast_state) else "dataframe"
+
+
+def label_stats(observed: dict) -> dict:
+    """Metrics record of a label-valued semiring (min, mode): ``active``
+    and ``delta`` both count the vertices whose label changed."""
+    changed = int(observed["active"] or 0)
+    return {"delta": float(changed), "active": changed}
+
+
+def no_label_changed(rec: dict) -> bool:
+    return rec["active"] == 0
+
+
+@contextmanager
+def _superstep_confs(spark, n_part: int | None = None):
+    """Session confs for fixed-shape superstep queries, restored on exit.
+
+    AQE re-planning buys nothing for a loop whose partitioning we control
+    (it coalesced the bucket-keyed shuffle below the core count, and adds
+    a driver sync per stage); small Arrow batches add per-batch overhead
+    on the state/partial streams.
+
+    ``n_part`` pins ``spark.sql.shuffle.partitions`` to the bucket count
+    for the loop: the partition-perfect bucket ids (see
+    ``blocks.partition_perfect_ids``) place exactly one bucket per
+    shuffle partition ONLY when the shuffle width equals the bucket
+    count — any other width re-introduces balls-in-bins task skew.
+    """
+    saved = {}
+    wanted = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "262144",
+    }
+    if n_part is not None:
+        wanted["spark.sql.shuffle.partitions"] = str(int(n_part))
+    for k, v in wanted.items():
+        try:
+            saved[k] = spark.conf.get(k)
+        except Exception:
+            saved[k] = None
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _binary_tiles(values: np.ndarray, byte_offsets):
+    """Zero-copy ``pa.BinaryArray`` whose row *i* is the byte slice
+    ``byte_offsets[i]:byte_offsets[i+1]`` of ``values``' own buffer — no
+    per-row ``tobytes()`` copies. The array references ``values``'
+    memory; the Arrow stream serializer writes each batch before the
+    next is produced, so the lifetime is safe inside UDF generators."""
+    off = np.ascontiguousarray(byte_offsets, dtype=np.int32)
+    if len(off) == 0 or int(off[-1]) != values.nbytes:
+        raise ValueError("byte_offsets must tile the values buffer exactly")
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), len(off) - 1, [None, pa.py_buffer(off), pa.py_buffer(values)]
+    )
+
+
+def _whole(values: np.ndarray):
+    """One-row BinaryArray holding all of ``values``."""
+    return _binary_tiles(values, np.asarray([0, values.nbytes], np.int64))
+
+
+def _state_row(bucket: int, values: np.ndarray, delta: float, dangling: float, active: int):
+    """One packed state row (``PACKED_SCHEMA``) as an Arrow table."""
+    return pa.Table.from_arrays(
+        [pa.array([bucket], pa.int32()), _whole(values), pa.array([delta], pa.float64()),
+         pa.array([dangling], pa.float64()), pa.array([active], pa.int64())],
+        schema=_STATE_ARROW,
+    )
+
+
+def _state_rows(batches):
+    """(bucket, payload buffer) of every packed state row of a mapInArrow input."""
+    for batch in batches:
+        bcol = batch.column(batch.schema.get_field_index("bucket"))
+        pcol = batch.column(batch.schema.get_field_index("payload"))
+        for i in range(batch.num_rows):
+            yield int(bcol[i].as_py()), pcol[i].as_buffer()
+
+
+def _gather_fn(block_dir: str, num_buckets: int, dtype: str, gather: Callable,
+               scalar: Callable | None):
+    """mapInArrow fn: packed state rows → the state row itself, broadcast
+    scalar rows and one message per destination bucket."""
+    dt = np.dtype(dtype)
+    bids = bucket_ids_sorted(num_buckets)
+    all_dst = pa.array(np.ascontiguousarray(bids, dtype=np.int32))
+    scalar_src = pa.array(np.full(num_buckets, -2, np.int32))
+    scalar_off = np.arange(num_buckets + 1, dtype=np.int64) * 8
+
+    def fn(batches):
+        for b, pbuf in _state_rows(batches):
+            # pass the state through to the finish (src_bucket=-1) so the
+            # superstep needs no separate carrier branch
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([b], pa.int32()), pa.array([-1], pa.int32()),
+                 _whole(np.frombuffer(pbuf, np.uint8))],
+                schema=_MSG_ARROW,
+            )
+            vtx = load_vertices(block_dir, b)
+            if vtx is None:
+                continue
+            state = np.frombuffer(pbuf, dtype=dt)
+            if scalar is not None:
+                s = np.full(num_buckets, scalar(state, vtx), np.float64)
+                yield pa.RecordBatch.from_arrays(
+                    [all_dst, scalar_src, _binary_tiles(s, scalar_off)], schema=_MSG_ARROW
+                )
+            blk = load_block(block_dir, b)
+            if blk is None or blk["n_edges"] == 0:
+                continue
+            off = np.asarray(_gather_offsets(block_dir, b, blk, num_buckets))
+            # offsets at the (sparse) actual bucket ids tile the partial
+            # exactly: absent ids contribute zero counts, so
+            # off[bids[j+1]] == end of bucket bids[j]'s segment. Pairs with
+            # no edges become empty-payload rows (the finish's scatter
+            # segment for them is empty too).
+            seg = np.empty(num_buckets + 1, np.int64)
+            seg[:-1] = off[bids]
+            seg[-1] = off[-1]
+            values, byte_off = gather(state, vtx, blk, _static_positions(block_dir, b, blk), seg)
+            yield pa.RecordBatch.from_arrays(
+                [all_dst, pa.array(np.full(num_buckets, b, np.int32)),
+                 _binary_tiles(values, byte_off)],
+                schema=_MSG_ARROW,
+            )
+
+    return fn
+
+
+def _finish_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable):
+    """applyInArrow fn (grouped by bucket): one bucket's messages → its
+    next state row plus convergence aggregates."""
+    dt = np.dtype(dtype)
+
+    def fn(key, table):
+        c = int(key[0].as_py())
+        vtx = load_vertices(block_dir, c)
+        if vtx is None:  # a bucket with no vertices gets only broadcast rows
+            return _STATE_ARROW.empty_table()
+        flay = _finish_layout(block_dir, c, num_buckets)
+        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
+        srcb = table.column("src_bucket").to_numpy()
+        pcol = table.column("payload")
+        prev, scalar, msgs = None, 0.0, []
+        for i in range(len(srcb)):
+            b = int(srcb[i])
+            buf = pcol[i].as_buffer()
+            if b == -1:
+                prev = np.frombuffer(buf, dtype=dt)
+            elif b == -2:
+                scalar += float(np.frombuffer(buf, dtype=np.float64)[0])
+            else:
+                msgs.append((fpos[foff[b]:foff[b + 1]], buf))
+        if prev is None:
+            raise ValueError(f"bucket {c} of {block_dir!r} received messages but no state row")
+        return _state_row(c, *combine(prev, msgs, scalar, vtx))
+
+    return fn
+
+
+def _pack_fn(value_col: str, dtype: str):
+    """applyInArrow fn (grouped by bucket): per-vertex rows → one packed
+    row, values aligned to the bucket's sorted sidecar ids."""
+    dt = np.dtype(dtype)
+
+    def fn(key, table):
+        ids = table.column("id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        payload = np.ascontiguousarray(table.column(value_col).to_numpy().astype(dt)[order])
+        return _state_row(key[0].as_py(), payload, float("inf"), 0.0, len(ids))
+
+    return fn
+
+
+def _expand_fn(block_dir: str, value_col: str, dtype: str):
+    """mapInArrow fn: packed state rows → per-vertex (id, value) rows."""
+    dt = np.dtype(dtype)
+    out = np.dtype(np.float64) if dt.kind == "f" else dt
+
+    def fn(batches):
+        for b, pbuf in _state_rows(batches):
+            vtx = load_vertices(block_dir, b)
+            if vtx is None:
+                continue
+            vals = np.frombuffer(pbuf, dtype=dt).astype(out, copy=False)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.asarray(vtx["ids"])), pa.array(vals)], names=["id", value_col]
+            )
+
+    return fn
+
+
+class _PackedCheckpointer(Checkpointer):
+    """Durable checkpoints stay per-vertex parquet (north_rule: resumable
+    with per-partition lineage, readable by anything): ``save`` expands
+    the packed state before writing and re-packs the re-read, ``load``
+    packs the parquet back into bucket rows."""
+
+    def __init__(self, run_dir: str, every: int, pack, expand):
+        super().__init__(run_dir, every=every)
+        self.pack, self.expand = pack, expand
+
+    def save(self, state: DataFrame, superstep: int) -> DataFrame:
+        return self.pack(super().save(self.expand(state), superstep))
+
+    def load(self, spark, superstep: int) -> DataFrame:
+        return self.pack(super().load(spark, superstep))
+
+
+def run_packed(
+    graph: Graph,
+    spec: Semiring,
+    n_part: int,
+    max_supersteps: int,
+    block_dir: str | None = None,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 5,
+    resume: bool = False,
+    steps_per_job: int = 1,
+) -> LoopResult:
+    """Run ``spec`` to convergence on the packed CSR-block path.
+
+    Builds (or validates and reuses) the edge blocks in ``block_dir`` and
+    the per-bucket vertex sidecar, then loops fused jobs of
+    ``steps_per_job`` supersteps each. Metrics are per superstep (a fused
+    job's convergence values land on its last superstep, walls are
+    amortized); ``LoopResult.state`` is the expanded per-vertex
+    ``(id, value_col)`` DataFrame.
+    """
+    spark = graph.spark
+    if block_dir is None:
+        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-" if spec.sym else "graftpark-blocks-")
+    # _SUCCESS + meta validation (bucket count, symmetrized flag, edge
+    # fingerprint): a crashed partial write or a directory built from the
+    # other edge orientation is rebuilt instead of silently reused
+    edges = graph.edges_sym() if spec.sym else graph.edges
+    ensure_edge_blocks(edges, n_part, block_dir, sym=spec.sym, stats=graph.edge_stats(sym=spec.sym))
+
+    if spec.out_deg:
+        deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
+        vdf = graph.vertices().join(deg, "id", "left").select(
+            "id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+    else:
+        vdf = graph.vertices().select("id", F.lit(0).alias("out_deg"))
+    vdf = vdf.withColumn("bucket", bucket_col("id", n_part).cast("int")).persist()
+    # one-time: per-bucket static vertex sidecar (sorted ids, out-degrees)
+    vdf.groupBy("bucket").applyInArrow(
+        vertex_sidecar_writer(block_dir), schema="bucket int, n long"
+    ).count()
+
+    sql_t = "double" if np.dtype(spec.dtype).kind == "f" else "long"
+
+    def pack(expanded: DataFrame) -> DataFrame:
+        return (
+            expanded.withColumn("bucket", bucket_col("id", n_part).cast("int"))
+            .groupBy("bucket")
+            .applyInArrow(_pack_fn(spec.value_col, spec.dtype), schema=PACKED_SCHEMA)
+        )
+
+    def expand(packed: DataFrame) -> DataFrame:
+        return packed.mapInArrow(_expand_fn(block_dir, spec.value_col, spec.dtype),
+                                 schema=f"id long, {spec.value_col} {sql_t}")
+
+    k = max(1, steps_per_job)
+    checkpointer = (
+        _PackedCheckpointer(checkpoint_dir, max(1, checkpoint_every // k), pack, expand)
+        if checkpoint_dir else None
+    )
+    start, initial_metrics = 1, None
+    state0 = pack(vdf.select("id", spec.init.alias(spec.value_col)))
+    if resume and checkpointer is not None:
+        rp = resume_point(checkpointer, spark)
+        if rp is not None:
+            state0, last, initial_metrics = rp
+            start = last + 1
+
+    gather = _gather_fn(block_dir, n_part, spec.dtype, spec.gather, spec.scalar)
+    finish = _finish_fn(block_dir, n_part, spec.dtype, spec.combine)
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        for _ in range(k):
+            msgs = state.mapInArrow(gather, schema=_MSG_SCHEMA)
+            state = msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
+        return state
+
+    def observe_cols() -> dict:
+        return {"delta": F.sum("delta"), "dangling": F.sum("dangling"), "active": F.sum("active")}
+
+    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
+        return {**spec.stats(observed), "supersteps_in_job": k}
+
+    with _superstep_confs(spark, n_part):
+        res = iterate(
+            state0,
+            step,
+            stats,
+            converged_fn=spec.converged,
+            max_supersteps=-(-max_supersteps // k),
+            checkpointer=checkpointer,
+            start_superstep=start,
+            initial_metrics=initial_metrics,
+            observe_cols=observe_cols,
+        )
+    vdf.unpersist()
+    metrics = res.metrics
+    if k > 1:
+        # per-superstep records: convergence values reflect the job's
+        # LAST superstep, walls are amortized over the job
+        metrics = []
+        for rec in res.metrics:
+            kk = rec.get("supersteps_in_job", k)
+            last = {key: v for key, v in rec.items()
+                    if key not in ("superstep", "wall_s", "supersteps_in_job")}
+            for j in range(kk):
+                metrics.append({"superstep": (rec["superstep"] - 1) * kk + j + 1,
+                                "wall_s": rec["wall_s"] / kk, **(last if j == kk - 1 else {})})
+    return LoopResult(state=expand(res.state), metrics=metrics,
+                      supersteps=res.supersteps * k, converged=res.converged)

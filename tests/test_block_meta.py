@@ -87,14 +87,14 @@ def test_ensure_rebuilds_partial_write(spark, tmp_path):
 
 
 def test_shared_block_dir_across_kernels_is_safe(spark, tmp_path):
-    """pagerank(csr) writes DIRECTED blocks; cc(csr) pointed at the same
-    dir needs symmetrized ones — the meta check forces a rebuild and the
-    result matches the dataframe formulation."""
+    """pagerank(packed) writes DIRECTED blocks; cc(packed) pointed at the
+    same dir needs symmetrized ones — the meta check forces a rebuild and
+    the result matches the dataframe formulation."""
     n, directed, edges = G30_HUB
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
     d = str(tmp_path / "blk")
-    pagerank(g, strategy="csr", max_supersteps=5, block_dir=d)
-    a = {r["id"]: r["comp"] for r in connected_components(g, strategy="csr", block_dir=d).state.collect()}
+    pagerank(g, strategy="packed", max_supersteps=5, block_dir=d)
+    a = {r["id"]: r["comp"] for r in connected_components(g, strategy="packed", block_dir=d).state.collect()}
     b = {r["id"]: r["comp"] for r in connected_components(g, strategy="dataframe").state.collect()}
     assert a == b
 

@@ -1,12 +1,11 @@
-"""CSR-block strategy (north_star execution path) matches the
-pure-DataFrame reference formulation exactly.
+"""The packed CSR-block strategy (north_star execution path) matches the
+pure-DataFrame reference formulation.
 
 The DataFrame kernels are the semantic spec (SURVEY.md §2.7-2.8); the
-CSR path (graftpark/blocks.py) must agree to float tolerance (sum
-order differs) / exactly (min semiring).
+packed path (graftpark/packed.py over graftpark/blocks.py) must agree to
+float tolerance (sum order differs) / exactly (min and mode semirings).
 """
 
-import pandas as pd
 import pytest
 
 from graftpark.fixtures import G6_TWO_COMP, G30_HUB, powerlaw_edges_pdf
@@ -30,38 +29,14 @@ def powerlaw_graph(spark):
     return Graph(spark.createDataFrame(pdf))
 
 
-def test_pagerank_csr_matches_dataframe_fixture(spark, tmp_path):
+def test_pagerank_packed_matches_dataframe_fixture(spark, tmp_path):
     n, directed, edges = G30_HUB
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
     a = _ranks(pagerank(g, strategy="dataframe", max_supersteps=30, tol=1e-4))
-    b = _ranks(pagerank(g, strategy="csr", max_supersteps=30, tol=1e-4,
+    b = _ranks(pagerank(g, strategy="packed", max_supersteps=30, tol=1e-4,
                         block_dir=str(tmp_path / "blk")))
     assert set(a) == set(b)
     assert max(abs(a[k] - b[k]) for k in a) < 1e-9
-
-
-def test_pagerank_csr_matches_dataframe_powerlaw(spark, powerlaw_graph, tmp_path):
-    a = _ranks(pagerank(powerlaw_graph, strategy="dataframe", max_supersteps=25))
-    b = _ranks(pagerank(powerlaw_graph, strategy="csr", max_supersteps=25,
-                        block_dir=str(tmp_path / "blk")))
-    assert set(a) == set(b)
-    assert max(abs(a[k] - b[k]) for k in a) < 1e-9
-    assert abs(sum(b.values()) - 1.0) < 1e-9
-
-
-def test_cc_csr_matches_dataframe(spark, tmp_path):
-    n, directed, edges = G6_TWO_COMP
-    g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
-    a = _comps(connected_components(g, strategy="dataframe"))
-    b = _comps(connected_components(g, strategy="csr", block_dir=str(tmp_path / "blk")))
-    assert a == b == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
-
-
-def test_cc_csr_matches_dataframe_powerlaw(spark, powerlaw_graph, tmp_path):
-    a = _comps(connected_components(powerlaw_graph, strategy="dataframe"))
-    b = _comps(connected_components(powerlaw_graph, strategy="csr",
-                                    block_dir=str(tmp_path / "blk")))
-    assert a == b
 
 
 def test_pagerank_packed_matches_dataframe(spark, powerlaw_graph, tmp_path):
@@ -73,22 +48,18 @@ def test_pagerank_packed_matches_dataframe(spark, powerlaw_graph, tmp_path):
     assert abs(sum(b.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_packed_arrow_matches_pandas(spark, powerlaw_graph, tmp_path):
-    """The Arrow-native packed path (mapInArrow/applyInArrow with
-    zero-copy payload tiling, blocks.py packed_gather_arrow_fn) is the
-    SAME dataflow as the pandas-UDF packed path — only the payload
-    serialization changes — so ranks must agree to float-sum-order
-    tolerance and checkpoint/fusion behavior is shared."""
+def test_pagerank_packed_fused_steps_match(spark, powerlaw_graph, tmp_path):
+    """``steps_per_job=4`` chains four supersteps into one query; the
+    finish derives the damping base from the broadcast dangling mass, so
+    the fused run equals one job per superstep."""
     blk = str(tmp_path / "blk")
     a = _ranks(pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                        block_dir=blk, arrow_native=True))
-    b = _ranks(pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                        block_dir=blk, arrow_native=False))
-    assert set(a) == set(b)
-    assert max(abs(a[k] - b[k]) for k in a) < 1e-12
-    # fused supersteps (one query per k) through the Arrow path too
-    c = _ranks(pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                        block_dir=blk, arrow_native=True, steps_per_job=4))
+                        block_dir=blk))
+    c = pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
+                 block_dir=blk, steps_per_job=4)
+    assert c.supersteps == 12 and [m["superstep"] for m in c.metrics] == list(range(1, 13))
+    c = _ranks(c)
+    assert set(a) == set(c)
     assert max(abs(a[k] - c[k]) for k in a) < 1e-12
 
 
@@ -106,26 +77,16 @@ def test_pagerank_packed_checkpoint_resume(spark, powerlaw_graph, tmp_path):
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12
 
 
-def test_labelprop_csr_matches_dataframe(spark, powerlaw_graph, tmp_path):
-    a = {r["id"]: r["label"]
-         for r in label_propagation(powerlaw_graph, strategy="dataframe",
-                                    max_supersteps=5).state.collect()}
-    b = {r["id"]: r["label"]
-         for r in label_propagation(powerlaw_graph, strategy="csr", max_supersteps=5,
-                                    block_dir=str(tmp_path / "blk")).state.collect()}
-    assert a == b
-
-
-def test_pagerank_csr_checkpoint_resume(spark, tmp_path):
+def test_pagerank_packed_checkpoint_resume_replays_metrics(spark, tmp_path):
     n, directed, edges = G30_HUB
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
     run_dir = str(tmp_path / "run")
     blk = str(tmp_path / "blk")
-    full = pagerank(g, strategy="csr", max_supersteps=12, tol=0.0, block_dir=blk)
+    full = pagerank(g, strategy="packed", max_supersteps=12, tol=0.0, block_dir=blk)
     # partial run to superstep 6 (checkpoint_every=3 → durable at 3 and 6)
-    pagerank(g, strategy="csr", max_supersteps=6, tol=0.0, block_dir=blk,
+    pagerank(g, strategy="packed", max_supersteps=6, tol=0.0, block_dir=blk,
              checkpoint_dir=run_dir, checkpoint_every=3)
-    resumed = pagerank(g, strategy="csr", max_supersteps=12, tol=0.0, block_dir=blk,
+    resumed = pagerank(g, strategy="packed", max_supersteps=12, tol=0.0, block_dir=blk,
                        checkpoint_dir=run_dir, checkpoint_every=3, resume=True)
     assert resumed.metrics[0]["superstep"] == 1  # metrics replayed from file
     assert resumed.supersteps == 12
@@ -175,8 +136,7 @@ def test_lp_packed_matches_dataframe(spark, powerlaw_graph, tmp_path):
 
 def test_cc_packed_checkpoint_resume(spark, powerlaw_graph, tmp_path):
     """The at-scale (packed) CC path is durable-checkpointable: kill after
-    superstep 2, resume, exact same components as an uninterrupted run —
-    strategy='auto' with checkpoint_dir no longer downgrades to csr."""
+    superstep 2, resume, exact same components as an uninterrupted run."""
     run_dir, blk = str(tmp_path / "run"), str(tmp_path / "blk")
     full = _comps(connected_components(powerlaw_graph, strategy="packed", block_dir=blk))
     connected_components(powerlaw_graph, strategy="packed", block_dir=blk,
@@ -220,32 +180,11 @@ def test_lp_packed_fixture(spark, tmp_path):
     assert a == b
 
 
-def test_cc_packed_arrow_matches_pandas(spark, powerlaw_graph, tmp_path):
-    """The Arrow-native packed min-semiring path (mapInArrow/applyInArrow,
-    blocks.py packed_gather_min_arrow_fn) is the same dataflow as the
-    pandas-UDF packed path — int64 labels, so equality is EXACT."""
-    blk = str(tmp_path / "blk")
-    a = _comps(connected_components(powerlaw_graph, strategy="packed",
-                                    block_dir=blk, arrow_native=True))
-    b = _comps(connected_components(powerlaw_graph, strategy="packed",
-                                    block_dir=blk, arrow_native=False))
-    assert a == b
-    c = _comps(connected_components(powerlaw_graph, strategy="dataframe"))
-    assert a == c
-
-
-def test_labelprop_packed_arrow_matches_pandas(spark, powerlaw_graph, tmp_path):
-    """Arrow-native packed mode-semiring path (single-buffer composite
-    payload tiling, blocks.py packed_gather_mode_arrow_fn) — exact
-    equality with the pandas packed path at every superstep count."""
-    blk = str(tmp_path / "blk")
-    for steps in (3, 7):
-        a = {r["id"]: r["label"]
-             for r in label_propagation(powerlaw_graph, strategy="packed",
-                                        max_supersteps=steps, block_dir=blk,
-                                        arrow_native=True).state.collect()}
-        b = {r["id"]: r["label"]
-             for r in label_propagation(powerlaw_graph, strategy="packed",
-                                        max_supersteps=steps, block_dir=blk,
-                                        arrow_native=False).state.collect()}
-        assert a == b
+@pytest.mark.parametrize("kernel", [pagerank, connected_components, label_propagation],
+                         ids=lambda f: f.__name__)
+@pytest.mark.parametrize("strategy", ["csr", "bogus"])
+def test_unknown_strategy_raises(spark, kernel, strategy):
+    n, directed, edges = G6_TWO_COMP
+    g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        kernel(g, strategy=strategy)

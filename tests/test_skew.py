@@ -9,7 +9,7 @@ The engine's skew strategy is layered, not salt-based:
 2. co-partitioned path (broadcast_state=False): V-row state shuffles to
    the edge partitioning; AQE skew-join splitting divides oversized
    partitions at runtime.
-3. csr/packed path: a hub's out-edges live in one bucket but the
+3. packed path: a hub's out-edges live in one bucket but the
    per-edge work is a vectorized gather (no per-row overhead), and
    dst-side partials are bucket-balanced by pmod(hash).
 
@@ -71,6 +71,6 @@ def test_powerlaw_pagerank_all_paths_agree(spark, powerlaw, tmp_path):
     assert max(abs(a[k] - c[k]) for k in a) < 1e-9
 
 
-def test_star_cc_csr_path(spark, star, tmp_path):
-    a = _comps(connected_components(star, strategy="csr", block_dir=str(tmp_path / "blk")))
+def test_star_cc_packed_path(spark, star, tmp_path):
+    a = _comps(connected_components(star, strategy="packed", block_dir=str(tmp_path / "blk")))
     assert set(a.values()) == {1} and len(a) == 10000
