@@ -126,9 +126,9 @@ def main() -> None:
     # best-of-N with the winning run's metrics kept.
     n_samples = int(os.environ.get("GRAFTPARK_BENCH_SAMPLES", "2"))
 
-    def timed(name: str, fn, samples: int | None = None):
+    def timed(name: str, fn):
         best_dt, best_res = None, None
-        for _ in range(samples or n_samples):
+        for _ in range(n_samples):
             t0 = time.monotonic()
             res = fn()
             dt = time.monotonic() - t0
@@ -146,8 +146,7 @@ def main() -> None:
     # supersteps, not the 60 the old cap allowed (BENCH_r01 smell).
     g_sf = Graph(edges_from_testdata(spark, sf_dir)).persist_for_iteration(cpus)
     n_edges_sf = g_sf.edges.count()
-    # one sample: 64+ supersteps self-average, and two runs cost ~70 s
-    res = timed("pagerank_sf", lambda: pagerank(g_sf, tol=1e-6, max_supersteps=100), samples=1)
+    res = timed("pagerank_sf", lambda: pagerank(g_sf, tol=1e-6, max_supersteps=100))
     converged["pagerank_sf"] = res.converged
     g_sf.unpersist()
 

@@ -44,7 +44,7 @@ def connected_components(
     n = graph.num_vertices()
     if resolve_strategy(graph, strategy, n, broadcast_state, block_dir) == "packed":
         return run_packed(graph, _min_label_spec(), n_part, max_supersteps, block_dir,
-                          checkpoint_dir, checkpoint_every, resume)
+                          checkpoint_dir, checkpoint_every, resume, kernel="connected_components")
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src")
     sym = graph.edges_sym()
@@ -105,6 +105,7 @@ def connected_components(
         start_superstep=start,
         initial_metrics=initial_metrics,
         observe_cols=observe_cols,
+        label="connected_components/dataframe",
     )
 
 

@@ -42,7 +42,7 @@ def label_propagation(
     n = graph.num_vertices()
     if resolve_strategy(graph, strategy, n, broadcast_state, block_dir) == "packed":
         return run_packed(graph, _mode_spec(), n_part, max_supersteps, block_dir,
-                          checkpoint_dir, checkpoint_every, resume)
+                          checkpoint_dir, checkpoint_every, resume, kernel="label_propagation")
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src")
     sym = graph.edges_sym()
@@ -114,6 +114,7 @@ def label_propagation(
         start_superstep=start,
         initial_metrics=initial_metrics,
         observe_cols=observe_cols,
+        label="label_propagation/dataframe",
     )
 
 

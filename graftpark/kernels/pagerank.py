@@ -68,7 +68,7 @@ def pagerank(
     if strategy == "packed":
         return run_packed(
             graph, _packed_spec(n, alpha, tol, payload_dtype), n_part, max_supersteps,
-            block_dir, checkpoint_dir, checkpoint_every, resume, steps_per_job,
+            block_dir, checkpoint_dir, checkpoint_every, resume, steps_per_job, kernel="pagerank",
         )
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src", sym=False)
@@ -173,6 +173,7 @@ def pagerank(
         start_superstep=start,
         initial_metrics=initial_metrics,
         observe_cols=observe_cols,
+        label="pagerank/dataframe",
     )
 
 

@@ -21,7 +21,8 @@ Checkpoint layout (north_rule: resumable with per-partition lineage):
 
     {run_dir}/superstep=00007/state/*.parquet   (with _SUCCESS marker)
     {run_dir}/superstep=00007/lineage.json      per-partition rows/min/max/hash
-    {run_dir}/metrics.jsonl                     one record per superstep
+    {run_dir}/metrics.jsonl                     one record per superstep (or fused
+                                                call, named by its last superstep)
 """
 
 from __future__ import annotations
@@ -116,6 +117,8 @@ def iterate(
     start_superstep: int = 1,
     initial_metrics: list[dict] | None = None,
     observe_cols: Callable[[], dict] | None = None,
+    steps_per_call: int = 1,
+    label: str | None = None,
 ) -> LoopResult:
     """Run a level-synchronous superstep loop.
 
@@ -129,6 +132,16 @@ def iterate(
     materializes the new state (``DataFrame.observe``) — zero extra
     actions per superstep; ``stats_fn(observed_row_dict, prev, i)`` then
     just post-processes the observed values.
+
+    Superstep numbers count supersteps, not calls: ``step_fn`` advances
+    the state by ``steps_per_call`` supersteps and ``i`` is the last of
+    them, so checkpoint dirs, metrics records and resume points mean the
+    same superstep whatever ``steps_per_call`` wrote them. A durable
+    checkpoint (or a lineage truncation) is taken after every call that
+    reaches a multiple of ``checkpointer.every`` (``truncate_every``).
+    With a ``label``, the Spark jobs of superstep ``i`` are described as
+    ``{label}/superstep={i}``; the caller's description is restored on
+    return.
     """
     from pyspark.sql import Observation
 
@@ -138,48 +151,61 @@ def iterate(
     prev_ckpt_rdd = None
     converged = False
     i = start_superstep - 1
-    for i in range(start_superstep, max_supersteps + 1):
-        t0 = time.monotonic()
-        new = step_fn(prev, i)
-        obs = None
-        if observe_cols is not None:
-            obs = Observation(f"superstep_{i}")
-            cols = observe_cols()
-            new = new.observe(obs, *[c.alias(name) for name, c in cols.items()])
-        new_ckpt_rdd = None
-        do_durable = checkpointer is not None and i % checkpointer.every == 0
-        if do_durable:
-            # parquet write + re-read: durable resume point AND flat lineage
-            new = checkpointer.save(new, i)
-            new = new.persist(StorageLevel.MEMORY_AND_DISK)
-        elif i % truncate_every == 0:
-            # eager local checkpoint: materializes AND flattens the logical
-            # plan — without this, Catalyst re-analysis of the growing join
-            # tree dominates after a handful of supersteps (SURVEY.md §4.3.1)
-            new = new.localCheckpoint(eager=True)
-            new_ckpt_rdd = _checkpoint_rdd(new)
-        else:
-            new = new.persist(StorageLevel.MEMORY_AND_DISK)
-            new.count()
-        stats = stats_fn(obs.get if obs is not None else new, prev, i)
-        rec = {"superstep": i, "wall_s": time.monotonic() - t0, **stats}
-        metrics.append(rec)
-        if checkpointer is not None:
-            checkpointer.record_metrics(rec)
-        # free the retired state NOW: DataFrame.unpersist does not release
-        # localCheckpoint RDD blocks (they otherwise linger until the JVM
-        # happens to GC the RDD reference → storage bloat + GC churn)
-        prev.unpersist()
-        if prev_ckpt_rdd is not None:
-            try:
-                prev_ckpt_rdd.unpersist(False)
-            except Exception:
-                pass
-        prev, prev_ckpt_rdd = new, new_ckpt_rdd
-        if converged_fn(rec):
-            converged = True
-            break
+    k = max(1, steps_per_call)
+    sc = initial_state.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        while i < max_supersteps:
+            i += k
+            if label is not None:
+                sc.setJobDescription(f"{label}/superstep={i}")
+            t0 = time.monotonic()
+            new = step_fn(prev, i)
+            obs = None
+            if observe_cols is not None:
+                obs = Observation(f"superstep_{i}")
+                cols = observe_cols()
+                new = new.observe(obs, *[c.alias(name) for name, c in cols.items()])
+            new_ckpt_rdd = None
+            if checkpointer is not None and _reaches_multiple(i, k, checkpointer.every):
+                # parquet write + re-read: durable resume point AND flat lineage
+                new = checkpointer.save(new, i)
+                new = new.persist(StorageLevel.MEMORY_AND_DISK)
+            elif _reaches_multiple(i, k, truncate_every):
+                # eager local checkpoint: materializes AND flattens the logical
+                # plan — without this, Catalyst re-analysis of the growing join
+                # tree dominates after a handful of supersteps (SURVEY.md §4.3.1)
+                new = new.localCheckpoint(eager=True)
+                new_ckpt_rdd = _checkpoint_rdd(new)
+            else:
+                new = new.persist(StorageLevel.MEMORY_AND_DISK)
+                new.count()
+            stats = stats_fn(obs.get if obs is not None else new, prev, i)
+            rec = {"superstep": i, "wall_s": time.monotonic() - t0, **stats}
+            metrics.append(rec)
+            if checkpointer is not None:
+                checkpointer.record_metrics(rec)
+            # free the retired state NOW: DataFrame.unpersist does not release
+            # localCheckpoint RDD blocks (they otherwise linger until the JVM
+            # happens to GC the RDD reference → storage bloat + GC churn)
+            prev.unpersist()
+            if prev_ckpt_rdd is not None:
+                try:
+                    prev_ckpt_rdd.unpersist(False)
+                except Exception:
+                    pass
+            prev, prev_ckpt_rdd = new, new_ckpt_rdd
+            if converged_fn(rec):
+                converged = True
+                break
+    finally:
+        sc.setJobDescription(caller_desc)
     return LoopResult(state=prev, metrics=metrics, supersteps=i, converged=converged)
+
+
+def _reaches_multiple(i: int, k: int, every: int) -> bool:
+    """Whether supersteps ``i-k+1 .. i`` include a multiple of ``every``."""
+    return i // every > (i - k) // every
 
 
 def _checkpoint_rdd(df: DataFrame):

@@ -1,4 +1,4 @@
-"""Packed superstep engine: one Arrow gather, one Arrow finish, one driver.
+"""Packed superstep engine: one per-bucket emitter, one fused superstep, one driver.
 
 PageRank (sum), connected components (min) and label propagation (mode)
 are one dataflow over the same CSR blocks (graftpark/blocks.py) with
@@ -11,21 +11,29 @@ Vertex state travels as ONE binary payload per bucket and partial
 aggregates as ONE payload per (src_bucket → dst_bucket) pair. The
 destination-id list of every message is static — derivable from the
 shared mmap blocks and the per-bucket vertex sidecar — so payloads carry
-values only. A superstep is
+values only. The loop carries the message table, not the state: per
+bucket, the emitter writes
 
-    state ─mapInArrow(gather)→ the state itself (src_bucket=-1),
-          optional broadcast scalars (src_bucket=-2), and the P outgoing
-          messages as ONE zero-copy BinaryArray tiling the
+    the state-carrier row (src_bucket=-1): the state payload plus the
+          bucket's (delta, dangling, active) convergence aggregates,
+    optional broadcast scalar rows (src_bucket=-2),
+    the P outgoing messages as ONE zero-copy BinaryArray tiling the
           dst-bucket-contiguous partial buffer (block layout v3+)
-    ─the ONE bucket-keyed shuffle→ applyInArrow(finish): payloads read
-          straight from the Arrow IPC buffers → next state row plus
-          per-bucket (delta, dangling, active) convergence aggregates
 
-so a superstep shuffles ~P² small binary rows (P = bucket count) rather
-than ~E rows. Finishes are superstep-independent (broadcast scalars are
-derived inside the reduce), so ``steps_per_job`` supersteps chain into
-one query. Durable checkpoints expand to plain per-vertex parquet and
-re-pack on resume.
+and a superstep is
+
+    carry ─the ONE bucket-keyed shuffle→ applyInArrow: payloads read
+          straight from the Arrow IPC buffers → combine → the emitter on
+          the new state, in the same task → next carry
+
+so a superstep runs ONE Python stage and shuffles ~P² small binary rows
+(P = bucket count) rather than ~E rows. On a fresh start and on a
+checkpoint load, an entry ``applyInArrow`` packs per-vertex rows by
+bucket and runs the same emitter. Supersteps are independent of their
+index (broadcast scalars are summed inside the reduce), so
+``steps_per_job`` supersteps chain into one query. Convergence sums the
+carrier rows' aggregates; durable checkpoints expand the carrier rows to
+plain per-vertex parquet and re-enter the loop from it on resume.
 """
 
 from __future__ import annotations
@@ -53,16 +61,14 @@ from graftpark.blocks import (
 from graftpark.graph import Graph, choose_strategy
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
 
-#: packed state row schema: one row per bucket
-PACKED_SCHEMA = "bucket int, payload binary, delta double, dangling double, active long"
-_STATE_ARROW = pa.schema(
-    [("bucket", pa.int32()), ("payload", pa.binary()), ("delta", pa.float64()),
-     ("dangling", pa.float64()), ("active", pa.int64())]
-)
-#: gather output: one row per (dst bucket, src bucket) message
-_MSG_SCHEMA = "bucket int, src_bucket int, payload binary"
-_MSG_ARROW = pa.schema(
-    [("bucket", pa.int32()), ("src_bucket", pa.int32()), ("payload", pa.binary())]
+#: the loop carry: per bucket, its state-carrier row (src_bucket=-1, the
+#: only row whose aggregates are not null), broadcast scalar rows (-2) and
+#: one message row per (dst bucket, src bucket) pair
+_CARRY_SCHEMA = ("bucket int, src_bucket int, payload binary, delta double, dangling double, "
+                 "active long")
+_CARRY_ARROW = pa.schema(
+    [("bucket", pa.int32()), ("src_bucket", pa.int32()), ("payload", pa.binary()),
+     ("delta", pa.float64()), ("dangling", pa.float64()), ("active", pa.int64())]
 )
 
 STRATEGIES = ("auto", "dataframe", "packed")
@@ -194,17 +200,8 @@ def _whole(values: np.ndarray):
     return _binary_tiles(values, np.asarray([0, values.nbytes], np.int64))
 
 
-def _state_row(bucket: int, values: np.ndarray, delta: float, dangling: float, active: int):
-    """One packed state row (``PACKED_SCHEMA``) as an Arrow table."""
-    return pa.Table.from_arrays(
-        [pa.array([bucket], pa.int32()), _whole(values), pa.array([delta], pa.float64()),
-         pa.array([dangling], pa.float64()), pa.array([active], pa.int64())],
-        schema=_STATE_ARROW,
-    )
-
-
 def _state_rows(batches):
-    """(bucket, payload buffer) of every packed state row of a mapInArrow input."""
+    """(bucket, payload buffer) of every carrier row of a mapInArrow input."""
     for batch in batches:
         bcol = batch.column(batch.schema.get_field_index("bucket"))
         pcol = batch.column(batch.schema.get_field_index("payload"))
@@ -212,66 +209,86 @@ def _state_rows(batches):
             yield int(bcol[i].as_py()), pcol[i].as_buffer()
 
 
-def _gather_fn(block_dir: str, num_buckets: int, dtype: str, gather: Callable,
-               scalar: Callable | None):
-    """mapInArrow fn: packed state rows → the state row itself, broadcast
-    scalar rows and one message per destination bucket."""
-    dt = np.dtype(dtype)
+def _emitter(block_dir: str, num_buckets: int, gather: Callable, scalar: Callable | None):
+    """Per-bucket emitter: ``emit(b, state, vtx, (delta, dangling,
+    active))`` → bucket ``b``'s rows of the loop carry as one Arrow table:
+    its carrier row (src_bucket=-1, with the aggregates), broadcast scalar
+    rows and one message per destination bucket."""
     bids = bucket_ids_sorted(num_buckets)
     all_dst = pa.array(np.ascontiguousarray(bids, dtype=np.int32))
     scalar_src = pa.array(np.full(num_buckets, -2, np.int32))
     scalar_off = np.arange(num_buckets + 1, dtype=np.int64) * 8
+    no_aggs = [pa.nulls(num_buckets, pa.float64()), pa.nulls(num_buckets, pa.float64()),
+               pa.nulls(num_buckets, pa.int64())]
 
-    def fn(batches):
-        for b, pbuf in _state_rows(batches):
-            # pass the state through to the finish (src_bucket=-1) so the
-            # superstep needs no separate carrier branch
+    def messages(b: int, state: np.ndarray, vtx):
+        if vtx is None:
+            return
+        if scalar is not None:
+            s = np.full(num_buckets, scalar(state, vtx), np.float64)
             yield pa.RecordBatch.from_arrays(
-                [pa.array([b], pa.int32()), pa.array([-1], pa.int32()),
-                 _whole(np.frombuffer(pbuf, np.uint8))],
-                schema=_MSG_ARROW,
+                [all_dst, scalar_src, _binary_tiles(s, scalar_off), *no_aggs], schema=_CARRY_ARROW
             )
-            vtx = load_vertices(block_dir, b)
-            if vtx is None:
-                continue
-            state = np.frombuffer(pbuf, dtype=dt)
-            if scalar is not None:
-                s = np.full(num_buckets, scalar(state, vtx), np.float64)
-                yield pa.RecordBatch.from_arrays(
-                    [all_dst, scalar_src, _binary_tiles(s, scalar_off)], schema=_MSG_ARROW
-                )
-            blk = load_block(block_dir, b)
-            if blk is None or blk["n_edges"] == 0:
-                continue
-            off = np.asarray(_gather_offsets(block_dir, b, blk, num_buckets))
-            # offsets at the (sparse) actual bucket ids tile the partial
-            # exactly: absent ids contribute zero counts, so
-            # off[bids[j+1]] == end of bucket bids[j]'s segment. Pairs with
-            # no edges become empty-payload rows (the finish's scatter
-            # segment for them is empty too).
-            seg = np.empty(num_buckets + 1, np.int64)
-            seg[:-1] = off[bids]
-            seg[-1] = off[-1]
-            values, byte_off = gather(state, vtx, blk, _static_positions(block_dir, b, blk), seg)
-            yield pa.RecordBatch.from_arrays(
-                [all_dst, pa.array(np.full(num_buckets, b, np.int32)),
-                 _binary_tiles(values, byte_off)],
-                schema=_MSG_ARROW,
-            )
+        blk = load_block(block_dir, b)
+        if blk is None or blk["n_edges"] == 0:
+            return
+        off = np.asarray(_gather_offsets(block_dir, b, blk, num_buckets))
+        # offsets at the (sparse) actual bucket ids tile the partial
+        # exactly: absent ids contribute zero counts, so
+        # off[bids[j+1]] == end of bucket bids[j]'s segment. Pairs with
+        # no edges become empty-payload rows (the combine's scatter
+        # segment for them is empty too).
+        seg = np.empty(num_buckets + 1, np.int64)
+        seg[:-1] = off[bids]
+        seg[-1] = off[-1]
+        values, byte_off = gather(state, vtx, blk, _static_positions(block_dir, b, blk), seg)
+        yield pa.RecordBatch.from_arrays(
+            [all_dst, pa.array(np.full(num_buckets, b, np.int32)),
+             _binary_tiles(values, byte_off), *no_aggs],
+            schema=_CARRY_ARROW,
+        )
+
+    def emit(b: int, state: np.ndarray, vtx, aggs) -> pa.Table:
+        delta, dangling, active = aggs
+        carrier = pa.RecordBatch.from_arrays(
+            [pa.array([b], pa.int32()), pa.array([-1], pa.int32()), _whole(state),
+             pa.array([delta], pa.float64()), pa.array([dangling], pa.float64()),
+             pa.array([active], pa.int64())],
+            schema=_CARRY_ARROW,
+        )
+        return pa.Table.from_batches([carrier, *messages(b, state, vtx)], schema=_CARRY_ARROW)
+
+    return emit
+
+
+def _enter_fn(block_dir: str, value_col: str, dtype: str, emit: Callable):
+    """applyInArrow fn (grouped by bucket), run on a fresh start and on a
+    checkpoint load: per-vertex rows → the bucket's state, aligned to its
+    sorted sidecar ids → the emitter."""
+    dt = np.dtype(dtype)
+
+    def fn(key, table):
+        b = int(key[0].as_py())
+        ids = table.column("id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        state = np.ascontiguousarray(table.column(value_col).to_numpy().astype(dt)[order])
+        return emit(b, state, load_vertices(block_dir, b), (float("inf"), 0.0, len(ids)))
 
     return fn
 
 
-def _finish_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable):
-    """applyInArrow fn (grouped by bucket): one bucket's messages → its
-    next state row plus convergence aggregates."""
+def _superstep_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable,
+                  emit: Callable):
+    """applyInArrow fn (grouped by bucket): one bucket's carrier, scalar
+    and message rows → ``combine`` → the emitter, so the next superstep's
+    gather runs in this same task."""
     dt = np.dtype(dtype)
 
     def fn(key, table):
         c = int(key[0].as_py())
         vtx = load_vertices(block_dir, c)
         if vtx is None:  # a bucket with no vertices gets only broadcast rows
-            return _STATE_ARROW.empty_table()
+            return _CARRY_ARROW.empty_table()
         flay = _finish_layout(block_dir, c, num_buckets)
         fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
         srcb = table.column("src_bucket").to_numpy()
@@ -288,27 +305,14 @@ def _finish_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable):
                 msgs.append((fpos[foff[b]:foff[b + 1]], buf))
         if prev is None:
             raise ValueError(f"bucket {c} of {block_dir!r} received messages but no state row")
-        return _state_row(c, *combine(prev, msgs, scalar, vtx))
-
-    return fn
-
-
-def _pack_fn(value_col: str, dtype: str):
-    """applyInArrow fn (grouped by bucket): per-vertex rows → one packed
-    row, values aligned to the bucket's sorted sidecar ids."""
-    dt = np.dtype(dtype)
-
-    def fn(key, table):
-        ids = table.column("id").to_numpy()
-        order = np.argsort(ids, kind="stable")
-        payload = np.ascontiguousarray(table.column(value_col).to_numpy().astype(dt)[order])
-        return _state_row(key[0].as_py(), payload, float("inf"), 0.0, len(ids))
+        new, *aggs = combine(prev, msgs, scalar, vtx)
+        return emit(c, new, vtx, aggs)
 
     return fn
 
 
 def _expand_fn(block_dir: str, value_col: str, dtype: str):
-    """mapInArrow fn: packed state rows → per-vertex (id, value) rows."""
+    """mapInArrow fn: carrier rows → per-vertex (id, value) rows."""
     dt = np.dtype(dtype)
     out = np.dtype(np.float64) if dt.kind == "f" else dt
 
@@ -328,18 +332,18 @@ def _expand_fn(block_dir: str, value_col: str, dtype: str):
 class _PackedCheckpointer(Checkpointer):
     """Durable checkpoints stay per-vertex parquet (north_rule: resumable
     with per-partition lineage, readable by anything): ``save`` expands
-    the packed state before writing and re-packs the re-read, ``load``
-    packs the parquet back into bucket rows."""
+    the carry's carrier rows before writing and re-enters the loop from
+    the re-read, ``load`` re-enters it from the parquet."""
 
-    def __init__(self, run_dir: str, every: int, pack, expand):
+    def __init__(self, run_dir: str, every: int, enter, expand):
         super().__init__(run_dir, every=every)
-        self.pack, self.expand = pack, expand
+        self.enter, self.expand = enter, expand
 
-    def save(self, state: DataFrame, superstep: int) -> DataFrame:
-        return self.pack(super().save(self.expand(state), superstep))
+    def save(self, carry: DataFrame, superstep: int) -> DataFrame:
+        return self.enter(super().save(self.expand(carry), superstep))
 
     def load(self, spark, superstep: int) -> DataFrame:
-        return self.pack(super().load(spark, superstep))
+        return self.enter(super().load(spark, superstep))
 
 
 def run_packed(
@@ -352,12 +356,15 @@ def run_packed(
     checkpoint_every: int = 5,
     resume: bool = False,
     steps_per_job: int = 1,
+    *,
+    kernel: str,
 ) -> LoopResult:
     """Run ``spec`` to convergence on the packed CSR-block path.
 
     Builds (or validates and reuses) the edge blocks in ``block_dir`` and
     the per-bucket vertex sidecar, then loops fused jobs of
-    ``steps_per_job`` supersteps each. Metrics are per superstep (a fused
+    ``steps_per_job`` supersteps each, their Spark jobs described as
+    ``{kernel}/packed/superstep={i}``. Metrics are per superstep (a fused
     job's convergence values land on its last superstep, walls are
     amortized); ``LoopResult.state`` is the expanded per-vertex
     ``(id, value_col)`` DataFrame.
@@ -384,41 +391,43 @@ def run_packed(
     ).count()
 
     sql_t = "double" if np.dtype(spec.dtype).kind == "f" else "long"
+    emit = _emitter(block_dir, n_part, spec.gather, spec.scalar)
+    entry = _enter_fn(block_dir, spec.value_col, spec.dtype, emit)
+    superstep = _superstep_fn(block_dir, n_part, spec.dtype, spec.combine, emit)
 
-    def pack(expanded: DataFrame) -> DataFrame:
+    def enter(expanded: DataFrame) -> DataFrame:
+        """Per-vertex rows → the loop carry."""
         return (
             expanded.withColumn("bucket", bucket_col("id", n_part).cast("int"))
             .groupBy("bucket")
-            .applyInArrow(_pack_fn(spec.value_col, spec.dtype), schema=PACKED_SCHEMA)
+            .applyInArrow(entry, schema=_CARRY_SCHEMA)
         )
 
-    def expand(packed: DataFrame) -> DataFrame:
-        return packed.mapInArrow(_expand_fn(block_dir, spec.value_col, spec.dtype),
-                                 schema=f"id long, {spec.value_col} {sql_t}")
+    def expand(carry: DataFrame) -> DataFrame:
+        return carry.where(F.col("src_bucket") == -1).mapInArrow(
+            _expand_fn(block_dir, spec.value_col, spec.dtype),
+            schema=f"id long, {spec.value_col} {sql_t}")
 
     k = max(1, steps_per_job)
     checkpointer = (
-        _PackedCheckpointer(checkpoint_dir, max(1, checkpoint_every // k), pack, expand)
+        _PackedCheckpointer(checkpoint_dir, checkpoint_every, enter, expand)
         if checkpoint_dir else None
     )
     start, initial_metrics = 1, None
-    state0 = pack(vdf.select("id", spec.init.alias(spec.value_col)))
+    carry0 = enter(vdf.select("id", spec.init.alias(spec.value_col)))
     if resume and checkpointer is not None:
         rp = resume_point(checkpointer, spark)
         if rp is not None:
-            state0, last, initial_metrics = rp
+            carry0, last, initial_metrics = rp
             start = last + 1
 
-    gather = _gather_fn(block_dir, n_part, spec.dtype, spec.gather, spec.scalar)
-    finish = _finish_fn(block_dir, n_part, spec.dtype, spec.combine)
-
-    def step(state: DataFrame, i: int) -> DataFrame:
+    def step(carry: DataFrame, i: int) -> DataFrame:
         for _ in range(k):
-            msgs = state.mapInArrow(gather, schema=_MSG_SCHEMA)
-            state = msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
-        return state
+            carry = carry.groupBy("bucket").applyInArrow(superstep, schema=_CARRY_SCHEMA)
+        return carry
 
     def observe_cols() -> dict:
+        # aggregates are null on all but the carrier rows
         return {"delta": F.sum("delta"), "dangling": F.sum("dangling"), "active": F.sum("active")}
 
     def stats(observed: dict, prev: DataFrame, i: int) -> dict:
@@ -426,28 +435,26 @@ def run_packed(
 
     with _superstep_confs(spark, n_part):
         res = iterate(
-            state0,
+            carry0,
             step,
             stats,
             converged_fn=spec.converged,
-            max_supersteps=-(-max_supersteps // k),
+            max_supersteps=max_supersteps,
             checkpointer=checkpointer,
             start_superstep=start,
             initial_metrics=initial_metrics,
             observe_cols=observe_cols,
+            steps_per_call=k,
+            label=f"{kernel}/packed",
         )
     vdf.unpersist()
-    metrics = res.metrics
-    if k > 1:
-        # per-superstep records: convergence values reflect the job's
-        # LAST superstep, walls are amortized over the job
-        metrics = []
-        for rec in res.metrics:
-            kk = rec.get("supersteps_in_job", k)
-            last = {key: v for key, v in rec.items()
-                    if key not in ("superstep", "wall_s", "supersteps_in_job")}
-            for j in range(kk):
-                metrics.append({"superstep": (rec["superstep"] - 1) * kk + j + 1,
-                                "wall_s": rec["wall_s"] / kk, **(last if j == kk - 1 else {})})
+    # per-superstep records: a fused job's record is named by its last
+    # superstep and keeps the convergence values; walls are amortized
+    metrics = []
+    for rec in res.metrics:
+        kk = rec.get("supersteps_in_job", 1)
+        wall = rec["wall_s"] / kk
+        metrics += [{"superstep": rec["superstep"] - kk + j, "wall_s": wall} for j in range(1, kk)]
+        metrics.append({**rec, "wall_s": wall})
     return LoopResult(state=expand(res.state), metrics=metrics,
-                      supersteps=res.supersteps * k, converged=res.converged)
+                      supersteps=res.supersteps, converged=res.converged)
