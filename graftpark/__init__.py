@@ -25,5 +25,9 @@ lineage truncation, parquet checkpoint/resume and per-superstep metrics
 
 from graftpark.session import get_spark  # noqa: F401
 from graftpark.graph import Graph  # noqa: F401
+from graftpark import zipcache
+
+# workers import graftpark while unpickling any graftpark UDF
+zipcache.install()
 
 __version__ = "0.1.0"

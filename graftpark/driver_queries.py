@@ -98,6 +98,15 @@ def sparse_nation_edges_from_testdata(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
+def _released(g: Graph, out: DataFrame) -> DataFrame:
+    """``out`` after ``g.unpersist()``. A packed result reads the graph's
+    own block dirs lazily, so it is checkpointed before they are removed."""
+    if g._block_dirs:
+        out = out.localCheckpoint()
+    g.unpersist()
+    return out
+
+
 def q_edges_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edges_from_testdata(spark, sf_dir)
 
@@ -119,8 +128,7 @@ def q_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS)
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_pagerank_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,8 +140,7 @@ def q_pagerank_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed")
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_pagerank_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -153,8 +160,7 @@ def q_pagerank_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed",
                    checkpoint_dir=run_dir, checkpoint_every=half, resume=True)
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_cc_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,24 +169,21 @@ def q_cc_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = connected_components(g, strategy="packed")
     out = components_df(res)
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_cc_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = connected_components(g)
     out = components_df(res)
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_cc_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = connected_components(g)
     out = components_df(res)
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_cc_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,8 +220,7 @@ def q_label_prop_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = label_propagation(g, max_supersteps=LP_STEPS)
     out = labels_df(res)
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_label_prop_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,8 +229,7 @@ def q_label_prop_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = label_propagation(g, max_supersteps=LP_STEPS, strategy="packed")
     out = labels_df(res)
-    g.unpersist()
-    return out
+    return _released(g, out)
 
 
 def q_mis_coloring_nation(spark: SparkSession, sf_dir: str) -> DataFrame:

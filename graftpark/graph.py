@@ -23,7 +23,10 @@ reference: src/traversals/BFS/bfs_BLAS.jl:18).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
@@ -120,6 +123,7 @@ class Graph:
         self._edges_sym: DataFrame | None = None
         self._degrees: DataFrame | None = None
         self._edge_stats: dict[bool, tuple[int, int]] = {}
+        self._block_dirs: dict[tuple[bool, int], str] = {}
 
     # -- construction -------------------------------------------------
     @classmethod
@@ -269,6 +273,20 @@ class Graph:
             self._edge_stats[sym] = edge_stats(df)
         return self._edge_stats[sym]
 
+    def block_dir(self, sym: bool, n_part: int) -> str:
+        """Engine-owned CSR-block dir for the directed (``sym=False``) or
+        symmetrized edges in ``n_part`` buckets: created on first use and
+        reused by later packed calls (``ensure_edge_blocks`` revalidates
+        it), removed by :meth:`unpersist` or at interpreter exit. Keyed by
+        bucket count too, so a call with another count never rebuilds the
+        blocks under an earlier result that still reads them."""
+        key = (sym, n_part)
+        if key not in self._block_dirs:
+            d = tempfile.mkdtemp(prefix="graftpark-blocks-sym-" if sym else "graftpark-blocks-")
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+            self._block_dirs[key] = d
+        return self._block_dirs[key]
+
     def degrees(self) -> DataFrame:
         """(id, out_deg, in_deg, deg); deg over the symmetrized view."""
         if self._degrees is None:
@@ -331,9 +349,15 @@ class Graph:
         return self
 
     def unpersist(self) -> None:
+        """Release the persisted tables and remove the engine-owned block
+        dirs. A packed kernel's result reads its block dir lazily, so
+        consume it (collect, write or checkpoint) before calling this."""
         for df in self._persisted:
             df.unpersist()
         self._persisted = []
+        for d in self._block_dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+        self._block_dirs = {}
 
 
 def edges_from_testdata(spark: SparkSession, sf_dir: str) -> DataFrame:

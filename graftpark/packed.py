@@ -38,7 +38,6 @@ plain per-vertex parquet and re-enter the loop from it on resume.
 
 from __future__ import annotations
 
-import tempfile
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable
@@ -367,11 +366,13 @@ def run_packed(
     ``{kernel}/packed/superstep={i}``. Metrics are per superstep (a fused
     job's convergence values land on its last superstep, walls are
     amortized); ``LoopResult.state`` is the expanded per-vertex
-    ``(id, value_col)`` DataFrame.
+    ``(id, value_col)`` DataFrame. It reads ``block_dir`` lazily; with
+    ``block_dir=None`` that is the graph's own (:meth:`Graph.block_dir`),
+    so consume the state before ``graph.unpersist()``.
     """
     spark = graph.spark
     if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-" if spec.sym else "graftpark-blocks-")
+        block_dir = graph.block_dir(spec.sym, n_part)
     # _SUCCESS + meta validation (bucket count, symmetrized flag, edge
     # fingerprint): a crashed partial write or a directory built from the
     # other edge orientation is rebuilt instead of silently reused

@@ -206,3 +206,29 @@ def test_blocks_sort_src_within_dst_segments(spark, tmp_path):
         assert not np.any(interior & (src[1:] < src[:-1]))
         seen_multi += int(np.any(interior))
     assert seen_multi  # fixture must actually exercise multi-edge segments
+
+
+def test_auto_block_dir_reused_then_removed_by_unpersist(spark):
+    """block_dir=None: one engine-owned dir per graph orientation and
+    bucket count, reused by later calls (same token: no rebuild) and
+    removed by unpersist."""
+    import glob
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "graftpark-blocks-*")
+    before = set(glob.glob(pattern))
+    n, directed, edges = G30_HUB
+    g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
+    runs = []
+    for _ in range(2):
+        res = pagerank(g, strategy="packed", max_supersteps=3)
+        runs.append({r["id"]: r["rank"] for r in res.state.collect()})
+    (d,) = g._block_dirs.values()
+    assert set(glob.glob(pattern)) - before == {d}
+    assert runs[0] == runs[1]
+    t = _token(d)
+    pagerank(g, strategy="packed", max_supersteps=3).state.collect()
+    assert _token(d) == t
+    g.unpersist()
+    assert not os.path.exists(d) and g._block_dirs == {}
+    assert set(glob.glob(pattern)) == before
