@@ -6,8 +6,9 @@ Runs the headline kernels at $SPARK_GRAFT_SF_DIR (default
 line:
 
     {"metric": "total_bench_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ...,
-     "edges_per_sec_per_superstep": ..., "supersteps": {...}}
+     "queries": {name: min sec, ...}, "queries_median": {...},
+     "samples": {name: [sec, ...]}, "host": {"nproc": ..., "ram_gb": ...},
+     "sf": ..., "edges_per_sec_per_superstep": ..., "supersteps": {...}}
 
 The primary throughput figure (BASELINE.json `metric`) is
 edges/sec per superstep to PageRank convergence (tol 1e-6) on the
@@ -15,8 +16,9 @@ power-law graph — reported as `edges_per_sec_per_superstep`.
 
 Methodology (BenchmarkTools-style, reference benchmark/benchmarks.jl:
 43-44,168-198,331): graph materialization is setup, only the kernel is
-timed; each query is sampled GRAFTPARK_BENCH_SAMPLES times (default 2)
-and the MINIMUM is reported; measured-run confs (periodic GC deferred,
+timed; each query is sampled GRAFTPARK_BENCH_SAMPLES times (default 3),
+and its minimum, median and every sample are reported with the host's
+core count and RAM; measured-run confs (periodic GC deferred,
 throughput GC, tmpfs shuffle) match bench_scaling.py so the headline
 numbers carry the same hygiene as the scaling evidence.
 
@@ -41,6 +43,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -78,6 +81,13 @@ def make_powerlaw_graph(spark, n_edges: int, n_vertices: int, seed: int = 42):
                        os.path.join(cache, "edges.parquet"), row_group_size=1_000_000)
         open(os.path.join(cache, "_OK"), "w").close()
     return Graph(spark.read.parquet(cache), assume_normalized=True), root
+
+
+def host_facts() -> dict:
+    """Cores this process may run on and physical RAM."""
+    with open("/proc/meminfo") as f:
+        mem_kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
+    return {"nproc": len(os.sched_getaffinity(0)), "ram_gb": round(mem_kb / 2**20, 1)}
 
 
 def main() -> None:
@@ -123,15 +133,19 @@ def main() -> None:
     # BenchmarkTools methodology (reference benchmark/benchmarks.jl:43-44,
     # 331: n samples, report the MINIMUM): run-to-run variance on this
     # shared VM is ±30% for the short packed queries, so each query takes
-    # best-of-N with the winning run's metrics kept.
-    n_samples = int(os.environ.get("GRAFTPARK_BENCH_SAMPLES", "2"))
+    # best-of-N with the winning run's metrics kept; the median and every
+    # sample are reported beside it.
+    n_samples = int(os.environ.get("GRAFTPARK_BENCH_SAMPLES", "3"))
+    samples: dict[str, list[float]] = {}
 
     def timed(name: str, fn):
         best_dt, best_res = None, None
+        samples[name] = []
         for _ in range(n_samples):
             t0 = time.monotonic()
             res = fn()
             dt = time.monotonic() - t0
+            samples[name].append(round(dt, 3))
             if best_dt is None or dt < best_dt:
                 best_dt, best_res = dt, res
         queries[name] = best_dt
@@ -228,12 +242,15 @@ def main() -> None:
         "samples_per_query": n_samples,
         "wall_s_incl_sampling": round(total, 3),
         "queries": {k: round(v, 3) for k, v in queries.items()},
+        "queries_median": {k: round(statistics.median(v), 3) for k, v in samples.items()},
+        "samples": samples,
+        "host": host_facts(),
         "sf": sf,
         "cpus": cpus,
         # headline (BASELINE.json metric): PageRank on the packed
         # CSR-block path over the power-law graph
         "edges_per_sec_per_superstep": round(eps_packed),
-        "edges_per_sec_per_superstep_ba_broadcast": round(eps),
+        "edges_per_sec_per_superstep_ba_auto": round(eps),
         "pl_graph": {"edges": n_edges_pl, "vertices": pl_vertices},
         "ba_graph": {"n": ba_n, "m": ba_m, "edges": n_edges_ba, "edges_sym": n_edges_ba_sym, "triangles": tri},
         "sf_edges": n_edges_sf,

@@ -109,24 +109,38 @@ def write_edge_blocks(edges: DataFrame, num_buckets: int, path: str, sym: bool =
     if os.path.isdir(path):
         shutil.rmtree(path, ignore_errors=True)
 
-    b = (
-        edges.select(
-            "src",
-            "dst",
-            bucket_col("dst", num_buckets).alias("dst_bucket"),
-            bucket_col("src", num_buckets).alias("src_bucket"),
+    if num_buckets == 1:
+        # every edge is in one bucket: sort dst ranges on every core, not
+        # in one task, and write them straight into the bucket's dir,
+        # whose files are named in range order. partitionBy's own sort
+        # by src_bucket would scramble the (dst, src) order within files.
+        bucket = int(partition_perfect_ids(1)[0])
+        (
+            edges.select("src", "dst", F.lit(bucket).alias("dst_bucket"))
+            .repartitionByRange(edges.sparkSession.sparkContext.defaultParallelism, "dst", "src")
+            .sortWithinPartitions("dst", "src")
+            .write.mode("overwrite").parquet(os.path.join(path, f"src_bucket={bucket}"))
         )
-        .repartition(num_buckets, "src_bucket")
-        # (dst_bucket, dst, src)-sorted within each bucket: CSR group
-        # boundaries are a single flatnonzero at load time (equal dst ⇒
-        # equal dst_bucket, so dst boundaries survive the grouping), the
-        # per-dst partial vector comes out dst-bucket-contiguous — packed
-        # messages are then direct slices of it (layout v3) — and src is
-        # ascending within each dst segment so gather positions are
-        # monotone per reduceat segment (layout v4)
-        .sortWithinPartitions("dst_bucket", "dst", "src")
-    )
-    b.write.partitionBy("src_bucket").mode("overwrite").parquet(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+    else:
+        b = (
+            edges.select(
+                "src",
+                "dst",
+                bucket_col("dst", num_buckets).alias("dst_bucket"),
+                bucket_col("src", num_buckets).alias("src_bucket"),
+            )
+            .repartition(num_buckets, "src_bucket")
+            # (dst_bucket, dst, src)-sorted within each bucket: CSR group
+            # boundaries are a single flatnonzero at load time (equal dst ⇒
+            # equal dst_bucket, so dst boundaries survive the grouping), the
+            # per-dst partial vector comes out dst-bucket-contiguous — packed
+            # messages are then direct slices of it (layout v3) — and src is
+            # ascending within each dst segment so gather positions are
+            # monotone per reduceat segment (layout v4)
+            .sortWithinPartitions("dst_bucket", "dst", "src")
+        )
+        b.write.partitionBy("src_bucket").mode("overwrite").parquet(path)
     # one validation scan of the parquet just written: row count + an
     # order-independent content fingerprint (also proves the files read
     # back cleanly before any kernel trusts them)

@@ -330,22 +330,27 @@ class Graph:
         to broadcast; the per-superstep state shuffle is V rows, edges
         never reshuffle, and AQE skew-join splitting handles moderate
         hub skew.
+
+        ``sym=True`` also prepares the symmetrized table. A layout with it
+        serves a later ``sym=False`` call as is, and a ``sym=True`` call
+        after a ``sym=False`` one with the same partitioning only adds it.
         """
         n = num_partitions or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        if getattr(self, "_prepared", None) == (n, key, sym):
-            return self
-        self._prepared = (n, key, sym)
         repart = (lambda df: df.repartition(n, key)) if key else (lambda df: df.repartition(n))
-        self.edges = repart(self.edges).persist(StorageLevel.MEMORY_AND_DISK)
-        self.edges.count()
-        self._persisted.append(self.edges)
-        if sym:
+        prepared = getattr(self, "_prepared", None)
+        if prepared is None or prepared[:2] != (n, key):
+            self._prepared = (n, key, False)
+            self.edges = repart(self.edges).persist(StorageLevel.MEMORY_AND_DISK)
+            self.edges.count()
+            self._persisted.append(self.edges)
+            self._vertices = self.vertices().persist(StorageLevel.MEMORY_AND_DISK)
+            self._vertices.count()
+            self._persisted.append(self._vertices)
+        if sym and not self._prepared[2]:
+            self._prepared = (n, key, True)
             self._edges_sym = repart(symmetrize(self.edges)).persist(StorageLevel.MEMORY_AND_DISK)
             self._edges_sym.count()
             self._persisted.append(self._edges_sym)
-        self._vertices = self.vertices().persist(StorageLevel.MEMORY_AND_DISK)
-        self._vertices.count()
-        self._persisted.append(self._vertices)
         return self
 
     def unpersist(self) -> None:

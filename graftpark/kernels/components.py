@@ -34,16 +34,20 @@ def connected_components(
     strategy: str = "auto",
     block_dir: str | None = None,
 ) -> LoopResult:
-    """State: ``(id, comp, prev_comp)``; result = select(id, comp).
+    """Returns a LoopResult; ``components_df(result)`` is its stable ``(id, comp)``
+    result table (the dataframe path's state also carries ``prev_comp``).
 
     ``strategy``: ``'dataframe'``, ``'packed'`` (min semiring over the
-    symmetrized CSR blocks, graftpark/packed.py) or ``'auto'``; anything
-    else raises ValueError."""
+    symmetrized CSR blocks, graftpark/packed.py) or ``'auto'`` (packed, in
+    one bucket for a small graph; see ``packed.resolve_strategy``);
+    anything else raises ValueError."""
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
-    if resolve_strategy(graph, strategy, n, broadcast_state, block_dir) == "packed":
-        return run_packed(graph, _min_label_spec(), n_part, max_supersteps, block_dir,
+    strategy, buckets = resolve_strategy(graph, strategy, n, n_part, broadcast_state, block_dir,
+                                         sym=True)
+    if strategy == "packed":
+        return run_packed(graph, _min_label_spec(), buckets, max_supersteps, block_dir,
                           checkpoint_dir, checkpoint_every, resume, kernel="connected_components")
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src")

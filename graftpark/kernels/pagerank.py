@@ -45,8 +45,9 @@ def pagerank(
 ) -> LoopResult:
     """Ranks sum to 1 over the full vertex set (isolated vertices included).
 
-    Returns LoopResult whose state is ``(id, rank, out_deg, prev_rank)``;
-    select ``(id, rank)`` for the result table.
+    Returns a LoopResult; ``ranks_df(result)`` is its stable ``(id, rank)``
+    result table. The state's other columns depend on the strategy (the
+    dataframe path also carries ``out_deg`` and ``prev_rank``).
 
     Skew handling: with broadcastable state (the default below
     GRAFTPARK_BROADCAST_V_LIMIT vertices) edges stay in balanced
@@ -57,17 +58,19 @@ def pagerank(
     ``strategy`` is ``'dataframe'`` (the semantic reference), ``'packed'``
     (graftpark/packed.py, the at-scale path; ``steps_per_job`` supersteps
     per Spark job, ``payload_dtype`` float64 or float32) or ``'auto'``
-    (by vertex count); anything else raises ValueError.
+    (packed, in one bucket for a small graph; see
+    ``packed.resolve_strategy``); anything else raises ValueError.
     """
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
-    strategy = resolve_strategy(graph, strategy, n, broadcast_state, block_dir)
+    strategy, buckets = resolve_strategy(graph, strategy, n, n_part, broadcast_state, block_dir,
+                                         sym=False)
     if n == 0:
         return LoopResult(state=spark.createDataFrame([], "id LONG, rank DOUBLE"), converged=True)
     if strategy == "packed":
         return run_packed(
-            graph, _packed_spec(n, alpha, tol, payload_dtype), n_part, max_supersteps,
+            graph, _packed_spec(n, alpha, tol, payload_dtype), buckets, max_supersteps,
             block_dir, checkpoint_dir, checkpoint_every, resume, steps_per_job, kernel="pagerank",
         )
     use_bc = choose_strategy(n, broadcast_state)

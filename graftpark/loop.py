@@ -109,7 +109,7 @@ class LoopResult:
 def iterate(
     initial_state: DataFrame,
     step_fn: Callable[[DataFrame, int], DataFrame],
-    stats_fn: Callable[[DataFrame, DataFrame, int], dict],
+    stats_fn: Callable[[DataFrame, DataFrame, int], dict | list[dict]],
     converged_fn: Callable[[dict], bool],
     max_supersteps: int = 100,
     checkpointer: Checkpointer | None = None,
@@ -117,7 +117,7 @@ def iterate(
     start_superstep: int = 1,
     initial_metrics: list[dict] | None = None,
     observe_cols: Callable[[], dict] | None = None,
-    steps_per_call: int = 1,
+    steps_per_call: int | None = 1,
     label: str | None = None,
 ) -> LoopResult:
     """Run a level-synchronous superstep loop.
@@ -139,9 +139,18 @@ def iterate(
     same superstep whatever ``steps_per_call`` wrote them. A durable
     checkpoint (or a lineage truncation) is taken after every call that
     reaches a multiple of ``checkpointer.every`` (``truncate_every``).
-    With a ``label``, the Spark jobs of superstep ``i`` are described as
-    ``{label}/superstep={i}``; the caller's description is restored on
-    return.
+
+    ``steps_per_call=None`` is the interval mode: ``i`` is the next
+    multiple of ``checkpointer.every`` or ``max_supersteps``, whichever
+    comes first (without a checkpointer, ``max_supersteps``); the step
+    may stop short of it only by converging, and ``stats_fn`` returns one
+    record per superstep it ran. The loop then advances by that many
+    supersteps, records each with its share of the call's wall time, and
+    takes a durable checkpoint only when it stopped on a multiple.
+
+    With a ``label``, the Spark jobs of a call ending at superstep ``i``
+    are described as ``{label}/superstep={i}``; the caller's description
+    is restored on return.
     """
     from pyspark.sql import Observation
 
@@ -151,27 +160,28 @@ def iterate(
     prev_ckpt_rdd = None
     converged = False
     i = start_superstep - 1
-    k = max(1, steps_per_call)
+    k = None if steps_per_call is None else max(1, steps_per_call)
+    every = checkpointer.every if checkpointer is not None else max(1, max_supersteps)
     sc = initial_state.sparkSession.sparkContext
     caller_desc = sc.getLocalProperty("spark.job.description")
     try:
         while i < max_supersteps:
-            i += k
+            end = min((i // every + 1) * every, max_supersteps) if k is None else i + k
             if label is not None:
-                sc.setJobDescription(f"{label}/superstep={i}")
+                sc.setJobDescription(f"{label}/superstep={end}")
             t0 = time.monotonic()
-            new = step_fn(prev, i)
+            new = step_fn(prev, end)
             obs = None
             if observe_cols is not None:
-                obs = Observation(f"superstep_{i}")
+                obs = Observation(f"superstep_{end}")
                 cols = observe_cols()
                 new = new.observe(obs, *[c.alias(name) for name, c in cols.items()])
             new_ckpt_rdd = None
-            if checkpointer is not None and _reaches_multiple(i, k, checkpointer.every):
+            if k is not None and checkpointer is not None and _reaches_multiple(end, k, every):
                 # parquet write + re-read: durable resume point AND flat lineage
-                new = checkpointer.save(new, i)
+                new = checkpointer.save(new, end)
                 new = new.persist(StorageLevel.MEMORY_AND_DISK)
-            elif _reaches_multiple(i, k, truncate_every):
+            elif k is None or _reaches_multiple(end, k, truncate_every):
                 # eager local checkpoint: materializes AND flattens the logical
                 # plan — without this, Catalyst re-analysis of the growing join
                 # tree dominates after a handful of supersteps (SURVEY.md §4.3.1)
@@ -180,27 +190,43 @@ def iterate(
             else:
                 new = new.persist(StorageLevel.MEMORY_AND_DISK)
                 new.count()
-            stats = stats_fn(obs.get if obs is not None else new, prev, i)
-            rec = {"superstep": i, "wall_s": time.monotonic() - t0, **stats}
-            metrics.append(rec)
-            if checkpointer is not None:
-                checkpointer.record_metrics(rec)
+            stats = stats_fn(obs.get if obs is not None else new, prev, end)
+            if k is None:
+                ran = stats
+                i += len(ran)
+                if checkpointer is not None and i % checkpointer.every == 0:
+                    new = checkpointer.save(new, i).persist(StorageLevel.MEMORY_AND_DISK)
+                    _release(new_ckpt_rdd)
+                    new_ckpt_rdd = None
+            else:
+                ran, i = [stats], end
+            wall = (time.monotonic() - t0) / len(ran)
+            for j, s in enumerate(ran):
+                rec = {"superstep": i - len(ran) + 1 + j, "wall_s": wall, **s}
+                metrics.append(rec)
+                if checkpointer is not None:
+                    checkpointer.record_metrics(rec)
             # free the retired state NOW: DataFrame.unpersist does not release
             # localCheckpoint RDD blocks (they otherwise linger until the JVM
             # happens to GC the RDD reference → storage bloat + GC churn)
             prev.unpersist()
-            if prev_ckpt_rdd is not None:
-                try:
-                    prev_ckpt_rdd.unpersist(False)
-                except Exception:
-                    pass
+            _release(prev_ckpt_rdd)
             prev, prev_ckpt_rdd = new, new_ckpt_rdd
-            if converged_fn(rec):
+            if converged_fn(metrics[-1]):
                 converged = True
                 break
     finally:
         sc.setJobDescription(caller_desc)
     return LoopResult(state=prev, metrics=metrics, supersteps=i, converged=converged)
+
+
+def _release(rdd) -> None:
+    """Unpersist a localCheckpoint'ed RDD (None: nothing to release)."""
+    if rdd is not None:
+        try:
+            rdd.unpersist(False)
+        except Exception:
+            pass
 
 
 def _reaches_multiple(i: int, k: int, every: int) -> bool:

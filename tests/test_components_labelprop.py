@@ -11,11 +11,19 @@ def _sym(edges, directed):
     return edges if directed else edges + [(v, u) for u, v in edges]
 
 
-@pytest.mark.parametrize("name", ["g4_cycle", "g6_two_comp", "g8_two_comp", "g4_dir", "g14_dir", "g30_hub"])
-def test_connected_components_exact(spark, name):
+def _both(names):
+    """Each fixture under ``strategy="auto"`` (id: the fixture) and under
+    the dataframe reference (id: ``{fixture}-dataframe``)."""
+    return [pytest.param(name, strategy, id=name if strategy == "auto" else f"{name}-{strategy}")
+            for name in names for strategy in ("auto", "dataframe")]
+
+
+@pytest.mark.parametrize(
+    "name,strategy", _both(["g4_cycle", "g6_two_comp", "g8_two_comp", "g4_dir", "g14_dir", "g30_hub"]))
+def test_connected_components_exact(spark, name, strategy):
     n, directed, edges = FIXTURES[name]
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
-    res = connected_components(g)
+    res = connected_components(g, strategy=strategy)
     assert res.converged
     got = {r["id"]: r["comp"] for r in components_df(res).collect()}
     expect = oracles.connected_components(_sym(edges, directed), range(1, n + 1))
@@ -39,11 +47,11 @@ def test_components_isolated_vertices(spark):
     g.unpersist()
 
 
-@pytest.mark.parametrize("name", ["g6_two_comp", "g8_two_comp", "g30_hub", "g15_dense"])
-def test_label_propagation_matches_oracle(spark, name):
+@pytest.mark.parametrize("name,strategy", _both(["g6_two_comp", "g8_two_comp", "g30_hub", "g15_dense"]))
+def test_label_propagation_matches_oracle(spark, name, strategy):
     n, directed, edges = FIXTURES[name]
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
-    res = label_propagation(g, max_supersteps=8)
+    res = label_propagation(g, max_supersteps=8, strategy=strategy)
     got = {r["id"]: r["label"] for r in labels_df(res).collect()}
     expect, iters = oracles.label_propagation(_sym(edges, directed), range(1, n + 1), max_iter=8)
     assert got == expect
@@ -51,6 +59,19 @@ def test_label_propagation_matches_oracle(spark, name):
     comp = oracles.connected_components(_sym(edges, directed), range(1, n + 1))
     for v, lab in got.items():
         assert comp[v] == comp[lab]
+    g.unpersist()
+
+
+@pytest.mark.parametrize("name", ["g8_two_comp", "g30_hub"])
+def test_auto_matches_dataframe(spark, name):
+    """Components and labels of ``strategy="auto"`` equal the dataframe
+    reference's exactly, in the same number of supersteps."""
+    n, directed, edges = FIXTURES[name]
+    g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
+    for kernel, table in ((connected_components, components_df), (label_propagation, labels_df)):
+        auto, ref = kernel(g), kernel(g, strategy="dataframe")
+        assert auto.supersteps == ref.supersteps and auto.converged == ref.converged
+        assert sorted(table(auto).collect()) == sorted(table(ref).collect())
     g.unpersist()
 
 

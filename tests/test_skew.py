@@ -47,7 +47,7 @@ def powerlaw(spark):
 
 
 def test_star_pagerank_broadcast_vs_copartitioned(spark, star):
-    a = _ranks(pagerank(star, broadcast_state=True, max_supersteps=20))
+    a = _ranks(pagerank(star, broadcast_state=True, max_supersteps=20, strategy="dataframe"))
     b = _ranks(pagerank(star, broadcast_state=False, max_supersteps=20))
     assert set(a) == set(b)
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12
@@ -56,19 +56,22 @@ def test_star_pagerank_broadcast_vs_copartitioned(spark, star):
 
 
 def test_star_cc_broadcast_vs_copartitioned(spark, star):
-    a = _comps(connected_components(star, broadcast_state=True))
+    a = _comps(connected_components(star, broadcast_state=True, strategy="dataframe"))
     b = _comps(connected_components(star, broadcast_state=False))
     assert a == b
     assert set(a.values()) == {1}
 
 
 def test_powerlaw_pagerank_all_paths_agree(spark, powerlaw, tmp_path):
-    a = _ranks(pagerank(powerlaw, broadcast_state=True, max_supersteps=15))
+    a = _ranks(pagerank(powerlaw, broadcast_state=True, max_supersteps=15,
+                        strategy="dataframe"))
     b = _ranks(pagerank(powerlaw, broadcast_state=False, max_supersteps=15))
     c = _ranks(pagerank(powerlaw, strategy="packed", max_supersteps=15,
                         block_dir=str(tmp_path / "blk")))
+    d = _ranks(pagerank(powerlaw, max_supersteps=15))  # one packed bucket
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12
     assert max(abs(a[k] - c[k]) for k in a) < 1e-9
+    assert max(abs(a[k] - d[k]) for k in a) < 1e-12
 
 
 def test_star_cc_packed_path(spark, star, tmp_path):
