@@ -143,9 +143,10 @@ def write_edge_blocks(edges: DataFrame, num_buckets: int, path: str, sym: bool =
         b.write.partitionBy("src_bucket").mode("overwrite").parquet(path)
     # one validation scan of the parquet just written: row count + an
     # order-independent content fingerprint (also proves the files read
-    # back cleanly before any kernel trusts them)
+    # back cleanly before any kernel trusts them). The schema is given, not
+    # inferred: an edge-less write leaves no parquet file to infer it from
     row = (
-        edges.sparkSession.read.parquet(path)
+        edges.sparkSession.read.schema(edges.select("src", "dst").schema).parquet(path)
         .agg(F.count("*").alias("n"), _fingerprint_agg().alias("fp"))
         .collect()[0]
     )

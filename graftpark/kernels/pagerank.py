@@ -56,8 +56,10 @@ def pagerank(
     co-partitioned joins + AQE skew splitting (graph.py docstring).
 
     ``strategy`` is ``'dataframe'`` (the semantic reference), ``'packed'``
-    (graftpark/packed.py, the at-scale path; ``steps_per_job`` supersteps
-    per Spark job, ``payload_dtype`` float64 or float32) or ``'auto'``
+    (graftpark/packed.py, the at-scale path: one Spark job per checkpoint
+    interval, or ``steps_per_job`` supersteps per job when the session has
+    fewer task slots than buckets; ``payload_dtype`` float64 or float32)
+    or ``'auto'``
     (packed, in one bucket for a small graph; see
     ``packed.resolve_strategy``); anything else raises ValueError.
     """

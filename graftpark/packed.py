@@ -1,4 +1,4 @@
-"""Packed superstep engine: one per-bucket emitter, one fused superstep, one driver.
+"""Packed superstep engine: one per-bucket emitter, two superstep loops, one driver.
 
 PageRank (sum), connected components (min) and label propagation (mode)
 are one dataflow over the same CSR blocks (graftpark/blocks.py) with
@@ -20,37 +20,63 @@ bucket, the emitter writes
     the P outgoing messages as ONE zero-copy BinaryArray tiling the
           dst-bucket-contiguous partial buffer (block layout v3+)
 
-and a superstep is
+and a bucket's superstep is combine (its messages in ascending src
+bucket, its broadcast scalars summed exactly, so the result does not
+depend on arrival order) → the emitter on the new state. On a fresh start
+and on a checkpoint load, an entry ``applyInArrow`` packs per-vertex rows
+by bucket and runs the same emitter, and the carry is routed: partition
+j holds the rows addressed to bucket ``partition_perfect_ids(P)[j]``.
+Durable checkpoints expand the carrier rows to plain per-vertex parquet
+and re-enter the loop from it on resume.
+
+The interval loop runs whenever the session can run all P bucket tasks
+at once (P ≤ its task slots, no dynamic allocation; always for P = 1):
+ONE Spark job per checkpoint interval, the supersteps up to the next
+multiple of ``checkpoint_every`` (with a ``checkpoint_dir``) or
+``max_supersteps``. The interval's P tasks are one gang-scheduled
+``mapInArrow(barrier=True)`` over the routed carry; each task loops over
+the interval's supersteps and exchanges with its peers through files in
+the block dir (see :func:`_interval_fn`):
+
+    combine → gather → P−1 message files + a step marker with its
+          aggregates under {block_dir}/_bsp/{run}/step={s}/ → wait for
+          the P markers → read the incoming files
+
+Every task sums the same markers, so all stop at the same superstep:
+convergence, the interval bound or ``max_supersteps``. Their last
+emitted rows are the next interval's carry, routed by ONE bucket-keyed
+shuffle. The barrier stage is a shuffle map stage, which Spark retries
+whole when a task fails; the compute is deterministic, so a retried
+attempt rewrites the same files. With one bucket nothing is exchanged.
+A history row (src_bucket=-3) holds each superstep's summed (delta,
+dangling, active), so metrics stay per superstep.
+
+With more buckets than task slots, Spark would refuse the barrier stage,
+and the fused loop runs instead: a superstep is
 
     carry ─the ONE bucket-keyed shuffle→ applyInArrow: payloads read
           straight from the Arrow IPC buffers → combine → the emitter on
           the new state, in the same task → next carry
 
-so a superstep runs ONE Python stage and shuffles ~P² small binary rows
-(P = bucket count) rather than ~E rows. On a fresh start and on a
-checkpoint load, an entry ``applyInArrow`` packs per-vertex rows by
-bucket and runs the same emitter. Supersteps are independent of their
-index (broadcast scalars are summed inside the reduce), so
-``steps_per_job`` supersteps chain into one query. Convergence sums the
-carrier rows' aggregates; durable checkpoints expand the carrier rows to
-plain per-vertex parquet and re-enter the loop from it on resume.
+so it runs ONE Python stage and shuffles ~P² small binary rows rather
+than ~E rows, and ``steps_per_job`` supersteps chain into one query.
+Supersteps are independent of their index (broadcast scalars are summed
+inside the combine), and both loops give the same bytes.
 
-With ONE bucket every message a task emits is addressed to itself, so
-no shuffle is needed between supersteps: the task feeds its own carry
-back into its combine and runs to the first of convergence (its
-aggregates are global), the next durable checkpoint (a multiple of
-``checkpoint_every``) or ``max_supersteps`` — one Spark job per
-checkpoint interval (per run without a ``checkpoint_dir``) instead of
-one per superstep. It appends a history row (src_bucket=-3) holding
-each superstep's (delta, dangling, active), so metrics stay per
-superstep.
-``strategy="auto"`` takes this path for graphs whose vertex state is
-broadcastable and whose edges fit one bucket (``ONE_BUCKET_MAX_EDGES``).
+``strategy="auto"`` takes one bucket for graphs whose vertex state is
+broadcastable and whose edges fit it (``ONE_BUCKET_MAX_EDGES``), and
+``n_part`` buckets when the state is too big to broadcast.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import math
+import os
+import shutil
+import struct
+import time
+import uuid
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 from typing import Callable
 
@@ -67,6 +93,7 @@ from graftpark.blocks import (
     ensure_edge_blocks,
     load_block,
     load_vertices,
+    partition_perfect_ids,
     vertex_sidecar_writer,
 )
 from graftpark.graph import Graph, choose_strategy
@@ -94,7 +121,7 @@ STRATEGIES = ("auto", "dataframe", "packed")
 #: int32 gather/scatter positions, per-dst starts and ids), ~256 MB here
 ONE_BUCKET_MAX_EDGES = 8_000_000
 
-#: src_bucket of the history row a one-bucket superstep task appends
+#: src_bucket of the history row an interval appends
 _HISTORY = -3
 
 
@@ -123,9 +150,9 @@ class Semiring:
 
     Driver-side: ``init`` (a Column over ``id``/``out_deg``) seeds the
     state, ``stats(observed)`` turns the summed (delta, dangling, active)
-    into the metrics record, and ``converged(record)`` stops the loop. A
-    one-bucket task also runs ``stats`` and ``converged``, so they too
-    must not reference driver objects.
+    into the metrics record, and ``converged(record)`` stops the loop.
+    The interval loop's tasks also run ``stats`` and ``converged``, so
+    they too must not reference driver objects.
     ``out_deg`` stores real out-degrees in the sidecar (zeros otherwise);
     ``sym`` selects symmetrized blocks.
     """
@@ -148,8 +175,8 @@ def resolve_strategy(graph: Graph, strategy: str, n: int, n_part: int,
     """Validate ``strategy`` and resolve ``'auto'``: ``(strategy, buckets)``.
 
     ``'auto'`` takes the packed path in ``n_part`` buckets when the vertex
-    state is too big to broadcast, and in ONE bucket (the in-task loop)
-    when it is broadcastable and the edges, directed or symmetrized per
+    state is too big to broadcast, and in ONE bucket when it is
+    broadcastable and the edges, directed or symmetrized per
     ``sym``, number at least one and at most ``ONE_BUCKET_MAX_EDGES``;
     otherwise the dataframe path. Packed block dirs default to driver-local tmp; on a
     multi-node master that path is not shared storage, so auto only picks
@@ -318,57 +345,192 @@ def _enter_fn(block_dir: str, value_col: str, dtype: str, emit: Callable):
     return fn
 
 
-def _superstep_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable,
-                  emit: Callable, steps: int = 1, done: Callable | None = None):
-    """applyInArrow fn (grouped by bucket): one bucket's carrier, scalar
-    and message rows → ``combine`` → the emitter, so the next superstep's
-    gather runs in this same task.
+def _carry_inputs(batches, dtype: np.dtype):
+    """One bucket's carry rows → ``(state, scalars, messages)``: the
+    carrier row's state (None without one), the broadcast scalars, and
+    ``(src_bucket, payload)`` messages in ascending src bucket, whatever
+    order the rows arrived in."""
+    prev, scalars, msgs = None, [], []
+    for batch in batches:
+        srcb = batch.column("src_bucket").to_numpy()
+        pcol = batch.column("payload")
+        for i in range(len(srcb)):
+            b = int(srcb[i])
+            buf = pcol[i].as_buffer()
+            if b == -1:
+                prev = np.frombuffer(buf, dtype=dtype)
+            elif b == -2:
+                scalars.append(float(np.frombuffer(buf, dtype=np.float64)[0]))
+            elif b >= 0:
+                msgs.append((b, buf))
+    msgs.sort(key=lambda m: m[0])
+    return prev, scalars, msgs
 
-    With one bucket the emitted rows are all addressed to this task, so
-    it feeds them back into ``combine`` for up to ``steps`` supersteps,
-    stopping early once ``done(delta, dangling, active)`` holds, and
-    appends a history row (src_bucket=-3) with each superstep's
-    aggregates."""
+
+def _combiner(block_dir: str, num_buckets: int, combine: Callable):
+    """``step(c, vtx, prev, scalars, msgs) -> (new, delta, dangling,
+    active)``: bucket ``c``'s combine over ``(src_bucket, payload)``
+    messages (applied in the order given) and the exactly rounded sum of
+    the broadcast scalars, so neither depends on arrival order."""
+
+    def step(c: int, vtx, prev, scalars, msgs):
+        if prev is None:
+            raise ValueError(f"bucket {c} of {block_dir!r} received messages but no state row")
+        flay = _finish_layout(block_dir, c, num_buckets)
+        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
+        return combine(prev, [(fpos[foff[b]:foff[b + 1]], buf) for b, buf in msgs],
+                       math.fsum(scalars), vtx)
+
+    return step
+
+
+def _superstep_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable,
+                  emit: Callable):
+    """applyInArrow fn (grouped by bucket) of the fused loop: one bucket's
+    carrier, scalar and message rows → ``combine`` → the emitter, so the
+    next superstep's gather runs in this same task."""
     dt = np.dtype(dtype)
+    step = _combiner(block_dir, num_buckets, combine)
 
     def fn(key, table):
         c = int(key[0].as_py())
         vtx = load_vertices(block_dir, c)
         if vtx is None:  # a bucket with no vertices gets only broadcast rows
             return _CARRY_ARROW.empty_table()
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        history = []
-        while True:
-            srcb = table.column("src_bucket").to_numpy()
-            pcol = table.column("payload")
-            prev, scalar, msgs = None, 0.0, []
-            for i in range(len(srcb)):
-                b = int(srcb[i])
-                buf = pcol[i].as_buffer()
-                if b == -1:
-                    prev = np.frombuffer(buf, dtype=dt)
-                elif b == -2:
-                    scalar += float(np.frombuffer(buf, dtype=np.float64)[0])
-                elif b != _HISTORY:
-                    msgs.append((fpos[foff[b]:foff[b + 1]], buf))
-            if prev is None:
-                raise ValueError(f"bucket {c} of {block_dir!r} received messages but no state row")
-            new, *aggs = combine(prev, msgs, scalar, vtx)
-            table = emit(c, new, vtx, aggs)
-            history.append(aggs)
-            if done is None or len(history) == steps or done(*aggs):
-                break
-        if done is None:
-            return table
-        row = pa.RecordBatch.from_arrays(
-            [pa.array([c], pa.int32()), pa.array([_HISTORY], pa.int32()),
-             _whole(np.asarray(history, np.float64).ravel()), *_no_aggs(1)],
-            schema=_CARRY_ARROW,
-        )
-        return pa.Table.from_batches([*table.to_batches(), row], schema=_CARRY_ARROW)
+        new, *aggs = step(c, vtx, *_carry_inputs(table.to_batches(), dt))
+        return emit(c, new, vtx, aggs)
 
     return fn
+
+
+#: a step marker: the writer's (delta, dangling, active), its broadcast
+#: scalar and whether it sent messages (its block has edges)
+_MARKER = "<ddqd?"
+#: sleep between polls for peer markers: well under a step's ~ms gather,
+#: and long enough that waiting tasks leave their cores to the peers they
+#: wait for (a local[N] session may run more tasks than it has cores)
+_POLL_S = 0.0002
+#: a peer silent this long is lost (e.g. a block dir that is not shared
+#: storage): the task fails, and Spark retries the whole stage
+_PEER_TIMEOUT_S = 900.0
+
+
+def _put(path: str, data) -> None:
+    """Write ``data`` to ``path`` atomically (tmp file + rename)."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
+def _await_markers(step_dir: str, peers: list) -> dict:
+    """``{bucket: marker}`` of every peer's marker in ``step_dir``,
+    polled with a short sleep until all are there."""
+    got, deadline = {}, time.monotonic() + _PEER_TIMEOUT_S
+    while True:
+        for b in peers:
+            if b not in got:
+                try:
+                    with open(os.path.join(step_dir, f"marker-{b}"), "rb") as f:
+                        got[b] = struct.unpack(_MARKER, f.read())
+                except FileNotFoundError:
+                    pass
+        if len(got) == len(peers):
+            return got
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"no step marker from buckets {sorted(set(peers) - set(got))} "
+                               f"in {step_dir!r} after {_PEER_TIMEOUT_S:.0f} s: the block dir "
+                               "must be storage every executor shares")
+        time.sleep(_POLL_S)
+
+
+def _interval_fn(block_dir: str, num_buckets: int, spec: Semiring, emit: Callable,
+                 exchange: str, first: int, last: int, done: Callable):
+    """mapInArrow fn of the interval loop: supersteps ``first..last`` of
+    the bucket this task's partition is routed to (``partition_perfect_ids``).
+
+    Per superstep the task combines, gathers, writes its messages to its
+    P−1 peers as files under ``{exchange}/step={s}/`` and a marker with
+    its aggregates and broadcast scalar, waits for its peers' markers and
+    reads their messages in ascending src bucket. Every task sums the
+    same markers (exactly rounded), so all make the same
+    ``done(delta, dangling, active)`` decision and stop at the same
+    superstep. The last superstep sends nothing: its emitted rows are the
+    task's output, the carry of the next interval. The task routed to
+    partition 0 appends a history row (src_bucket=-3) with each
+    superstep's summed aggregates. With one bucket nothing is exchanged."""
+    dt = np.dtype(spec.dtype)
+    ids = partition_perfect_ids(num_buckets)
+    order = [int(b) for b in bucket_ids_sorted(num_buckets)]
+    step = _combiner(block_dir, num_buckets, spec.combine)
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        part = TaskContext.get().partitionId()
+        c = int(ids[part])
+        peers = [b for b in order if b != c]
+        vtx = load_vertices(block_dir, c)
+        prev, scalars, msgs = _carry_inputs(batches, dt)
+        history, out = [], None
+        for s in range(first, last + 1):
+            mark, own, sent = (0.0, 0.0, 0, 0.0, False), None, {}
+            if vtx is not None:  # a bucket without vertices only writes markers
+                prev, *aggs = step(c, vtx, prev, scalars, msgs)
+                out = emit(c, prev, vtx, aggs)
+                scalar, sent = _outgoing(out, c)
+                own = sent.pop(c, None)
+                mark = (*aggs, scalar, own is not None)
+            marks = {c: mark}
+            if peers:
+                step_dir = os.path.join(exchange, f"step={s}")
+                os.makedirs(step_dir, exist_ok=True)
+                if s < last:
+                    for d, buf in sent.items():
+                        _put(os.path.join(step_dir, f"{d}-{c}"), buf)
+                _put(os.path.join(step_dir, f"marker-{c}"), struct.pack(_MARKER, *mark))
+                marks.update(_await_markers(step_dir, peers))
+            ordered = [marks[b] for b in order]
+            total = (math.fsum(m[0] for m in ordered), math.fsum(m[1] for m in ordered),
+                     sum(m[2] for m in ordered))
+            history.append(total)
+            if s == last or done(*total):
+                break
+            scalars = [m[3] for m in ordered]
+            msgs = []
+            for b in order:
+                if marks[b][4]:
+                    if b == c:
+                        msgs.append((b, own))
+                    else:
+                        with open(os.path.join(step_dir, f"{c}-{b}"), "rb") as f:
+                            msgs.append((b, pa.py_buffer(f.read())))
+        if out is not None:
+            yield from out.to_batches()
+        if part == 0:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([c], pa.int32()), pa.array([_HISTORY], pa.int32()),
+                 _whole(np.asarray(history, np.float64).ravel()), *_no_aggs(1)],
+                schema=_CARRY_ARROW,
+            )
+
+    return fn
+
+
+def _outgoing(table: pa.Table, c: int) -> tuple[float, dict]:
+    """Bucket ``c``'s broadcast scalar (0.0 without one) and
+    ``{dst bucket: payload}`` of its messages, from its emitted rows."""
+    scalar, sent = 0.0, {}
+    for batch in table.to_batches():
+        dst = batch.column("bucket").to_numpy()
+        srcb = batch.column("src_bucket").to_numpy()
+        pcol = batch.column("payload")
+        for i in range(len(srcb)):
+            if srcb[i] == -2:
+                scalar = float(np.frombuffer(pcol[i].as_buffer(), dtype=np.float64)[0])
+            elif srcb[i] == c:
+                sent[int(dst[i])] = pcol[i].as_buffer()
+    return scalar, sent
 
 
 def _expand_fn(block_dir: str, value_col: str, dtype: str):
@@ -406,6 +568,17 @@ class _PackedCheckpointer(Checkpointer):
         return self.enter(super().load(spark, superstep))
 
 
+def task_slots(spark) -> int:
+    """Tasks the session can run at once, or 0 under dynamic allocation
+    (which refuses barrier stages): the largest bucket count the
+    interval loop can gang-schedule."""
+    sc = spark.sparkContext
+    if sc.getConf().get("spark.dynamicAllocation.enabled", "false").lower() == "true":
+        return 0
+    jsc = sc._jsc.sc()
+    return int(jsc.maxNumConcurrentTasks(jsc.resourceProfileManager().defaultResourceProfile()))
+
+
 def run_packed(
     graph: Graph,
     spec: Semiring,
@@ -422,21 +595,23 @@ def run_packed(
     """Run ``spec`` to convergence on the packed CSR-block path.
 
     Builds (or validates and reuses) the edge blocks in ``block_dir`` and
-    the per-bucket vertex sidecar, then loops fused jobs of
-    ``steps_per_job`` supersteps each, their Spark jobs described as
-    ``{kernel}/packed/superstep={i}``. Metrics are per superstep (a fused
-    job's convergence values land on its last superstep, walls are
-    amortized); ``LoopResult.state`` is the expanded per-vertex
-    ``(id, value_col)`` DataFrame. It reads ``block_dir`` lazily; with
-    ``block_dir=None`` that is the graph's own (:meth:`Graph.block_dir`),
-    so consume the state before ``graph.unpersist()``.
+    the per-bucket vertex sidecar, then loops Spark jobs described as
+    ``{kernel}/packed/superstep={i}``. ``LoopResult.state`` is the
+    expanded per-vertex ``(id, value_col)`` DataFrame. It reads
+    ``block_dir`` lazily; with ``block_dir=None`` that is the graph's own
+    (:meth:`Graph.block_dir`), so consume the state before
+    ``graph.unpersist()``.
 
-    With ``n_part == 1`` a job runs every superstep up to the next
-    multiple of ``checkpoint_every`` (with a ``checkpoint_dir``) or
-    ``max_supersteps`` in one task, stopping early at convergence, and is
-    described by that bound;
-    ``steps_per_job`` has no effect. Each superstep still gets its own
-    metrics record with its own convergence values.
+    When the session can run all ``n_part`` bucket tasks at once (see
+    :func:`task_slots`; one bucket always can), a job runs every
+    superstep up to the next multiple of ``checkpoint_every`` (with a
+    ``checkpoint_dir``) or ``max_supersteps`` in one gang of bucket tasks
+    that exchange messages through files under ``{block_dir}/_bsp/``,
+    stops early at convergence, and is described by that bound. Otherwise
+    a job fuses ``steps_per_job`` supersteps, one bucket-keyed shuffle
+    each; ``steps_per_job`` has no other effect. Either way each superstep
+    gets its own metrics record with its own convergence values (a fused
+    job's land on its last superstep) and its share of the job's wall.
     """
     spark = graph.spark
     if block_dir is None:
@@ -463,9 +638,14 @@ def run_packed(
     emit = _emitter(block_dir, n_part, spec.gather, spec.scalar)
     entry = _enter_fn(block_dir, spec.value_col, spec.dtype, emit)
 
+    def route(carry: DataFrame) -> DataFrame:
+        """Partition j ← the rows addressed to bucket
+        ``partition_perfect_ids(n_part)[j]``."""
+        return carry.repartition(n_part, "bucket") if n_part > 1 else carry.coalesce(1)
+
     def enter(expanded: DataFrame) -> DataFrame:
-        """Per-vertex rows → the loop carry."""
-        return (
+        """Per-vertex rows → the (routed) loop carry."""
+        return route(
             expanded.withColumn("bucket", bucket_col("id", n_part).cast("int"))
             .groupBy("bucket")
             .applyInArrow(entry, schema=_CARRY_SCHEMA)
@@ -489,23 +669,30 @@ def run_packed(
             carry0, last, initial_metrics = rp
             start = last + 1
 
-    one = n_part == 1
-    step, observe_cols, stats = (_in_task_loop(block_dir, spec, emit, start) if one
-                                 else _fused_loop(block_dir, n_part, spec, emit, k))
-    with _superstep_confs(spark, n_part):
-        res = iterate(
-            carry0,
-            step,
-            stats,
-            converged_fn=spec.converged,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-            steps_per_call=None if one else k,
-            label=f"{kernel}/packed",
-        )
+    interval = n_part == 1 or n_part <= task_slots(spark)
+    exchange = os.path.join(block_dir, "_bsp", uuid.uuid4().hex)
+    step, observe_cols, stats = (
+        _interval_loop(block_dir, n_part, spec, emit, start, exchange, route) if interval
+        else _fused_loop(block_dir, n_part, spec, emit, k))
+    try:
+        with _superstep_confs(spark, n_part):
+            res = iterate(
+                carry0,
+                step,
+                stats,
+                converged_fn=spec.converged,
+                max_supersteps=max_supersteps,
+                checkpointer=checkpointer,
+                start_superstep=start,
+                initial_metrics=initial_metrics,
+                observe_cols=observe_cols,
+                steps_per_call=None if interval else k,
+                label=f"{kernel}/packed",
+            )
+    finally:
+        shutil.rmtree(exchange, ignore_errors=True)
+        with suppress(OSError):
+            os.rmdir(os.path.dirname(exchange))  # only when no other run uses it
     vdf.unpersist()
     # per-superstep records: a fused job's record is named by its last
     # superstep and keeps the convergence values; walls are amortized
@@ -517,6 +704,13 @@ def run_packed(
         metrics.append({**rec, "wall_s": wall})
     return LoopResult(state=expand(res.state), metrics=metrics,
                       supersteps=res.supersteps, converged=res.converged)
+
+
+def _summed(stats_of: Callable, delta, dangling, active) -> dict:
+    """``stats_of`` over exactly rounded sums of per-bucket aggregates,
+    so the record does not depend on the order buckets are summed in."""
+    return stats_of({"delta": math.fsum(delta), "dangling": math.fsum(dangling),
+                     "active": int(sum(active))})
 
 
 def _fused_loop(block_dir: str, n_part: int, spec: Semiring, emit: Callable, k: int):
@@ -531,20 +725,25 @@ def _fused_loop(block_dir: str, n_part: int, spec: Semiring, emit: Callable, k: 
         return carry
 
     def observe_cols() -> dict:
-        # aggregates are null on all but the carrier rows
-        return {"delta": F.sum("delta"), "dangling": F.sum("dangling"), "active": F.sum("active")}
+        # aggregates are null on all but the carrier rows, which
+        # collect_list keeps
+        return {c: F.collect_list(c) for c in ("delta", "dangling", "active")}
 
     def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        return {**spec.stats(observed), "supersteps_in_job": k}
+        return {**_summed(spec.stats, observed["delta"], observed["dangling"], observed["active"]),
+                "supersteps_in_job": k}
 
     return step, observe_cols, stats
 
 
-def _in_task_loop(block_dir: str, spec: Semiring, emit: Callable, start: int):
-    """``(step, observe_cols, stats)`` of a one-bucket run for
-    :func:`iterate`'s interval mode: the step's task runs supersteps up to
-    the interval bound ``i`` (see :func:`_superstep_fn`), and its history
-    row becomes one stats record per superstep it ran."""
+def _interval_loop(block_dir: str, n_part: int, spec: Semiring, emit: Callable, start: int,
+                   exchange: str, route: Callable):
+    """``(step, observe_cols, stats)`` for :func:`iterate`'s interval mode:
+    the step's gang of ``n_part`` bucket tasks runs supersteps up to the
+    interval bound ``i`` (see :func:`_interval_fn`) as a barrier map
+    stage (Spark retries a failed barrier map stage whole, but aborts the
+    job of a failed barrier result stage), and its history row becomes
+    one stats record per superstep it ran."""
     stats_of, converged = spec.stats, spec.converged
 
     def done(delta: float, dangling: float, active: int) -> bool:
@@ -555,10 +754,11 @@ def _in_task_loop(block_dir: str, spec: Semiring, emit: Callable, start: int):
     bound = {"i": start - 1}
 
     def step(carry: DataFrame, i: int) -> DataFrame:
-        fn = _superstep_fn(block_dir, 1, spec.dtype, spec.combine, emit,
-                           steps=i - bound["i"], done=done)
+        # the previous interval's job has finished: its message files are spent
+        shutil.rmtree(exchange, ignore_errors=True)
+        fn = _interval_fn(block_dir, n_part, spec, emit, exchange, bound["i"] + 1, i, done)
         bound["i"] = i
-        return carry.groupBy("bucket").applyInArrow(fn, schema=_CARRY_SCHEMA)
+        return route(carry.mapInArrow(fn, schema=_CARRY_SCHEMA, barrier=n_part > 1))
 
     def observe_cols() -> dict:
         return {"history": F.max(F.when(F.col("src_bucket") == _HISTORY, F.col("payload")))}

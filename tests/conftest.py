@@ -21,3 +21,20 @@ def spark():
 
 def df_to_dict(df, key, value):
     return {r[key]: r[value] for r in df.collect()}
+
+
+def spy_step_descriptions(sc, monkeypatch) -> list:
+    """The job description of every step call the packed loop makes."""
+    from graftpark import packed
+
+    steps = []
+    real_iterate = packed.iterate
+
+    def spy(state0, step_fn, *args, **kwargs):
+        def step(state, i):
+            steps.append(sc.getLocalProperty("spark.job.description"))
+            return step_fn(state, i)
+        return real_iterate(state0, step, *args, **kwargs)
+
+    monkeypatch.setattr(packed, "iterate", spy)
+    return steps

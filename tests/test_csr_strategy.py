@@ -29,6 +29,15 @@ def powerlaw_graph(spark):
     return Graph(spark.createDataFrame(pdf))
 
 
+@pytest.fixture
+def fused(monkeypatch):
+    """Run packed kernels on the fused loop, which a session takes only
+    when it has fewer task slots than buckets."""
+    from graftpark import packed
+
+    monkeypatch.setattr(packed, "task_slots", lambda spark: 0)
+
+
 def test_pagerank_packed_matches_dataframe_fixture(spark, tmp_path):
     n, directed, edges = G30_HUB
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
@@ -48,7 +57,7 @@ def test_pagerank_packed_matches_dataframe(spark, powerlaw_graph, tmp_path):
     assert abs(sum(b.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_packed_fused_steps_match(spark, powerlaw_graph, tmp_path):
+def test_pagerank_packed_fused_steps_match(spark, powerlaw_graph, tmp_path, fused):
     """``steps_per_job=4`` chains four supersteps into one query; the
     finish derives the damping base from the broadcast dangling mass, so
     the fused run equals one job per superstep."""
@@ -94,7 +103,7 @@ def test_pagerank_packed_checkpoint_resume_replays_metrics(spark, tmp_path):
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12
 
 
-def test_pagerank_packed_resume_across_steps_per_job(spark, powerlaw_graph, tmp_path):
+def test_pagerank_packed_resume_across_steps_per_job(spark, powerlaw_graph, tmp_path, fused):
     """Checkpoint dirs and metrics records count supersteps, not fused
     jobs, so a ``steps_per_job=4`` run stopped at superstep 8 resumes, with
     either job width, to the ranks of an uninterrupted 12-superstep run."""
@@ -123,10 +132,10 @@ def test_pagerank_packed_resume_across_steps_per_job(spark, powerlaw_graph, tmp_
         assert _ranks(resumed) == full
 
 
-def test_packed_superstep_runs_one_python_stage(spark, tmp_path, monkeypatch):
+def test_packed_superstep_runs_one_python_stage(spark, tmp_path, monkeypatch, fused):
     """Each bucket's finish emits its next gather in the same task, so
-    a packed superstep's plan holds one grouped Arrow UDF and no map-side
-    one."""
+    a fused-loop superstep's plan holds one grouped Arrow UDF and no
+    map-side one."""
     import re
 
     from graftpark import packed

@@ -44,6 +44,8 @@ spark = get_spark(
 # really multi-executor (driver + 2 executor JVMs)
 spark.range(1000).repartition(8).count()
 n_members = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
+from graftpark.packed import task_slots
+slots = task_slots(spark)
 g = Graph.from_edge_list(spark, barabasi_albert(1500, 4, seed=11), n=1500, directed=False)
 res = pagerank(g, tol=0.0, max_supersteps=6, strategy="packed",
                block_dir=os.environ["GP_BLK_PR"], num_partitions=8)
@@ -51,14 +53,19 @@ ranks = {int(r["id"]): float(r["rank"]) for r in ranks_df(res).collect()}
 cc = connected_components(g, strategy="packed",
                           block_dir=os.environ["GP_BLK_CC"], num_partitions=8)
 comps = {int(r["id"]): int(r["comp"]) for r in cc.state.select("id", "comp").collect()}
-print("LC_RESULT " + json.dumps({"executors": n_members, "ranks": ranks, "comps": comps}))
+print("LC_RESULT " + json.dumps({"executors": n_members, "slots": slots, "ranks": ranks,
+                                "comps": comps}))
 spark.stop()
 """
 
 
 def test_packed_kernels_under_local_cluster(spark, tmp_path):
     """Packed PageRank + CC under two real executor JVMs equal the
-    single-JVM local results exactly (ranks to 1e-9, comps exact)."""
+    single-JVM local results exactly (ranks to 1e-9, comps exact). The
+    8 buckets fill the cluster's 8 task slots, so its runs take the
+    interval loop, whose bucket tasks exchange messages through the block
+    dir across the two JVMs; the 4-slot local session takes the fused
+    loop."""
     from graftpark.fixtures import barabasi_albert
     from graftpark.graph import Graph
     from graftpark.kernels.components import connected_components
@@ -91,6 +98,7 @@ def test_packed_kernels_under_local_cluster(spark, tmp_path):
     assert lines, f"local-cluster child failed:\n{out.stdout[-3000:]}\n{out.stderr[-3000:]}"
     got = json.loads(lines[0][len("LC_RESULT "):])
     assert got["executors"] >= 3  # driver + 2 executor JVMs
+    assert got["slots"] == 8
     b_pr = {int(k): v for k, v in got["ranks"].items()}
     b_cc = {int(k): v for k, v in got["comps"].items()}
     assert set(a_pr) == set(b_pr)

@@ -11,6 +11,7 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
+from conftest import spy_step_descriptions
 from graftpark import packed
 from graftpark.blocks import ensure_edge_blocks, partition_perfect_ids
 from graftpark.fixtures import powerlaw_edges_pdf
@@ -30,21 +31,6 @@ def graph(spark):
 
 def _ranks(res):
     return {r["id"]: r["rank"] for r in ranks_df(res).collect()}
-
-
-def _spy_steps(sc, monkeypatch) -> list:
-    """The job description of every step call the packed loop makes."""
-    steps = []
-    real_iterate = packed.iterate
-
-    def spy(state0, step_fn, *args, **kwargs):
-        def step(state, i):
-            steps.append(sc.getLocalProperty("spark.job.description"))
-            return step_fn(state, i)
-        return real_iterate(state0, step, *args, **kwargs)
-
-    monkeypatch.setattr(packed, "iterate", spy)
-    return steps
 
 
 def test_auto_takes_one_bucket(spark, graph):
@@ -97,7 +83,7 @@ def test_one_job_per_checkpoint_interval(spark, graph, tmp_path, monkeypatch):
     13 metrics with their own deltas and checkpoints 5 and 10 only; a
     resume from 10 reproduces its ranks bit for bit."""
     sc = spark.sparkContext
-    steps = _spy_steps(sc, monkeypatch)
+    steps = spy_step_descriptions(sc, monkeypatch)
     run = tmp_path / "run"
     sc.setJobGroup("one-bucket-intervals", "one-bucket-intervals")
     try:
@@ -137,7 +123,7 @@ def test_one_job_per_checkpoint_interval(spark, graph, tmp_path, monkeypatch):
 def test_max_supersteps_inside_an_interval(spark, graph, monkeypatch):
     """Without a ``checkpoint_dir`` nothing needs a durable point: the
     whole run is one step call, which stops at exactly ``max_supersteps``."""
-    steps = _spy_steps(spark.sparkContext, monkeypatch)
+    steps = spy_step_descriptions(spark.sparkContext, monkeypatch)
     res = pagerank(graph, tol=0.0, max_supersteps=7)
     assert steps == ["pagerank/packed/superstep=7"]
     assert res.supersteps == 7 and not res.converged
