@@ -185,16 +185,12 @@ def main() -> None:
     g_pl, pl_cache = make_powerlaw_graph(spark, pl_edges, pl_vertices)
     block_dir = os.path.join(pl_cache, f"blocks-{cpus}")
     n_edges_pl = g_pl.edges.count()
-    # warm-up builds blocks/sidecar/positions (setup, untimed). Runs one
-    # fused job of the MEASURED shape (steps_per_job=4): a 1-step warmup
-    # leaves the 4-step pipeline's codegen/slice caches cold and the
-    # first timed job reads 1.3-3x slower than steady state.
-    pagerank(g_pl, tol=0.0, max_supersteps=4, steps_per_job=4,
-             strategy="packed", block_dir=block_dir)
+    # warm-up builds blocks/sidecar/positions (setup, untimed)
+    pagerank(g_pl, tol=0.0, max_supersteps=4, strategy="packed", block_dir=block_dir)
     res = timed(
         "pagerank_packed_pl",
         lambda: pagerank(g_pl, tol=1e-6, max_supersteps=60, strategy="packed",
-                         block_dir=block_dir, steps_per_job=4),
+                         block_dir=block_dir),
     )
     converged["pagerank_packed_pl"] = res.converged
     pl_walls = [m["wall_s"] for m in res.metrics]

@@ -80,19 +80,11 @@ spark = get_spark(
 )
 g = Graph(spark.read.parquet(data), assume_normalized=True)
 # warm-up (builds CSR blocks on first level, primes JIT + worker pool).
-# Must run ONE fused job of exactly the measured shape (same
-# steps_per_job): a 1-step warmup leaves the k-step fused pipeline's
-# codegen and per-shape slice caches cold, and the first timed job then
-# reads 1.3-3x slower than steady state (observed 2026-08-18).
-strategy = os.environ.get("GRAFTPARK_SCALING_STRATEGY", "packed")
-k = int(os.environ.get("GRAFTPARK_SCALING_STEPS_PER_JOB", "4" if strategy == "packed" else "1"))
-# 3 fused jobs, not 1: the shared VM sometimes shows a multi-job warm-up
-# transient (first job up to 5x steady state, BOTH serialization paths —
-# BENCH/ab_arrow_r05.md) that a single-job warmup does not absorb.
 # Identical at both levels; warmup walls are recorded in the result so a
 # residual transient stays visible.
-wu_steps = int(os.environ.get("GRAFTPARK_SCALING_WARMUP_STEPS", str(3 * k)))
-wu = pagerank(g, tol=0.0, max_supersteps=wu_steps, steps_per_job=k, strategy=strategy,
+strategy = os.environ.get("GRAFTPARK_SCALING_STRATEGY", "packed")
+wu_steps = int(os.environ.get("GRAFTPARK_SCALING_WARMUP_STEPS", "12"))
+wu = pagerank(g, tol=0.0, max_supersteps=wu_steps, strategy=strategy,
               block_dir=block_dir, num_partitions=buckets,
               payload_dtype=os.environ.get("GRAFTPARK_SCALING_DTYPE", "float32"))
 wu_walls = [round(m["wall_s"], 2) for m in wu.metrics]
@@ -104,8 +96,7 @@ e_dir = g.edges.count()
 t0 = time.monotonic()
 dtype = os.environ.get("GRAFTPARK_SCALING_DTYPE", "float32")
 res = pagerank(g, tol=1e-6, max_supersteps=60, strategy=strategy,
-               block_dir=block_dir, num_partitions=buckets, steps_per_job=k,
-               payload_dtype=dtype)
+               block_dir=block_dir, num_partitions=buckets, payload_dtype=dtype)
 wall = time.monotonic() - t0
 walls = [m["wall_s"] for m in res.metrics]
 mean_step = sum(walls) / len(walls)
@@ -380,7 +371,7 @@ dst-bucket-contiguous partials — packed messages are direct slices,
 no rearrangement pass — and src ascending within each dst segment, so
 gather positions are monotone per reduceat segment: measured ~26%
 faster per-bucket gather at 32-way on the bandwidth-saturated host,
-tools/kernel_lab.py), gather-scatter inside Arrow UDFs
+BENCH/kernel_lab_r05.md), gather-scatter inside Arrow UDFs
 (cache-resident chunked np.add.reduceat), one packed keyed shuffle of
 ~P^2 binary rows per superstep, vectorized reduce, convergence via
 DataFrame.observe. Payload dtype:
@@ -410,7 +401,7 @@ subsystem, not by the engine's dataflow — quantified in round 3:
   executor run time >> JVM CPU time: the wall time sits inside the
   numpy gather (off-JVM, memory-bound), not in scheduling or shuffle.
 - A Spark-free pure-numpy replay of the identical per-bucket gather
-  (`tools/bw_floor.py`, same mmap'd .npy blocks) measures ~0.07 s per
+  (same mmap'd .npy blocks) measures ~0.07 s per
   bucket solo -> ~1.19 s at 32-way concurrency on this VM: ~17x
   inflation from memory contention alone, with 32-way wall-clock
   SLOWER than 8-way. The Spark superstep sits AT that raw floor.
@@ -477,8 +468,8 @@ subsystem, not by the engine's dataflow — quantified in round 3:
   most recent runs), efficiency 0.8 requires the 32-core level to
   sustain 137-148M e/s. The Spark-free pure-numpy gather over the same
   256M-edge layout-v4 CSR blocks peaks at ~141M e/s aggregate at
-  32-way on this host's quietest measured phase (tools/kernel_lab.py,
-  BENCH/kernel_lab_r05.md, best of 6 samples) —
+  32-way on this host's quietest measured phase
+  (BENCH/kernel_lab_r05.md, best of 6 samples) —
   the bar sits AT or ABOVE the hardware's own zero-overhead ceiling
   for this memory-bound kernel. Meeting 0.8 at 8->32 here would
   require the full distributed superstep (gather + Arrow

@@ -56,7 +56,7 @@ _META_CACHE: dict = {}
 # superstep deleted); 4 = src ascending WITHIN each dst segment, so the
 # per-edge gather positions are monotone inside every reduceat segment
 # — measured ~26% faster per-bucket gather at 32-way concurrency on the
-# bandwidth-saturated host (tools/kernel_lab.py), neutral at 8-way
+# bandwidth-saturated host (BENCH/kernel_lab_r05.md), neutral at 8-way
 # (sums are permutation-invariant per segment, so results are
 # unchanged). Dirs written by older layouts rebuild on first use.
 _LAYOUT_VERSION = 4
@@ -376,7 +376,7 @@ def load_block(block_dir: str, bucket: int) -> dict | None:
 # 256k edges per chunk: the per-edge gather temp stays ~1 MB
 # (float32/int64 ≤ 2 MB) — L2-resident instead of a full-bucket DRAM
 # round-trip. Measured 2x per-bucket speedup on the 256M-edge scaling
-# input at both 8 and 32 pinned cores (tools/bw_floor.py methodology);
+# input at both 8 and 32 pinned cores (BENCH/kernel_lab_r05.md);
 # the gather is the DRAM-bandwidth-bound half of every packed superstep.
 _GATHER_CHUNK = 1 << 18
 

@@ -40,7 +40,6 @@ def pagerank(
     broadcast_state: bool | None = None,
     strategy: str = "auto",
     block_dir: str | None = None,
-    steps_per_job: int = 1,
     payload_dtype: str = "float64",
 ) -> LoopResult:
     """Ranks sum to 1 over the full vertex set (isolated vertices included).
@@ -57,11 +56,10 @@ def pagerank(
 
     ``strategy`` is ``'dataframe'`` (the semantic reference), ``'packed'``
     (graftpark/packed.py, the at-scale path: one Spark job per checkpoint
-    interval, or ``steps_per_job`` supersteps per job when the session has
-    fewer task slots than buckets; ``payload_dtype`` float64 or float32)
-    or ``'auto'``
-    (packed, in one bucket for a small graph; see
-    ``packed.resolve_strategy``); anything else raises ValueError.
+    interval whatever the bucket and task-slot counts; ``payload_dtype``
+    float64 or float32) or ``'auto'`` (packed, in one bucket for a small
+    graph; see ``packed.resolve_strategy``); anything else raises
+    ValueError.
     """
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -73,7 +71,7 @@ def pagerank(
     if strategy == "packed":
         return run_packed(
             graph, _packed_spec(n, alpha, tol, payload_dtype), buckets, max_supersteps,
-            block_dir, checkpoint_dir, checkpoint_every, resume, steps_per_job, kernel="pagerank",
+            block_dir, checkpoint_dir, checkpoint_every, resume, kernel="pagerank",
         )
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src", sym=False)

@@ -9,10 +9,10 @@ Two problems Catalyst does not solve for us (SURVEY.md §4.3):
 
 1. **Iterative plan growth** — each superstep's DataFrame references the
    previous one; after ~20 iterations analysis and task serialization
-   dominate. Fix: truncate lineage every ``truncate_every`` supersteps,
-   either via ``localCheckpoint(eager=True)`` or — when a durable
-   checkpoint directory is configured — by writing state to parquet and
-   re-reading it (which doubles as the resume checkpoint).
+   dominate. Fix: truncate lineage after every call, either via
+   ``localCheckpoint(eager=True)`` or — on a durable checkpoint's
+   superstep — by writing state to parquet and re-reading it (which
+   doubles as the resume checkpoint).
 2. **Convergence probes** — stats (delta, active count) are computed as
    ONE aggregate job on the freshly persisted state, not separate
    count()/collect() probes.
@@ -21,8 +21,7 @@ Checkpoint layout (north_rule: resumable with per-partition lineage):
 
     {run_dir}/superstep=00007/state/*.parquet   (with _SUCCESS marker)
     {run_dir}/superstep=00007/lineage.json      per-partition rows/min/max/hash
-    {run_dir}/metrics.jsonl                     one record per superstep (or fused
-                                                call, named by its last superstep)
+    {run_dir}/metrics.jsonl                     one record per superstep
 """
 
 from __future__ import annotations
@@ -113,7 +112,6 @@ def iterate(
     converged_fn: Callable[[dict], bool],
     max_supersteps: int = 100,
     checkpointer: Checkpointer | None = None,
-    truncate_every: int = 1,
     start_superstep: int = 1,
     initial_metrics: list[dict] | None = None,
     observe_cols: Callable[[], dict] | None = None,
@@ -133,20 +131,17 @@ def iterate(
     actions per superstep; ``stats_fn(observed_row_dict, prev, i)`` then
     just post-processes the observed values.
 
-    Superstep numbers count supersteps, not calls: ``step_fn`` advances
-    the state by ``steps_per_call`` supersteps and ``i`` is the last of
-    them, so checkpoint dirs, metrics records and resume points mean the
-    same superstep whatever ``steps_per_call`` wrote them. A durable
-    checkpoint (or a lineage truncation) is taken after every call that
-    reaches a multiple of ``checkpointer.every`` (``truncate_every``).
+    ``steps_per_call`` is 1 or None. With 1, ``step_fn`` advances the
+    state by superstep ``i``, and a durable checkpoint is taken at every
+    multiple of ``checkpointer.every``.
 
-    ``steps_per_call=None`` is the interval mode: ``i`` is the next
-    multiple of ``checkpointer.every`` or ``max_supersteps``, whichever
-    comes first (without a checkpointer, ``max_supersteps``); the step
-    may stop short of it only by converging, and ``stats_fn`` returns one
-    record per superstep it ran. The loop then advances by that many
-    supersteps, records each with its share of the call's wall time, and
-    takes a durable checkpoint only when it stopped on a multiple.
+    ``None`` is the interval mode: ``i`` is the next multiple of
+    ``checkpointer.every`` or ``max_supersteps``, whichever comes first
+    (without a checkpointer, ``max_supersteps``); the step may stop short
+    of it only by converging, and ``stats_fn`` returns one record per
+    superstep it ran. The loop then advances by that many supersteps,
+    records each with its share of the call's wall time, and takes a
+    durable checkpoint only when it stopped on a multiple.
 
     With a ``label``, the Spark jobs of a call ending at superstep ``i``
     are described as ``{label}/superstep={i}``; the caller's description
@@ -154,19 +149,21 @@ def iterate(
     """
     from pyspark.sql import Observation
 
+    if steps_per_call not in (1, None):
+        raise ValueError(f"steps_per_call must be 1 or None, not {steps_per_call!r}")
     metrics = list(initial_metrics or [])
     prev = initial_state.persist(StorageLevel.MEMORY_AND_DISK)
     prev.count()
     prev_ckpt_rdd = None
     converged = False
     i = start_superstep - 1
-    k = None if steps_per_call is None else max(1, steps_per_call)
+    interval = steps_per_call is None
     every = checkpointer.every if checkpointer is not None else max(1, max_supersteps)
     sc = initial_state.sparkSession.sparkContext
     caller_desc = sc.getLocalProperty("spark.job.description")
     try:
         while i < max_supersteps:
-            end = min((i // every + 1) * every, max_supersteps) if k is None else i + k
+            end = min((i // every + 1) * every, max_supersteps) if interval else i + 1
             if label is not None:
                 sc.setJobDescription(f"{label}/superstep={end}")
             t0 = time.monotonic()
@@ -177,29 +174,23 @@ def iterate(
                 cols = observe_cols()
                 new = new.observe(obs, *[c.alias(name) for name, c in cols.items()])
             new_ckpt_rdd = None
-            if k is not None and checkpointer is not None and _reaches_multiple(end, k, every):
+            if not interval and checkpointer is not None and end % every == 0:
                 # parquet write + re-read: durable resume point AND flat lineage
                 new = checkpointer.save(new, end)
                 new = new.persist(StorageLevel.MEMORY_AND_DISK)
-            elif k is None or _reaches_multiple(end, k, truncate_every):
+            else:
                 # eager local checkpoint: materializes AND flattens the logical
                 # plan — without this, Catalyst re-analysis of the growing join
                 # tree dominates after a handful of supersteps (SURVEY.md §4.3.1)
                 new = new.localCheckpoint(eager=True)
                 new_ckpt_rdd = _checkpoint_rdd(new)
-            else:
-                new = new.persist(StorageLevel.MEMORY_AND_DISK)
-                new.count()
             stats = stats_fn(obs.get if obs is not None else new, prev, end)
-            if k is None:
-                ran = stats
-                i += len(ran)
-                if checkpointer is not None and i % checkpointer.every == 0:
-                    new = checkpointer.save(new, i).persist(StorageLevel.MEMORY_AND_DISK)
-                    _release(new_ckpt_rdd)
-                    new_ckpt_rdd = None
-            else:
-                ran, i = [stats], end
+            ran = stats if interval else [stats]
+            i += len(ran)
+            if interval and checkpointer is not None and i % every == 0:
+                new = checkpointer.save(new, i).persist(StorageLevel.MEMORY_AND_DISK)
+                _release(new_ckpt_rdd)
+                new_ckpt_rdd = None
             wall = (time.monotonic() - t0) / len(ran)
             for j, s in enumerate(ran):
                 rec = {"superstep": i - len(ran) + 1 + j, "wall_s": wall, **s}
@@ -227,11 +218,6 @@ def _release(rdd) -> None:
             rdd.unpersist(False)
         except Exception:
             pass
-
-
-def _reaches_multiple(i: int, k: int, every: int) -> bool:
-    """Whether supersteps ``i-k+1 .. i`` include a multiple of ``every``."""
-    return i // every > (i - k) // every
 
 
 def _checkpoint_rdd(df: DataFrame):

@@ -1,4 +1,4 @@
-"""Packed superstep engine: one per-bucket emitter, two superstep loops, one driver.
+"""Packed superstep engine: one per-bucket emitter, one superstep loop, one driver.
 
 PageRank (sum), connected components (min) and label propagation (mode)
 are one dataflow over the same CSR blocks (graftpark/blocks.py) with
@@ -25,47 +25,45 @@ bucket, its broadcast scalars summed exactly, so the result does not
 depend on arrival order) → the emitter on the new state. On a fresh start
 and on a checkpoint load, an entry ``applyInArrow`` packs per-vertex rows
 by bucket and runs the same emitter, and the carry is routed: partition
-j holds the rows addressed to bucket ``partition_perfect_ids(P)[j]``.
+t holds the rows addressed to the buckets task t owns (below).
 Durable checkpoints expand the carrier rows to plain per-vertex parquet
 and re-enter the loop from it on resume.
 
-The interval loop runs whenever the session can run all P bucket tasks
-at once (P ≤ its task slots, no dynamic allocation; always for P = 1):
-ONE Spark job per checkpoint interval, the supersteps up to the next
-multiple of ``checkpoint_every`` (with a ``checkpoint_dir``) or
-``max_supersteps``. The interval's P tasks are one gang-scheduled
-``mapInArrow(barrier=True)`` over the routed carry; each task loops over
-the interval's supersteps and exchanges with its peers through files in
-the block dir (see :func:`_interval_fn`):
+The loop runs ONE Spark job per checkpoint interval: the supersteps up
+to the next multiple of ``checkpoint_every`` (with a ``checkpoint_dir``)
+or ``max_supersteps``. Its tasks are a scheduling fact kept apart from
+the bucket layout: T = min(P, task slots) tasks, at least one (see
+:func:`task_slots`), where task t owns the buckets
+``partition_perfect_ids(P)[j]`` with ``j % T == t``. With T > 1 the tasks
+are one gang-scheduled ``mapInArrow(barrier=True)`` over the carry routed
+to its owners; each task loops over the interval's supersteps, running
+for each bucket it owns, in ascending bucket id (see :func:`_interval_fn`),
 
-    combine → gather → P−1 message files + a step marker with its
-          aggregates under {block_dir}/_bsp/{run}/step={s}/ → wait for
-          the P markers → read the incoming files
+    combine → gather → a message file per bucket of another task + a
+          step marker with its aggregates under
+          {block_dir}/_bsp/{run}/step={s}/
+
+keeping the messages between its own buckets in memory, then waits for
+the markers of the buckets it does not own and reads their files.
 
 Every task sums the same markers, so all stop at the same superstep:
 convergence, the interval bound or ``max_supersteps``. Their last
-emitted rows are the next interval's carry, routed by ONE bucket-keyed
+emitted rows are the next interval's carry, routed by ONE owner-keyed
 shuffle. The barrier stage is a shuffle map stage, which Spark retries
 whole when a task fails; the compute is deterministic, so a retried
-attempt rewrites the same files. With one bucket nothing is exchanged.
-A history row (src_bucket=-3) holds each superstep's summed (delta,
-dangling, active), so metrics stay per superstep.
-
-With more buckets than task slots, Spark would refuse the barrier stage,
-and the fused loop runs instead: a superstep is
-
-    carry ─the ONE bucket-keyed shuffle→ applyInArrow: payloads read
-          straight from the Arrow IPC buffers → combine → the emitter on
-          the new state, in the same task → next carry
-
-so it runs ONE Python stage and shuffles ~P² small binary rows rather
-than ~E rows, and ``steps_per_job`` supersteps chain into one query.
-Supersteps are independent of their index (broadcast scalars are summed
-inside the combine), and both loops give the same bytes.
+attempt rewrites the same files. One task (one bucket, or dynamic
+allocation, which refuses barrier stages) runs every bucket and
+exchanges nothing. Each combine takes its messages in ascending src
+bucket and sums its broadcast scalars exactly, so results do not depend
+on the task count. A history row (src_bucket=-3) holds each superstep's
+summed (delta, dangling, active), so metrics stay per superstep.
 
 ``strategy="auto"`` takes one bucket for graphs whose vertex state is
 broadcastable and whose edges fit it (``ONE_BUCKET_MAX_EDGES``), and
-``n_part`` buckets when the state is too big to broadcast.
+``n_part`` buckets when the state is too big to broadcast, unless the
+session allocates executors dynamically: one task for every bucket of an
+at-scale graph would serialize it, so ``auto`` takes the dataframe path
+there, and packed runs at scale want static allocation.
 """
 
 from __future__ import annotations
@@ -151,7 +149,7 @@ class Semiring:
     Driver-side: ``init`` (a Column over ``id``/``out_deg``) seeds the
     state, ``stats(observed)`` turns the summed (delta, dangling, active)
     into the metrics record, and ``converged(record)`` stops the loop.
-    The interval loop's tasks also run ``stats`` and ``converged``, so
+    The loop's tasks also run ``stats`` and ``converged``, so
     they too must not reference driver objects.
     ``out_deg`` stores real out-degrees in the sidecar (zeros otherwise);
     ``sym`` selects symmetrized blocks.
@@ -181,7 +179,9 @@ def resolve_strategy(graph: Graph, strategy: str, n: int, n_part: int,
     otherwise the dataframe path. Packed block dirs default to driver-local tmp; on a
     multi-node master that path is not shared storage, so auto only picks
     packed when running locally or when the caller supplies an explicit
-    (shared) block_dir."""
+    (shared) block_dir. Under dynamic allocation (no task slots, see
+    :func:`task_slots`) the packed loop runs in one task, so auto takes
+    the dataframe path where packed would need more than one bucket."""
     if strategy not in STRATEGIES:
         raise ValueError(f"unknown strategy {strategy!r}; expected one of {STRATEGIES}")
     if strategy != "auto":
@@ -189,7 +189,7 @@ def resolve_strategy(graph: Graph, strategy: str, n: int, n_part: int,
     if not (graph.spark.sparkContext.master.startswith("local") or block_dir is not None):
         return "dataframe", n_part
     if not choose_strategy(n, broadcast_state):
-        return "packed", n_part
+        return ("packed" if n_part == 1 or task_slots(graph.spark) > 0 else "dataframe"), n_part
     # an edge-less graph has no blocks to build: the dataframe path serves it
     if 0 < graph.edge_stats(sym=sym)[0] <= ONE_BUCKET_MAX_EDGES:
         return "packed", 1
@@ -345,26 +345,29 @@ def _enter_fn(block_dir: str, value_col: str, dtype: str, emit: Callable):
     return fn
 
 
-def _carry_inputs(batches, dtype: np.dtype):
-    """One bucket's carry rows → ``(state, scalars, messages)``: the
-    carrier row's state (None without one), the broadcast scalars, and
-    ``(src_bucket, payload)`` messages in ascending src bucket, whatever
-    order the rows arrived in."""
-    prev, scalars, msgs = None, [], []
+def _carry_inputs(batches, dtype: np.dtype) -> dict:
+    """Carry rows → ``{bucket: (state, scalars, messages)}``: each
+    addressed bucket's carrier-row state (None without one), its
+    broadcast scalars, and its ``(src_bucket, payload)`` messages in
+    ascending src bucket, whatever order the rows arrived in."""
+    got = {}
     for batch in batches:
+        dst = batch.column("bucket").to_numpy()
         srcb = batch.column("src_bucket").to_numpy()
         pcol = batch.column("payload")
         for i in range(len(srcb)):
             b = int(srcb[i])
+            entry = got.setdefault(int(dst[i]), [None, [], []])
             buf = pcol[i].as_buffer()
             if b == -1:
-                prev = np.frombuffer(buf, dtype=dtype)
+                entry[0] = np.frombuffer(buf, dtype=dtype)
             elif b == -2:
-                scalars.append(float(np.frombuffer(buf, dtype=np.float64)[0]))
+                entry[1].append(float(np.frombuffer(buf, dtype=np.float64)[0]))
             elif b >= 0:
-                msgs.append((b, buf))
-    msgs.sort(key=lambda m: m[0])
-    return prev, scalars, msgs
+                entry[2].append((b, buf))
+    for _, _, msgs in got.values():
+        msgs.sort(key=lambda m: m[0])
+    return {c: tuple(v) for c, v in got.items()}
 
 
 def _combiner(block_dir: str, num_buckets: int, combine: Callable):
@@ -382,25 +385,6 @@ def _combiner(block_dir: str, num_buckets: int, combine: Callable):
                        math.fsum(scalars), vtx)
 
     return step
-
-
-def _superstep_fn(block_dir: str, num_buckets: int, dtype: str, combine: Callable,
-                  emit: Callable):
-    """applyInArrow fn (grouped by bucket) of the fused loop: one bucket's
-    carrier, scalar and message rows → ``combine`` → the emitter, so the
-    next superstep's gather runs in this same task."""
-    dt = np.dtype(dtype)
-    step = _combiner(block_dir, num_buckets, combine)
-
-    def fn(key, table):
-        c = int(key[0].as_py())
-        vtx = load_vertices(block_dir, c)
-        if vtx is None:  # a bucket with no vertices gets only broadcast rows
-            return _CARRY_ARROW.empty_table()
-        new, *aggs = step(c, vtx, *_carry_inputs(table.to_batches(), dt))
-        return emit(c, new, vtx, aggs)
-
-    return fn
 
 
 #: a step marker: the writer's (delta, dangling, active), its broadcast
@@ -444,51 +428,81 @@ def _await_markers(step_dir: str, peers: list) -> dict:
         time.sleep(_POLL_S)
 
 
-def _interval_fn(block_dir: str, num_buckets: int, spec: Semiring, emit: Callable,
-                 exchange: str, first: int, last: int, done: Callable):
-    """mapInArrow fn of the interval loop: supersteps ``first..last`` of
-    the bucket this task's partition is routed to (``partition_perfect_ids``).
+def _owned(num_buckets: int, tasks: int, part: int) -> list[int]:
+    """The buckets task ``part`` of ``tasks`` owns, ascending:
+    ``partition_perfect_ids(num_buckets)[j]`` for every ``j % tasks == part``."""
+    return sorted(int(b) for b in partition_perfect_ids(num_buckets)[part::tasks])
 
-    Per superstep the task combines, gathers, writes its messages to its
-    P−1 peers as files under ``{exchange}/step={s}/`` and a marker with
-    its aggregates and broadcast scalar, waits for its peers' markers and
-    reads their messages in ascending src bucket. Every task sums the
-    same markers (exactly rounded), so all make the same
-    ``done(delta, dangling, active)`` decision and stop at the same
-    superstep. The last superstep sends nothing: its emitted rows are the
-    task's output, the carry of the next interval. The task routed to
-    partition 0 appends a history row (src_bucket=-3) with each
-    superstep's summed aggregates. With one bucket nothing is exchanged."""
-    dt = np.dtype(spec.dtype)
+
+def _owner_col(num_buckets: int, tasks: int) -> Column:
+    """The routing key of a carry row: its bucket's owner as
+    ``partition_perfect_ids(tasks)[j % tasks]`` for bucket
+    ``partition_perfect_ids(num_buckets)[j]``, which a ``tasks``-wide
+    hash partitioning places in partition ``j % tasks``."""
     ids = partition_perfect_ids(num_buckets)
+    owner = np.zeros(int(ids.max()) + 1, np.int32)
+    owner[ids] = partition_perfect_ids(tasks)[np.arange(num_buckets) % tasks]
+    return F.element_at(F.array(*[F.lit(int(o)) for o in owner]),
+                        F.col("bucket") + F.lit(1)).cast("int")
+
+
+def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, emit: Callable,
+                 exchange: str, first: int, last: int, done: Callable):
+    """mapInArrow fn of the packed loop: supersteps ``first..last`` of the
+    buckets this task's partition owns (:func:`_owned`).
+
+    Per superstep the task runs each bucket it owns in ascending bucket
+    id: combine, gather, and write the messages to buckets of other
+    tasks as files under ``{exchange}/step={s}/`` and a marker with the
+    bucket's aggregates and broadcast scalar; messages between its own
+    buckets stay in memory. It then waits for the markers of the buckets
+    it does not own, and each bucket takes its messages in ascending src
+    bucket. Every task sums the same markers in bucket order (exactly
+    rounded), so all make the same ``done(delta, dangling, active)``
+    decision and stop at the same superstep. The last superstep sends
+    nothing: its emitted rows are the task's output, the carry of the
+    next interval. The task routed to partition 0 appends a history row
+    (src_bucket=-3) with each superstep's summed aggregates. One task
+    exchanges nothing."""
+    dt = np.dtype(spec.dtype)
     order = [int(b) for b in bucket_ids_sorted(num_buckets)]
     step = _combiner(block_dir, num_buckets, spec.combine)
+    no_input = (None, [], [])
 
     def fn(batches):
         from pyspark import TaskContext
 
         part = TaskContext.get().partitionId()
-        c = int(ids[part])
-        peers = [b for b in order if b != c]
-        vtx = load_vertices(block_dir, c)
-        prev, scalars, msgs = _carry_inputs(batches, dt)
-        history, out = [], None
+        mine = _owned(num_buckets, tasks, part)
+        owned = set(mine)
+        peers = [b for b in order if b not in owned]
+        vtx = {c: load_vertices(block_dir, c) for c in mine}
+        inputs = _carry_inputs(batches, dt)
+        # a bucket without vertices only writes markers
+        live = [c for c in mine if vtx[c] is not None]
+        carry = {c: inputs.get(c, no_input) for c in live}
+        history, out = [], {}
         for s in range(first, last + 1):
-            mark, own, sent = (0.0, 0.0, 0, 0.0, False), None, {}
-            if vtx is not None:  # a bucket without vertices only writes markers
-                prev, *aggs = step(c, vtx, prev, scalars, msgs)
-                out = emit(c, prev, vtx, aggs)
-                scalar, sent = _outgoing(out, c)
-                own = sent.pop(c, None)
-                mark = (*aggs, scalar, own is not None)
-            marks = {c: mark}
+            step_dir = os.path.join(exchange, f"step={s}")
             if peers:
-                step_dir = os.path.join(exchange, f"step={s}")
                 os.makedirs(step_dir, exist_ok=True)
-                if s < last:
+            marks, prev, local = {}, {}, {}
+            for c in mine:
+                mark = (0.0, 0.0, 0, 0.0, False)
+                if vtx[c] is not None:
+                    prev[c], *aggs = step(c, vtx[c], *carry[c])
+                    out[c] = emit(c, prev[c], vtx[c], aggs)
+                    scalar, sent = _outgoing(out[c], c)
+                    mark = (*aggs, scalar, bool(sent))
                     for d, buf in sent.items():
-                        _put(os.path.join(step_dir, f"{d}-{c}"), buf)
-                _put(os.path.join(step_dir, f"marker-{c}"), struct.pack(_MARKER, *mark))
+                        if d in owned:
+                            local[d, c] = buf
+                        elif s < last:
+                            _put(os.path.join(step_dir, f"{d}-{c}"), buf)
+                marks[c] = mark
+                if peers:
+                    _put(os.path.join(step_dir, f"marker-{c}"), struct.pack(_MARKER, *mark))
+            if peers:
                 marks.update(_await_markers(step_dir, peers))
             ordered = [marks[b] for b in order]
             total = (math.fsum(m[0] for m in ordered), math.fsum(m[1] for m in ordered),
@@ -497,19 +511,22 @@ def _interval_fn(block_dir: str, num_buckets: int, spec: Semiring, emit: Callabl
             if s == last or done(*total):
                 break
             scalars = [m[3] for m in ordered]
-            msgs = []
-            for b in order:
-                if marks[b][4]:
-                    if b == c:
-                        msgs.append((b, own))
+            for c in live:
+                msgs = []
+                for b in order:
+                    if not marks[b][4]:
+                        continue
+                    if b in owned:
+                        msgs.append((b, local[c, b]))
                     else:
                         with open(os.path.join(step_dir, f"{c}-{b}"), "rb") as f:
                             msgs.append((b, pa.py_buffer(f.read())))
-        if out is not None:
-            yield from out.to_batches()
+                carry[c] = (prev[c], scalars, msgs)
+        for c in live:
+            yield from out[c].to_batches()
         if part == 0:
             yield pa.RecordBatch.from_arrays(
-                [pa.array([c], pa.int32()), pa.array([_HISTORY], pa.int32()),
+                [pa.array([mine[0]], pa.int32()), pa.array([_HISTORY], pa.int32()),
                  _whole(np.asarray(history, np.float64).ravel()), *_no_aggs(1)],
                 schema=_CARRY_ARROW,
             )
@@ -570,8 +587,8 @@ class _PackedCheckpointer(Checkpointer):
 
 def task_slots(spark) -> int:
     """Tasks the session can run at once, or 0 under dynamic allocation
-    (which refuses barrier stages): the largest bucket count the
-    interval loop can gang-schedule."""
+    (which refuses barrier stages): the packed loop runs min(buckets,
+    slots) tasks, at least one."""
     sc = spark.sparkContext
     if sc.getConf().get("spark.dynamicAllocation.enabled", "false").lower() == "true":
         return 0
@@ -588,7 +605,6 @@ def run_packed(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
     resume: bool = False,
-    steps_per_job: int = 1,
     *,
     kernel: str,
 ) -> LoopResult:
@@ -602,16 +618,15 @@ def run_packed(
     (:meth:`Graph.block_dir`), so consume the state before
     ``graph.unpersist()``.
 
-    When the session can run all ``n_part`` bucket tasks at once (see
-    :func:`task_slots`; one bucket always can), a job runs every
-    superstep up to the next multiple of ``checkpoint_every`` (with a
-    ``checkpoint_dir``) or ``max_supersteps`` in one gang of bucket tasks
-    that exchange messages through files under ``{block_dir}/_bsp/``,
-    stops early at convergence, and is described by that bound. Otherwise
-    a job fuses ``steps_per_job`` supersteps, one bucket-keyed shuffle
-    each; ``steps_per_job`` has no other effect. Either way each superstep
-    gets its own metrics record with its own convergence values (a fused
-    job's land on its last superstep) and its share of the job's wall.
+    A job runs every superstep up to the next multiple of
+    ``checkpoint_every`` (with a ``checkpoint_dir``) or ``max_supersteps``
+    in min(``n_part``, :func:`task_slots`) tasks, at least one, each
+    owning ``n_part`` / tasks buckets (rounded either way); more than one
+    task run as a gang that exchanges messages through files under
+    ``{block_dir}/_bsp/``. A job stops early at convergence and is
+    described by its bound. Each superstep gets its own metrics record
+    with its own convergence values and its share of the job's wall.
+    Results do not depend on the task count.
     """
     spark = graph.spark
     if block_dir is None:
@@ -638,10 +653,13 @@ def run_packed(
     emit = _emitter(block_dir, n_part, spec.gather, spec.scalar)
     entry = _enter_fn(block_dir, spec.value_col, spec.dtype, emit)
 
+    tasks = max(1, min(n_part, task_slots(spark)))
+
     def route(carry: DataFrame) -> DataFrame:
-        """Partition j ← the rows addressed to bucket
-        ``partition_perfect_ids(n_part)[j]``."""
-        return carry.repartition(n_part, "bucket") if n_part > 1 else carry.coalesce(1)
+        """Partition t ← the rows addressed to the buckets task t owns."""
+        if tasks == 1:
+            return carry.coalesce(1)
+        return carry.repartition(tasks, "bucket" if tasks == n_part else _owner_col(n_part, tasks))
 
     def enter(expanded: DataFrame) -> DataFrame:
         """Per-vertex rows → the (routed) loop carry."""
@@ -656,7 +674,6 @@ def run_packed(
             _expand_fn(block_dir, spec.value_col, spec.dtype),
             schema=f"id long, {spec.value_col} {sql_t}")
 
-    k = max(1, steps_per_job)
     checkpointer = (
         _PackedCheckpointer(checkpoint_dir, checkpoint_every, enter, expand)
         if checkpoint_dir else None
@@ -669,11 +686,9 @@ def run_packed(
             carry0, last, initial_metrics = rp
             start = last + 1
 
-    interval = n_part == 1 or n_part <= task_slots(spark)
     exchange = os.path.join(block_dir, "_bsp", uuid.uuid4().hex)
-    step, observe_cols, stats = (
-        _interval_loop(block_dir, n_part, spec, emit, start, exchange, route) if interval
-        else _fused_loop(block_dir, n_part, spec, emit, k))
+    step, observe_cols, stats = _interval_loop(block_dir, n_part, tasks, spec, emit, start,
+                                               exchange, route)
     try:
         with _superstep_confs(spark, n_part):
             res = iterate(
@@ -686,7 +701,7 @@ def run_packed(
                 start_superstep=start,
                 initial_metrics=initial_metrics,
                 observe_cols=observe_cols,
-                steps_per_call=None if interval else k,
+                steps_per_call=None,
                 label=f"{kernel}/packed",
             )
     finally:
@@ -694,53 +709,15 @@ def run_packed(
         with suppress(OSError):
             os.rmdir(os.path.dirname(exchange))  # only when no other run uses it
     vdf.unpersist()
-    # per-superstep records: a fused job's record is named by its last
-    # superstep and keeps the convergence values; walls are amortized
-    metrics = []
-    for rec in res.metrics:
-        kk = rec.get("supersteps_in_job", 1)
-        wall = rec["wall_s"] / kk
-        metrics += [{"superstep": rec["superstep"] - kk + j, "wall_s": wall} for j in range(1, kk)]
-        metrics.append({**rec, "wall_s": wall})
-    return LoopResult(state=expand(res.state), metrics=metrics,
+    return LoopResult(state=expand(res.state), metrics=res.metrics,
                       supersteps=res.supersteps, converged=res.converged)
 
 
-def _summed(stats_of: Callable, delta, dangling, active) -> dict:
-    """``stats_of`` over exactly rounded sums of per-bucket aggregates,
-    so the record does not depend on the order buckets are summed in."""
-    return stats_of({"delta": math.fsum(delta), "dangling": math.fsum(dangling),
-                     "active": int(sum(active))})
-
-
-def _fused_loop(block_dir: str, n_part: int, spec: Semiring, emit: Callable, k: int):
-    """``(step, observe_cols, stats)`` for :func:`iterate`: each step
-    chains ``k`` bucket-keyed supersteps into one query, and its record
-    carries the last one's summed carrier aggregates."""
-    superstep = _superstep_fn(block_dir, n_part, spec.dtype, spec.combine, emit)
-
-    def step(carry: DataFrame, i: int) -> DataFrame:
-        for _ in range(k):
-            carry = carry.groupBy("bucket").applyInArrow(superstep, schema=_CARRY_SCHEMA)
-        return carry
-
-    def observe_cols() -> dict:
-        # aggregates are null on all but the carrier rows, which
-        # collect_list keeps
-        return {c: F.collect_list(c) for c in ("delta", "dangling", "active")}
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        return {**_summed(spec.stats, observed["delta"], observed["dangling"], observed["active"]),
-                "supersteps_in_job": k}
-
-    return step, observe_cols, stats
-
-
-def _interval_loop(block_dir: str, n_part: int, spec: Semiring, emit: Callable, start: int,
-                   exchange: str, route: Callable):
+def _interval_loop(block_dir: str, n_part: int, tasks: int, spec: Semiring, emit: Callable,
+                   start: int, exchange: str, route: Callable):
     """``(step, observe_cols, stats)`` for :func:`iterate`'s interval mode:
-    the step's gang of ``n_part`` bucket tasks runs supersteps up to the
-    interval bound ``i`` (see :func:`_interval_fn`) as a barrier map
+    the step's ``tasks`` tasks run supersteps up to the interval bound
+    ``i`` (see :func:`_interval_fn`), more than one as a barrier map
     stage (Spark retries a failed barrier map stage whole, but aborts the
     job of a failed barrier result stage), and its history row becomes
     one stats record per superstep it ran."""
@@ -756,9 +733,10 @@ def _interval_loop(block_dir: str, n_part: int, spec: Semiring, emit: Callable, 
     def step(carry: DataFrame, i: int) -> DataFrame:
         # the previous interval's job has finished: its message files are spent
         shutil.rmtree(exchange, ignore_errors=True)
-        fn = _interval_fn(block_dir, n_part, spec, emit, exchange, bound["i"] + 1, i, done)
+        fn = _interval_fn(block_dir, n_part, tasks, spec, emit, exchange, bound["i"] + 1, i,
+                          done)
         bound["i"] = i
-        return route(carry.mapInArrow(fn, schema=_CARRY_SCHEMA, barrier=n_part > 1))
+        return route(carry.mapInArrow(fn, schema=_CARRY_SCHEMA, barrier=tasks > 1))
 
     def observe_cols() -> dict:
         return {"history": F.max(F.when(F.col("src_bucket") == _HISTORY, F.col("payload")))}

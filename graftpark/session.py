@@ -13,10 +13,15 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask, as ``local[*]`` counts them), not every CPU of the host."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus and cpus != "*":
         return int(cpus)
-    return os.cpu_count() or 8
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity masks on this platform
+        return os.cpu_count() or 8
 
 
 def get_spark(

@@ -1,9 +1,9 @@
-"""The interval loop of the packed engine (graftpark/packed.py) with more
-than one bucket: a checkpoint interval's bucket tasks run as one barrier
-stage and swap messages through files in the block dir, so a Spark job
-runs every superstep of the interval. Results, supersteps, metrics and
-checkpoints stay those of the fused loop, which runs one bucket-keyed
-shuffle per superstep."""
+"""The packed loop (graftpark/packed.py) with more than one bucket: a
+checkpoint interval's tasks run as one barrier stage, each owning one or
+more buckets, and swap messages through files in the block dir, so a
+Spark job runs every superstep of the interval. Results, supersteps,
+metrics and checkpoints do not depend on how many tasks the buckets are
+spread over."""
 
 import dataclasses
 import json
@@ -35,35 +35,61 @@ def graph(spark):
     return Graph(spark.createDataFrame(powerlaw_edges_pdf(20000, 3000, seed=7)))
 
 
-def _runs(graph, blk: str) -> dict:
-    """PageRank to tol, CC and LP on ``P`` buckets: (supersteps, metrics
-    deltas, sorted result rows) per kernel."""
+def _runs(graph, blk: str, buckets: int = P) -> dict:
+    """PageRank to tol, CC and LP on ``buckets`` buckets: (supersteps,
+    metrics deltas, sorted result rows) per kernel."""
     out = {}
+    kw = dict(strategy="packed", num_partitions=buckets)
     for name, run, rows in (
-        ("pagerank", lambda: pagerank(graph, tol=TOL, strategy="packed", num_partitions=P,
-                                      block_dir=blk), ranks_df),
-        ("cc", lambda: connected_components(graph, strategy="packed", num_partitions=P,
-                                            block_dir=blk + "-sym"), components_df),
-        ("lp", lambda: label_propagation(graph, strategy="packed", num_partitions=P,
-                                         max_supersteps=7, block_dir=blk + "-sym"), labels_df),
+        ("pagerank", lambda: pagerank(graph, tol=TOL, block_dir=blk, **kw), ranks_df),
+        ("cc", lambda: connected_components(graph, block_dir=blk + "-sym", **kw), components_df),
+        ("lp", lambda: label_propagation(graph, max_supersteps=7, block_dir=blk + "-sym", **kw),
+         labels_df),
     ):
         res = run()
         out[name] = (res.supersteps, [m["delta"] for m in res.metrics], sorted(rows(res).collect()))
     return out
 
 
-def test_interval_loop_is_byte_identical_to_fused_loop(spark, graph, tmp_path, monkeypatch):
+def _superstep_tasks(sc, group: str) -> set:
+    """Task counts of the stages that ran in the group's packed superstep jobs."""
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    counts = set()
+    for job in tracker.getJobIdsForGroup(group):
+        desc = store.job(job).description()
+        if desc.isDefined() and "/packed/superstep=" in desc.get():
+            for sid in tracker.getJobInfo(job).stageIds:
+                stage = tracker.getStageInfo(sid)
+                if stage is not None and stage.numCompletedTasks > 0:
+                    counts.add(stage.numTasks)
+    return counts
+
+
+def test_results_do_not_depend_on_task_count(spark, graph, tmp_path, monkeypatch):
+    """8 buckets run in the session's 4 slots (two buckets a task), in 3
+    tasks (3/3/2 buckets) and in one task; each run takes one superstep
+    job per kernel, and all three give the same bytes."""
+    sc = spark.sparkContext
     blk = str(tmp_path / "blk")
-    steps = spy_step_descriptions(spark.sparkContext, monkeypatch)
-    interval = _runs(graph, blk)
-    # one step call per kernel: no checkpoint_dir, so one interval per run
+    steps = spy_step_descriptions(sc, monkeypatch)
+    runs, tasks = [], []
+    for slots in (None, 3, 1):
+        if slots is not None:
+            monkeypatch.setattr(packed, "task_slots", lambda spark, n=slots: n)
+        group = f"tasks-{slots}"
+        sc.setJobGroup(group, group)
+        try:
+            runs.append(_runs(graph, blk, buckets=8))
+        finally:
+            sc.setJobGroup(None, None)
+        tasks.append(_superstep_tasks(sc, group))
+    assert tasks == [{4}, {3}, {1}]
+    assert [len(packed._owned(8, 3, t)) for t in range(3)] == [3, 3, 2]
+    # no checkpoint_dir, so one step call per kernel and run
     assert steps == ["pagerank/packed/superstep=100", "connected_components/packed/superstep=50",
-                     "label_propagation/packed/superstep=7"]
-    monkeypatch.setattr(packed, "task_slots", lambda spark: P - 1)
-    fused = _runs(graph, blk)
-    assert len(steps) > 3 + interval["pagerank"][0]
-    assert interval["pagerank"][0] == 13 and interval["cc"][0] > 1
-    assert interval == fused
+                     "label_propagation/packed/superstep=7"] * 3
+    assert runs[0]["pagerank"][0] > 1 and runs[0]["cc"][0] > 1
+    assert runs[1] == runs[0] and runs[2] == runs[0]
     assert not os.path.exists(os.path.join(blk, "_bsp"))
     assert not os.path.exists(os.path.join(blk + "-sym", "_bsp"))
 
@@ -153,10 +179,11 @@ def test_empty_bucket_converges(spark, tmp_path):
     g.unpersist()
 
 
-def test_task_failure_mid_interval_replays_the_interval(spark, graph, tmp_path):
-    """A bucket task that fails at superstep 3 fails the barrier stage;
-    Spark retries the whole gang from the interval's input carry, and the
-    run ends with the uninterrupted result byte for byte."""
+def _replays_failed_interval(graph, tmp_path, part: int) -> None:
+    """The task at partition ``part`` fails in its third combine, which
+    fails the barrier stage; Spark retries the whole gang from the
+    interval's input carry, and the run ends with the uninterrupted
+    result byte for byte."""
     n = graph.num_vertices()
     spec = _packed_spec(n, 0.85, TOL, "float64")
     flag, calls = str(tmp_path / "failed"), str(tmp_path / "calls")
@@ -165,12 +192,12 @@ def test_task_failure_mid_interval_replays_the_interval(spark, graph, tmp_path):
     def combine(prev, msgs, scalar, vtx):
         from pyspark import TaskContext
 
-        if TaskContext.get().partitionId() == 2:
+        if TaskContext.get().partitionId() == part:
             with open(calls, "a") as f:
                 f.write("x")
             if os.path.getsize(calls) == 3 and not os.path.exists(flag):
                 open(flag, "w").close()
-                raise RuntimeError("injected failure at superstep 3")
+                raise RuntimeError("injected failure mid-interval")
         return real(prev, msgs, scalar, vtx)
 
     blk = str(tmp_path / "blk")
@@ -182,6 +209,18 @@ def test_task_failure_mid_interval_replays_the_interval(spark, graph, tmp_path):
     assert [m["delta"] for m in got.metrics] == [m["delta"] for m in want.metrics]
     assert sorted(got.state.collect()) == sorted(want.state.collect())
     assert not os.path.exists(os.path.join(blk, "_bsp"))
+
+
+def test_task_failure_mid_interval_replays_the_interval(spark, graph, tmp_path):
+    """One bucket a task: the failure hits superstep 3."""
+    _replays_failed_interval(graph, tmp_path, part=2)
+
+
+def test_two_bucket_task_failure_replays_the_interval(spark, graph, tmp_path, monkeypatch):
+    """Two slots for the 4 buckets: the failing task owns two buckets and
+    fails in the first of them at superstep 2."""
+    monkeypatch.setattr(packed, "task_slots", lambda spark: 2)
+    _replays_failed_interval(graph, tmp_path, part=1)
 
 
 def test_combine_ignores_row_order(spark, graph, tmp_path):
@@ -212,12 +251,17 @@ def test_combine_ignores_row_order(spark, graph, tmp_path):
         payload[row] = np.float64(v).tobytes()
     mine = mine.set_column(2, "payload", pa.array(payload, pa.binary()))
     assert math.fsum([1e16, 1.0, -1e16, 1.0]) != ((1e16 + 1.0) - 1e16) + 1.0
-    fn = packed._superstep_fn(blk, P, spec.dtype, spec.combine, emit)
-    key = (pa.scalar(c, pa.int32()),)
-    a = fn(key, mine)
+    step = packed._combiner(blk, P, spec.combine)
+    vtx, dt = load_vertices(blk, c), np.dtype(spec.dtype)
+
+    def superstep(table):
+        new, *aggs = step(c, vtx, *packed._carry_inputs(table.to_batches(), dt)[c])
+        return emit(c, new, vtx, aggs)
+
+    a = superstep(mine)
     for seed in range(3):
         perm = np.random.default_rng(seed).permutation(mine.num_rows)
-        assert fn(key, mine.take(perm)).equals(a)
+        assert superstep(mine.take(perm)).equals(a)
 
 
 @pytest.mark.parametrize("buckets", [1, P])
@@ -236,4 +280,27 @@ def test_packed_on_isolated_vertices_matches_oracles(spark, tmp_path, buckets):
     assert dict(components_df(comps).collect()) == oracles.connected_components([], vertices)
     labels = label_propagation(g, block_dir=sym, **kw)
     assert dict(labels_df(labels).collect()) == oracles.label_propagation([], vertices)[0]
+    g.unpersist()
+
+
+def test_dynamic_allocation_runs_packed_in_one_task(spark, tmp_path, monkeypatch):
+    """Without task slots (dynamic allocation refuses barrier stages)
+    ``auto`` keeps an at-scale graph off the packed path, and an explicit
+    ``packed`` runs all its buckets in one task."""
+    monkeypatch.setattr(packed, "task_slots", lambda spark: 0)
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (5, 6)]
+    g = Graph.from_edge_list(spark, edges, n=6, directed=True)
+    assert packed.resolve_strategy(g, "auto", 6, P, False, None, sym=False) == ("dataframe", P)
+    assert packed.resolve_strategy(g, "auto", 6, 1, False, None, sym=False) == ("packed", 1)
+    sc = spark.sparkContext
+    sc.setJobGroup("no-slots", "no-slots")
+    try:
+        res = pagerank(g, tol=1e-10, strategy="packed", num_partitions=P,
+                       block_dir=str(tmp_path / "blk"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert _superstep_tasks(sc, "no-slots") == {1}
+    want, _ = oracles.pagerank(edges, set(range(1, 7)), tol=1e-10)
+    got = {r["id"]: r["rank"] for r in ranks_df(res).collect()}
+    assert got.keys() == want.keys() and max(abs(got[v] - want[v]) for v in want) < 1e-9
     g.unpersist()

@@ -175,7 +175,7 @@ def test_blocks_sort_src_within_dst_segments(spark, tmp_path):
     """Layout v4: within every (dst_bucket, dst) segment of a built
     block, src — and therefore the derived gather positions — is
     ascending. Segment sums are permutation-invariant, but the monotone
-    order is the measured concurrency win (tools/kernel_lab.py), so pin
+    order is the measured concurrency win (BENCH/kernel_lab_r05.md), so pin
     it against regressions in either the Spark-side sortWithinPartitions
     or the _build_npy defensive re-sort."""
     import numpy as np

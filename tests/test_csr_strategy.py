@@ -29,15 +29,6 @@ def powerlaw_graph(spark):
     return Graph(spark.createDataFrame(pdf))
 
 
-@pytest.fixture
-def fused(monkeypatch):
-    """Run packed kernels on the fused loop, which a session takes only
-    when it has fewer task slots than buckets."""
-    from graftpark import packed
-
-    monkeypatch.setattr(packed, "task_slots", lambda spark: 0)
-
-
 def test_pagerank_packed_matches_dataframe_fixture(spark, tmp_path):
     n, directed, edges = G30_HUB
     g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
@@ -55,21 +46,6 @@ def test_pagerank_packed_matches_dataframe(spark, powerlaw_graph, tmp_path):
     assert set(a) == set(b)
     assert max(abs(a[k] - b[k]) for k in a) < 1e-9
     assert abs(sum(b.values()) - 1.0) < 1e-9
-
-
-def test_pagerank_packed_fused_steps_match(spark, powerlaw_graph, tmp_path, fused):
-    """``steps_per_job=4`` chains four supersteps into one query; the
-    finish derives the damping base from the broadcast dangling mass, so
-    the fused run equals one job per superstep."""
-    blk = str(tmp_path / "blk")
-    a = _ranks(pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                        block_dir=blk))
-    c = pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                 block_dir=blk, steps_per_job=4)
-    assert c.supersteps == 12 and [m["superstep"] for m in c.metrics] == list(range(1, 13))
-    c = _ranks(c)
-    assert set(a) == set(c)
-    assert max(abs(a[k] - c[k]) for k in a) < 1e-12
 
 
 def test_pagerank_packed_checkpoint_resume(spark, powerlaw_graph, tmp_path):
@@ -101,62 +77,6 @@ def test_pagerank_packed_checkpoint_resume_replays_metrics(spark, tmp_path):
     assert resumed.supersteps == 12
     a, b = _ranks(full), _ranks(resumed)
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12
-
-
-def test_pagerank_packed_resume_across_steps_per_job(spark, powerlaw_graph, tmp_path, fused):
-    """Checkpoint dirs and metrics records count supersteps, not fused
-    jobs, so a ``steps_per_job=4`` run stopped at superstep 8 resumes, with
-    either job width, to the ranks of an uninterrupted 12-superstep run."""
-    import json
-    import os
-    import shutil
-
-    blk = str(tmp_path / "blk")
-    full = _ranks(pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                           block_dir=blk, steps_per_job=4))
-    run_dir = tmp_path / "run"
-    pagerank(powerlaw_graph, strategy="packed", max_supersteps=8, tol=0.0, block_dir=blk,
-             steps_per_job=4, checkpoint_dir=str(run_dir), checkpoint_every=5)
-    dirs = sorted(p for p in os.listdir(run_dir) if p.startswith("superstep="))
-    assert dirs == ["superstep=00008"]
-    with open(run_dir / "metrics.jsonl") as f:
-        assert [json.loads(line)["superstep"] for line in f] == [4, 8]
-    for k in (4, 1):
-        resume_dir = str(tmp_path / f"resume-k{k}")
-        shutil.copytree(run_dir, resume_dir)
-        resumed = pagerank(powerlaw_graph, strategy="packed", max_supersteps=12, tol=0.0,
-                           block_dir=blk, steps_per_job=k, checkpoint_dir=resume_dir,
-                           checkpoint_every=5, resume=True)
-        assert resumed.supersteps == 12
-        assert [m["superstep"] for m in resumed.metrics] == list(range(1, 13))
-        assert _ranks(resumed) == full
-
-
-def test_packed_superstep_runs_one_python_stage(spark, tmp_path, monkeypatch, fused):
-    """Each bucket's finish emits its next gather in the same task, so
-    a fused-loop superstep's plan holds one grouped Arrow UDF and no
-    map-side one."""
-    import re
-
-    from graftpark import packed
-
-    plans = []
-    real_iterate = packed.iterate
-
-    def spy(state0, step_fn, *args, **kwargs):
-        def step(state, i):
-            new = step_fn(state, i)
-            plans.append(new._jdf.queryExecution().executedPlan().toString())
-            return new
-        return real_iterate(state0, step, *args, **kwargs)
-
-    monkeypatch.setattr(packed, "iterate", spy)
-    n, directed, edges = G30_HUB
-    g = Graph.from_edge_list(spark, edges, n=n, directed=directed)
-    pagerank(g, strategy="packed", max_supersteps=2, tol=0.0, block_dir=str(tmp_path / "blk"))
-    # superstep 2 starts from a local checkpoint, so the plan is the step alone
-    udfs = re.findall(r"\b(?:FlatMapGroupsInArrow|MapInArrow)\b", plans[-1])
-    assert udfs == ["FlatMapGroupsInArrow"]
 
 
 def test_pagerank_packed_float32_payloads(spark, powerlaw_graph, tmp_path):

@@ -62,10 +62,10 @@ spark.stop()
 def test_packed_kernels_under_local_cluster(spark, tmp_path):
     """Packed PageRank + CC under two real executor JVMs equal the
     single-JVM local results exactly (ranks to 1e-9, comps exact). The
-    8 buckets fill the cluster's 8 task slots, so its runs take the
-    interval loop, whose bucket tasks exchange messages through the block
-    dir across the two JVMs; the 4-slot local session takes the fused
-    loop."""
+    8 buckets fill the cluster's 8 task slots, one bucket a task, whose
+    tasks exchange messages through the block dir across the two JVMs;
+    the 4-slot local session runs the same loop in 4 tasks of two
+    buckets each."""
     from graftpark.fixtures import barabasi_albert
     from graftpark.graph import Graph
     from graftpark.kernels.components import connected_components

@@ -1,39 +1,22 @@
 """The superstep loop spine (graftpark/loop.py): superstep numbering and
 Spark job descriptions."""
 
-import json
-import os
-
+import pytest
 from pyspark.sql import functions as F
 
-from graftpark.loop import Checkpointer, iterate
+from graftpark.loop import iterate
 
 
 def _counter(spark):
     return spark.range(4).select(F.col("id").alias("x"))
 
 
-def test_iterate_counts_supersteps_not_calls(spark, tmp_path):
-    """With ``steps_per_call=4`` every call advances four supersteps:
-    ``i``, checkpoint dirs and metrics records name the last of them, and
-    a durable checkpoint follows each call that reaches a multiple of
-    ``every``."""
-    calls = []
-
-    def step(state, i):
-        calls.append(i)
-        return state.select((F.col("x") + 4).alias("x"))
-
-    ckpt = Checkpointer(str(tmp_path), every=5, id_col="x")
-    res = iterate(_counter(spark), step, lambda new, prev, i: {}, lambda rec: False,
-                  max_supersteps=10, checkpointer=ckpt, steps_per_call=4)
-    assert calls == [4, 8, 12]
-    assert res.supersteps == 12
-    assert sorted(r["x"] for r in res.state.collect()) == [12, 13, 14, 15]
-    assert sorted(p for p in os.listdir(tmp_path) if p.startswith("superstep=")) == [
-        "superstep=00008", "superstep=00012"]
-    with open(tmp_path / "metrics.jsonl") as f:
-        assert [json.loads(line)["superstep"] for line in f] == [4, 8, 12]
+def test_iterate_takes_one_superstep_or_one_interval_per_call(spark):
+    """A call advances one superstep or, with ``steps_per_call=None``, one
+    checkpoint interval; any other width is refused."""
+    with pytest.raises(ValueError, match="steps_per_call"):
+        iterate(_counter(spark), lambda state, i: state, lambda new, prev, i: {},
+                lambda rec: False, steps_per_call=4)
 
 
 def test_iterate_describes_superstep_jobs(spark):
