@@ -110,9 +110,9 @@ def main() -> None:
     # its full STW System.gc() landed mid-measurement; BENCH_r02's three
     # packed-path "regressions" were exactly this noise). The bench run
     # is ~3 min total and its shuffle volume is small (the packed loops
-    # shuffle ~P² rows, the dataframe loops <1M rows), so deferring
-    # shuffle-file retirement to 30 min is safe; tmpfs shuffle dirs are
-    # the single-box stand-in for per-executor NVMe.
+    # shuffle one row per vertex an interval, the dataframe loops <1M
+    # rows), so deferring shuffle-file retirement to 30 min is safe; tmpfs
+    # shuffle dirs are the single-box stand-in for per-executor NVMe.
     shm = "/dev/shm/gp-bench-shuffle"
     spark = get_spark(
         master=f"local[{cpus}]",

@@ -20,15 +20,16 @@ The Spark-native equivalent kept here:
    move **only vertex state and partial aggregates** — the edge table
    never travels again.
 
-3. **Static sidecars** (`vertex_sidecar_writer`, `_static_positions`,
+3. **Static sidecars** (`ensure_vertex_sidecar`, `_static_positions`,
    `_gather_offsets`, `_finish_layout`): per-bucket sorted vertex ids and
    out-degrees, per-edge gather positions, and per-dst-bucket
    gather/scatter offsets. They describe the block topology, not any
-   semiring, and are built once and mmap-shared.
+   semiring, and are built once and mmap-shared; meta.json records the
+   vertex set they were built for, and another vertex set rebuilds them.
 
 `segment_gather_reduce` is the chunked per-destination segment reduce
 every packed gather runs over a block. The superstep engine itself
-(Arrow gather/finish, semirings, driver) is graftpark/packed.py.
+(superstep loop, semirings, driver) is graftpark/packed.py.
 """
 
 from __future__ import annotations
@@ -150,19 +151,22 @@ def write_edge_blocks(edges: DataFrame, num_buckets: int, path: str, sym: bool =
         .agg(F.count("*").alias("n"), _fingerprint_agg().alias("fp"))
         .collect()[0]
     )
-    meta = {
+    _write_meta(path, {
         "num_buckets": int(num_buckets),
         "n_edges": int(row["n"]),
         "fingerprint": int(row["fp"]),
         "sym": bool(sym),
         "layout": _LAYOUT_VERSION,
         "token": uuid.uuid4().hex,
-    }
+    })
+    return path
+
+
+def _write_meta(path: str, meta: dict) -> None:
     tmp = os.path.join(path, "meta.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
     os.replace(tmp, os.path.join(path, "meta.json"))
-    return path
 
 
 def _fingerprint_agg() -> F.Column:
@@ -212,6 +216,41 @@ def ensure_edge_blocks(
     return write_edge_blocks(edges, num_buckets, path, sym=sym)
 
 
+def ensure_vertex_sidecar(vertices: DataFrame, num_buckets: int, path: str,
+                          stats: tuple[int, int]) -> None:
+    """Write the per-bucket vertex sidecar of ``vertices`` (``id``,
+    ``out_deg``) into the block dir ``path`` unless its meta.json records
+    the same vertex set.
+
+    ``stats`` = ``(n_vertices, fingerprint)`` (see ``Graph.vertex_stats``).
+    On any other record the files derived from the vertex set (the
+    sidecar, the per-edge gather positions and the scatter layouts) are
+    rebuilt under a new generation token, which invalidates the worker
+    caches. The record is dropped first, so a crash midway never leaves
+    it over a partial sidecar.
+    """
+    import glob
+    import shutil
+    import uuid
+
+    meta = _read_meta(path)
+    if meta.get("vertices") == list(stats):
+        return
+    meta = {**meta, "vertices": None, "token": uuid.uuid4().hex}
+    _write_meta(path, meta)
+    for derived in ("_vertices", "_finish"):
+        shutil.rmtree(os.path.join(path, derived), ignore_errors=True)
+    for positions in glob.glob(os.path.join(path, "_npy", "bucket=*", "positions.npy")):
+        os.remove(positions)
+    (
+        vertices.withColumn("bucket", bucket_col("id", num_buckets).cast("int"))
+        .groupBy("bucket")
+        .applyInArrow(vertex_sidecar_writer(path), schema="bucket int, n long")
+        .count()
+    )
+    _write_meta(path, {**meta, "vertices": list(stats)})
+
+
 def _murmur3_int32(x: int, seed: int = 42) -> int:
     """Spark's Murmur3Hash of one IntegerType value (hashInt, seed 42) —
     the hash HashPartitioning applies to a groupBy('bucket') shuffle."""
@@ -249,12 +288,11 @@ def partition_perfect_ids(num_buckets: int) -> np.ndarray:
     FOUR buckets that then run serially in one task. At 8 cores the 64
     buckets take many waves and the imbalance averages out; at 32 cores
     (2 nominal waves) the 4-deep partition IS the superstep makespan —
-    measured as the packed path's 8→32 scaling gap. These ids make the
-    bucket-keyed shuffle place bucket ``ids[j]`` exactly in partition j
-    (when spark.sql.shuffle.partitions == num_buckets, which
-    `_superstep_confs` pins inside kernel loops), so every gather/finish
-    stage is ``num_buckets`` equal tasks. Deterministic; int32; max id
-    ~B·ln(B) (coupon-collector search), e.g. 239 for B=64."""
+    measured as the packed path's 8→32 scaling gap. These ids make a
+    ``num_buckets``-wide hash partitioning on the bucket id place bucket
+    ``ids[j]`` exactly in partition j; the block build and the packed
+    loop's carry routing both shuffle at an explicit width. Deterministic;
+    int32; max id ~B·ln(B) (coupon-collector search), e.g. 239 for B=64."""
     ids = _PP_CACHE.get(num_buckets)
     if ids is None:
         out = np.full(num_buckets, -1, dtype=np.int32)

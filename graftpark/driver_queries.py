@@ -98,15 +98,6 @@ def sparse_nation_edges_from_testdata(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-def _released(g: Graph, out: DataFrame) -> DataFrame:
-    """``out`` after ``g.unpersist()``. A packed result reads the graph's
-    own block dirs lazily, so it is checkpointed before they are removed."""
-    if g._block_dirs:
-        out = out.localCheckpoint()
-    g.unpersist()
-    return out
-
-
 def q_edges_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edges_from_testdata(spark, sf_dir)
 
@@ -128,19 +119,21 @@ def q_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS)
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_pagerank_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same computation as pagerank_fixed through the PACKED strategy —
     the path strategy='auto' actually selects at scale (binary vector
-    messages, ~P² rows/superstep); this row puts the at-scale execution
+    messages between bucket tasks); this row puts the at-scale execution
     path in front of the external oracle, not just pytest
     strategy-equality tests."""
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed")
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_pagerank_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,7 +153,8 @@ def q_pagerank_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed",
                    checkpoint_dir=run_dir, checkpoint_every=half, resume=True)
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_cc_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,21 +163,24 @@ def q_cc_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = connected_components(g, strategy="packed")
     out = components_df(res)
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_cc_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = connected_components(g)
     out = components_df(res)
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_cc_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(edges_from_testdata(spark, sf_dir))
     res = connected_components(g)
     out = components_df(res)
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_cc_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,7 +217,8 @@ def q_label_prop_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = label_propagation(g, max_supersteps=LP_STEPS)
     out = labels_df(res)
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_label_prop_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,7 +227,8 @@ def q_label_prop_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = Graph(nation_edges_from_testdata(spark, sf_dir))
     res = label_propagation(g, max_supersteps=LP_STEPS, strategy="packed")
     out = labels_df(res)
-    return _released(g, out)
+    g.unpersist()
+    return out
 
 
 def q_mis_coloring_nation(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -123,6 +123,7 @@ class Graph:
         self._edges_sym: DataFrame | None = None
         self._degrees: DataFrame | None = None
         self._edge_stats: dict[bool, tuple[int, int]] = {}
+        self._vertex_stats: tuple[int, int] | None = None
         self._block_dirs: dict[tuple[bool, int], str] = {}
 
     # -- construction -------------------------------------------------
@@ -254,7 +255,18 @@ class Graph:
         return self._vertices
 
     def num_vertices(self) -> int:
-        return self.vertices().count()
+        return self.vertex_stats()[0]
+
+    def vertex_stats(self) -> tuple[int, int]:
+        """Cached ``(n_vertices, content_fingerprint)`` of the vertex set,
+        in one job: the fingerprint is the order-independent
+        ``bit_xor(xxhash64(id))``, which ``ensure_vertex_sidecar``
+        records to tell a block dir's vertex set from another."""
+        if self._vertex_stats is None:
+            fp = F.coalesce(F.bit_xor(F.xxhash64("id")), F.lit(0))
+            row = self.vertices().agg(F.count("*").alias("n"), fp.alias("fp")).collect()[0]
+            self._vertex_stats = (int(row["n"]), int(row["fp"]))
+        return self._vertex_stats
 
     def edges_sym(self) -> DataFrame:
         if self._edges_sym is None:
@@ -278,8 +290,8 @@ class Graph:
         symmetrized edges in ``n_part`` buckets: created on first use and
         reused by later packed calls (``ensure_edge_blocks`` revalidates
         it), removed by :meth:`unpersist` or at interpreter exit. Keyed by
-        bucket count too, so a call with another count never rebuilds the
-        blocks under an earlier result that still reads them."""
+        bucket count too, so calls that alternate counts each keep their
+        blocks instead of rebuilding them."""
         key = (sym, n_part)
         if key not in self._block_dirs:
             d = tempfile.mkdtemp(prefix="graftpark-blocks-sym-" if sym else "graftpark-blocks-")
@@ -355,8 +367,7 @@ class Graph:
 
     def unpersist(self) -> None:
         """Release the persisted tables and remove the engine-owned block
-        dirs. A packed kernel's result reads its block dir lazily, so
-        consume it (collect, write or checkpoint) before calling this."""
+        dirs."""
         for df in self._persisted:
             df.unpersist()
         self._persisted = []

@@ -141,7 +141,8 @@ def iterate(
     of it only by converging, and ``stats_fn`` returns one record per
     superstep it ran. The loop then advances by that many supersteps,
     records each with its share of the call's wall time, and takes a
-    durable checkpoint only when it stopped on a multiple.
+    durable checkpoint only when it stopped on a multiple; the next call
+    gets the step's own (locally checkpointed) state, not the re-read.
 
     With a ``label``, the Spark jobs of a call ending at superstep ``i``
     are described as ``{label}/superstep={i}``; the caller's description
@@ -188,9 +189,9 @@ def iterate(
             ran = stats if interval else [stats]
             i += len(ran)
             if interval and checkpointer is not None and i % every == 0:
-                new = checkpointer.save(new, i).persist(StorageLevel.MEMORY_AND_DISK)
-                _release(new_ckpt_rdd)
-                new_ckpt_rdd = None
+                # the durable resume point; the loop goes on from the local
+                # checkpoint, whose partitions keep the step's layout
+                checkpointer.save(new, i)
             wall = (time.monotonic() - t0) / len(ran)
             for j, s in enumerate(ran):
                 rec = {"superstep": i - len(ran) + 1 + j, "wall_s": wall, **s}

@@ -10,11 +10,12 @@ import json
 import math
 import os
 from collections import Counter
+from types import SimpleNamespace
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pytest
+from pyspark import TaskContext
 
 from conftest import spy_step_descriptions
 from graftpark import oracles, packed
@@ -159,7 +160,7 @@ def test_interval_runs_one_python_stage(spark, graph, tmp_path, monkeypatch):
         # the carry is cached: the plan above its scan is the step alone
         step = plan.split("InMemoryTableScan")[0]
         assert re.findall(r"\b(?:FlatMapGroupsInArrow|MapInArrow)\b", step) == ["MapInArrow"]
-        assert step.count("Exchange hashpartitioning(bucket") == 1
+        assert step.count("Exchange hashpartitioning(element_at(") == 1
 
 
 def test_empty_bucket_converges(spark, tmp_path):
@@ -223,45 +224,54 @@ def test_two_bucket_task_failure_replays_the_interval(spark, graph, tmp_path, mo
     _replays_failed_interval(graph, tmp_path, part=1)
 
 
-def test_combine_ignores_row_order(spark, graph, tmp_path):
-    """A bucket's combine applies its messages in ascending src bucket and
-    sums its broadcast scalars exactly, so a row-permuted carry gives the
-    same bytes. The scalars here sum to 2.0 in one order and 1.0 in the
-    other when added left to right."""
+def test_combine_ignores_row_order(spark, graph, tmp_path, monkeypatch):
+    """A task aligns its carried rows to its buckets' vertex sidecars,
+    applies each bucket's messages in ascending src bucket and sums the
+    broadcast scalars exactly, so a row-permuted per-vertex carry gives
+    the same bytes. The scalars here, one per bucket in bucket order, sum
+    to 2.0 exactly and to 1.0 left to right."""
     blk = str(tmp_path / "blk")
     n = graph.num_vertices()
     pagerank(graph, tol=0.0, max_supersteps=1, strategy="packed", num_partitions=P,
              block_dir=blk)
-    spec = _packed_spec(n, 0.85, TOL, "float64")
-    emit = packed._emitter(blk, P, spec.gather, spec.scalar)
-    ids = [int(b) for b in partition_perfect_ids(P)]
-    rng = np.random.default_rng(0)
-    tables = []
-    for b in ids:
-        vtx = load_vertices(blk, b)
-        state = rng.random(len(vtx["ids"])) / n
-        tables.append(emit(b, state, vtx, (math.inf, 0.0, len(state))))
-    carry = pa.concat_tables(tables)
-    c = ids[0]
-    mine = carry.filter(pc.equal(carry.column("bucket"), c))
-    scalar_rows = np.flatnonzero(mine.column("src_bucket").to_numpy() == -2)
-    assert len(scalar_rows) == P
-    payload = mine.column("payload").to_pylist()
-    for row, v in zip(scalar_rows, (1e16, 1.0, -1e16, 1.0)):
-        payload[row] = np.float64(v).tobytes()
-    mine = mine.set_column(2, "payload", pa.array(payload, pa.binary()))
-    assert math.fsum([1e16, 1.0, -1e16, 1.0]) != ((1e16 + 1.0) - 1e16) + 1.0
-    step = packed._combiner(blk, P, spec.combine)
-    vtx, dt = load_vertices(blk, c), np.dtype(spec.dtype)
+    scalars = (1e16, 1.0, -1e16, 1.0)
+    assert math.fsum(scalars) != ((1e16 + 1.0) - 1e16) + 1.0
+    vtx = [load_vertices(blk, int(b)) for b in sorted(partition_perfect_ids(P))]
+    by_first_id = {int(v["ids"][0]): s for v, s in zip(vtx, scalars)}
+    real = _packed_spec(n, 0.85, TOL, "float64")
+    seen = []
 
-    def superstep(table):
-        new, *aggs = step(c, vtx, *packed._carry_inputs(table.to_batches(), dt)[c])
-        return emit(c, new, vtx, aggs)
+    def combine(prev, msgs, scalar, vtx):
+        seen.append(scalar)
+        return real.combine(prev, msgs, scalar, vtx)
 
-    a = superstep(mine)
+    spec = dataclasses.replace(real, combine=combine,
+                               scalar=lambda state, vtx: by_first_id[int(vtx["ids"][0])])
+    # one task owns every bucket: it runs in this process and exchanges nothing
+    monkeypatch.setattr(TaskContext, "get", lambda: SimpleNamespace(partitionId=lambda: 0))
+    fn = packed._interval_fn(blk, P, 1, spec, str(tmp_path / "bsp"), 1, 3, lambda *total: False)
+    ids = np.concatenate([v["ids"] for v in vtx])
+    carry = pa.table({"id": ids, "rank": np.random.default_rng(0).random(len(ids)) / n})
+
+    def interval(table):
+        return pa.Table.from_batches(list(fn(table.to_batches(max_chunksize=1000))))
+
+    a = interval(carry)
+    assert seen == [2.0] * (3 * P)
+    assert a.column("id").to_numpy().tolist() == ids.tolist()
     for seed in range(3):
-        perm = np.random.default_rng(seed).permutation(mine.num_rows)
-        assert superstep(mine.take(perm)).equals(a)
+        perm = np.random.default_rng(seed).permutation(carry.num_rows)
+        assert interval(carry.take(perm)).equals(a)
+
+
+@pytest.mark.parametrize("buckets", [1, P])
+def test_result_outlives_the_graph(spark, buckets):
+    """A packed result is materialized, not read from the graph's own
+    block dir: it keeps its rows after ``graph.unpersist()``."""
+    g = Graph.from_edge_list(spark, [(1, 2), (2, 3), (3, 1), (3, 4)], n=4, directed=True)
+    res = pagerank(g, tol=1e-10, strategy="packed", num_partitions=buckets)
+    g.unpersist()
+    assert ranks_df(res).count() == 4
 
 
 @pytest.mark.parametrize("buckets", [1, P])

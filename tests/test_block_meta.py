@@ -147,7 +147,6 @@ def test_bucket_col_emits_partition_perfect_ids(spark):
     seen = {r["bucket"] for r in df.distinct().collect()}
     assert seen <= ids and len(seen) == b
     # the guarantee holds at shuffle width == bucket count with AQE off
-    # (exactly the confs _superstep_confs pins inside kernel loops)
     saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -232,3 +231,30 @@ def test_auto_block_dir_reused_then_removed_by_unpersist(spark):
     g.unpersist()
     assert not os.path.exists(d) and g._block_dirs == {}
     assert set(glob.glob(pattern)) == before
+
+
+def test_vertex_set_change_rebuilds_the_sidecar(spark, tmp_path):
+    """meta.json records the vertex set the sidecar was built for: graphs
+    with the same edges but other vertex sets, run one after another on
+    one block dir, each get their own vertices back (a stale sidecar
+    once returned a vertex the graph does not have, or crashed)."""
+    from graftpark import oracles
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 2)]
+    d = str(tmp_path / "blk")
+    tokens = []
+    for vertices in ({1, 2, 3, 4}, {1, 2, 3, 5}, {1, 2, 3}, {1, 2, 3, 4, 5}):
+        g = Graph(spark.createDataFrame(edges, "src long, dst long"),
+                  vertices=spark.createDataFrame([(v,) for v in sorted(vertices)], "id long"))
+        kw = dict(strategy="packed", num_partitions=1)
+        res = pagerank(g, tol=1e-10, block_dir=d, **kw)
+        want, _ = oracles.pagerank(edges, vertices, tol=1e-10)
+        got = {r["id"]: r["rank"] for r in res.state.collect()}
+        assert got.keys() == want.keys() and max(abs(got[v] - want[v]) for v in want) < 1e-9
+        comps = connected_components(g, block_dir=d + "-sym", **kw)
+        assert dict(comps.state.collect()) == oracles.connected_components(edges, vertices)
+        tokens.append(_token(d))
+    assert len(set(tokens)) == 4
+    # the same vertex set again: the sidecar is reused
+    pagerank(g, tol=1e-10, block_dir=d, **kw)
+    assert _token(d) == tokens[-1]
