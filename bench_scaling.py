@@ -21,7 +21,7 @@ Methodology (each level = one fresh JVM, honest resource accounting):
   CSR blocks, primes JIT/codegen and the worker pool; excluded from
   measurement. Per-superstep walls come from the kernel's own metrics.
 
-Writes BENCH/BASELINE.md and prints one JSON line.
+Appends the run to BENCH/scaling_pairs.json and prints one JSON line.
 """
 
 from __future__ import annotations
@@ -235,7 +235,6 @@ def main() -> None:
         "wall_s": round(time.monotonic() - t0, 1),
     }
     record_pair(n_low, n_high, result)
-    write_baseline_md(n_vertices, buckets)
     print(json.dumps(result))
 
 
@@ -243,15 +242,12 @@ PAIRS_PATH = "BENCH/scaling_pairs.json"
 
 
 def record_pair(n_low: int, n_high: int, result: dict) -> None:
-    """Append this run to the pair's history in the persistent store.
-    BASELINE.md is regenerated from ALL recorded runs of ALL pairs, so a
-    re-run at one pair (e.g. the driver's default 8->32) can never erase
-    ANY prior evidence from the artifact. The per-pair headline is the
-    best run — the BenchmarkTools minimum-over-samples methodology one
-    level up: this shared VM has documented 35-60% day-to-day swings and
-    ~10-minute hypervisor slow phases, so the fastest run is the closest
-    estimate of the code's machine-limited floor; every run stays listed
-    underneath, timestamped, so the spread itself is visible."""
+    """Append this run, timestamped, to the pair's history in the
+    persistent store: a re-run at one pair never erases a prior run, so
+    the spread between runs stays visible. Runs at another input size or
+    process topology key a history of their own, so the best run of a
+    pair (the minimum-over-samples methodology one level up) compares
+    like with like."""
     from graftpark.blocks import _LAYOUT_VERSION
 
     pairs: dict = {}
@@ -279,251 +275,6 @@ def record_pair(n_low: int, n_high: int, result: dict) -> None:
     os.makedirs("BENCH", exist_ok=True)
     with open(PAIRS_PATH, "w") as f:
         json.dump(pairs, f, indent=1)
-
-
-def write_baseline_md(n_vertices: int, buckets: int) -> None:
-    """Self-contained scaling artifact: every measured pair + the
-    single-box DRAM-floor evidence and the shared-VM caveat. Whoever
-    reads this file last sees the full picture, not one bare number."""
-    with open(PAIRS_PATH) as f:
-        pairs = json.load(f)
-
-    def _key(k: str) -> int:
-        return int(k.split("->")[0])
-
-    rows, summaries, met_pairs = [], [], []
-    edges = None
-    for k in sorted(pairs, key=_key):
-        entry = pairs[k]
-        runs = entry["runs"] if "runs" in entry else [entry]
-        best = max(runs, key=lambda r: r["value"])
-        lo, hi = best["low"], best["high"]
-        edges = edges or lo["edges"]
-        edge_tag = "" if lo["edges"] == edges else f", {lo['edges']:,} edges"
-        lc = "local-cluster" in k
-        n_lo, n_hi = _key(k), int(k.split("->")[1].split()[0])
-        label = (
-            (lambda n: f"local-cluster[{max(1, n // 4)}x4] (pinned {n} cores)")
-            if lc
-            else (lambda n: f"local[{n}] (pinned {n} cores)")
-        )
-        rows.append(
-            f"| {label(n_lo)}{edge_tag} | {lo['supersteps']} | "
-            f"{lo['mean_superstep_s']} | {lo['edges_per_sec_per_superstep']:,} |"
-        )
-        rows.append(
-            f"| {label(n_hi)}{edge_tag} | {hi['supersteps']} | "
-            f"{hi['mean_superstep_s']} | {hi['edges_per_sec_per_superstep']:,} |"
-        )
-        met = "MET" if best["value"] >= 0.8 else "NOT met"
-        if best["value"] >= 0.8:
-            met_pairs.append(
-                f"{n_lo}->{n_hi}{edge_tag} (eff {best['value']:.3f}, "
-                f"layout v{best.get('block_layout', '?')}, "
-                f"{best.get('measured_at', '?')})"
-            )
-        kind = " (executor-count, separate JVMs)" if lc else ""
-        summaries.append(
-            f"- **{n_lo} -> {n_hi} cores{kind}{edge_tag}: efficiency {best['value']:.3f}** "
-            f"({met}; best of {len(runs)} run(s), {n_lo}-core best "
-            f"{lo['edges_per_sec_per_superstep']:,} e/s vs {n_hi}-core best "
-            f"{hi['edges_per_sec_per_superstep']:,} e/s)"
-        )
-        for r in runs:
-            tag = " <- headline" if r is best else ""
-            summaries.append(
-                f"  - {r.get('measured_at', '?')} (block layout "
-                f"v{r.get('block_layout', '?')}, best of "
-                f"{len(r['low'].get('samples_mean_superstep_s', [1]))} samples/level): "
-                f"eff {r['value']:.3f}, "
-                f"{r['low']['edges_per_sec_per_superstep']:,} -> "
-                f"{r['high']['edges_per_sec_per_superstep']:,} e/s{tag}"
-            )
-    status = (
-        "MET at " + "; ".join(met_pairs)
-        if met_pairs
-        else "not yet met at any pair"
-    )
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-            f"""# BENCH/BASELINE.md — measured throughput & scaling
-
-Job: PageRank power iteration (damping 0.85, tol 1e-6) to convergence
-on the seeded power-law edge table ({edges:,} directed edges,
-out/in-degree exponents 0.7/0.5, mean out-degree 16; pairs measured
-at a different input size are tagged inline with their edge count),
-identical input at two parallelism levels, fresh JVM each, warm-up run
-excluded. Each level's ENTIRE process tree (JVM + Arrow UDF workers)
-is pinned to exactly N cores with `taskset -c 0..N-1`, so the ratio is
-a true N-core vs 4N-core comparison. Both levels run identical work:
-same input parquet, same {buckets} CSR src-buckets, same shuffle
-partitioning (only the core budget differs — the sandbox stand-in for
-N vs 4N executors).
-
-**Criterion status: {status}** — the north rule asks for >=0.8
-throughput scaling efficiency between N and 4N parallelism; every
-measured pair's full run history is below.
-
-Kernel plan (north_star strategy): per-bucket CSR adjacency blocks
-built once as mmap-shared .npy (int32 CSR indices, layout v4:
-dst-bucket-contiguous partials — packed messages are direct slices,
-no rearrangement pass — and src ascending within each dst segment, so
-gather positions are monotone per reduceat segment: measured ~26%
-faster per-bucket gather at 32-way on the bandwidth-saturated host,
-BENCH/kernel_lab_r05.md), gather-scatter inside Arrow UDFs
-(cache-resident chunked np.add.reduceat), one packed keyed shuffle of
-~P^2 binary rows per superstep, vectorized reduce, convergence via
-DataFrame.observe. Payload dtype:
-{os.environ.get('GRAFTPARK_SCALING_DTYPE', 'float32')} (float32 halves
-per-superstep DRAM traffic; convergence delta is accumulated float64,
-tol semantics unchanged — pytest asserts float32 ranks match the
-float64 dataframe path to <5e-7).
-
-## Measured pairs (best run per pair; every run listed below; raw JSONs in BENCH/)
-
-| parallelism | supersteps | mean superstep (s) | edges/sec/superstep |
-|---|---|---|---|
-{chr(10).join(rows)}
-
-{chr(10).join(summaries)}
-
-Criterion: >=0.8 between N and 4N parallelism (BASELINE.json
-north_rule; sandbox evidence per the driver instruction = the same job
-at two pinned parallelism levels).
-
-## Why the high-core pair plateaus on THIS box (DRAM floor, measured)
-
-The 8->32 pair on this single shared VM is bounded by the one memory
-subsystem, not by the engine's dataflow — quantified in round 3:
-
-- Stage profiling shows ~0.91 parallel-task occupancy at 32 cores with
-  executor run time >> JVM CPU time: the wall time sits inside the
-  numpy gather (off-JVM, memory-bound), not in scheduling or shuffle.
-- A Spark-free pure-numpy replay of the identical per-bucket gather
-  (same mmap'd .npy blocks) measures ~0.07 s per
-  bucket solo -> ~1.19 s at 32-way concurrency on this VM: ~17x
-  inflation from memory contention alone, with 32-way wall-clock
-  SLOWER than 8-way. The Spark superstep sits AT that raw floor.
-- A uniform-config sweep (task slots 24/32 and 16/32 to trim JVM+Arrow
-  oversubscription; 8-superstep job fusion; shuffle-compression off)
-  moved nothing outside noise; per-bucket edge-byte skew across the
-  {buckets} buckets is max/mean = 1.38, so the makespan is not bucket
-  imbalance.
-- Round 5 measured the EXECUTOR-COUNT analogue directly: the same job
-  under `local-cluster[2,4,*]` vs `local-cluster[8,4,*]` — separate
-  executor JVMs, own BlockManagers and Python worker pools, real RPC
-  shuffle between processes, same pinned 8/32-core budgets. The
-  2-executor level is the FASTEST 8-core reading ever recorded here
-  (45.6M e/s, beating every single-JVM local[8] run), i.e. the
-  engine's multi-process path adds no overhead at the low level, while
-  the 8-executor level lands at 92.1M e/s — inside the same
-  ~90-115M e/s 32-core ceiling as every thread-count run. Per-core
-  throughput falls 5.7M -> 2.9M e/s/core from 8 to 32 busy cores
-  REGARDLESS of process topology: the ceiling is the box's one memory
-  subsystem, not JVM count, scheduling, or the shuffle layer.
-
-- The 2026-08-19 runs (eff 0.203 / 0.293) are the sharpest demonstration
-  of the shared-host ceiling yet: in the SAME runs, the pinned 8-core
-  level set back-to-back all-time bests (44.2M then 46.2M e/s — the
-  Arrow-native packed path, faster than every earlier 8-core reading)
-  while the pinned 32-core level managed 36-54M e/s against its own
-  114.5M historical best, with warm supersteps of 4.7-6.8 s vs the
-  06:22 run's 2.2 s. An interleaved arrow/pandas/arrow A/B on the same
-  blocks (BENCH/ab_arrow_r05.md) shows both serialization paths slow
-  down identically, so the phase is host-side bandwidth theft, visible
-  ONLY at high concurrency — exactly the signature of a co-tenant
-  saturating the shared memory subsystem. Low-core levels keep their
-  per-core headroom and are immune.
-
-- The 2026-08-19 **2->8 re-run at HEAD** (eff 0.749 vs the round-3
-  0.875 headline) shows the same mechanism from the other side. The
-  Arrow-native packed path lifted the 2-core level from 4.4M to 7.3M
-  e/s per core (8.9M -> 14.6M e/s, the fastest 2-core reading ever
-  recorded here) and the 8-core level to 43.9M e/s — BOTH absolute
-  levels improved over the 0.875 run — yet the measured ratio fell,
-  because on a fixed-bandwidth box a faster per-core kernel moves
-  every level closer to the same DRAM ceiling: the efficiency metric
-  penalizes absolute speedups. On a real cluster aggregate bandwidth
-  grows with executor count and this artifact disappears; the 0.875
-  headline (layout v2, slower per-core, farther from the ceiling) and
-  the 0.749 HEAD run are both kept, unredacted, as the bracketing
-  evidence.
-
-- Round-5 measurement protocol: because the ceiling's height swings
-  with co-tenant load (identical code measured 0.20-0.67 at 8->32
-  across host phases), high-concurrency pairs are now PHASE-GATED:
-  `tools/phase_watch.py` polls a 20-second Spark-free probe (the real
-  per-bucket gather over the real mmap'd CSR blocks, 8-way vs 32-way
-  wall ratio — perfect 4x scaling = 0.25, efficiency 0.8 ~ 0.31) and
-  launches the full pinned pair only when the probe projects a clean
-  window. Every probe is appended to BENCH/phase_watch_r05.log, so
-  the phase history is itself part of the evidence: when the log
-  shows ratio > 1 (32-way slower than 8-way on a pure-numpy gather,
-  no Spark involved), no engine could scale on this box in that
-  window.
-
-- The criterion's arithmetic ceiling on this box, quantified: with the
-  8-core level at its measured optimum (42-46M e/s across the five
-  most recent runs), efficiency 0.8 requires the 32-core level to
-  sustain 137-148M e/s. The Spark-free pure-numpy gather over the same
-  256M-edge layout-v4 CSR blocks peaks at ~141M e/s aggregate at
-  32-way on this host's quietest measured phase
-  (BENCH/kernel_lab_r05.md, best of 6 samples) —
-  the bar sits AT or ABOVE the hardware's own zero-overhead ceiling
-  for this memory-bound kernel. Meeting 0.8 at 8->32 here would
-  require the full distributed superstep (gather + Arrow
-  serialization + shuffle + keyed reduce + convergence probe) to run
-  with <=3% total overhead versus a bare in-process numpy loop, on a
-  co-tenanted VM. The engine's best end-to-end 32-core reading
-  (114.5M e/s) is within 19% of that bare-metal ceiling — the
-  remaining gap IS the entire distributed-systems cost of the
-  superstep. Where per-core bandwidth headroom exists the criterion is
-  met (2->8 = 0.875). On a real 4N-executor cluster the 137-148M e/s
-  requirement is spread across four machines' independent memory
-  subsystems (~35-37M e/s per machine — comfortably under each one's
-  measured 8-core throughput), which is precisely the resource a
-  bigger cluster multiplies and this one box cannot.
-
-On a real N vs 4N EXECUTOR cluster each executor brings its own memory
-bandwidth and NVMe, which is exactly the resource that saturates here;
-the 2->8 pair (where this box still has bandwidth headroom per core)
-is therefore the truer analogue of executor scaling, and the 8->32
-pair is reported alongside it, unredacted, as the single-box ceiling.
-The 1->4 pair bounds the question from below: at 4 busy cores the box
-normally has per-core bandwidth headroom, so that pair measures the
-ENGINE's scaling (scheduling, shuffle, Arrow serialization overheads)
-with the DRAM ceiling mostly out of frame. The one recorded 1->4 run
-(eff 0.637) was measured in a documented CONTENDED window: Spark-free
-probe replicates taken minutes after it (BENCH/phase_watch_r05.log,
-09:56) show the raw numpy gather itself scaling only ~2.1x from 1->4
-cores (eff ~0.53) with non-monotone walls (P=2 slower than P=1 in one
-replicate) — i.e. the Spark engine at 0.637 BEAT the simultaneous
-raw-gather scaling floor of its window. Kept unredacted; a
-clean-window re-run would read higher. (Second caveat, stated rather
-than hidden: the pinned 1-core level carries the whole process tree —
-JVM task thread + Arrow worker on ONE core — so it pays an
-oversubscription penalty the 4-core level does not, which DEFLATES
-the 1-core baseline and flatters the ratio; the 2->8 pair, whose low
-level does not share a core, is the stricter low-range reading. Both
-are reported.)
-
-## Shared-VM measurement caveat
-
-This VM's throughput swings 35-60% between days (identical code,
-pinned cores, re-measured) and has ~10-minute hypervisor slow phases
-that defeat best-of-2 within a run. Ratios WITHIN one harness
-invocation (levels measured back-to-back) are meaningful; absolute
-numbers across days are not. All per-sample means are recorded in the
-raw `BENCH/scaling_n*_r*.json` files and `BENCH/scaling_pairs.json`.
-
-Regenerated {time.strftime('%Y-%m-%d %H:%M:%S')} by bench_scaling.py
-(pair store: BENCH/scaling_pairs.json — re-runs APPEND to one pair's
-run history and re-render ALL pairs' full histories; no run is ever
-erased); see bench.py for the full headline-query suite
-(recorded per-round as BENCH_r{{N}}.json).
-"""
-        )
 
 
 if __name__ == "__main__":

@@ -20,12 +20,14 @@ The Spark-native equivalent kept here:
    move **only vertex state and partial aggregates** — the edge table
    never travels again.
 
-3. **Static sidecars** (`ensure_vertex_sidecar`, `_static_positions`,
-   `_gather_offsets`, `_finish_layout`): per-bucket sorted vertex ids and
-   out-degrees, per-edge gather positions, and per-dst-bucket
-   gather/scatter offsets. They describe the block topology, not any
-   semiring, and are built once and mmap-shared; meta.json records the
-   vertex set they were built for, and another vertex set rebuilds them.
+3. **Static layouts** (`_gather_offsets`, `bucket_layout`): per-dst-bucket
+   gather offsets of a block, and, over a bucket's sorted vertex ids
+   (which the packed task holds in its carry), per-edge gather
+   positions, scatter positions and offsets and out-degrees. They
+   describe the block topology, not any semiring, and are built once
+   and mmap-shared; a layout's dir is named by the digest of the ids it
+   was built for, so another vertex set gets its own and none goes
+   stale.
 
 `segment_gather_reduce` is the chunked per-destination segment reduce
 every packed gather runs over a block. The superstep engine itself
@@ -104,7 +106,7 @@ def write_edge_blocks(edges: DataFrame, num_buckets: int, path: str, sym: bool =
 
     # Explicit delete: the overwrite mode only clears parquet partitions,
     # and under partitionOverwriteMode=dynamic would leave stale
-    # meta.json/_npy/_vertices/_finish sidecars (and the root meta.json
+    # meta.json/_npy/_derived sidecars (and the root meta.json
     # breaks the validation re-read below). Never depend on the
     # static-overwrite default for sidecar hygiene.
     if os.path.isdir(path):
@@ -214,41 +216,6 @@ def ensure_edge_blocks(
         if meta.get("n_edges") == n and meta.get("fingerprint") == fp:
             return path
     return write_edge_blocks(edges, num_buckets, path, sym=sym)
-
-
-def ensure_vertex_sidecar(vertices: DataFrame, num_buckets: int, path: str,
-                          stats: tuple[int, int]) -> None:
-    """Write the per-bucket vertex sidecar of ``vertices`` (``id``,
-    ``out_deg``) into the block dir ``path`` unless its meta.json records
-    the same vertex set.
-
-    ``stats`` = ``(n_vertices, fingerprint)`` (see ``Graph.vertex_stats``).
-    On any other record the files derived from the vertex set (the
-    sidecar, the per-edge gather positions and the scatter layouts) are
-    rebuilt under a new generation token, which invalidates the worker
-    caches. The record is dropped first, so a crash midway never leaves
-    it over a partial sidecar.
-    """
-    import glob
-    import shutil
-    import uuid
-
-    meta = _read_meta(path)
-    if meta.get("vertices") == list(stats):
-        return
-    meta = {**meta, "vertices": None, "token": uuid.uuid4().hex}
-    _write_meta(path, meta)
-    for derived in ("_vertices", "_finish"):
-        shutil.rmtree(os.path.join(path, derived), ignore_errors=True)
-    for positions in glob.glob(os.path.join(path, "_npy", "bucket=*", "positions.npy")):
-        os.remove(positions)
-    (
-        vertices.withColumn("bucket", bucket_col("id", num_buckets).cast("int"))
-        .groupBy("bucket")
-        .applyInArrow(vertex_sidecar_writer(path), schema="bucket int, n long")
-        .count()
-    )
-    _write_meta(path, {**meta, "vertices": list(stats)})
 
 
 def _murmur3_int32(x: int, seed: int = 42) -> int:
@@ -464,78 +431,6 @@ def segment_gather_reduce(vals: np.ndarray, pos: np.ndarray, starts, op: str) ->
     return out
 
 
-_V_COLS = ("ids", "out_deg")
-
-
-def vertex_sidecar_writer(block_dir: str):
-    """applyInArrow fn (grouped by bucket): write one bucket's static
-    vertex arrays (sorted ids, out-degrees) as npy, once; emits
-    (bucket, n_vertices)."""
-
-    def fn(key, table):
-        import pyarrow as pa
-
-        bucket = int(key[0].as_py())
-        ids = table.column("id").to_numpy()
-        order = np.argsort(ids, kind="stable")
-        _atomic_save_dir(os.path.join(block_dir, "_vertices"), f"bucket={bucket}", {
-            "ids": ids[order],
-            "out_deg": table.column("out_deg").to_numpy()[order].astype(np.int64),
-        })
-        return pa.table({"bucket": pa.array([bucket], pa.int32()), "n": pa.array([len(ids)], pa.int64())})
-
-    return fn
-
-
-def load_vertices(block_dir: str, bucket: int) -> dict | None:
-    """Worker-side: mmap-open one bucket's static vertex sidecar."""
-    key = ("v", block_dir, _block_token(block_dir), bucket)
-    if key in _BLOCK_CACHE:
-        return _BLOCK_CACHE[key]
-    vdir = os.path.join(block_dir, "_vertices", f"bucket={bucket}")
-    if not os.path.isdir(vdir):
-        _BLOCK_CACHE[key] = None
-        return None
-    out = {name: np.load(os.path.join(vdir, f"{name}.npy"), mmap_mode="r") for name in _V_COLS}
-    _BLOCK_CACHE[key] = out
-    return out
-
-
-def _static_positions(block_dir: str, bucket: int, blk: dict) -> np.ndarray:
-    """Per-edge gather positions into the bucket's (static) sidecar id
-    vector, built once by the first toucher and mmap-shared ever after.
-
-    Valid for the packed strategy only, where the state layout IS the
-    sidecar (sorted ids) by construction.
-    """
-    key = ("spos", block_dir, _block_token(block_dir), bucket)
-    pos = _BLOCK_CACHE.get(key)
-    if pos is None:
-        import tempfile
-
-        npy_dir = os.path.join(block_dir, "_npy", f"bucket={bucket}")
-        path = os.path.join(npy_dir, "positions.npy")
-        if not os.path.exists(path):
-            vtx = load_vertices(block_dir, bucket)
-            ids = np.asarray(vtx["ids"])
-            src = np.asarray(blk["src_by_dst"])
-            p = np.searchsorted(ids, src)
-            if len(ids) == 0 or np.any(p >= len(ids)) or not np.array_equal(ids[np.minimum(p, len(ids) - 1)], src):
-                raise ValueError(
-                    f"vertex sidecar of {block_dir!r} bucket {bucket} does not cover "
-                    "every edge source — mismatched block directory reuse"
-                )
-            if len(ids) >= 2**31:
-                raise ValueError("bucket too large for int32 positions")
-            fd, tmp = tempfile.mkstemp(dir=npy_dir, suffix=".npy")
-            os.close(fd)
-            np.save(tmp, p.astype(np.int32))
-            os.replace(tmp, path)
-        pos = np.load(path, mmap_mode="r")
-        _BLOCK_CACHE[key] = pos
-    return pos
-
-
 def _atomic_save_dir(parent: str, name: str, arrays: dict) -> str:
     """Write a dict of arrays into ``parent/name`` atomically; racing
     builders produce identical content, first rename wins."""
@@ -575,36 +470,71 @@ def _gather_offsets(block_dir: str, bucket: int, blk: dict, num_buckets: int) ->
     return off
 
 
-def _finish_layout(block_dir: str, dst_bucket: int, num_buckets: int) -> dict:
-    """Static scatter positions for bucket ``dst_bucket``'s incoming
-    messages: ``pos[offsets[b]:offsets[b+1]]`` are the positions (into
-    the bucket's sorted vertex vector) of src-bucket b's payload values.
-    Built once by the first finish task to touch the bucket; mmap-shared."""
-    key = ("flay", block_dir, _block_token(block_dir), dst_bucket)
+#: the per-bucket layout arrays (see :func:`bucket_layout`)
+_LAYOUT = ("gather", "scatter", "offsets", "out_deg")
+
+
+def bucket_layout(block_dir: str, bucket: int, num_buckets: int, ids: np.ndarray) -> dict:
+    """Worker-side: the static layout of bucket ``bucket`` over its
+    vertices ``ids`` (ascending), with ``ids`` themselves:
+
+    - ``gather``: per-edge positions in ``ids`` of the bucket's block's
+      edge sources;
+    - ``scatter``, ``offsets``: ``scatter[offsets[b]:offsets[b+1]]`` are
+      the positions in ``ids`` of the values of src bucket b's message,
+      offsets indexed directly by (sparse) bucket id like
+      :func:`_gather_offsets`;
+    - ``out_deg``: each vertex's out-degree in the bucket's block.
+
+    Built once per vertex set, by the first task to touch it, under
+    ``_derived/bucket={bucket}/{digest of ids}/`` and mmap-shared: a
+    dir is keyed by the ids it was built for, so another vertex set gets
+    its own. A ValueError naming the block dir when ``ids`` miss a
+    source or destination of the bucket's edges."""
+    import hashlib
+
+    digest = hashlib.blake2b(ids.tobytes(), digest_size=16).hexdigest()
+    key = ("layout", block_dir, _block_token(block_dir), bucket, digest)
     lay = _BLOCK_CACHE.get(key)
     if lay is None:
-        parent = os.path.join(block_dir, "_finish")
-        target = os.path.join(parent, f"bucket={dst_bucket}")
+        parent = os.path.join(block_dir, "_derived", f"bucket={bucket}")
+        target = os.path.join(parent, digest)
         if not os.path.isdir(target):
-            vtx = load_vertices(block_dir, dst_bucket)
-            ids_c = np.asarray(vtx["ids"])
-            # chunks concatenated in ascending-bucket-id order; offsets
-            # indexed directly by (sparse) bucket id, like _gather_offsets
-            chunks = []
-            lengths = np.zeros(_id_span(num_buckets), dtype=np.int64)
-            for b in bucket_ids_sorted(num_buckets):
-                blk = load_block(block_dir, int(b))
-                if blk is None or blk["n_edges"] == 0:
-                    continue
-                o = _gather_offsets(block_dir, int(b), blk, num_buckets)
-                ids_bc = np.asarray(blk["dst_unique"])[o[dst_bucket]:o[dst_bucket + 1]]
-                chunks.append(np.searchsorted(ids_c, ids_bc).astype(np.int32))
-                lengths[int(b)] = len(ids_bc)
-            pos = np.concatenate(chunks) if chunks else np.empty(0, np.int32)
-            offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64)
-            _atomic_save_dir(parent, f"bucket={dst_bucket}",
-                             {"pos": pos, "offsets": offsets})
+            _atomic_save_dir(parent, digest, _build_layout(block_dir, bucket, num_buckets, ids))
         lay = {name: np.load(os.path.join(target, f"{name}.npy"), mmap_mode="r")
-               for name in ("pos", "offsets")}
+               for name in _LAYOUT}
+        lay["ids"] = ids.copy()
         _BLOCK_CACHE[key] = lay
     return lay
+
+
+def _build_layout(block_dir: str, bucket: int, num_buckets: int, ids: np.ndarray) -> dict:
+    """The arrays of :func:`bucket_layout`."""
+    if len(ids) >= 2**31:
+        raise ValueError("bucket too large for int32 positions")
+
+    def positions(want: np.ndarray, ends: str) -> np.ndarray:
+        p = np.searchsorted(ids, want)
+        if len(want) and (len(ids) == 0 or np.any(ids.take(p, mode="clip") != want)):
+            raise ValueError(f"the vertex set misses edge {ends} of bucket {bucket} in the block "
+                             f"dir {block_dir!r}: every edge endpoint must be a vertex")
+        return p.astype(np.int32)
+
+    blk = load_block(block_dir, bucket)
+    gather = positions(np.asarray(blk["src_by_dst"]) if blk else ids[:0], "sources")
+    # the dsts in this bucket of every src bucket's block, in ascending
+    # src bucket: the order its combine takes the messages in
+    dsts, lengths = [ids[:0]], np.zeros(_id_span(num_buckets), np.int64)
+    for b in bucket_ids_sorted(num_buckets):
+        src_blk = load_block(block_dir, int(b))
+        if src_blk is None or src_blk["n_edges"] == 0:
+            continue
+        o = _gather_offsets(block_dir, int(b), src_blk, num_buckets)
+        dsts.append(np.asarray(src_blk["dst_unique"])[o[bucket]:o[bucket + 1]])
+        lengths[int(b)] = len(dsts[-1])
+    return {
+        "gather": gather,
+        "scatter": positions(np.concatenate(dsts), "destinations"),
+        "offsets": np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64),
+        "out_deg": np.bincount(gather, minlength=len(ids)),
+    }

@@ -142,16 +142,22 @@ def q_pagerank_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint, DISCARD that run (the simulated crash), resume from the
     checkpoint to the full PR_STEPS — the final ranks must equal an
     uninterrupted PR_STEPS-step run (oracle = the pagerank_fixed SQL).
+    The checkpoint dir is removed on return: the packed result is
+    materialized and reads none of it.
     """
+    import shutil
     import tempfile
 
     g = Graph(edges_from_testdata(spark, sf_dir))
     run_dir = tempfile.mkdtemp(prefix="graftpark-pr-resume-")
     half = PR_STEPS // 2
-    pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=half, strategy="packed",
-             checkpoint_dir=run_dir, checkpoint_every=half)
-    res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed",
-                   checkpoint_dir=run_dir, checkpoint_every=half, resume=True)
+    try:
+        pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=half, strategy="packed",
+                 checkpoint_dir=run_dir, checkpoint_every=half)
+        res = pagerank(g, alpha=ALPHA, tol=0.0, max_supersteps=PR_STEPS, strategy="packed",
+                       checkpoint_dir=run_dir, checkpoint_every=half, resume=True)
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
     out = res.state.select("id", F.round("rank", 8).alias("rank"))
     g.unpersist()
     return out

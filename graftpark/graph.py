@@ -105,6 +105,14 @@ def densify_ids(df: DataFrame, col: str, num_partitions: int | None = None) -> D
     return out
 
 
+def id_stats(df: DataFrame) -> tuple[int, int]:
+    """``(rows, fingerprint)`` of ``df``'s ``id`` column in one job: the
+    fingerprint is the order-independent ``bit_xor(xxhash64(id))``."""
+    fp = F.coalesce(F.bit_xor(F.xxhash64("id")), F.lit(0))
+    row = df.agg(F.count("*").alias("n"), fp.alias("fp")).collect()[0]
+    return int(row["n"]), int(row["fp"])
+
+
 class Graph:
     """A directed graph held as DataFrames, persisted for iteration."""
 
@@ -258,14 +266,11 @@ class Graph:
         return self.vertex_stats()[0]
 
     def vertex_stats(self) -> tuple[int, int]:
-        """Cached ``(n_vertices, content_fingerprint)`` of the vertex set,
-        in one job: the fingerprint is the order-independent
-        ``bit_xor(xxhash64(id))``, which ``ensure_vertex_sidecar``
-        records to tell a block dir's vertex set from another."""
+        """Cached :func:`id_stats` of the vertex set, which a packed
+        resume compares with its checkpoint's to refuse a checkpoint of
+        another vertex set."""
         if self._vertex_stats is None:
-            fp = F.coalesce(F.bit_xor(F.xxhash64("id")), F.lit(0))
-            row = self.vertices().agg(F.count("*").alias("n"), fp.alias("fp")).collect()[0]
-            self._vertex_stats = (int(row["n"]), int(row["fp"]))
+            self._vertex_stats = id_stats(self.vertices())
         return self._vertex_stats
 
     def edges_sym(self) -> DataFrame:

@@ -113,12 +113,12 @@ def connected_components(
     )
 
 
-def _min_gather(state, vtx, blk, pos, seg):
-    partial = segment_gather_reduce(state, pos, blk["starts"], "min")
+def _min_gather(state, lay, blk, seg):
+    partial = segment_gather_reduce(state, lay["gather"], blk["starts"], "min")
     return partial, seg * partial.itemsize
 
 
-def _min_combine(prev, msgs, scalar, vtx):
+def _min_combine(prev, msgs, scalar, lay):
     new = prev.copy()
     for seg, buf in msgs:  # positions are unique within one message
         new[seg] = np.minimum(new[seg], np.frombuffer(buf, dtype=np.int64))

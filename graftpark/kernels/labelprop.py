@@ -129,12 +129,12 @@ def label_propagation(
 #   labels[sum(k)] int64, counts[sum(k)] int32
 
 
-def _mode_gather(state, vtx, blk, pos, seg):
+def _mode_gather(state, lay, blk, seg):
     """Per-dst (label, count) lists, all P payloads written ONCE into one
     contiguous buffer. Labels change every superstep, so the per-edge
     (group, label) pairs are lexsorted per call; contiguous dst groups
     make each segment's entries a contiguous slice of the result."""
-    lab = state[pos]
+    lab = state[lay["gather"]]
     gi = blk.get("group_idx")
     if gi is None:  # per-edge dst-group index, cached with the block
         counts = np.diff(np.append(blk["starts"], blk["n_edges"]))
@@ -161,7 +161,7 @@ def _mode_gather(state, vtx, blk, pos, seg):
     return buf, offsets
 
 
-def _mode_combine(prev, msgs, scalar, vtx):
+def _mode_combine(prev, msgs, scalar, lay):
     n = len(prev)
     # each vertex's own label is a count-0 carrier: it wins only when the
     # vertex has no neighbor labels

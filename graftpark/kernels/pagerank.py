@@ -191,14 +191,14 @@ def _packed_spec(n: int, alpha: float, tol: float, payload_dtype: str) -> Semiri
     with the float64 path to ~1e-7 relative."""
     tol_active = tol / n
 
-    def combine(prev, msgs, dm, vtx):
+    def combine(prev, msgs, dm, lay):
         sums = np.zeros(len(prev), dtype=prev.dtype)
         for seg, buf in msgs:
             sums[seg] += np.frombuffer(buf, dtype=prev.dtype)
         base = (1.0 - alpha) / n + alpha * dm / n
         new = (base + alpha * sums.astype(np.float64, copy=False)).astype(prev.dtype, copy=False)
         diff = np.abs(new.astype(np.float64, copy=False) - prev.astype(np.float64, copy=False))
-        od = np.asarray(vtx["out_deg"])
+        od = np.asarray(lay["out_deg"])
         return (new, float(diff.sum()), float(new[od == 0].astype(np.float64).sum()),
                 int((diff > tol_active).sum()))
 
@@ -213,21 +213,20 @@ def _packed_spec(n: int, alpha: float, tol: float, payload_dtype: str) -> Semiri
                          "dangling_mass": float(o["dangling"] or 0.0)},
         converged=lambda rec: rec["delta"] < tol,
         scalar=_dangling_mass,
-        out_deg=True,
     )
 
 
-def _sum_gather(state, vtx, blk, pos, seg):
-    od = np.asarray(vtx["out_deg"])
+def _sum_gather(state, lay, blk, seg):
+    od = np.asarray(lay["out_deg"])
     # ufunc result is float64; ``out`` downcasts (same_kind) when the
     # payload is float32 — halves the per-edge gather temp below
     w = np.divide(state, od, out=np.zeros(len(state), dtype=state.dtype), where=od > 0)
-    partial = segment_gather_reduce(w, pos, blk["starts"], "sum")
+    partial = segment_gather_reduce(w, lay["gather"], blk["starts"], "sum")
     return partial, seg * partial.itemsize
 
 
-def _dangling_mass(state, vtx):
-    return float(state[np.asarray(vtx["out_deg"]) == 0].astype(np.float64).sum())
+def _dangling_mass(state, lay):
+    return float(state[np.asarray(lay["out_deg"]) == 0].astype(np.float64).sum())
 
 
 def ranks_df(result: LoopResult) -> DataFrame:

@@ -7,13 +7,14 @@ over one GraphBLAS matrix (reference: src/traversals/BFS/bfs_BLAS.jl:18,
 BLAS_coloring.jl:26). Here a :class:`Semiring` supplies the numpy work at
 both ends of a superstep and everything else is shared.
 
-A bucket's state is one vector aligned to its sorted vertex sidecar, and
+A bucket's state is one vector aligned to its sorted vertex ids, and
 its partial aggregates travel as ONE payload per (src_bucket →
 dst_bucket) pair. The destination-id list of every message is static —
-derivable from the shared mmap blocks and the per-bucket vertex sidecar —
-so payloads carry values only. A superstep is, per bucket, gather (its
-messages to every bucket, as byte slices of one dst-bucket-contiguous
-buffer, block layout v3+, plus an optional broadcast scalar) → exchange →
+derivable from the shared mmap blocks and the bucket's vertex ids (see
+:func:`graftpark.blocks.bucket_layout`) — so payloads carry values only.
+A superstep is, per bucket, gather (its messages to every bucket, as
+byte slices of one dst-bucket-contiguous buffer, block layout v3+, plus
+an optional broadcast scalar) → exchange →
 combine (its messages in ascending src bucket and its broadcast scalars
 summed exactly, so the result does not depend on arrival order).
 
@@ -26,9 +27,10 @@ layout: T = min(P, task slots) tasks, at least one (see
 :func:`task_slots`), where task t owns the buckets
 ``partition_perfect_ids(P)[j]`` with ``j % T == t``, and the carry is
 routed so that partition t holds the vertices of the buckets task t
-owns. With T > 1 the tasks are one gang-scheduled
-``mapInArrow(barrier=True)``; each aligns its rows to its buckets'
-sidecar ids, then loops over the interval's supersteps, running for
+owns, each row with its bucket beside it. With T > 1 the tasks are one
+gang-scheduled ``mapInArrow(barrier=True)``; each sorts its rows by
+(bucket, id), which gives each bucket its ids and state vector, then
+loops over the interval's supersteps, running for
 each bucket it owns, in ascending bucket id (see :func:`_interval_fn`),
 
     combine → gather → a message file per bucket of another task + a
@@ -76,18 +78,15 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graftpark.blocks import (
-    _finish_layout,
     _gather_offsets,
-    _static_positions,
     bucket_col,
     bucket_ids_sorted,
+    bucket_layout,
     ensure_edge_blocks,
-    ensure_vertex_sidecar,
     load_block,
-    load_vertices,
     partition_perfect_ids,
 )
-from graftpark.graph import Graph, choose_strategy
+from graftpark.graph import Graph, choose_strategy, id_stats
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
 
 STRATEGIES = ("auto", "dataframe", "packed")
@@ -110,16 +109,17 @@ class Semiring:
     Worker-side functions (shipped inside the UDFs, so they must not
     reference driver objects):
 
-    - ``gather(state, vtx, blk, pos, seg) -> (values, byte_offsets)``:
-      one src bucket's messages. ``state`` is the bucket's state vector,
-      ``vtx`` its vertex sidecar, ``blk`` its CSR block, ``pos`` the
-      per-edge positions of edge sources in ``state``, and
+    - ``gather(state, lay, blk, seg) -> (values, byte_offsets)``: one
+      src bucket's messages. ``state`` is the bucket's state vector,
+      ``lay`` its layout (:func:`graftpark.blocks.bucket_layout`: its
+      sorted ``ids``, their ``out_deg`` and the ``gather`` positions of
+      the edge sources in ``state``), ``blk`` its CSR block, and
       ``seg[j]:seg[j+1]`` the dst-group range of the j-th destination
       bucket (ascending bucket id). Byte slice ``j`` of ``values`` is the
       message to that bucket, written to its file as is.
-    - ``scalar(state, vtx) -> float`` (optional): summed over all buckets
+    - ``scalar(state, lay) -> float`` (optional): summed over all buckets
       and handed to every combine — PageRank's dangling mass.
-    - ``combine(prev, msgs, scalar, vtx) -> (new, delta, dangling,
+    - ``combine(prev, msgs, scalar, lay) -> (new, delta, dangling,
       active)``: one dst bucket's next state from its previous state and
       its ``(positions into prev, payload buffer)`` messages.
 
@@ -131,7 +131,6 @@ class Semiring:
     the metrics record, and ``converged(record)`` stops the loop.
     The loop's tasks also run ``stats`` and ``converged``, so
     they too must not reference driver objects.
-    ``out_deg`` stores real out-degrees in the sidecar (zeros otherwise);
     ``sym`` selects symmetrized blocks.
     """
 
@@ -144,7 +143,6 @@ class Semiring:
     stats: Callable[[dict], dict]
     converged: Callable[[dict], bool]
     scalar: Callable | None = None
-    out_deg: bool = False
 
 
 def resolve_strategy(graph: Graph, strategy: str, n: int, n_part: int,
@@ -217,14 +215,14 @@ def _superstep_confs(spark):
 
 
 def _sender(block_dir: str, num_buckets: int, gather: Callable, scalar: Callable | None):
-    """``send(b, state, vtx) -> (scalar, messages)``: bucket ``b``'s
+    """``send(b, state, lay) -> (scalar, messages)``: bucket ``b``'s
     broadcast scalar (0.0 without one) and its messages, one byte slice
     of the gathered buffer per destination bucket in ascending bucket id,
     or None when its block has no edges."""
     bids = bucket_ids_sorted(num_buckets)
 
-    def send(b: int, state: np.ndarray, vtx):
-        s = scalar(state, vtx) if scalar is not None else 0.0
+    def send(b: int, state: np.ndarray, lay: dict):
+        s = scalar(state, lay) if scalar is not None else 0.0
         blk = load_block(block_dir, b)
         if blk is None or blk["n_edges"] == 0:
             return s, None
@@ -237,33 +235,28 @@ def _sender(block_dir: str, num_buckets: int, gather: Callable, scalar: Callable
         seg = np.empty(num_buckets + 1, np.int64)
         seg[:-1] = off[bids]
         seg[-1] = off[-1]
-        values, byte_off = gather(state, vtx, blk, _static_positions(block_dir, b, blk), seg)
+        values, byte_off = gather(state, lay, blk, seg)
         raw, o = np.ascontiguousarray(values).view(np.uint8), [int(x) for x in byte_off]
         return s, [raw[o[j]:o[j + 1]] for j in range(num_buckets)]
 
     return send
 
 
-def _aligned(batches, block_dir: str, ids: list, value_col: str, dtype: np.dtype) -> list:
-    """The carried ``(id, value_col)`` rows as one state vector per
-    bucket, in the order of that bucket's sidecar ids (``ids``, one
-    array per bucket); a ValueError unless the carried ids are exactly
-    those."""
-    got, vals = [np.empty(0, np.int64)], [np.empty(0, dtype)]
+def _by_bucket(batches, value_col: str, dtype: np.dtype) -> dict:
+    """The carried ``(id, value_col, bucket)`` rows as ``{bucket: (ids,
+    state)}``: each bucket's ids ascending and its state vector in their
+    order."""
+    cols = {"bucket": [np.empty(0, np.int32)], "id": [np.empty(0, np.int64)],
+            value_col: [np.empty(0, dtype)]}
     for batch in batches:
-        got.append(batch.column("id").to_numpy())
-        vals.append(batch.column(value_col).to_numpy())
-    got, vals = np.concatenate(got), np.concatenate(vals).astype(dtype, copy=False)
-    want = np.concatenate([np.asarray(i) for i in ids] + [np.empty(0, np.int64)])
-    # stable (tim)sorts: near-linear on the sorted runs the rows arrive in
-    order, o = np.argsort(want, kind="stable"), np.argsort(got, kind="stable")
-    if not np.array_equal(want[order], got[o]):
-        raise ValueError(f"the carried vertex ids are not those of the vertex sidecar in "
-                         f"{block_dir!r}: a checkpoint of another vertex set, or a block "
-                         "dir rebuilt under the run")
-    state = np.empty(len(want), dtype)
-    state[order] = vals[o]
-    return np.split(state, np.cumsum([len(i) for i in ids])[:-1].astype(np.int64))
+        for name, arrays in cols.items():
+            arrays.append(batch.column(name).to_numpy())
+    bucket, ids, vals = (np.concatenate(arrays) for arrays in cols.values())
+    order = np.lexsort((ids, bucket))
+    bucket, ids, vals = bucket[order], ids[order], vals[order].astype(dtype, copy=False)
+    cuts = np.flatnonzero(bucket[1:] != bucket[:-1]) + 1
+    return {int(b[0]): (i, v) for b, i, v in
+            zip(np.split(bucket, cuts), np.split(ids, cuts), np.split(vals, cuts)) if len(b)}
 
 
 #: a step marker: the writer's (delta, dangling, active), its broadcast
@@ -330,8 +323,10 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
     """mapInArrow fn of the packed loop: supersteps ``first..last`` of the
     buckets this task's partition owns (:func:`_owned`).
 
-    The task aligns its carried rows to its buckets' sidecar ids, then
-    runs one round per superstep, plus a first round that only gathers.
+    The task sorts its carried ``(id, value, bucket)`` rows by (bucket,
+    id) into one state vector per bucket and takes each bucket's layout
+    over those ids (:func:`graftpark.blocks.bucket_layout`), then runs
+    one round per superstep, plus a first round that only gathers.
     A round runs each bucket it owns in ascending bucket id: combine the
     previous round's messages, gather, and write the messages to buckets
     of other tasks as files under ``{exchange}/step={s}/`` and a marker
@@ -342,7 +337,7 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
     order (exactly rounded), so all make the same ``done(delta, dangling,
     active)`` decision and stop at the same superstep. The last round
     sends nothing, and the final states are the task's output, in
-    sidecar order. The partition-0 task writes each superstep's summed
+    (bucket, id) order. The partition-0 task writes each superstep's summed
     aggregates to ``{exchange}/history``. One task exchanges nothing."""
     # the fn ships to the workers: it must not capture ``spec``, whose
     # ``init`` is a driver-side Column
@@ -351,11 +346,10 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
     order = [int(b) for b in bucket_ids_sorted(num_buckets)]
     send = _sender(block_dir, num_buckets, spec.gather, spec.scalar)
 
-    def combine(c: int, vtx, prev, scalars, msgs):
-        flay = _finish_layout(block_dir, c, num_buckets)
-        fpos, foff = np.asarray(flay["pos"]), np.asarray(flay["offsets"])
-        return bucket_combine(prev, [(fpos[foff[b]:foff[b + 1]], buf) for b, buf in msgs],
-                              math.fsum(scalars), vtx)
+    def combine(lay: dict, prev, scalars, msgs):
+        pos, off = np.asarray(lay["scatter"]), np.asarray(lay["offsets"])
+        return bucket_combine(prev, [(pos[off[b]:off[b + 1]], buf) for b, buf in msgs],
+                              math.fsum(scalars), lay)
 
     def fn(batches):
         from pyspark import TaskContext
@@ -364,17 +358,20 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
         mine = _owned(num_buckets, tasks, part)
         owned = set(mine)
         peers = [b for b in order if b not in owned]
-        vtx = {c: load_vertices(block_dir, c) for c in mine}
-        # a bucket without vertices only writes markers
-        live = [c for c in mine if vtx[c] is not None]
-        state = dict(zip(live, _aligned(batches, block_dir, [vtx[c]["ids"] for c in live],
-                                        value_col, dt)))
+        carried = _by_bucket(batches, value_col, dt)
+        # a bucket without vertices only writes markers; its layout still
+        # checks that no edge touches it
+        lay = {c: bucket_layout(block_dir, c, num_buckets,
+                                carried[c][0] if c in carried else np.empty(0, np.int64))
+               for c in mine}
+        live = [c for c in mine if c in carried]
+        state = {c: carried[c][1] for c in live}
         aggs = dict.fromkeys(mine, (0.0, 0.0, 0))
         history, scalars, msgs = [], [], {}
         for s in range(first - 1, last + 1):
             if s >= first:
                 for c in live:
-                    state[c], *aggs[c] = combine(c, vtx[c], state[c], scalars, msgs[c])
+                    state[c], *aggs[c] = combine(lay[c], state[c], scalars, msgs[c])
             step_dir = os.path.join(exchange, f"step={s}")
             if peers:
                 os.makedirs(step_dir, exist_ok=True)
@@ -382,7 +379,7 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
             for c in mine:
                 scalar, sent = 0.0, None
                 if c in state and s < last:
-                    scalar, sent = send(c, state[c], vtx[c])
+                    scalar, sent = send(c, state[c], lay[c])
                 for d, buf in zip(order, sent or ()):
                     if d in owned:
                         local[d, c] = buf
@@ -411,7 +408,7 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
         for c in live:
             values = state[c].astype(out_dt, copy=False)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.asarray(vtx[c]["ids"])), pa.array(values)], names=["id", value_col])
+                [pa.array(lay[c]["ids"]), pa.array(values)], names=["id", value_col])
 
     return fn
 
@@ -441,9 +438,11 @@ def run_packed(
 ) -> LoopResult:
     """Run ``spec`` to convergence on the packed CSR-block path.
 
-    Builds (or validates and reuses) the edge blocks in ``block_dir`` and
-    the per-bucket vertex sidecar, then loops Spark jobs described as
-    ``{kernel}/packed/superstep={i}``. ``LoopResult.state`` is the
+    Builds (or validates and reuses) the edge blocks in ``block_dir``,
+    then loops Spark jobs described as
+    ``{kernel}/packed/superstep={i}``. A resume refuses a checkpoint of
+    another vertex set (ValueError), and the tasks refuse a vertex set
+    that misses an edge endpoint. ``LoopResult.state`` is the
     materialized per-vertex ``(id, value_col)`` DataFrame.
 
     A job runs every superstep up to the next multiple of
@@ -465,14 +464,6 @@ def run_packed(
     edges = graph.edges_sym() if spec.sym else graph.edges
     ensure_edge_blocks(edges, n_part, block_dir, sym=spec.sym, stats=graph.edge_stats(sym=spec.sym))
 
-    if spec.out_deg:
-        deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
-        vdf = graph.vertices().join(deg, "id", "left").select(
-            "id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-    else:
-        vdf = graph.vertices().select("id", F.lit(0).alias("out_deg"))
-    ensure_vertex_sidecar(vdf, n_part, block_dir, graph.vertex_stats())
-
     tasks = max(1, min(n_part, task_slots(spark)))
 
     def route(carry: DataFrame) -> DataFrame:
@@ -488,6 +479,9 @@ def run_packed(
         rp = resume_point(checkpointer, spark)
         if rp is not None:
             carry0, last, initial_metrics = rp
+            if id_stats(carry0) != graph.vertex_stats():
+                raise ValueError(f"the checkpoint in {checkpoint_dir!r} holds another vertex "
+                                 "set than the graph's")
             start = last + 1
 
     exchange = os.path.join(block_dir, "_bsp", uuid.uuid4().hex)
@@ -536,6 +530,7 @@ def _interval_loop(block_dir: str, n_part: int, tasks: int, spec: Semiring, star
         shutil.rmtree(exchange, ignore_errors=True)
         fn = _interval_fn(block_dir, n_part, tasks, spec, exchange, bound["i"] + 1, i, done)
         bound["i"] = i
+        carry = carry.select("id", spec.value_col, bucket_col("id", n_part).alias("bucket"))
         return route(carry.mapInArrow(fn, schema=schema, barrier=tasks > 1))
 
     def stats(new: DataFrame, prev: DataFrame, i: int) -> list[dict]:

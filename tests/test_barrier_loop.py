@@ -19,7 +19,7 @@ from pyspark import TaskContext
 
 from conftest import spy_step_descriptions
 from graftpark import oracles, packed
-from graftpark.blocks import load_vertices, partition_perfect_ids
+from graftpark.blocks import bucket_col
 from graftpark.fixtures import powerlaw_edges_pdf
 from graftpark.graph import Graph
 from graftpark.kernels.components import components_df, connected_components
@@ -225,33 +225,36 @@ def test_two_bucket_task_failure_replays_the_interval(spark, graph, tmp_path, mo
 
 
 def test_combine_ignores_row_order(spark, graph, tmp_path, monkeypatch):
-    """A task aligns its carried rows to its buckets' vertex sidecars,
-    applies each bucket's messages in ascending src bucket and sums the
-    broadcast scalars exactly, so a row-permuted per-vertex carry gives
-    the same bytes. The scalars here, one per bucket in bucket order, sum
-    to 2.0 exactly and to 1.0 left to right."""
+    """A task sorts its carried rows by (bucket, id), applies each
+    bucket's messages in ascending src bucket and sums the broadcast
+    scalars exactly, so a row-permuted per-vertex carry gives the same
+    bytes. The scalars here, one per bucket in bucket order, sum to 2.0
+    exactly and to 1.0 left to right."""
     blk = str(tmp_path / "blk")
     n = graph.num_vertices()
     pagerank(graph, tol=0.0, max_supersteps=1, strategy="packed", num_partitions=P,
              block_dir=blk)
     scalars = (1e16, 1.0, -1e16, 1.0)
     assert math.fsum(scalars) != ((1e16 + 1.0) - 1e16) + 1.0
-    vtx = [load_vertices(blk, int(b)) for b in sorted(partition_perfect_ids(P))]
-    by_first_id = {int(v["ids"][0]): s for v, s in zip(vtx, scalars)}
+    rows = sorted(graph.vertices().select(bucket_col("id", P), "id").collect())
+    bucket, ids = (np.array(c) for c in zip(*rows))
+    first = np.r_[True, bucket[1:] != bucket[:-1]]
+    assert first.sum() == P
+    by_first_id = dict(zip(ids[first].tolist(), scalars))
     real = _packed_spec(n, 0.85, TOL, "float64")
     seen = []
 
-    def combine(prev, msgs, scalar, vtx):
+    def combine(prev, msgs, scalar, lay):
         seen.append(scalar)
-        return real.combine(prev, msgs, scalar, vtx)
+        return real.combine(prev, msgs, scalar, lay)
 
     spec = dataclasses.replace(real, combine=combine,
-                               scalar=lambda state, vtx: by_first_id[int(vtx["ids"][0])])
+                               scalar=lambda state, lay: by_first_id[int(lay["ids"][0])])
     # one task owns every bucket: it runs in this process and exchanges nothing
     monkeypatch.setattr(TaskContext, "get", lambda: SimpleNamespace(partitionId=lambda: 0))
     fn = packed._interval_fn(blk, P, 1, spec, str(tmp_path / "bsp"), 1, 3, lambda *total: False)
-    ids = np.concatenate([v["ids"] for v in vtx])
-    carry = pa.table({"id": ids, "rank": np.random.default_rng(0).random(len(ids)) / n})
+    carry = pa.table({"id": ids, "rank": np.random.default_rng(0).random(len(ids)) / n,
+                      "bucket": bucket.astype(np.int32)})
 
     def interval(table):
         return pa.Table.from_batches(list(fn(table.to_batches(max_chunksize=1000))))
@@ -272,6 +275,42 @@ def test_result_outlives_the_graph(spark, buckets):
     res = pagerank(g, tol=1e-10, strategy="packed", num_partitions=buckets)
     g.unpersist()
     assert ranks_df(res).count() == 4
+
+
+def _graph(spark, edges, vertices):
+    return Graph(spark.createDataFrame(edges, "src long, dst long"),
+                 vertices=spark.createDataFrame([(v,) for v in sorted(vertices)], "id long"))
+
+
+@pytest.mark.parametrize("buckets", [1, P])
+def test_vertex_set_missing_an_edge_endpoint_fails(spark, tmp_path, buckets):
+    """A vertex set that leaves out an edge endpoint is refused, naming
+    the block dir: vertex 1's rank once went to vertex 3 in one bucket,
+    and was lost in four."""
+    g = _graph(spark, [(1, 2)], {1, 3})
+    blk = str(tmp_path / "blk")
+    with pytest.raises(Exception, match="misses edge") as err:
+        pagerank(g, strategy="packed", num_partitions=buckets, block_dir=blk)
+    assert blk in str(err.value)
+    g.unpersist()
+
+
+@pytest.mark.parametrize("buckets", [1, P])
+def test_resume_from_another_vertex_set_fails(spark, tmp_path, buckets):
+    """A checkpoint of another vertex set with the same edges is refused
+    on resume, whichever of the two sets wrote it."""
+    edges = [(1, 2), (2, 3), (3, 1), (3, 2)]
+    kw = dict(tol=0.0, strategy="packed", num_partitions=buckets, checkpoint_every=5)
+    for saved, resumed in (({1, 2, 3, 4}, {1, 2, 3, 5}), ({1, 2, 3, 5}, {1, 2, 3, 4})):
+        run = str(tmp_path / f"run-{max(saved)}")
+        g = _graph(spark, edges, saved)
+        pagerank(g, max_supersteps=5, checkpoint_dir=run, block_dir=str(tmp_path / "a"), **kw)
+        g.unpersist()
+        g = _graph(spark, edges, resumed)
+        with pytest.raises(ValueError, match="another vertex set"):
+            pagerank(g, max_supersteps=10, checkpoint_dir=run, resume=True,
+                     block_dir=str(tmp_path / "b"), **kw)
+        g.unpersist()
 
 
 @pytest.mark.parametrize("buckets", [1, P])

@@ -4,6 +4,7 @@ source graph) or be rebuilt — silent mismatched reuse previously
 dropped/misrouted edges.
 """
 
+import glob
 import json
 import os
 
@@ -17,6 +18,10 @@ from graftpark.kernels.pagerank import pagerank
 def _token(block_dir):
     with open(os.path.join(block_dir, "meta.json")) as f:
         return json.load(f)["token"]
+
+
+def _layout_dirs(block_dir):
+    return glob.glob(os.path.join(block_dir, "_derived", "bucket=*", "*"))
 
 
 def test_ensure_rebuilds_on_bucket_count_change(spark, tmp_path):
@@ -211,7 +216,6 @@ def test_auto_block_dir_reused_then_removed_by_unpersist(spark):
     """block_dir=None: one engine-owned dir per graph orientation and
     bucket count, reused by later calls (same token: no rebuild) and
     removed by unpersist."""
-    import glob
     import tempfile
 
     pattern = os.path.join(tempfile.gettempdir(), "graftpark-blocks-*")
@@ -234,10 +238,11 @@ def test_auto_block_dir_reused_then_removed_by_unpersist(spark):
 
 
 def test_vertex_set_change_rebuilds_the_sidecar(spark, tmp_path):
-    """meta.json records the vertex set the sidecar was built for: graphs
-    with the same edges but other vertex sets, run one after another on
-    one block dir, each get their own vertices back (a stale sidecar
-    once returned a vertex the graph does not have, or crashed)."""
+    """Graphs with the same edges but other vertex sets, run one after
+    another on one block dir, each get their own vertices back (a stale
+    vertex sidecar once returned a vertex the graph does not have, or
+    crashed). The edge blocks are kept; each vertex set gets its own
+    layout dir, named by its ids, and a repeated set reuses its dir."""
     from graftpark import oracles
 
     edges = [(1, 2), (2, 3), (3, 1), (3, 2)]
@@ -254,7 +259,8 @@ def test_vertex_set_change_rebuilds_the_sidecar(spark, tmp_path):
         comps = connected_components(g, block_dir=d + "-sym", **kw)
         assert dict(comps.state.collect()) == oracles.connected_components(edges, vertices)
         tokens.append(_token(d))
-    assert len(set(tokens)) == 4
-    # the same vertex set again: the sidecar is reused
+    assert len(set(tokens)) == 1
+    assert len(_layout_dirs(d)) == len(_layout_dirs(d + "-sym")) == 4
+    # the same vertex set again: its layout is reused
     pagerank(g, tol=1e-10, block_dir=d, **kw)
-    assert _token(d) == tokens[-1]
+    assert len(_layout_dirs(d)) == 4

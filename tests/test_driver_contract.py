@@ -69,3 +69,15 @@ def test_entry_smoke(spark):
     assert len(rows) > 0
     total = sum(r["rank"] for r in rows)
     assert math.isclose(total, 1.0, abs_tol=1e-4)
+
+
+def test_pagerank_resume_leaves_no_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """``pagerank_resume`` removes the checkpoint dir it made; the ranks
+    it returns are materialized and read none of it."""
+    import tempfile
+
+    from graftpark.driver_queries import q_pagerank_resume
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert q_pagerank_resume(spark, SF_DIR).count() > 0
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("graftpark-pr-resume-")]

@@ -4,7 +4,7 @@
 BlockManagers, own Python worker pools, real network shuffle between
 them) — the closest a single box gets to the north_rule's
 multi-executor cluster. The packed strategy's shared state (CSR block
-dir, vertex sidecars, static positions) lives on storage both executor
+dir and the per-bucket layouts derived from it) lives on storage both executor
 processes mount (here: one host's disk; on a cluster: HDFS/S3), so this
 exercises concurrent multi-process block access, which
 test_shared_blocks.py (sequential drivers) cannot.

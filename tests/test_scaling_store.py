@@ -68,14 +68,3 @@ def test_rerun_appends_never_replaces(store):
     bs.record_pair(8, 32, _result(256_000_000, 0.6))
     runs = _load(store)["8->32"]["runs"]
     assert [r["value"] for r in runs] == [0.4, 0.6]
-
-
-def test_baseline_md_tags_nondefault_pair_and_status(store):
-    bs.record_pair(2, 8, _result(256_000_000, 0.91))
-    bs.record_pair(8, 32, _result(1_000_000_000, 0.7))
-    bs.write_baseline_md(16_000_000, 32)
-    md = open(os.path.join(store, "BENCH", "BASELINE.md")).read()
-    assert "Criterion status: MET at 2->8 (eff 0.910" in md
-    # the 1B pair is tagged inline and NOT folded into the default table rows
-    assert "8 -> 32 cores, 1,000,000,000 edges" in md
-    assert "2 -> 8 cores: efficiency 0.910" in md
