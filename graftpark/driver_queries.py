@@ -240,7 +240,8 @@ def q_label_prop_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mis_coloring_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Luby-style MIS coloring (reference C7,
     BLAS_coloring.jl:8-216) on the dense nation graph. Deterministic by
-    construction (static injective priorities w = deg·(n+1) + (n − id)),
+    construction (static injective priorities w = deg·(n+1) + (n + 1 − r),
+    r the id's dense rank),
     so the DuckDB oracle unrolls the exact rounds in SQL."""
     from graftpark.kernels.coloring import mis_coloring
 
@@ -352,7 +353,8 @@ def _mis_coloring_sql(prefix_cte: str, sym: str, verts: str, n_outer: int, n_inn
     """Unrolled deterministic Luby-MIS coloring (kernels/coloring.py
     mis_coloring) as pure SQL, mirroring label_prop's unrolled oracle.
 
-    Static injective priorities w(v) = deg(v)·(n+1) + (n − v). Outer
+    Static injective priorities w(v) = deg(v)·(n+1) + (n + 1 − r(v)), with
+    r(v) the dense rank of v's id among the vertices. Outer
     round o: build a maximal IS over the uncolored set in ≤ n_inner
     inner rounds (select local weight maxima among candidates, knock
     out their neighbors), assign color o. Rounds beyond the fixed point
@@ -368,7 +370,8 @@ def _mis_coloring_sql(prefix_cte: str, sym: str, verts: str, n_outer: int, n_inn
         f"nn_m AS MATERIALIZED (SELECT COUNT(*) AS n FROM {verts}),",
         f"""w_m AS MATERIALIZED (
   SELECT v.id,
-         COALESCE(d.deg, 0) * ((SELECT n FROM nn_m) + 1) + ((SELECT n FROM nn_m) - v.id) AS w
+         COALESCE(d.deg, 0) * ((SELECT n FROM nn_m) + 1)
+           + ((SELECT n FROM nn_m) + 1 - DENSE_RANK() OVER (ORDER BY v.id)) AS w
   FROM {verts} v LEFT JOIN deg_m d ON d.id = v.id),""",
         "unc_0 AS MATERIALIZED (SELECT id, w FROM w_m),",
         "col_0 AS MATERIALIZED (SELECT CAST(NULL AS BIGINT) AS id, CAST(NULL AS INT) AS color WHERE 1 = 0),",

@@ -18,9 +18,10 @@ inner loop (BLAS_coloring.jl:103-216):
 
 Determinism: the reference randomizes weights / orders
 (BLAS_coloring.jl:31, greedy_coloring_seq.jl:46); we use a static
-injective priority  w(v) = deg(v)·(n+1) + (n − v)  — higher degree
-wins, ties go to the smaller id — so results are exactly reproducible
-(SURVEY.md §4.3.5) and match oracles.mis_coloring.
+injective priority  w(v) = deg(v)·(n+1) + (n + 1 − r(v)), with r(v) the
+dense rank 1..n of v's id — higher degree wins, ties go to the smaller
+id, on any ids — so results are exactly reproducible (SURVEY.md §4.3.5)
+and match oracles.mis_coloring.
 
 ``greedy_coloring`` ports the sequential variants C1-C5
 (greedy_coloring_seq.jl:12-98) as driver-side oracles for small graphs
@@ -35,7 +36,7 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 from graftpark import oracles
-from graftpark.graph import Graph, choose_strategy, maybe_broadcast
+from graftpark.graph import Graph, choose_strategy, densify_ids, maybe_broadcast
 from graftpark.loop import LoopResult
 
 
@@ -111,11 +112,15 @@ def mis_coloring(
         rp = resume_point(checkpointer, spark)
         if rp is not None:
             state, start_color, metrics = rp
+    rank = None
     if state is None:
         if priorities is None:
-            # static injective priorities (degree-ranked, id tie-break)
-            w_col = F.col("deg") * F.lit(n + 1) + (F.lit(n) - F.col("id"))
-            base = graph.degrees()
+            # static injective priorities (degree-ranked, id tie-break):
+            # the id's dense rank r in 1..n keeps them injective on sparse ids
+            rank = densify_ids(graph.vertices().select(F.col("id").alias("v")), "v", n_part)
+            w_col = F.col("deg") * F.lit(n + 1) + (F.lit(n + 1) - F.col("r"))
+            base = graph.degrees().join(
+                rank.select(F.col("v").alias("id"), F.col("id").alias("r")), "id")
         else:
             w_col = F.col("w").cast("long")
             base = priorities
@@ -129,6 +134,8 @@ def mis_coloring(
             .repartition(n_part, "id")
             .localCheckpoint(eager=True)
         )
+        if rank is not None:
+            rank.unpersist()
         prev_rdd = _checkpoint_rdd(state)
         colored_total = 0
     else:

@@ -11,8 +11,8 @@ Two problems Catalyst does not solve for us (SURVEY.md §4.3):
    previous one; after ~20 iterations analysis and task serialization
    dominate. Fix: truncate lineage after every call, either via
    ``localCheckpoint(eager=True)`` or — on a durable checkpoint's
-   superstep — by writing state to parquet and re-reading it (which
-   doubles as the resume checkpoint).
+   superstep of the per-superstep mode — by writing state to parquet and
+   re-reading it (which doubles as the resume checkpoint).
 2. **Convergence probes** — stats (delta, active count) are computed as
    ONE aggregate job on the freshly persisted state, not separate
    count()/collect() probes.
@@ -22,16 +22,34 @@ Checkpoint layout (north_rule: resumable with per-partition lineage):
     {run_dir}/superstep=00007/state/*.parquet   (with _SUCCESS marker)
     {run_dir}/superstep=00007/lineage.json      per-partition rows/min/max/hash
     {run_dir}/metrics.jsonl                     one record per superstep
+
+``lineage.json`` is a list of ``{partition_id, rows, min_id, max_id,
+content_hash}`` rows in partition order. :meth:`Checkpointer.save`
+(DataFrame loops) writes the state with Spark and takes the rows from a
+query over the re-read, with ``content_hash`` the ``bit_xor`` of each
+row's ``xxhash64``. The interval mode's tasks instead write the parts
+themselves (:func:`write_part`): ``part-{task:05d}.parquet`` and a
+lineage row whose ``content_hash`` is the hex blake2b-64 of the part's
+id then value buffers, in row order; :meth:`Checkpointer.commit` folds
+those rows into ``lineage.json``. ``_SUCCESS`` is written last, after the
+superstep's metrics records, so a superstep dir without it is ignored
+and a resume replays its supersteps; :meth:`Checkpointer.load_metrics`
+keeps the last record of a superstep recorded twice.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -48,9 +66,12 @@ class Checkpointer:
     def _step_dir(self, superstep: int) -> str:
         return os.path.join(self.run_dir, f"superstep={superstep:05d}")
 
+    def state_dir(self, superstep: int) -> str:
+        return os.path.join(self._step_dir(superstep), "state")
+
     def save(self, state: DataFrame, superstep: int) -> DataFrame:
         """Write state + lineage; return the re-read (lineage-truncated) state."""
-        path = os.path.join(self._step_dir(superstep), "state")
+        path = self.state_dir(superstep)
         state.write.mode("overwrite").parquet(path)
         reread = state.sparkSession.read.parquet(path)
         # per-partition lineage of the checkpoint as written
@@ -66,9 +87,32 @@ class Checkpointer:
             .orderBy("partition_id")
             .collect()
         )
-        with open(os.path.join(self._step_dir(superstep), "lineage.json"), "w") as f:
-            json.dump([r.asDict() for r in lineage], f)
+        self._write_lineage(superstep, [r.asDict() for r in lineage])
         return reread
+
+    def _write_lineage(self, superstep: int, rows: list[dict]) -> None:
+        with open(os.path.join(self._step_dir(superstep), "lineage.json"), "w") as f:
+            json.dump(rows, f)
+
+    def clear(self, superstep: int) -> None:
+        """Remove ``superstep``'s dir, so that the tasks about to write its
+        parts leave no stale part of an earlier run beside theirs."""
+        shutil.rmtree(self._step_dir(superstep), ignore_errors=True)
+
+    def commit(self, superstep: int) -> None:
+        """Complete the checkpoint whose parts the tasks wrote with
+        :func:`write_part`: fold their lineage rows into ``lineage.json``,
+        then write ``state/_SUCCESS``."""
+        state = self.state_dir(superstep)
+        names = sorted(f for f in os.listdir(state) if f.startswith(_LINEAGE_ROW))
+        rows = []
+        for name in names:
+            with open(os.path.join(state, name)) as f:
+                rows.append(json.load(f))
+        self._write_lineage(superstep, rows)
+        for name in names:
+            os.remove(os.path.join(state, name))
+        open(os.path.join(state, "_SUCCESS"), "w").close()
 
     def record_metrics(self, rec: dict) -> None:
         with open(os.path.join(self.run_dir, "metrics.jsonl"), "a") as f:
@@ -87,14 +131,57 @@ class Checkpointer:
         return best
 
     def load(self, spark: SparkSession, superstep: int) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._step_dir(superstep), "state"))
+        return spark.read.parquet(self.state_dir(superstep))
 
     def load_metrics(self) -> list[dict]:
+        """One record per superstep, in superstep order: the last recorded,
+        since a run that resumes before a superstep records it again."""
         path = os.path.join(self.run_dir, "metrics.jsonl")
         if not os.path.exists(path):
             return []
+        last = {}
         with open(path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            for line in f:
+                if line.strip():
+                    rec = json.loads(line)
+                    last[rec["superstep"]] = rec
+        return [last[k] for k in sorted(last)]
+
+
+#: name prefix of a task's lineage row beside its part; Spark's parquet
+#: reader skips ``_`` files, and :meth:`Checkpointer.commit` removes them
+_LINEAGE_ROW = "_lineage-"
+
+
+def _put(path: str, data) -> None:
+    """Write ``data`` to ``path`` atomically: to a dot-prefixed tmp file
+    beside it, which Spark's readers skip, then renamed."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{os.getpid()}.tmp")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
+def write_part(state_dir: str, part: int, ids: np.ndarray, values: np.ndarray,
+               value_col: str) -> None:
+    """Write task ``part``'s checkpoint rows ``(id, value_col)`` into
+    ``state_dir`` as ``part-{part:05d}.parquet``, with its lineage row
+    beside it. Both are written atomically (:func:`_put`), so a reader
+    never sees half a file and a retried task rewrites the same bytes.
+    Runs inside the task."""
+    os.makedirs(state_dir, exist_ok=True)
+    sink = pa.BufferOutputStream()
+    # ids are unique, and most values too: dictionary pages would only add bytes
+    pq.write_table(pa.table({"id": ids, value_col: values}), sink, use_dictionary=False)
+    _put(os.path.join(state_dir, f"part-{part:05d}.parquet"), sink.getvalue())
+    digest = hashlib.blake2b(np.ascontiguousarray(ids), digest_size=8)
+    digest.update(np.ascontiguousarray(values))
+    row = {"partition_id": part, "rows": len(ids),
+           "min_id": int(ids.min()) if len(ids) else None,
+           "max_id": int(ids.max()) if len(ids) else None,
+           "content_hash": digest.hexdigest()}
+    _put(os.path.join(state_dir, f"{_LINEAGE_ROW}{part:05d}.json"), json.dumps(row).encode())
 
 
 @dataclass
@@ -139,10 +226,14 @@ def iterate(
     ``checkpointer.every`` or ``max_supersteps``, whichever comes first
     (without a checkpointer, ``max_supersteps``); the step may stop short
     of it only by converging, and ``stats_fn`` returns one record per
-    superstep it ran. The loop then advances by that many supersteps,
-    records each with its share of the call's wall time, and takes a
-    durable checkpoint only when it stopped on a multiple; the next call
-    gets the step's own (locally checkpointed) state, not the re-read.
+    superstep it ran. The loop then advances by that many supersteps and
+    records each with its share of the call's wall time. The step writes
+    the durable checkpoint's parts itself when ``i`` is a multiple of
+    ``checkpointer.every`` (its tasks call :func:`write_part` on
+    ``checkpointer.state_dir(i)``, cleared first); when the step stopped
+    there, the loop commits them (:meth:`Checkpointer.commit`) after
+    recording the call's metrics. The next call gets the step's own
+    (locally checkpointed) state.
 
     With a ``label``, the Spark jobs of a call ending at superstep ``i``
     are described as ``{label}/superstep={i}``; the caller's description
@@ -188,16 +279,15 @@ def iterate(
             stats = stats_fn(obs.get if obs is not None else new, prev, end)
             ran = stats if interval else [stats]
             i += len(ran)
-            if interval and checkpointer is not None and i % every == 0:
-                # the durable resume point; the loop goes on from the local
-                # checkpoint, whose partitions keep the step's layout
-                checkpointer.save(new, i)
             wall = (time.monotonic() - t0) / len(ran)
             for j, s in enumerate(ran):
                 rec = {"superstep": i - len(ran) + 1 + j, "wall_s": wall, **s}
                 metrics.append(rec)
                 if checkpointer is not None:
                     checkpointer.record_metrics(rec)
+            if interval and checkpointer is not None and i % every == 0:
+                # after the records: a resume point always has its metrics
+                checkpointer.commit(i)
             # free the retired state NOW: DataFrame.unpersist does not release
             # localCheckpoint RDD blocks (they otherwise linger until the JVM
             # happens to GC the RDD reference → storage bloat + GC churn)

@@ -53,6 +53,14 @@ do not depend on the task count. The partition-0 task writes each
 superstep's summed (delta, dangling, active) to the run's history file,
 so metrics stay per superstep.
 
+An interval that ends on a multiple of ``checkpoint_every`` also writes
+its durable checkpoint from the tasks: each writes its final rows as one
+parquet part, with its lineage row beside it, under
+``{checkpoint_dir}/superstep={i:05d}/state/`` (see
+:func:`graftpark.loop.write_part`), and the driver commits them after the
+job. So the checkpoint dir, like the block dir, must be storage every
+executor shares, and a checkpointed interval is still one Spark job.
+
 ``strategy="auto"`` takes one bucket for graphs whose vertex state is
 broadcastable and whose edges fit it (``ONE_BUCKET_MAX_EDGES``), and
 ``n_part`` buckets when the state is too big to broadcast, unless the
@@ -87,7 +95,7 @@ from graftpark.blocks import (
     partition_perfect_ids,
 )
 from graftpark.graph import Graph, choose_strategy, id_stats
-from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
+from graftpark.loop import Checkpointer, LoopResult, _put, iterate, resume_point, write_part
 
 STRATEGIES = ("auto", "dataframe", "packed")
 
@@ -271,14 +279,6 @@ _POLL_S = 0.0002
 _PEER_TIMEOUT_S = 900.0
 
 
-def _put(path: str, data) -> None:
-    """Write ``data`` to ``path`` atomically (tmp file + rename)."""
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "wb") as f:
-        f.write(data)
-    os.replace(tmp, path)
-
-
 def _await_markers(step_dir: str, peers: list) -> dict:
     """``{bucket: marker}`` of every peer's marker in ``step_dir``,
     polled with a short sleep until all are there."""
@@ -319,7 +319,7 @@ def _owner_col(num_buckets: int, tasks: int) -> Column:
 
 
 def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, exchange: str,
-                 first: int, last: int, done: Callable):
+                 first: int, last: int, done: Callable, ckpt: str | None = None):
     """mapInArrow fn of the packed loop: supersteps ``first..last`` of the
     buckets this task's partition owns (:func:`_owned`).
 
@@ -337,8 +337,11 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
     order (exactly rounded), so all make the same ``done(delta, dangling,
     active)`` decision and stop at the same superstep. The last round
     sends nothing, and the final states are the task's output, in
-    (bucket, id) order. The partition-0 task writes each superstep's summed
-    aggregates to ``{exchange}/history``. One task exchanges nothing."""
+    (bucket, id) order. When the task stops at ``last`` and ``ckpt`` is
+    set, it also writes that output into ``ckpt`` as its checkpoint part
+    (:func:`graftpark.loop.write_part`). The partition-0 task writes each
+    superstep's summed aggregates to ``{exchange}/history``. One task
+    exchanges nothing."""
     # the fn ships to the workers: it must not capture ``spec``, whose
     # ``init`` is a driver-side Column
     dt, value_col, bucket_combine = np.dtype(spec.dtype), spec.value_col, spec.combine
@@ -405,10 +408,13 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
         if part == 0:
             os.makedirs(exchange, exist_ok=True)
             _put(os.path.join(exchange, "history"), np.asarray(history, np.float64))
-        for c in live:
-            values = state[c].astype(out_dt, copy=False)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(lay[c]["ids"]), pa.array(values)], names=["id", value_col])
+        ids = [lay[c]["ids"] for c in live]
+        values = [state[c].astype(out_dt, copy=False) for c in live]
+        if ckpt is not None and s == last:
+            write_part(ckpt, part, np.concatenate([np.empty(0, np.int64), *ids]),
+                       np.concatenate([np.empty(0, out_dt), *values]), value_col)
+        for i, v in zip(ids, values):
+            yield pa.RecordBatch.from_arrays([pa.array(i), pa.array(v)], names=["id", value_col])
 
     return fn
 
@@ -453,7 +459,10 @@ def run_packed(
     ``{block_dir}/_bsp/``. A job stops early at convergence and is
     described by its bound. Each superstep gets its own metrics record
     with its own convergence values and its share of the job's wall.
-    Results do not depend on the task count.
+    A job that ends on a multiple of ``checkpoint_every`` has its tasks
+    write the durable checkpoint's parts under ``checkpoint_dir``, so
+    ``checkpoint_dir``, like ``block_dir``, must be storage every
+    executor shares. Results do not depend on the task count.
     """
     spark = graph.spark
     if block_dir is None:
@@ -485,7 +494,8 @@ def run_packed(
             start = last + 1
 
     exchange = os.path.join(block_dir, "_bsp", uuid.uuid4().hex)
-    step, stats = _interval_loop(block_dir, n_part, tasks, spec, start, exchange, route)
+    step, stats = _interval_loop(block_dir, n_part, tasks, spec, start, exchange, route,
+                                 checkpointer)
     try:
         with _superstep_confs(spark):
             res = iterate(
@@ -508,13 +518,15 @@ def run_packed(
 
 
 def _interval_loop(block_dir: str, n_part: int, tasks: int, spec: Semiring, start: int,
-                   exchange: str, route: Callable):
+                   exchange: str, route: Callable, checkpointer: Checkpointer | None):
     """``(step, stats)`` for :func:`iterate`'s interval mode: the step's
     ``tasks`` tasks run supersteps up to the interval bound ``i`` (see
     :func:`_interval_fn`), more than one as a barrier map stage (Spark
     retries a failed barrier map stage whole, but aborts the job of a
-    failed barrier result stage), and the history file its partition-0
-    task wrote becomes one stats record per superstep it ran."""
+    failed barrier result stage), and write ``checkpointer``'s parts for
+    ``i``, into a cleared dir, when it is a checkpoint superstep; the
+    history file its partition-0 task wrote becomes one stats record per
+    superstep it ran."""
     stats_of, converged = spec.stats, spec.converged
 
     def done(delta: float, dangling: float, active: int) -> bool:
@@ -528,7 +540,12 @@ def _interval_loop(block_dir: str, n_part: int, tasks: int, spec: Semiring, star
     def step(carry: DataFrame, i: int) -> DataFrame:
         # the previous interval's job has finished: its files are spent
         shutil.rmtree(exchange, ignore_errors=True)
-        fn = _interval_fn(block_dir, n_part, tasks, spec, exchange, bound["i"] + 1, i, done)
+        ckpt = None
+        if checkpointer is not None and i % checkpointer.every == 0:
+            # the tasks write this checkpoint: no part of an earlier run may stay
+            checkpointer.clear(i)
+            ckpt = checkpointer.state_dir(i)
+        fn = _interval_fn(block_dir, n_part, tasks, spec, exchange, bound["i"] + 1, i, done, ckpt)
         bound["i"] = i
         carry = carry.select("id", spec.value_col, bucket_col("id", n_part).alias("bucket"))
         return route(carry.mapInArrow(fn, schema=schema, barrier=tasks > 1))

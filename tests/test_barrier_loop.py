@@ -118,8 +118,8 @@ def test_one_job_per_checkpoint_interval(spark, graph, tmp_path, monkeypatch):
         desc = store.job(job).description()
         if desc.isDefined() and desc.get().startswith("pagerank/packed/superstep="):
             described[int(desc.get().rsplit("=", 1)[1])] += 1
-    # 5 and 10 also write their checkpoints; the last interval is one job
-    assert sorted(described) == [5, 10, 15] and described[15] == 1
+    # the tasks write checkpoints 5 and 10 themselves: every interval is one job
+    assert described == {5: 1, 10: 1, 15: 1}
 
     assert [m["superstep"] for m in full.metrics] == list(range(1, 14))
     deltas = [m["delta"] for m in full.metrics]
@@ -180,11 +180,19 @@ def test_empty_bucket_converges(spark, tmp_path):
     g.unpersist()
 
 
+def _checkpoint_files(run) -> dict:
+    """``{path: bytes}`` of every file in the run's superstep dirs."""
+    return {str(f.relative_to(run)): f.read_bytes()
+            for f in sorted(run.glob("superstep=*/**/*")) if f.is_file()}
+
+
 def _replays_failed_interval(graph, tmp_path, part: int) -> None:
-    """The task at partition ``part`` fails in its third combine, which
-    fails the barrier stage; Spark retries the whole gang from the
-    interval's input carry, and the run ends with the uninterrupted
-    result byte for byte."""
+    """The task at partition ``part`` fails in its third combine, inside
+    the first checkpoint interval, which fails the barrier stage; Spark
+    retries the whole gang from the interval's input carry, and the run
+    ends with the uninterrupted result byte for byte. Its tasks write the
+    same checkpoint files with the same bytes: one part a task, the
+    lineage and one ``_SUCCESS`` per checkpoint, and no tmp file."""
     n = graph.num_vertices()
     spec = _packed_spec(n, 0.85, TOL, "float64")
     flag, calls = str(tmp_path / "failed"), str(tmp_path / "calls")
@@ -202,14 +210,20 @@ def _replays_failed_interval(graph, tmp_path, part: int) -> None:
         return real(prev, msgs, scalar, vtx)
 
     blk = str(tmp_path / "blk")
-    want = packed.run_packed(graph, spec, P, 100, blk, kernel="pagerank")
+    want = packed.run_packed(graph, spec, P, 100, blk, str(tmp_path / "want"), kernel="pagerank")
     got = packed.run_packed(graph, dataclasses.replace(spec, combine=combine), P, 100, blk,
-                            kernel="pagerank")
+                            str(tmp_path / "got"), kernel="pagerank")
     assert os.path.exists(flag) and os.path.getsize(calls) > 3
     assert got.supersteps == want.supersteps == 13
     assert [m["delta"] for m in got.metrics] == [m["delta"] for m in want.metrics]
     assert sorted(got.state.collect()) == sorted(want.state.collect())
     assert not os.path.exists(os.path.join(blk, "_bsp"))
+    files = _checkpoint_files(tmp_path / "got")
+    tasks = min(P, packed.task_slots(graph.spark))
+    assert sorted(files) == sorted(
+        f"superstep={i:05d}/{name}" for i in (5, 10) for name in
+        ["lineage.json", "state/_SUCCESS"] + [f"state/part-{t:05d}.parquet" for t in range(tasks)])
+    assert files == _checkpoint_files(tmp_path / "want")
 
 
 def test_task_failure_mid_interval_replays_the_interval(spark, graph, tmp_path):

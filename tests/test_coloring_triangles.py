@@ -28,6 +28,19 @@ def test_mis_coloring_proper_and_matches_oracle(spark, name):
     g.unpersist()
 
 
+def test_mis_coloring_sparse_ids_match_oracle(spark):
+    """Priorities rank ids densely, so they stay injective on sparse ids:
+    the path 1–5–9 colors as the oracle does, where the priority
+    deg·(n+1) + (n − id) gave vertices 1 and 5 the same weight and the
+    kernel raised."""
+    edges = [(1, 5), (5, 9)]
+    g = Graph.from_edge_list(spark, edges, directed=False)
+    res = mis_coloring(g)
+    got = {r["id"]: r["color"] for r in res.state.collect()}
+    assert got == oracles.mis_coloring(_sym(edges), {1, 5, 9}) == {5: 1, 1: 2, 9: 2}
+    g.unpersist()
+
+
 def test_mis_coloring_many_rounds_flat_walltime(spark):
     """Scale regression for the high-chromatic case (round-3 verdict
     'what's wrong #2'): a K200 clique forces 200 outer rounds (every
