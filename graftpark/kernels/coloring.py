@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graftpark import oracles
 from graftpark.graph import Graph, choose_strategy, densify_ids, maybe_broadcast
-from graftpark.loop import LoopResult
+from graftpark.loop import Checkpointer, LoopResult, _checkpoint_rdd, _release, resume_point
 
 
 #: per-vertex status within the current outer round
@@ -68,7 +68,9 @@ def mis_coloring(
     ``checkpoint_dir`` persists the full ``(id, w, color, st)`` state +
     metrics every ``checkpoint_every`` outer rounds via the durable
     parquet ``Checkpointer`` (north_rule: per-partition lineage,
-    resumable); ``resume=True`` continues from the last complete
+    resumable): one job over the round's materialized state writes its
+    parts (``Checkpointer.parts``), and the round is committed after its
+    metrics record. ``resume=True`` continues from the last complete
     checkpoint to the exact coloring an uninterrupted run produces
     (the kernel is deterministic).
 
@@ -89,8 +91,6 @@ def mis_coloring(
     eager localCheckpoint (see pagerank.py step() note) — the hazard the
     pre-round-4 ``cand ⋈ nbr_max(cand)`` formulation carried.
     """
-    from graftpark.loop import _checkpoint_rdd
-
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
@@ -101,8 +101,6 @@ def mis_coloring(
         return LoopResult(state=spark.createDataFrame([], "id LONG, color INT"), converged=True)
 
     from pyspark.sql import Observation
-
-    from graftpark.loop import Checkpointer, resume_point
 
     checkpointer = (
         Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
@@ -171,11 +169,7 @@ def mis_coloring(
         )
         out = out.localCheckpoint(eager=True)
         got = obs.get
-        if prev_rdd is not None:
-            try:
-                prev_rdd.unpersist(False)
-            except Exception:
-                pass
+        _release(prev_rdd)
         prev_rdd = _checkpoint_rdd(out)
         return out, got
 
@@ -278,20 +272,17 @@ def mis_coloring(
             "inner_rounds": inner_rounds,
             "colored_total": colored_total,
         }
+        ckpt = checkpointer is not None and color % checkpointer.every == 0
+        if ckpt:
+            # durable outer-round boundary: one job writes the full (id, w,
+            # color, st) state; the resumed loop's lazy st reset makes
+            # mid-coloring state re-entrant
+            checkpointer.parts(state, color).write.format("noop").mode("overwrite").save()
         metrics.append(rec)
         if checkpointer is not None:
             checkpointer.record_metrics(rec)
-            if color % checkpointer.every == 0:
-                # durable outer-round boundary: the full (id, w, color, st)
-                # state as parquet + per-partition lineage; the resumed
-                # loop's lazy st reset makes mid-coloring state re-entrant
-                state = checkpointer.save(state, color)
-                if prev_rdd is not None:
-                    try:
-                        prev_rdd.unpersist(False)
-                    except Exception:
-                        pass
-                    prev_rdd = None
+        if ckpt:
+            checkpointer.commit(color)
     converged = n_uncolored == 0
     result = state.select("id", "color")
     if not converged:

@@ -185,6 +185,9 @@ def connected_components_twophase(
     Returns the same contract as ``connected_components``: state
     ``(id, comp)`` with comp = min vertex id of the component.
 
+    A checkpoint round's edge set is written by the job that materializes
+    it (``Checkpointer.parts``) and committed after its metrics record.
+
     Convergence is probabilistic: the fixed-point probe compares the
     edge sets of consecutive rounds by (count, two independent xor
     fingerprints) rather than exact set difference — a false "equal"
@@ -197,11 +200,7 @@ def connected_components_twophase(
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # durable checkpoint state = the contracted edge set (u, v)
-    checkpointer = (
-        Checkpointer(checkpoint_dir, every=checkpoint_every, id_col="u")
-        if checkpoint_dir
-        else None
-    )
+    checkpointer = Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
     start, e = 1, None
     metrics: list[dict] = []
     if resume and checkpointer is not None:
@@ -247,10 +246,10 @@ def connected_components_twophase(
         rounds += 1
         t0 = time.monotonic()
         new = _small_star(_large_star(e))
-        if checkpointer is not None and rounds % checkpointer.every == 0:
-            new = checkpointer.save(new, rounds)
-        else:
-            new = new.localCheckpoint(eager=True)
+        ckpt = checkpointer is not None and rounds % checkpointer.every == 0
+        if ckpt:
+            new = checkpointer.parts(new, rounds)
+        new = new.localCheckpoint(eager=True)
         n_new, fp_new, fp2_new = _edge_probe(new)
         converged = n_new == n_edges and fp_new == fp and fp2_new == fp2
         e.unpersist()
@@ -260,6 +259,8 @@ def connected_components_twophase(
         metrics.append(rec)
         if checkpointer is not None:
             checkpointer.record_metrics(rec)
+        if ckpt:
+            checkpointer.commit(rounds)
     # final stars point child → component-min root; roots + isolated
     # vertices map to themselves. min() per id: at the fixed point each
     # child carries exactly one root, but if max_rounds cut the loop

@@ -9,10 +9,8 @@ Two problems Catalyst does not solve for us (SURVEY.md §4.3):
 
 1. **Iterative plan growth** — each superstep's DataFrame references the
    previous one; after ~20 iterations analysis and task serialization
-   dominate. Fix: truncate lineage after every call, either via
-   ``localCheckpoint(eager=True)`` or — on a durable checkpoint's
-   superstep of the per-superstep mode — by writing state to parquet and
-   re-reading it (which doubles as the resume checkpoint).
+   dominate. Fix: truncate lineage after every call with
+   ``localCheckpoint(eager=True)``.
 2. **Convergence probes** — stats (delta, active count) are computed as
    ONE aggregate job on the freshly persisted state, not separate
    count()/collect() probes.
@@ -23,18 +21,19 @@ Checkpoint layout (north_rule: resumable with per-partition lineage):
     {run_dir}/superstep=00007/lineage.json      per-partition rows/min/max/hash
     {run_dir}/metrics.jsonl                     one record per superstep
 
-``lineage.json`` is a list of ``{partition_id, rows, min_id, max_id,
-content_hash}`` rows in partition order. :meth:`Checkpointer.save`
-(DataFrame loops) writes the state with Spark and takes the rows from a
-query over the re-read, with ``content_hash`` the ``bit_xor`` of each
-row's ``xxhash64``. The interval mode's tasks instead write the parts
-themselves (:func:`write_part`): ``part-{task:05d}.parquet`` and a
-lineage row whose ``content_hash`` is the hex blake2b-64 of the part's
-id then value buffers, in row order; :meth:`Checkpointer.commit` folds
-those rows into ``lineage.json``. ``_SUCCESS`` is written last, after the
-superstep's metrics records, so a superstep dir without it is ignored
-and a resume replays its supersteps; :meth:`Checkpointer.load_metrics`
-keeps the last record of a superstep recorded twice.
+Every loop writes a checkpoint the same way: inside the job that already
+materializes its state, each task writes its partition's rows with
+:func:`write_part`, as ``part-{partition:05d}.parquet`` and a lineage row
+beside it. The packed tasks call it themselves; a DataFrame loop wraps its
+state in :meth:`Checkpointer.parts`. ``lineage.json`` is the list of those
+``{partition_id, rows, min_id, max_id, content_hash}`` rows in partition
+order, where ``min_id``/``max_id`` range over the first column and
+``content_hash`` is the hex blake2b-64 of the part file's bytes. Every
+loop records a superstep's metrics before :meth:`Checkpointer.commit`
+folds the rows into ``lineage.json`` and writes ``_SUCCESS``, so a
+superstep dir without it is ignored and a resume replays its supersteps;
+:meth:`Checkpointer.load_metrics` keeps the last record of a superstep
+recorded twice.
 """
 
 from __future__ import annotations
@@ -45,22 +44,23 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterable, Iterator
 
-import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 
 class Checkpointer:
     """Durable parquet checkpoints with per-partition lineage + metrics."""
 
-    def __init__(self, run_dir: str, every: int = 5, id_col: str = "id"):
+    def __init__(self, run_dir: str, every: int = 5):
         self.run_dir = run_dir
         self.every = max(1, every)
-        self.id_col = id_col
         os.makedirs(run_dir, exist_ok=True)
 
     def _step_dir(self, superstep: int) -> str:
@@ -69,30 +69,17 @@ class Checkpointer:
     def state_dir(self, superstep: int) -> str:
         return os.path.join(self._step_dir(superstep), "state")
 
-    def save(self, state: DataFrame, superstep: int) -> DataFrame:
-        """Write state + lineage; return the re-read (lineage-truncated) state."""
-        path = self.state_dir(superstep)
-        state.write.mode("overwrite").parquet(path)
-        reread = state.sparkSession.read.parquet(path)
-        # per-partition lineage of the checkpoint as written
-        lineage = (
-            reread.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("rows"),
-                F.min(self.id_col).alias("min_id"),
-                F.max(self.id_col).alias("max_id"),
-                # xor-combine: order-insensitive and overflow-free under ANSI mode
-                F.expr("bit_xor(xxhash64(struct(*)))").alias("content_hash"),
-            )
-            .orderBy("partition_id")
-            .collect()
-        )
-        self._write_lineage(superstep, [r.asDict() for r in lineage])
-        return reread
+    def parts(self, df: DataFrame, superstep: int) -> DataFrame:
+        """``df``, whose tasks also write their partitions as
+        ``superstep``'s parts (:func:`write_part`) into its cleared dir
+        when a job materializes it; :meth:`commit` completes them."""
+        self.clear(superstep)
+        state, schema = self.state_dir(superstep), to_arrow_schema(df.schema)
 
-    def _write_lineage(self, superstep: int, rows: list[dict]) -> None:
-        with open(os.path.join(self._step_dir(superstep), "lineage.json"), "w") as f:
-            json.dump(rows, f)
+        def fn(batches):
+            yield from write_part(state, TaskContext.get().partitionId(), batches, schema)
+
+        return df.mapInArrow(fn, df.schema)
 
     def clear(self, superstep: int) -> None:
         """Remove ``superstep``'s dir, so that the tasks about to write its
@@ -102,14 +89,16 @@ class Checkpointer:
     def commit(self, superstep: int) -> None:
         """Complete the checkpoint whose parts the tasks wrote with
         :func:`write_part`: fold their lineage rows into ``lineage.json``,
-        then write ``state/_SUCCESS``."""
+        then write ``state/_SUCCESS``. Every loop calls it after recording
+        the superstep's metrics."""
         state = self.state_dir(superstep)
         names = sorted(f for f in os.listdir(state) if f.startswith(_LINEAGE_ROW))
         rows = []
         for name in names:
             with open(os.path.join(state, name)) as f:
                 rows.append(json.load(f))
-        self._write_lineage(superstep, rows)
+        with open(os.path.join(self._step_dir(superstep), "lineage.json"), "w") as f:
+            json.dump(rows, f)
         for name in names:
             os.remove(os.path.join(state, name))
         open(os.path.join(state, "_SUCCESS"), "w").close()
@@ -153,35 +142,45 @@ class Checkpointer:
 _LINEAGE_ROW = "_lineage-"
 
 
-def _put(path: str, data) -> None:
-    """Write ``data`` to ``path`` atomically: to a dot-prefixed tmp file
-    beside it, which Spark's readers skip, then renamed."""
+def _tmp(path: str) -> str:
+    """A dot-prefixed tmp path beside ``path``, which Spark's readers skip."""
     head, name = os.path.split(path)
-    tmp = os.path.join(head, f".{name}.{os.getpid()}.tmp")
+    return os.path.join(head, f".{name}.{os.getpid()}.tmp")
+
+
+def _put(path: str, data) -> None:
+    """Write ``data`` to ``path`` atomically: to :func:`_tmp`, then renamed."""
+    tmp = _tmp(path)
     with open(tmp, "wb") as f:
         f.write(data)
     os.replace(tmp, path)
 
 
-def write_part(state_dir: str, part: int, ids: np.ndarray, values: np.ndarray,
-               value_col: str) -> None:
-    """Write task ``part``'s checkpoint rows ``(id, value_col)`` into
-    ``state_dir`` as ``part-{part:05d}.parquet``, with its lineage row
-    beside it. Both are written atomically (:func:`_put`), so a reader
-    never sees half a file and a retried task rewrites the same bytes.
-    Runs inside the task."""
+def write_part(state_dir: str, partition: int, batches: Iterable[pa.RecordBatch],
+               schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Write one partition's checkpoint rows, ``batches`` of ``schema``,
+    into ``state_dir`` as ``part-{partition:05d}.parquet``, yielding each
+    batch once written; when they run out, the lineage row goes beside
+    the part. Both are renamed into place from a tmp file (:func:`_tmp`),
+    so a reader never sees half a file and a retried task rewrites the
+    same bytes. An empty partition writes an empty part. Runs inside the
+    task."""
     os.makedirs(state_dir, exist_ok=True)
-    sink = pa.BufferOutputStream()
-    # ids are unique, and most values too: dictionary pages would only add bytes
-    pq.write_table(pa.table({"id": ids, value_col: values}), sink, use_dictionary=False)
-    _put(os.path.join(state_dir, f"part-{part:05d}.parquet"), sink.getvalue())
-    digest = hashlib.blake2b(np.ascontiguousarray(ids), digest_size=8)
-    digest.update(np.ascontiguousarray(values))
-    row = {"partition_id": part, "rows": len(ids),
-           "min_id": int(ids.min()) if len(ids) else None,
-           "max_id": int(ids.max()) if len(ids) else None,
-           "content_hash": digest.hexdigest()}
-    _put(os.path.join(state_dir, f"{_LINEAGE_ROW}{part:05d}.json"), json.dumps(row).encode())
+    path = os.path.join(state_dir, f"part-{partition:05d}.parquet")
+    tmp, firsts = _tmp(path), []
+    # keys are unique, and most values too: dictionary pages would only add bytes
+    with pq.ParquetWriter(tmp, schema, use_dictionary=False) as writer:
+        for batch in batches:
+            writer.write_batch(batch)
+            firsts.append(batch.column(0))
+            yield batch
+    os.replace(tmp, path)
+    with open(path, "rb") as f:
+        digest = hashlib.file_digest(f, lambda: hashlib.blake2b(digest_size=8))
+    ends = pc.min_max(pa.chunked_array(firsts, schema.field(0).type)).as_py()
+    row = {"partition_id": partition, "rows": sum(map(len, firsts)), "min_id": ends["min"],
+           "max_id": ends["max"], "content_hash": digest.hexdigest()}
+    _put(os.path.join(state_dir, f"{_LINEAGE_ROW}{partition:05d}.json"), json.dumps(row).encode())
 
 
 @dataclass
@@ -220,7 +219,8 @@ def iterate(
 
     ``steps_per_call`` is 1 or None. With 1, ``step_fn`` advances the
     state by superstep ``i``, and a durable checkpoint is taken at every
-    multiple of ``checkpointer.every``.
+    multiple of ``checkpointer.every``: the job that materializes the new
+    state writes the parts (:meth:`Checkpointer.parts`, above ``observe``).
 
     ``None`` is the interval mode: ``i`` is the next multiple of
     ``checkpointer.every`` or ``max_supersteps``, whichever comes first
@@ -230,10 +230,10 @@ def iterate(
     records each with its share of the call's wall time. The step writes
     the durable checkpoint's parts itself when ``i`` is a multiple of
     ``checkpointer.every`` (its tasks call :func:`write_part` on
-    ``checkpointer.state_dir(i)``, cleared first); when the step stopped
-    there, the loop commits them (:meth:`Checkpointer.commit`) after
-    recording the call's metrics. The next call gets the step's own
-    (locally checkpointed) state.
+    ``checkpointer.state_dir(i)``, cleared first). The next call gets the
+    step's own (locally checkpointed) state. In both modes the loop
+    commits a checkpoint (:meth:`Checkpointer.commit`) after recording
+    its superstep's metrics.
 
     With a ``label``, the Spark jobs of a call ending at superstep ``i``
     are described as ``{label}/superstep={i}``; the caller's description
@@ -265,17 +265,13 @@ def iterate(
                 obs = Observation(f"superstep_{end}")
                 cols = observe_cols()
                 new = new.observe(obs, *[c.alias(name) for name, c in cols.items()])
-            new_ckpt_rdd = None
             if not interval and checkpointer is not None and end % every == 0:
-                # parquet write + re-read: durable resume point AND flat lineage
-                new = checkpointer.save(new, end)
-                new = new.persist(StorageLevel.MEMORY_AND_DISK)
-            else:
-                # eager local checkpoint: materializes AND flattens the logical
-                # plan — without this, Catalyst re-analysis of the growing join
-                # tree dominates after a handful of supersteps (SURVEY.md §4.3.1)
-                new = new.localCheckpoint(eager=True)
-                new_ckpt_rdd = _checkpoint_rdd(new)
+                new = checkpointer.parts(new, end)
+            # eager local checkpoint: materializes AND flattens the logical
+            # plan — without this, Catalyst re-analysis of the growing join
+            # tree dominates after a handful of supersteps (SURVEY.md §4.3.1)
+            new = new.localCheckpoint(eager=True)
+            new_ckpt_rdd = _checkpoint_rdd(new)
             stats = stats_fn(obs.get if obs is not None else new, prev, end)
             ran = stats if interval else [stats]
             i += len(ran)
@@ -285,7 +281,7 @@ def iterate(
                 metrics.append(rec)
                 if checkpointer is not None:
                     checkpointer.record_metrics(rec)
-            if interval and checkpointer is not None and i % every == 0:
+            if checkpointer is not None and i % every == 0:
                 # after the records: a resume point always has its metrics
                 checkpointer.commit(i)
             # free the retired state NOW: DataFrame.unpersist does not release

@@ -54,12 +54,13 @@ superstep's summed (delta, dangling, active) to the run's history file,
 so metrics stay per superstep.
 
 An interval that ends on a multiple of ``checkpoint_every`` also writes
-its durable checkpoint from the tasks: each writes its final rows as one
-parquet part, with its lineage row beside it, under
-``{checkpoint_dir}/superstep={i:05d}/state/`` (see
-:func:`graftpark.loop.write_part`), and the driver commits them after the
-job. So the checkpoint dir, like the block dir, must be storage every
-executor shares, and a checkpointed interval is still one Spark job.
+its durable checkpoint from the tasks, through the writer every loop
+uses (:func:`graftpark.loop.write_part`): each streams its final rows
+into one parquet part, with its lineage row beside it, under
+``{checkpoint_dir}/superstep={i:05d}/state/``, and the driver commits
+them after recording the interval's metrics. So the checkpoint dir, like
+the block dir, must be storage every executor shares, and a checkpointed
+interval is still one Spark job.
 
 ``strategy="auto"`` takes one bucket for graphs whose vertex state is
 broadcastable and whose edges fit it (``ONE_BUCKET_MAX_EDGES``), and
@@ -337,15 +338,16 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
     order (exactly rounded), so all make the same ``done(delta, dangling,
     active)`` decision and stop at the same superstep. The last round
     sends nothing, and the final states are the task's output, in
-    (bucket, id) order. When the task stops at ``last`` and ``ckpt`` is
-    set, it also writes that output into ``ckpt`` as its checkpoint part
-    (:func:`graftpark.loop.write_part`). The partition-0 task writes each
+    (bucket, id) order, one batch a bucket. When the task stops at
+    ``last`` and ``ckpt`` is set, it also streams that output into
+    ``ckpt`` as its checkpoint part (:func:`graftpark.loop.write_part`). The partition-0 task writes each
     superstep's summed aggregates to ``{exchange}/history``. One task
     exchanges nothing."""
     # the fn ships to the workers: it must not capture ``spec``, whose
     # ``init`` is a driver-side Column
     dt, value_col, bucket_combine = np.dtype(spec.dtype), spec.value_col, spec.combine
     out_dt = np.dtype(np.float64) if dt.kind == "f" else dt
+    out_schema = pa.schema([("id", pa.int64()), (value_col, pa.from_numpy_dtype(out_dt))])
     order = [int(b) for b in bucket_ids_sorted(num_buckets)]
     send = _sender(block_dir, num_buckets, spec.gather, spec.scalar)
 
@@ -408,13 +410,12 @@ def _interval_fn(block_dir: str, num_buckets: int, tasks: int, spec: Semiring, e
         if part == 0:
             os.makedirs(exchange, exist_ok=True)
             _put(os.path.join(exchange, "history"), np.asarray(history, np.float64))
-        ids = [lay[c]["ids"] for c in live]
-        values = [state[c].astype(out_dt, copy=False) for c in live]
+        out = (pa.RecordBatch.from_arrays([pa.array(lay[c]["ids"]),
+                                           pa.array(state[c].astype(out_dt, copy=False))],
+                                          schema=out_schema) for c in live)
         if ckpt is not None and s == last:
-            write_part(ckpt, part, np.concatenate([np.empty(0, np.int64), *ids]),
-                       np.concatenate([np.empty(0, out_dt), *values]), value_col)
-        for i, v in zip(ids, values):
-            yield pa.RecordBatch.from_arrays([pa.array(i), pa.array(v)], names=["id", value_col])
+            out = write_part(ckpt, part, out, out_schema)
+        yield from out
 
     return fn
 

@@ -1,14 +1,16 @@
 """Durable checkpoints of the packed loop (graftpark/packed.py): the tasks
 of an interval that ends on a checkpoint superstep write its parts and
 lineage rows themselves, and the driver commits them after the job
-(``Checkpointer.commit``). Results, checkpoint rows and resumes are those
-of the DataFrame checkpoint writer, at one bucket and at four."""
+(``Checkpointer.commit``). Checkpoint rows are those of the returned
+state, and resumes end as uninterrupted runs do, at one bucket and at
+four."""
 
 import dataclasses
 import json
 import os
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -51,9 +53,11 @@ def _bits(rows) -> list:
     return list(zip((i for i, _ in rows), values.tolist()))
 
 
-def _parquet_rows(path: str) -> list:
-    t = pq.read_table(path)
-    return _bits(zip(*(t.column(c).to_numpy() for c in t.column_names)))
+def _rows(table: pa.Table) -> list:
+    """``table``'s rows sorted, each float as its int64 bit pattern."""
+    cols = [c.to_numpy() for c in table.columns]
+    cols = [c.astype(np.float64).view(np.int64) if c.dtype.kind == "f" else c for c in cols]
+    return sorted(zip(*(c.tolist() for c in cols)))
 
 
 def _tasks(spark, buckets: int) -> int:
@@ -61,31 +65,33 @@ def _tasks(spark, buckets: int) -> int:
 
 
 @pytest.mark.parametrize("buckets", [1, P])
-def test_checkpoint_rows_match_the_dataframe_writer(spark, graph, tmp_path, buckets):
-    """The parts the tasks write hold, bit for bit, the rows that
-    ``Checkpointer.save`` writes for the same state, under the same
-    schema, one part and one lineage row a task."""
-    kw = dict(strategy="packed", num_partitions=buckets)
+def test_checkpoint_rows_match_the_state(spark, graph, tmp_path, buckets):
+    """The parts the tasks write hold, bit for bit, the rows of the
+    state the run returns, under its schema, one part and one lineage
+    row a task, for the packed loop and for a DataFrame loop alike."""
+    kw = dict(num_partitions=buckets)
     # CC converges at superstep 4 here: it checkpoints at 2
-    for name, run_fn, col, step in (
+    for name, run_fn, step in (
         ("pagerank", lambda run: pagerank(graph, tol=0.0, max_supersteps=5, checkpoint_dir=run,
-                                          checkpoint_every=5, block_dir=str(tmp_path / "blk"),
-                                          **kw), "rank", 5),
+                                          checkpoint_every=5, strategy="packed",
+                                          block_dir=str(tmp_path / "blk"), **kw), 5),
         ("cc", lambda run: connected_components(graph, max_supersteps=2, checkpoint_dir=run,
-                                                checkpoint_every=2,
-                                                block_dir=str(tmp_path / "sym"), **kw), "comp", 2),
+                                                checkpoint_every=2, strategy="packed",
+                                                block_dir=str(tmp_path / "sym"), **kw), 2),
+        ("pagerank-dataframe", lambda run: pagerank(graph, tol=0.0, max_supersteps=5,
+                                                    checkpoint_dir=run, checkpoint_every=5,
+                                                    strategy="dataframe", **kw), 5),
     ):
         run = tmp_path / name
         res = run_fn(str(run))
         assert res.supersteps == step and Checkpointer(str(run)).latest() == step
         state = str(run / f"superstep={step:05d}" / "state")
-        ref = Checkpointer(str(tmp_path / f"ref-{name}"))
-        ref.save(res.state, step)
-        want = spark.read.parquet(ref.state_dir(step))
-        got = spark.read.parquet(state)
-        assert got.schema == want.schema and got.columns == ["id", col]
-        assert _parquet_rows(state) == _parquet_rows(ref.state_dir(step))
-        tasks = _tasks(spark, buckets)
+        assert spark.read.parquet(state).dtypes == res.state.dtypes
+        assert _rows(pq.read_table(state)) == _rows(res.state.toArrow())
+        # the tasks of the job that materialized the state wrote the parts
+        tasks = res.state.rdd.getNumPartitions()
+        if name != "pagerank-dataframe":
+            assert tasks == _tasks(spark, buckets)
         assert sorted(os.listdir(state)) == ["_SUCCESS"] + [
             f"part-{t:05d}.parquet" for t in range(tasks)]
         with open(run / f"superstep={step:05d}" / "lineage.json") as f:
@@ -102,8 +108,11 @@ def test_stale_parts_of_more_tasks_are_cleared(spark, graph, tmp_path, uninterru
     uninterrupted ranks bit for bit."""
     run = str(tmp_path / "run")
     stale = Checkpointer(run)
+    schema = pa.schema([("id", pa.int64()), ("rank", pa.float64())])
     for part in range(8):
-        write_part(stale.state_dir(5), part, np.array([10**9 + part]), np.array([0.5]), "rank")
+        batch = pa.RecordBatch.from_arrays([pa.array([10**9 + part]), pa.array([0.5])],
+                                           schema=schema)
+        list(write_part(stale.state_dir(5), part, [batch], schema))
     stale.commit(5)
     kw = dict(tol=TOL, strategy="packed", num_partitions=buckets, block_dir=str(tmp_path / "blk"),
               checkpoint_dir=run, checkpoint_every=5)
